@@ -11,28 +11,34 @@ swinging individual entries 10-40% between rounds with unchanged plans
 (q82: 2.40 s in-bench vs 1.20 s isolated; q30/q31 +0.3 s vs isolated).
 Small fresh-JVM groups bound that contamination to ~10 shapes per
 process, which lets the per-query budgets sit at ~1.3x isolated steady
-state instead of the 1.5-2.4x headroom round 5 needed.  Within a group:
-sf0.001 warm pass (JIT/codegen), untimed pass at the TARGET sf (AQE
-replans compile), then three timed passes reporting per-query min.
+state instead of the 1.5-2.4x headroom round 5 needed.
+
+One child body (_run_block) times every block — the sf0.1 groups, the
+sf1 slope block and the floor10x block — from a spec: untimed warm
+passes (sf0.1 groups: sf0.001, then the TARGET sf so AQE's real-size
+replans compile; sf1: two at sf1; floor10x: one at 10x), then
+min-of-N timed passes (3 / 3 / 2).
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver collect, no column-pruning shortcut a bare count() would allow).
 
 Contention guard (rounds 7-8, VERDICT r6 ask #1 / r7 ask #3): every
-group times THREE fixed canaries at the start and end of its timed
+block times THREE fixed canaries at the start and end of its timed
 region — a pure-codegen CPU probe, a 32-task shuffle probe, and a
 write+fsync IO probe (round 7's three unexplained incidents were all
-disk-writeback interference invisible to the first two).  The parent
-converts the WORST of the three drifts into the group's host factor,
-auto-reruns any group where >= half the budgeted entries violate OR
+disk-writeback interference invisible to the first two).  Every block
+then goes through ONE parent-side adjudication (_adjudicate): the
+WORST of the three drifts is the block's host factor; the block reruns
+once in a fresh child when >= half its budgeted entries violate, when
 any entry violates while the canaries drifted (a contended child
 slice, not a regression — BENCH_r06's 8 false violations were exactly
-this), annotates every reported violation with the drift, and emits
-per-group "provenance" (every run's times, drift, violations, rerun
-reason, and which numbers were chosen) so the artifact is fully
-machine-attributed with no prose adjudication.  The full result JSON
-is also dual-written to BENCH_local.json because the driver's stdout
-capture tail-truncates long lines.
+this), or, for a block with no budgets (sf1), when the canaries
+drifted; every reported violation carries the drift; and per-block
+"provenance" (every run's times, drift, violations, rerun reason, and
+which numbers were chosen) leaves the artifact fully machine-attributed
+with no prose adjudication.  The full result JSON, with a `host` block
+(cores, git sha, Spark version, sf), is also dual-written to
+BENCH_local.json because stdout captures can tail-truncate long lines.
 """
 
 from __future__ import annotations
@@ -271,7 +277,7 @@ BUDGETS_FLOOR10X = {
     "q46_training_corpus": 3.8,     # r11 window dedup: worse of two clean runs 2.91 x 1.3
 }
 
-GROUP_SIZE = int(os.environ.get("SPARK_GRAFT_BENCH_GROUP", "10"))
+GROUP_SIZE = 10
 _SENTINEL = "BENCH_CHILD_RESULT:"
 TIMED_PASSES = 3
 
@@ -284,14 +290,13 @@ TIMED_PASSES = 3
 # was slow for host reasons, not code reasons.  The floor is calibrated
 # on idle hardware (10 steady-state runs on this machine: 0.14-0.23 s,
 # typical 0.17); drift = mean(start, end)/floor, clamped at 1.0.
-CANARY_FLOOR = float(os.environ.get("SPARK_GRAFT_CANARY_FLOOR", "0.17"))
+CANARY_FLOOR = 0.17
 # Shuffle-canary floor (32-task stage pair + one exchange, min-of-2;
 # idle fresh-JVM child context 0.29-0.35 s, resident-JVM 0.42-0.48;
 # the floor is the child-context typical since that is where it runs).
 # This is the probe for the contention class the CPU canary missed
 # twice in round 7 — slow groups with 1.0-drift CPU canaries.
-SHUFFLE_CANARY_FLOOR = float(
-    os.environ.get("SPARK_GRAFT_SHUFFLE_CANARY_FLOOR", "0.35"))
+SHUFFLE_CANARY_FLOOR = 0.35
 # IO canary (VERDICT r7 ask #3): 32 MiB write+fsync on the same ext4
 # the Spark local dirs and fixture rebuilds live on.  Three round-7
 # incidents were IO-side contention (kworker writeback after the 13 GB
@@ -305,15 +310,16 @@ SHUFFLE_CANARY_FLOOR = float(
 # that background is baseline, not contention, so the floor is 0.11
 # (group medians of a clean sf0.01 sweep).  A real writeback storm
 # (the r7 class: queries 1.5-2x slow) measures >= 2x this floor.
-IO_CANARY_FLOOR = float(os.environ.get("SPARK_GRAFT_IO_CANARY_FLOOR",
-                                       "0.11"))
+IO_CANARY_FLOOR = 0.11
 # A group where at least this fraction of budgeted entries violate is
 # re-run once (fresh child process on a hopefully-idle slice) and each
 # query keeps the min of both passes — a real regression survives the
 # rerun, a contended slice doesn't.  Independently, ANY violation in a
 # group whose canaries drifted past RERUN_DRIFT is retried: the drift
 # already attributes the slowdown to the host, so the number should be
-# re-measured rather than shipped annotated.
+# re-measured rather than shipped annotated.  A block with no budgets
+# (the sf1 slope block) has no violations to weigh, so it reruns once
+# on drift alone.
 RERUN_FRACTION = 0.5
 RERUN_DRIFT = 1.2
 
@@ -366,74 +372,118 @@ def _canary_shuffle_time(spark) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def _run_group(queries: list[str], sf_dir: str, cache_pair: bool) -> dict:
-    """Child body: warm + two timed passes over one query group inside
-    THIS fresh process's own SparkSession; returns {name: min_seconds}."""
+# The three block specs.  One child body (_run_block) serves them all;
+# each block keeps the warm/timed protocol its budgets and history were
+# measured under.  Specs travel to the child as JSON on argv.
+WARM_DIR = "/root/testdata/sf0.001"
+
+
+def _group_spec(queries: list[str], sf_dir: str) -> dict:
+    """An sf0.1 group.  Warm on the SMALLEST scale factor first (a
+    different data directory, so nothing the timed passes read is
+    cached — JIT warmup, not result reuse), then an untimed pass at the
+    TARGET sf: AQE replans at real sizes (BHJ/SMJ switches, coalesced
+    exchanges), so the sf0.001 warm does not compile the target-sf plan
+    shapes.  Min-of-3: on the heavy HOF/LSH shapes (q30/q77) a fresh JVM
+    needs ~3 executions past the warm before C2 reaches the steady
+    floor; two passes left 0.5-1.2 s of compile tail in the min."""
+    return {"queries": queries, "sf_dir": sf_dir,
+            "warm_dirs": [WARM_DIR, sf_dir], "passes": TIMED_PASSES,
+            "settle": 5, "cache_pair": "q01_pricing_summary" in queries}
+
+
+# sf1 slope block: TWO untimed warms + min-of-3 (round 8, VERDICT r7
+# ask #4): q121's 2.6-7.7 s round-to-round spread was C2 compile tail,
+# not AQE — six instrumented same-JVM runs kept bit-identical join
+# plans while walls fell 9.1 -> 2.0 s monotonically; one warm + min-of-2
+# sampled that curve wherever the compiler happened to be.  Three
+# same-day isolated runs spanned 14.7 / 11.3 / 7.5 s with identical
+# code, which is why the block is canary-bracketed (SCALE.md r9).
+SF1_SPEC = {"queries": SF1_QUERIES, "sf_dir": "/tmp/sf1",
+            "warm_dirs": ["/tmp/sf1", "/tmp/sf1"], "passes": 3,
+            "settle": 5, "fixture": "/tmp/sf1/lineitem.parquet"}
+# floor10x block: one untimed warm at the 10x size + min-of-2, the
+# protocol BUDGETS_FLOOR10X are calibrated on.  Canary-bracketed since
+# round 10 (VERDICT r9 ask #1): same-code committed runs read
+# 1.96/4.27 s while another same-code run read 4.63/8.05 s (its sibling
+# sf1 block at drift 1.214), unadjudicatable without the drift
+# instrument.
+FLOOR10X_SPEC = {"queries": FLOOR10X_QUERIES, "sf_dir": "/tmp/scale10",
+                 "warm_dirs": ["/tmp/scale10"], "passes": 2, "settle": 3,
+                 "fixture": "/tmp/scale10/documents.parquet"}
+# (out key, spec, budgets, note) of the blocks timed after the groups
+SCALE_BLOCKS = [
+    ("sf1", SF1_SPEC, {},
+     "10x key-shift replica of sf0.1 (6M lineitem); slope vs the sf0.1 "
+     "queries above; own fresh JVM; 2 untimed warms + min-of-3 timed "
+     "(C2 tail, see SCALE.md r8); canary-bracketed since r9 (drift "
+     "attributes host contention, SCALE.md r9)"),
+    ("floor_bound_10x", FLOOR10X_SPEC, BUDGETS_FLOOR10X,
+     "10x documents replica (/tmp/scale10, pathological exact-dup "
+     "density); min-of-2, fresh JVM — the data-cost view of the sf0.1 "
+     "floor-bound entries; canary-bracketed since r10 (drift attributes "
+     "host contention, same instrument as the sf1 block)"),
+]
+
+
+def _run_block(spec: dict) -> dict:
+    """Child body for every block, inside THIS fresh process's own
+    SparkSession: untimed warm passes over `warm_dirs`, a settle pause,
+    the three-canary start bracket, min-of-`passes` timed passes at
+    `sf_dir`, the end bracket.  Returns {"times": {name: min_seconds},
+    "canary": {...}} (+ "cache_stats" for the cache pair)."""
     from elusion_spark.session import get_spark
     from elusion_spark.suite import QUERIES
 
+    queries, sf_dir = spec["queries"], spec["sf_dir"]
+    if spec.get("fixture") and not os.path.exists(spec["fixture"]):
+        # the scale fixtures are rebuilt on the fly when /tmp is wiped
+        subprocess.run(
+            [sys.executable, os.path.join(
+                os.path.dirname(os.path.abspath(__file__)),
+                "tools", "make_scale_fixtures.py")],
+            check=True, capture_output=True, timeout=900,
+        )
     spark = get_spark("elusion_spark_bench")
-    # Warm the JVM (codegen, parquet reader, shuffle machinery, python
-    # workers) on the SMALLEST scale factor — different data directory,
-    # so nothing the timed queries read is cached; this is JIT warmup,
-    # standard benchmarking practice, not result reuse.
-    warm_dir = "/root/testdata/sf0.001"
-    for wname in queries:
-        try:
-            QUERIES[wname](spark, warm_dir).write.format("noop").mode(
-                "overwrite").save()
-        except Exception:
-            pass
-    spark.catalog.clearCache()
-    # AQE replans at real sizes (BHJ/SMJ switches, coalesced exchanges),
-    # so the sf0.001 warmup does NOT compile the target-sf plan shapes —
-    # an untimed pass at the target scale factor fills the codegen/JIT
-    # caches the timed passes hit.
-    for wname in queries:
-        try:
-            QUERIES[wname](spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-        except Exception:
-            pass
-    spark.catalog.clearCache()
-    # Let the C2 compile backlog drain before timing; per-group it is
-    # ~10 query shapes, not 55, so a short pause suffices.
-    time.sleep(5)
+
+    def _noop(name: str, data_dir: str) -> None:
+        QUERIES[name](spark, data_dir).write.format("noop").mode(
+            "overwrite").save()
+
+    # warm the JVM (codegen, parquet reader, shuffle machinery, python
+    # workers); a query that fails here fails again in the timed passes
+    for warm_dir in spec["warm_dirs"]:
+        for name in queries:
+            try:
+                _noop(name, warm_dir)
+            except Exception:
+                pass
+        spark.catalog.clearCache()
+    # let the C2 compile backlog drain before timing
+    time.sleep(spec["settle"])
 
     # canary brackets the timed region: warm once, then min-of-2 at
     # start and at end — a contended host slice shows up as drift on
     # at least one bracket for any contention long enough to matter
-    _canary_time(spark)
-    _canary_shuffle_time(spark)
-    _canary_io_time()
-    canary_start = min(_canary_time(spark), _canary_time(spark))
-    shuffle_start = min(_canary_shuffle_time(spark),
-                        _canary_shuffle_time(spark))
-    io_start = min(_canary_io_time(), _canary_io_time())
-
-    # min-of-3: measured on the heavy HOF/LSH shapes (q30/q77), a fresh
-    # JVM needs ~3 executions past the untimed warm before C2 reaches
-    # the steady floor; two passes left 0.5-1.2 s of compile tail in
-    # the min.
+    probes = {"": lambda: _canary_time(spark),
+              "shuffle_": lambda: _canary_shuffle_time(spark),
+              "io_": _canary_io_time}
+    for probe in probes.values():
+        probe()
+    canary = {f"{p}start": min(f(), f()) for p, f in probes.items()}
     times: dict[str, float] = {}
-    for _pass in range(TIMED_PASSES):
+    for _pass in range(spec["passes"]):
         for name in queries:
             t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
+            _noop(name, sf_dir)
             el = round(time.perf_counter() - t0, 3)
             if name not in times or el < times[name]:
                 times[name] = el
         spark.catalog.clearCache()
-    canary_end = min(_canary_time(spark), _canary_time(spark))
-    shuffle_end = min(_canary_shuffle_time(spark),
-                      _canary_shuffle_time(spark))
-    io_end = min(_canary_io_time(), _canary_io_time())
-    canary = {"start": canary_start, "end": canary_end,
-              "shuffle_start": shuffle_start, "shuffle_end": shuffle_end,
-              "io_start": io_start, "io_end": io_end}
+    canary.update({f"{p}end": min(f(), f()) for p, f in probes.items()})
+    res = {"times": times, "canary": canary}
 
-    if cache_pair:
+    if spec.get("cache_pair"):
         # Cache hit-vs-miss pair, mirroring the reference's headline
         # cache claim (BASELINE.md: 6-10x on repeated queries).  The hit
         # run REBUILDS the query from scratch — the canonicalized-plan
@@ -454,169 +504,8 @@ def _run_group(queries: list[str], sf_dir: str, cache_pair: bool) -> dict:
         times["q01_cache_hit"] = min(_run_cached(), _run_cached())
         cstats = cache_stats()  # diagnosability: 1 miss + 2 hits expected
         clear_cache()
-        return {"times": times, "canary": canary,
-                "cache_stats": {k: cstats[k] for k in ("hits", "misses")}}
-    return {"times": times, "canary": canary}
-
-
-def _run_sf1() -> dict:
-    """Child body: the sf1 slope block in its own fresh JVM."""
-    from elusion_spark.session import get_spark
-    from elusion_spark.suite import QUERIES
-
-    sf1_dir = "/tmp/sf1"
-    if not os.path.exists(f"{sf1_dir}/lineitem.parquet"):
-        subprocess.run(
-            [sys.executable, os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "tools", "make_scale_fixtures.py")],
-            check=True, capture_output=True, timeout=900,
-        )
-    spark = get_spark("elusion_spark_bench")
-    # TWO untimed warms + min-of-3 timed (round 8, VERDICT r7 ask #4):
-    # q121's 2.6-7.7 s round-to-round spread was diagnosed as C2
-    # compile tail, not AQE — six instrumented same-JVM runs kept
-    # bit-identical join plans while walls fell 9.1 -> 2.0 s
-    # monotonically; one warm + min-of-2 sampled that curve wherever
-    # the compiler happened to be.  The heaviest sf1 shapes need ~3
-    # executions past the first before the steady floor (same finding
-    # as the sf0.1 groups' min-of-3).
-    for _w in range(2):
-        for wname in SF1_QUERIES:      # untimed warms at sf1
-            QUERIES[wname](spark, sf1_dir).write.format("noop").mode(
-                "overwrite").save()
-        spark.catalog.clearCache()
-    time.sleep(5)
-    # canary brackets (round 9, VERDICT r8 ask #5): three same-day
-    # isolated runs of this block spanned 14.7 / 11.3 / 7.5 s with
-    # IDENTICAL code — host contention swings the block ~2x, so the
-    # block now carries the same three-canary drift the sf0.1 groups
-    # have; a creeping total with drift ~1.0 is a real regression, a
-    # creeping total at drift >> 1 is the machine (SCALE.md round 9)
-    _canary_time(spark)
-    _canary_shuffle_time(spark)
-    _canary_io_time()
-    canary_start = min(_canary_time(spark), _canary_time(spark))
-    shuffle_start = min(_canary_shuffle_time(spark),
-                        _canary_shuffle_time(spark))
-    io_start = min(_canary_io_time(), _canary_io_time())
-    t1: dict[str, float] = {}
-    for _pass in range(3):
-        for name in SF1_QUERIES:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf1_dir).write.format("noop").mode(
-                "overwrite").save()
-            el = round(time.perf_counter() - t0, 3)
-            if name not in t1 or el < t1[name]:
-                t1[name] = el
-        spark.catalog.clearCache()
-    canary_end = min(_canary_time(spark), _canary_time(spark))
-    shuffle_end = min(_canary_shuffle_time(spark),
-                      _canary_shuffle_time(spark))
-    io_end = min(_canary_io_time(), _canary_io_time())
-    canary = {"start": canary_start, "end": canary_end,
-              "floor": CANARY_FLOOR,
-              "shuffle_start": shuffle_start, "shuffle_end": shuffle_end,
-              "shuffle_floor": SHUFFLE_CANARY_FLOOR,
-              "io_start": io_start, "io_end": io_end,
-              "io_floor": IO_CANARY_FLOOR}
-    return {
-        "queries": t1,
-        "total": round(sum(t1.values()), 3),
-        "canary": {**canary, "drift": _group_drift(canary)},
-        "note": "10x key-shift replica of sf0.1 (6M lineitem); slope vs "
-                "the sf0.1 queries above; own fresh JVM; 2 untimed "
-                "warms + min-of-3 timed (C2 tail, see SCALE.md r8); "
-                "canary-bracketed since r9 (drift attributes host "
-                "contention, SCALE.md r9)",
-    }
-
-
-def _run_floor10x() -> dict:
-    """Child body: the floor-bound pair re-timed at the 10x documents
-    fixture, own fresh JVM (see FLOOR10X_QUERIES).
-
-    Canary-bracketed since round 10 (VERDICT r9 ask #1 — this was the
-    ONLY harness slice without the drift instrument, and the r9
-    driver-run violations here were unadjudicatable by construction:
-    same-code committed runs read 1.96/4.27 while the driver run read
-    4.63/8.05 with the sibling sf1 block at drift 1.214).  The same
-    three-probe bracket the sf0.1 groups and the sf1 block carry: a
-    violation at drift >> 1 is the machine, at ~1.0 a real
-    regression."""
-    from elusion_spark.session import get_spark
-    from elusion_spark.suite import QUERIES
-
-    s10 = "/tmp/scale10"
-    if not os.path.exists(f"{s10}/documents.parquet"):
-        subprocess.run(
-            [sys.executable, os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "tools", "make_scale_fixtures.py")],
-            check=True, capture_output=True, timeout=900,
-        )
-    spark = get_spark("elusion_spark_bench")
-    for wname in FLOOR10X_QUERIES:    # untimed warm at the target size
-        QUERIES[wname](spark, s10).write.format("noop").mode(
-            "overwrite").save()
-    spark.catalog.clearCache()
-    time.sleep(3)
-    _canary_time(spark)
-    _canary_shuffle_time(spark)
-    _canary_io_time()
-    canary_start = min(_canary_time(spark), _canary_time(spark))
-    shuffle_start = min(_canary_shuffle_time(spark),
-                        _canary_shuffle_time(spark))
-    io_start = min(_canary_io_time(), _canary_io_time())
-    t1: dict[str, float] = {}
-    for _pass in range(2):
-        for name in FLOOR10X_QUERIES:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, s10).write.format("noop").mode(
-                "overwrite").save()
-            el = round(time.perf_counter() - t0, 3)
-            if name not in t1 or el < t1[name]:
-                t1[name] = el
-        spark.catalog.clearCache()
-    canary_end = min(_canary_time(spark), _canary_time(spark))
-    shuffle_end = min(_canary_shuffle_time(spark),
-                      _canary_shuffle_time(spark))
-    io_end = min(_canary_io_time(), _canary_io_time())
-    canary = {"start": canary_start, "end": canary_end,
-              "floor": CANARY_FLOOR,
-              "shuffle_start": shuffle_start, "shuffle_end": shuffle_end,
-              "shuffle_floor": SHUFFLE_CANARY_FLOOR,
-              "io_start": io_start, "io_end": io_end,
-              "io_floor": IO_CANARY_FLOOR}
-    drift = _group_drift(canary)
-    return {
-        "queries": t1,
-        "canary": {**canary, "drift": drift},
-        "violations": {
-            n: {"sec": t1[n], "budget": BUDGETS_FLOOR10X[n],
-                "canary_drift": drift,
-                "adjusted_sec": round(t1[n] / drift, 3),
-                "contention_suspect":
-                    round(t1[n] / drift, 3) <= BUDGETS_FLOOR10X[n]}
-            for n in t1 if t1[n] > BUDGETS_FLOOR10X[n]},
-        "note": "10x documents replica (/tmp/scale10, pathological "
-                "exact-dup density); min-of-2, fresh JVM — the "
-                "data-cost view of the sf0.1 floor-bound entries; "
-                "canary-bracketed since r10 (drift attributes host "
-                "contention, same instrument as the sf1 block)",
-    }
-
-
-def _child_main(spec: dict) -> None:
-    if spec.get("mode") == "sf1":
-        res = _run_sf1()
-    elif spec.get("mode") == "floor10x":
-        res = _run_floor10x()
-    else:
-        res = _run_group(spec["queries"], spec["sf_dir"],
-                         spec.get("cache_pair", False))
-    sys.stdout.write("\n" + _SENTINEL + json.dumps(res) + "\n")
-    sys.stdout.flush()
+        res["cache_stats"] = {k: cstats[k] for k in ("hits", "misses")}
+    return res
 
 
 def _spawn(spec: dict, timeout: int = 1800) -> dict:
@@ -656,27 +545,33 @@ def _group_drift(canary: dict | None) -> float:
     return max(1.0, round(max(drifts), 3))
 
 
+def _over_budget(times: dict[str, float],
+                 budgets: dict[str, float]) -> list[str]:
+    return sorted(n for n in times if n in budgets and times[n] > budgets[n])
+
+
 def _should_rerun(group_times: dict[str, float],
                   budgets: dict[str, float] | None = None,
                   fraction: float = RERUN_FRACTION,
                   drift: float = 1.0) -> bool:
-    """True when a group's violations look host-caused rather than
-    like a single-query regression: either >= `fraction` of its
-    budgeted entries are over budget (the BENCH_r06 contended-slice
-    pattern), or there is at least one violation AND the group's
-    canaries drifted past RERUN_DRIFT (the canaries have already
-    attributed the slowdown to the host, so re-measure instead of
-    shipping an annotated number).  A real regression survives the
-    rerun; a slow host slice doesn't."""
+    """True when a block's timings look host-caused rather than like a
+    single-query regression: either >= `fraction` of its budgeted
+    entries are over budget (the BENCH_r06 contended-slice pattern), or
+    there is at least one violation AND the canaries drifted past
+    RERUN_DRIFT (the canaries have already attributed the slowdown to
+    the host, so re-measure instead of shipping an annotated number).
+    Drifted canaries with zero violations never rerun — except in a
+    block with no budgets at all, where drift is the only evidence.  A
+    real regression survives the rerun; a slow host slice doesn't."""
     budgets = BUDGETS_SF01 if budgets is None else budgets
     budgeted = [n for n in group_times if n in budgets]
-    viol = [n for n in budgeted if group_times[n] > budgets[n]]
+    viol = _over_budget(group_times, budgets)
     # inclusive: _group_drift ROUNDS to 3 decimals, and the one case
     # this rule exists for landed on exactly 1.200 in the round-10
     # closing run (q101 4.14 s at drift 1.2; the fresh-child rerun
     # read 1.90 s — pure host blip).  A strict > let it ship annotated
     # instead of re-measured.
-    if viol and drift >= RERUN_DRIFT:
+    if (viol or not budgeted) and drift >= RERUN_DRIFT:
         return True
     if len(budgeted) < 2:
         return False
@@ -687,26 +582,83 @@ def _merge_min(a: dict[str, float], b: dict[str, float]) -> dict[str, float]:
     return {n: min(a[n], b[n]) if n in b else a[n] for n in a}
 
 
-def _annotate_violations(times: dict[str, float],
-                         group_of: dict[str, int],
-                         drifts: dict[int, float],
+def _annotate_violations(times: dict[str, float], drift: float,
                          budgets: dict[str, float] | None = None) -> dict:
     """Budget check with the contention evidence attached: every
-    violation carries its group's canary drift, the drift-adjusted
+    violation carries its block's canary drift, the drift-adjusted
     wall, `contention_suspect` (adjusted time within budget — the
     violation disappears on an idle host), and `floor_bound` (the
     query's sf0.1 wall measures scheduling floor, see FLOOR_BOUND)."""
     budgets = BUDGETS_SF01 if budgets is None else budgets
     out = {}
-    for n, t in times.items():
-        if n in budgets and t > budgets[n]:
-            drift = drifts.get(group_of.get(n, -1), 1.0)
-            adj = round(t / drift, 3)
-            out[n] = {"sec": t, "budget": budgets[n],
-                      "canary_drift": drift, "adjusted_sec": adj,
-                      "contention_suspect": adj <= budgets[n],
-                      "floor_bound": n in FLOOR_BOUND}
+    for n in _over_budget(times, budgets):
+        t = times[n]
+        adj = round(t / drift, 3)
+        out[n] = {"sec": t, "budget": budgets[n],
+                  "canary_drift": drift, "adjusted_sec": adj,
+                  "contention_suspect": adj <= budgets[n],
+                  "floor_bound": n in FLOOR_BOUND}
     return out
+
+
+def _adjudicate(name: str, spec: dict, budgets: dict[str, float],
+                errors: dict[str, str], rerun: bool = True,
+                timeout: int = 1800) -> dict:
+    """The one parent-side path every block takes: spawn the child,
+    turn its canaries into a drift, rerun once in a fresh child when
+    `_should_rerun` says so (each query keeps the min of both runs, the
+    block keeps the better-drift run's canaries), record per-run
+    provenance (VERDICT r7 ask #3: every number is machine-attributed —
+    which run produced it, what the canaries said, what triggered a
+    retry — so no prose adjudication note is ever needed), and annotate
+    what still violates.  A failed first child raises; a failed rerun
+    is recorded in `errors` and the first run stands."""
+    res = _spawn(spec, timeout)
+    times, canary = res["times"], res["canary"]
+    drift = _group_drift(canary)
+    runs = [{"run": 1, "drift": drift,
+             "violations": _over_budget(times, budgets), "times": times}]
+    if rerun and _should_rerun(times, budgets, drift=drift):
+        reason = ("canary_drift" if not runs[0]["violations"]
+                  else "mass_violation" if _should_rerun(times, budgets)
+                  else "violation_with_canary_drift")
+        try:
+            res2 = _spawn(spec, timeout)
+            drift2 = _group_drift(res2["canary"])
+            runs.append({"run": 2, "drift": drift2,
+                         "violations": _over_budget(res2["times"], budgets),
+                         "times": res2["times"], "rerun_reason": reason})
+            times = _merge_min(times, res2["times"])
+            if drift2 < drift:
+                canary, drift = res2["canary"], drift2
+            res["cache_stats"] = res2.get("cache_stats")
+        except Exception as exc:
+            errors[f"{name}_rerun"] = str(exc)[:300]
+    blk = {"times": times, "canary": {**canary, "drift": drift},
+           "provenance": {"runs": runs,
+                          "chosen": ("per_query_min_of_runs"
+                                     if len(runs) > 1 else "single_run")},
+           "violations": _annotate_violations(times, drift, budgets)}
+    if res.get("cache_stats"):
+        blk["cache_stats"] = res["cache_stats"]
+    return blk
+
+
+def _host(sf: float) -> dict:
+    """The host facts behind a record: cores, Spark's local[N], the
+    code's git sha, the Spark version and the scale factor."""
+    from pyspark import __version__ as spark_version
+
+    try:
+        sha = subprocess.run(
+            ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            timeout=30).stdout.strip() or None
+    except (OSError, subprocess.SubprocessError):
+        sha = None
+    return {"nproc": len(os.sched_getaffinity(0)),
+            "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+            "git_sha": sha, "spark_version": spark_version, "sf": sf}
 
 
 def _slim_stdout(out: dict) -> dict:
@@ -738,7 +690,9 @@ def _slim_stdout(out: dict) -> dict:
 
 def main() -> None:
     if len(sys.argv) >= 3 and sys.argv[1] == "--child":
-        _child_main(json.loads(sys.argv[2]))
+        res = _run_block(json.loads(sys.argv[2]))
+        sys.stdout.write("\n" + _SENTINEL + json.dumps(res) + "\n")
+        sys.stdout.flush()
         return
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -747,71 +701,30 @@ def main() -> None:
     times: dict[str, float] = {}
     cstats = None
     errors: dict[str, str] = {}
-    group_of: dict[str, int] = {}
-    drifts: dict[int, float] = {}
+    violations: dict[str, dict] = {}
     canaries: dict[str, dict] = {}
     provenance: dict[str, dict] = {}
-
-    def _viol_names(ts: dict[str, float]) -> list[str]:
-        return sorted(n for n in ts
-                      if n in BUDGETS_SF01 and ts[n] > BUDGETS_SF01[n])
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         sf = -1.0
+    # budgets (and so reruns) are calibrated to sf0.1 only
     budget_run = abs(sf - 0.1) < 1e-9
 
     for gi, grp in enumerate(groups):
-        spec = {"queries": grp, "sf_dir": sf_dir,
-                "cache_pair": "q01_pricing_summary" in grp}
+        key = f"group_{gi}"
         try:
-            res = _spawn(spec)
-            gtimes = res["times"]
-            drift = _group_drift(res.get("canary"))
-            canaries[f"group_{gi}"] = {**(res.get("canary") or {}),
-                                       "drift": drift}
-            # per-run provenance (VERDICT r7 ask #3): every number in
-            # "queries" is machine-attributed — which run produced it,
-            # what the canaries said, what triggered a retry — so no
-            # prose adjudication note is ever needed
-            runs = [{"run": 1, "drift": drift,
-                     "violations": _viol_names(gtimes) if budget_run
-                     else [], "times": gtimes}]
-            if budget_run and _should_rerun(gtimes, drift=drift):
-                # contended-slice suspect: one fresh child retry; each
-                # query keeps the min, the group keeps the better drift
-                reason = ("mass_violation"
-                          if _should_rerun(gtimes, drift=1.0)
-                          else "violation_with_canary_drift")
-                try:
-                    res2 = _spawn(spec)
-                    gtimes2 = res2["times"]
-                    drift2 = _group_drift(res2.get("canary"))
-                    runs.append({"run": 2, "drift": drift2,
-                                 "violations": _viol_names(gtimes2),
-                                 "times": gtimes2,
-                                 "rerun_reason": reason})
-                    gtimes = _merge_min(gtimes, gtimes2)
-                    drift = min(drift, drift2)
-                    canaries[f"group_{gi}"]["drift"] = drift
-                    if "cache_stats" in res2:
-                        res["cache_stats"] = res2["cache_stats"]
-                except Exception as exc:
-                    errors[f"group_{gi}_rerun"] = str(exc)[:300]
-            provenance[f"group_{gi}"] = {
-                "queries": grp,
-                "runs": runs,
-                "chosen": ("per_query_min_of_runs" if len(runs) > 1
-                           else "single_run"),
-            }
-            times.update(gtimes)
-            for n in gtimes:
-                group_of[n] = gi
-            drifts[gi] = drift
-            if "cache_stats" in res:
-                cstats = res["cache_stats"]
+            blk = _adjudicate(key, _group_spec(grp, sf_dir),
+                              BUDGETS_SF01 if budget_run else {}, errors,
+                              rerun=budget_run)
         except Exception as exc:  # a dead group must not kill the bench
-            errors[f"group_{gi}"] = str(exc)[:300]
+            errors[key] = str(exc)[:300]
+            continue
+        times.update(blk["times"])
+        canaries[key] = blk["canary"]
+        provenance[key] = {"queries": grp, **blk["provenance"]}
+        violations.update(blk["violations"])
+        cstats = blk.get("cache_stats", cstats)
 
     out: dict = {
         "metric": "suite_seconds",
@@ -819,21 +732,29 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": sf,
+        "host": _host(sf),
         "methodology": {
             "isolation": "fresh JVM per group", "group_size": GROUP_SIZE,
             "groups": len(groups),
             "per_group": "sf0.001 warm + untimed target-sf pass + "
                          f"min of {TIMED_PASSES} timed passes",
             "contention_guard": (
+                "one block runner for the sf0.1 groups, the sf1 block "
+                f"({len(SF1_SPEC['warm_dirs'])} untimed warms + min of "
+                f"{SF1_SPEC['passes']}) and the floor10x block "
+                f"({len(FLOOR10X_SPEC['warm_dirs'])} untimed warm + min "
+                f"of {FLOOR10X_SPEC['passes']}): "
                 f"25M-xxhash CPU canary (floor {CANARY_FLOOR}s) + "
                 f"32-task shuffle canary (floor {SHUFFLE_CANARY_FLOOR}s)"
                 f" + 32MiB write-fsync IO canary (floor "
-                f"{IO_CANARY_FLOOR}s), each min-of-2 at group "
+                f"{IO_CANARY_FLOOR}s), each min-of-2 at block "
                 "start+end; drift = worst of the three mean/floor "
-                f"ratios; groups with >= {int(RERUN_FRACTION * 100)}% "
-                "budget violations, or any violation at drift > "
-                f"{RERUN_DRIFT}, rerun once (per-query min of both "
-                "passes; full per-run evidence in 'provenance')"),
+                "ratios; one rerun rule for every block: a budgeted "
+                f"block with >= {int(RERUN_FRACTION * 100)}% budget "
+                f"violations, or any violation at drift >= {RERUN_DRIFT},"
+                " and a block with no budgets at drift >= "
+                f"{RERUN_DRIFT}, reruns once (per-query min of both "
+                "runs; full per-run evidence in 'provenance')"),
         },
         "canaries": canaries,
         "provenance": provenance,
@@ -843,80 +764,27 @@ def main() -> None:
         # hits==2 is block eviction / process noise, with misses==2 a
         # plan-key instability — tells the next reader WHICH bug to hunt
         out["cache_stats"] = cstats
-    if errors:
-        out["errors"] = errors
 
-    # wall-time budget check (sf0.1 runs only — budgets are calibrated
-    # to that scale factor)
     if budget_run:
-        out["budget_violations"] = _annotate_violations(
-            times, group_of, drifts)
-        # sf1 slope block in its own fresh JVM
-        if os.environ.get("SPARK_GRAFT_SKIP_SF1") != "1":
+        out["budget_violations"] = violations
+        # the sf1 slope block and the floor-bound pair at its 10x
+        # fixture (data-cost view), each in its own fresh JVM
+        skip_scale = os.environ.get("SPARK_GRAFT_SKIP_SF1") == "1"
+        for key, spec, budgets, note in [] if skip_scale else SCALE_BLOCKS:
             try:
-                out["sf1"] = _spawn({"mode": "sf1"}, timeout=2400)
+                blk = _adjudicate(key, spec, budgets, errors, timeout=2400)
             except Exception as exc:   # fixture build/run failure must
-                out["sf1"] = {"error": str(exc)[:200]}  # not kill bench
-        # floor-bound pair at its 10x fixture (data-cost view); same
-        # rerun-on-drift rule as the sf0.1 groups (VERDICT r9 ask #1):
-        # a violation whose canaries drifted past RERUN_DRIFT is
-        # re-measured in a fresh child rather than shipped annotated —
-        # per-query min of both runs, better drift kept, both runs in
-        # the block's own provenance
-        if os.environ.get("SPARK_GRAFT_SKIP_SF1") != "1":
-            try:
-                f10 = _spawn({"mode": "floor10x"}, timeout=2400)
-                runs = [{"run": 1,
-                         "drift": (f10.get("canary") or {}).get(
-                             "drift", 1.0),
-                         "violations": sorted(f10.get("violations")
-                                              or ()),
-                         "times": f10["queries"]}]
-                drift1 = runs[0]["drift"]
-                if f10.get("violations") and _should_rerun(
-                        f10["queries"], budgets=BUDGETS_FLOOR10X,
-                        drift=drift1):
-                    reason = ("mass_violation" if _should_rerun(
-                        f10["queries"], budgets=BUDGETS_FLOOR10X,
-                        drift=1.0) else "violation_with_canary_drift")
-                    try:
-                        f10b = _spawn({"mode": "floor10x"}, timeout=2400)
-                        drift2 = (f10b.get("canary") or {}).get(
-                            "drift", 1.0)
-                        runs.append({"run": 2, "drift": drift2,
-                                     "violations": sorted(
-                                         f10b.get("violations") or ()),
-                                     "times": f10b["queries"],
-                                     "rerun_reason": reason})
-                        merged = _merge_min(f10["queries"],
-                                            f10b["queries"])
-                        drift = min(drift1, drift2)
-                        f10["queries"] = merged
-                        f10["canary"] = (
-                            f10b["canary"] if drift2 < drift1
-                            else f10["canary"])
-                        f10["violations"] = {
-                            n: {"sec": merged[n],
-                                "budget": BUDGETS_FLOOR10X[n],
-                                "canary_drift": drift,
-                                "adjusted_sec": round(
-                                    merged[n] / drift, 3),
-                                "contention_suspect": round(
-                                    merged[n] / drift, 3)
-                                <= BUDGETS_FLOOR10X[n]}
-                            for n in merged
-                            if merged[n] > BUDGETS_FLOOR10X[n]}
-                    except Exception as exc:
-                        errors["floor_bound_10x_rerun"] = str(exc)[:300]
-                        out["errors"] = errors
-                f10["provenance"] = {
-                    "runs": runs,
-                    "chosen": ("per_query_min_of_runs"
-                               if len(runs) > 1 else "single_run"),
-                }
-                out["floor_bound_10x"] = f10
-            except Exception as exc:
-                out["floor_bound_10x"] = {"error": str(exc)[:200]}
+                out[key] = {"error": str(exc)[:200]}  # not kill bench
+                continue
+            out[key] = {
+                "queries": blk["times"],
+                "canary": {**blk["canary"], "floor": CANARY_FLOOR,
+                           "shuffle_floor": SHUFFLE_CANARY_FLOOR,
+                           "io_floor": IO_CANARY_FLOOR},
+                "violations": blk["violations"],
+                "provenance": blk["provenance"],
+                "note": note,
+            }
 
     # Scaling-evident entries (round 11, VERDICT r10 ask #2): the sf0.1
     # headline fixtures are scheduling-floor-bound (0.2-2 s walls), so
@@ -932,8 +800,11 @@ def main() -> None:
     if budget_run:
         sf1_q = (out.get("sf1") or {}).get("queries") or {}
         if sf1_q:
+            out["sf1"]["total"] = round(sum(sf1_q.values()), 3)
             times.update({f"sf1_{n}": t for n, t in sf1_q.items()})
             out["value"] = round(sum(times.values()), 3)
+    if errors:
+        out["errors"] = errors
 
     # dual-write the FULL result next to the repo: the driver's stdout
     # capture is tail-truncated on long lines (BENCH_r06.json lost the

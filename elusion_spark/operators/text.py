@@ -387,11 +387,15 @@ def lm_score_bigram(
     # identity — so the old separate `big.groupBy("__w1")` aggregation
     # re-evaluated the corpus-sized tokenize+zip_with+explode lineage a
     # THIRD time (profiled at sf0.1 as one of three ~0.45 s serial
-    # stages) for a table derivable from pair_counts alone.  The window
-    # needs a (vocab-sized) exchange on __w1, but the old join of
-    # pair_counts [hash(__w1,__w2)] with ctx_counts [hash(__w1)] paid
-    # that same exchange anyway — net: one full corpus pass and its
-    # map-side aggregation removed, zero new exchanges (guide §2.3/2.4).
+    # stages) for a table derivable from pair_counts alone.  The
+    # window's exchange on __w1 carries the distinct-bigram pair table
+    # and replaces the old ctx_counts exchange on __w1, which carried
+    # only the smaller map-side partial context counts (the old
+    # pair_counts/ctx_counts join was a broadcast join).  Net: one full
+    # corpus pass and its map-side aggregation removed, the exchange
+    # count unchanged, one exchange now distinct-bigram-sized instead of
+    # vocab-sized — negligible next to the removed corpus pass
+    # (guide §2.3/2.4).
     pair_counts = big.groupBy("__w1", "__w2").agg(
         F.count("*").alias("__pc")
     )

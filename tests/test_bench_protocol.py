@@ -180,10 +180,10 @@ def test_merge_min_keeps_best_pass():
 
 def test_violation_annotation_separates_contention_from_regression():
     b = _load_bench()
-    times = {"qa": 1.8, "qb": 0.5, "qc": 3.0}
-    group_of = {"qa": 0, "qb": 0, "qc": 1}
-    drifts = {0: 1.9, 1: 1.0}   # group 0 contended, group 1 idle
-    v = b._annotate_violations(times, group_of, drifts, budgets=_BUDGETS)
+    # one contended block (drift 1.9) and one idle block (drift 1.0)
+    v = {**b._annotate_violations({"qa": 1.8, "qb": 0.5}, 1.9,
+                                  budgets=_BUDGETS),
+         **b._annotate_violations({"qc": 3.0}, 1.0, budgets=_BUDGETS)}
     # qa violates raw but its drift-adjusted wall is within budget
     assert v["qa"]["contention_suspect"] is True
     assert v["qa"]["canary_drift"] == 1.9
@@ -199,8 +199,7 @@ def test_floor_bound_annotation():
     b = _load_bench()
     budgets = {"q77_containment_pairs": 1.0, "qa": 1.0}
     v = b._annotate_violations(
-        {"q77_containment_pairs": 1.5, "qa": 1.5},
-        {"q77_containment_pairs": 0, "qa": 0}, {0: 1.0}, budgets=budgets)
+        {"q77_containment_pairs": 1.5, "qa": 1.5}, 1.0, budgets=budgets)
     assert v["q77_containment_pairs"]["floor_bound"] is True
     assert v["qa"]["floor_bound"] is False
 
@@ -250,8 +249,149 @@ def test_methodology_string_matches_timed_passes():
     b = _load_bench()
     import inspect
 
-    src = inspect.getsource(b._run_group)
-    assert f"range(TIMED_PASSES)" in src
-    # the parent derives the string from the same constant
+    # the one child runner times exactly the spec's pass count, and the
+    # sf0.1 group spec takes that count from the constant
+    src = inspect.getsource(b._run_block)
+    assert 'range(spec["passes"])' in src
+    assert b._group_spec(["q"], "x")["passes"] == b.TIMED_PASSES
+    # the parent derives the string from the same constant and specs
     main_src = inspect.getsource(b.main)
     assert 'f"min of {TIMED_PASSES} timed passes"' in main_src
+    assert "SF1_SPEC['passes']" in main_src
+    assert "FLOOR10X_SPEC['passes']" in main_src
+
+
+def test_block_specs_pin_warm_dirs_and_passes():
+    """Each block keeps the protocol its budgets were calibrated on:
+    sf0.1 groups warm at sf0.001 then at the target (min-of-3), sf1
+    warms twice (min-of-3), floor10x warms once (min-of-2)."""
+    b = _load_bench()
+    sf01 = "testdata/sf0.1"
+    grp = b._group_spec(["q01_pricing_summary", "q05_window_rank"], sf01)
+    assert grp["warm_dirs"] == [b.WARM_DIR, sf01]
+    assert b.WARM_DIR.endswith("/sf0.001")
+    assert grp["passes"] == 3 and grp["cache_pair"] is True
+    assert b._group_spec(["q05_window_rank"], sf01)["cache_pair"] is False
+    assert b.SF1_SPEC["warm_dirs"] == ["/tmp/sf1", "/tmp/sf1"]
+    assert b.SF1_SPEC["passes"] == 3
+    assert b.SF1_SPEC["queries"] == b.SF1_QUERIES
+    assert b.FLOOR10X_SPEC["warm_dirs"] == ["/tmp/scale10"]
+    assert b.FLOOR10X_SPEC["passes"] == 2
+    assert b.FLOOR10X_SPEC["queries"] == b.FLOOR10X_QUERIES
+    # every spec reaches the child as JSON on argv
+    for spec in (grp, b.SF1_SPEC, b.FLOOR10X_SPEC):
+        assert json.loads(json.dumps(spec)) == spec
+
+
+def _fake_child(b, times, drift):
+    """A child result whose three canaries all read `drift` x floor."""
+    return {"times": dict(times), "canary": {
+        "start": b.CANARY_FLOOR * drift, "end": b.CANARY_FLOOR * drift,
+        "shuffle_start": b.SHUFFLE_CANARY_FLOOR,
+        "shuffle_end": b.SHUFFLE_CANARY_FLOOR,
+        "io_start": b.IO_CANARY_FLOOR, "io_end": b.IO_CANARY_FLOOR}}
+
+
+def _spawn_sequence(monkeypatch, b, results):
+    calls = []
+
+    def fake_spawn(spec, timeout=1800):
+        calls.append(spec)
+        return results[len(calls) - 1]
+
+    monkeypatch.setattr(b, "_spawn", fake_spawn)
+    return calls
+
+
+def test_block_without_budgets_reruns_on_drift_alone(monkeypatch):
+    """The sf1 block has no budgets, so drift is its only evidence: it
+    reruns once at drift >= RERUN_DRIFT and not below it."""
+    b = _load_bench()
+    t = {"q01_pricing_summary": 2.0}
+    assert b._should_rerun(t, budgets={}, drift=b.RERUN_DRIFT)
+    assert not b._should_rerun(t, budgets={}, drift=b.RERUN_DRIFT - 0.01)
+    assert not b._should_rerun(t, budgets={})
+
+    # through the one adjudication path: drifted first run -> rerun,
+    # per-query min, the better run's canaries and drift kept
+    calls = _spawn_sequence(monkeypatch, b, [
+        _fake_child(b, {"q01_pricing_summary": 3.0, "q05": 1.0}, 1.5),
+        _fake_child(b, {"q01_pricing_summary": 2.0, "q05": 1.2}, 1.0)])
+    errors = {}
+    blk = b._adjudicate("sf1", b.SF1_SPEC, {}, errors)
+    assert len(calls) == 2 and calls[0] is b.SF1_SPEC and not errors
+    assert blk["times"] == {"q01_pricing_summary": 2.0, "q05": 1.0}
+    assert blk["canary"]["drift"] == 1.0
+    assert blk["violations"] == {}
+    runs = blk["provenance"]["runs"]
+    assert [r["drift"] for r in runs] == [1.5, 1.0]
+    assert runs[1]["rerun_reason"] == "canary_drift"
+    assert blk["provenance"]["chosen"] == "per_query_min_of_runs"
+
+    # just under the threshold: one run, shipped as measured
+    drift = b.RERUN_DRIFT - 0.01
+    calls = _spawn_sequence(monkeypatch, b, [
+        _fake_child(b, {"q01_pricing_summary": 3.0}, drift)])
+    blk = b._adjudicate("sf1", b.SF1_SPEC, {}, {})
+    assert len(calls) == 1
+    assert blk["provenance"] == {"runs": [
+        {"run": 1, "drift": drift, "violations": [],
+         "times": {"q01_pricing_summary": 3.0}}], "chosen": "single_run"}
+    # a run whose budgets are off (e.g. sf0.01) never reruns
+    calls = _spawn_sequence(monkeypatch, b, [
+        _fake_child(b, {"q01_pricing_summary": 3.0}, 2.0)])
+    b._adjudicate("group_0", b._group_spec(["q01_pricing_summary"], "x"),
+                  {}, {}, rerun=False)
+    assert len(calls) == 1
+
+
+def test_floor10x_violation_is_annotated_like_every_other(monkeypatch):
+    """VERDICT r11 #2: floor10x violations come from the same
+    annotation as the sf0.1 groups, drift evidence and floor_bound
+    included, after the same rerun rule."""
+    b = _load_bench()
+    slow = {"q77_containment_pairs": 2.0,
+            "q46_training_corpus": b.BUDGETS_FLOOR10X[
+                "q46_training_corpus"] + 1.0}
+    # one of two budgeted entries over -> the mass-violation rerun; the
+    # rerun is no faster, so the violation survives at drift 1.1
+    calls = _spawn_sequence(monkeypatch, b, [
+        _fake_child(b, slow, 1.1), _fake_child(b, slow, 1.1)])
+    blk = b._adjudicate("floor_bound_10x", b.FLOOR10X_SPEC,
+                        b.BUDGETS_FLOOR10X, {}, timeout=2400)
+    assert len(calls) == 2
+    assert blk["provenance"]["runs"][1]["rerun_reason"] == "mass_violation"
+    v = blk["violations"]
+    assert set(v) == {"q46_training_corpus"}
+    q46 = v["q46_training_corpus"]
+    sec = slow["q46_training_corpus"]
+    assert q46 == {"sec": sec,
+                   "budget": b.BUDGETS_FLOOR10X["q46_training_corpus"],
+                   "canary_drift": 1.1,
+                   "adjusted_sec": round(sec / 1.1, 3),
+                   "contention_suspect": False, "floor_bound": True}
+
+    # a failed rerun keeps the first run and records the error
+    def spawn_then_die(spec, timeout=1800):
+        if not calls2:
+            calls2.append(spec)
+            return _fake_child(b, slow, 1.0)
+        raise RuntimeError("child died")
+
+    calls2 = []
+    monkeypatch.setattr(b, "_spawn", spawn_then_die)
+    errors = {}
+    blk = b._adjudicate("floor_bound_10x", b.FLOOR10X_SPEC,
+                        b.BUDGETS_FLOOR10X, errors)
+    assert "child died" in errors["floor_bound_10x_rerun"]
+    assert blk["provenance"]["chosen"] == "single_run"
+    assert blk["violations"]["q46_training_corpus"]["canary_drift"] == 1.0
+
+
+def test_host_block_records_the_machine():
+    b = _load_bench()
+    host = b._host(0.1)
+    assert set(host) == {"nproc", "spark_graft_cpus", "git_sha",
+                         "spark_version", "sf"}
+    assert isinstance(host["nproc"], int) and host["nproc"] >= 1
+    assert host["sf"] == 0.1 and host["spark_version"]

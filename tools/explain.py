@@ -1,9 +1,12 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for benched queries into plans/r10/.
+"""Capture .explain("formatted") for benched queries into plans/<round>/.
 
 Usage:
-    python tools/explain_r10.py before [query ...]
-    python tools/explain_r10.py after  [query ...]
+    python tools/explain.py <round> before [query ...]
+    python tools/explain.py <round> after  [query ...]
+
+e.g. ``python tools/explain.py r11 after q76_lm_score_bigram`` writes
+plans/r11/q76_lm_score_bigram_after.txt.
 
 With no query names, captures every BENCH_QUERIES entry.  Plans are
 captured at sf0.1 (the driver's bench scale) so join-strategy choices
@@ -22,10 +25,13 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or [n for n in BENCH_QUERIES if n in QUERIES]
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or [n for n in BENCH_QUERIES if n in QUERIES]
     outdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r10")
+        os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark()
     for name in names:
