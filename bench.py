@@ -97,7 +97,7 @@ BENCH_QUERIES = [
     "q135_dedup_repeated_spans", # C4-style span dedup (explode+rank+reassemble)
     "q136_retrieval_metrics", # precision/recall/MRR/nDCG per query
     "q138_token_budget_mix",  # deterministic per-stratum token-budget prefix
-    "q140_bpe_encode",        # BPE train (3 merges) + chained-replace encode
+    "q140_bpe_encode",        # BPE train (3 merges) + per-task memo encode
     "q141_random_projection", # JL sketch: md5-sign matrix folded into codegen
     "q142_pq_adc_topk",       # PQ: 2x distributed Lloyd + ADC top-k scan
     "q143_ivf_pq_search",     # IVF-PQ: cell probe filter + ADC inside
@@ -114,10 +114,8 @@ BENCH_QUERIES = [
     "q153_ivfpq_residual",    # residual-encoded IVF-PQ (per-cell LUTs)
     "q154_gopher_filters",    # Gopher rule family (pure scan projection)
     "q155_pca_whiten",        # folded-matrix whitened PCA projection
-    "q156_unigram_encode",    # unigram-LM Viterbi encode (distinct words)
-    "q157_bpe_word_encode",   # BPE word-mode encode (wordseg scaffold)
-    "q158_unigram_byte_fallback",  # byte fallback over pinned shuffle join
-    "q159_bpe_map_encode",    # zero-shuffle map encode (per-task memo)
+    "q156_unigram_encode",    # unigram-LM Viterbi encode (per-task memo)
+    "q158_unigram_byte_fallback",  # unigram encode with byte fallback
     "q46_training_corpus",    # end-to-end curation composite (9 stages)
     "q160_hf_import_encode",  # imported HF tokenizer (Metaspace) map encode
     "q162_wordpiece_encode",  # imported BERT-family WordPiece map encode
@@ -186,15 +184,9 @@ BUDGETS_SF01 = {
     "q153_ivfpq_residual": 1.6, "q46_training_corpus": 3.7,
     "q154_gopher_filters": 1.4, "q155_pca_whiten": 0.35,
     "q156_unigram_encode": 1.6,
-    # round-8 entries: 1.3x the worse of two same-day clean
-    # calibration runs (q157's wall is dominated by the 3-merge
-    # bpe_fit's vocab jobs, shared shape with q140)
-    "q157_bpe_word_encode": 2.85, "q158_unigram_byte_fallback": 1.6,
-    # r9 ratchet: q159's final-group composition changed (3-4 small
-    # entries after q46 moved ahead of it) and five clean same-day
-    # readings sat at 0.87-1.08; 1.3x the worse clean pair (1.055 /
-    # 1.076) — was 2.45 from the r8 grouping
-    "q159_bpe_map_encode": 1.45,
+    # round-8 entry: 1.3x the worse of two same-day clean
+    # calibration runs
+    "q158_unigram_byte_fallback": 1.6,
     # round-9 entries: 1.3x the worse of two same-day CLEAN calibration
     # runs of the final group (q160: 0.662/0.734 at drift <= 1.006;
     # q162: 0.715/0.634 at drift <= 1.087 — a third run at drift 2.27
@@ -205,9 +197,8 @@ BUDGETS_SF01 = {
     # calibration runs of the re-composed 7-entry final group (drifts
     # 1.067 / 1.145): q163 0.688/0.602, q164 1.649/1.577, q165
     # 0.690/0.699.  The group's pre-existing entries re-read inside
-    # their budgets under the new composition (q159 0.948/0.972 vs
-    # 1.45; q46 3.645/3.397 vs 4.8; q160 0.665/0.680 and q162
-    # 0.630/0.579 vs 0.95)
+    # their budgets under the new composition (q46 3.645/3.397 vs
+    # 4.8; q160 0.665/0.680 and q162 0.630/0.579 vs 0.95)
     "q163_llama3_import_encode": 0.9,
     "q164_sentencepiece_lifecycle": 2.15,
     "q165_special_token_split": 0.9,

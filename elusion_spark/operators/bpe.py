@@ -18,11 +18,11 @@ loop on the cluster for vocabularies that genuinely cannot sit on the
 driver: each iteration is ONE vocab-sized aggregation (adjacent-pair
 counts weighted by word frequency) plus a single-row driver collect of
 the winning pair; applying the merge is a literal `replace` on the
-symbol string — a narrow map.  Encoding has two bit-identical modes: a pure
-chained-`replace` expression (whole-stage codegen, no UDF, no shuffle)
-for small merge lists, and a distinct-word ``mapInPandas`` path
-(``operators.wordseg``) that carries production-sized (30k-merge)
-vocabularies — ``bpe_encode(mode='auto')`` picks by measured cutover.
+symbol string — a narrow map.  Encoding (``bpe_encode``) is one
+``mapInPandas`` pass with a per-task distinct-word memo
+(``operators.wordseg``); its cost per word is the merges that occur in
+that word, so production-sized (30k-merge) vocabularies encode as fast
+as small ones.
 
 Representation: every symbol is wrapped in ``\\x1f`` (the ASCII unit
 separator), so the word "hello" starts as
@@ -447,26 +447,26 @@ def bpe_fit(
 
 
 def bpe_segment_word(word: str, ranks: dict) -> list[str]:
-    """Apply learned merges to ONE word (python-side, used by the
-    word-mode encode path): repeatedly find the lowest-rank adjacent
+    """Apply learned merges to ONE word (python-side, the segmenter
+    behind ``bpe_encode``): repeatedly find the lowest-rank adjacent
     symbol pair present and merge every non-overlapping occurrence
     left-to-right.  ``ranks`` maps ``(lft, rgt) -> rank`` (lower =
     earlier merge).
 
-    BIT-EQUAL to the chained-replace semantics ``bpe_encode`` documents
-    (each merge a greedy left-to-right non-overlapping replace, in rank
-    order), for any WELL-FORMED merge list — one where each pair's
-    symbols are base characters or outputs of earlier merges, which is
-    what ``bpe_fit`` always produces.  Proof shape: merging pair k
-    creates new adjacencies only INVOLVING k's output symbol, and that
-    symbol can only appear inside pairs of rank > k — so once rank k's
-    single pass is done, rank-<=k pairs can never reappear, making
-    "lowest rank present, repeat" identical to "one pass per rank in
-    order".  The equivalence is additionally pinned by randomized
-    parity tests against the chained-replace expression path
-    (tests/test_bpe.py).  Cost: O(word_len x merges_applied) — absent
-    merges cost nothing, vs the chain path where every document pays a
-    scan per merge whether or not the pair occurs."""
+    BIT-EQUAL to one greedy left-to-right non-overlapping pass per
+    merge in rank order (the literal-`replace` rule the distributed
+    fit applies and the q140 oracle replays in SQL), for any
+    WELL-FORMED merge list — one where each pair's symbols are base
+    characters or outputs of earlier merges, which is what ``bpe_fit``
+    always produces.  Proof shape: merging pair k creates new
+    adjacencies only INVOLVING k's output symbol, and that symbol can
+    only appear inside pairs of rank > k — so once rank k's single pass
+    is done, rank-<=k pairs can never reappear, making "lowest rank
+    present, repeat" identical to "one pass per rank in order".  The
+    equivalence is additionally pinned by randomized tests against a
+    sequential-pass reference (tests/test_tokenizer_encode.py).  Cost:
+    O(word_len x merges_applied) — merges absent from the word cost
+    nothing."""
     return bpe_segment_syms(list(word), ranks)
 
 
@@ -500,163 +500,37 @@ def bpe_segment_syms(syms: list[str], ranks: dict) -> list[str]:
     return syms
 
 
-# Measured cutover for mode='auto' (SCALE.md round 8,
-# tools/bpe_encode_scale.py).  The prediction was "falls out of
-# whole-stage codegen around the 64KB method limit"; the measured
-# reality is harder: Catalyst's ColumnNode->Expression conversion
-# recurses once per chained `replace`, and on this JVM (default thread
-# stack) the conversion throws java.lang.StackOverflowError between
-# 256 and 272 chained nodes — binary-searched, reproducible, long
-# before codegen limits matter.  128 leaves 2x margin for deeper
-# calling contexts (the overflow point shifts with whatever frames sit
-# below the conversion).  Perf makes the cutover a non-event: map mode
-# (zero-shuffle, per-task memo) measures FASTER than the chain at
-# every merge count on both corpora (0.025-0.033 s vs 0.033-0.054 s,
-# and 0.025 s at the full 30k-merge model where the chain cannot run
-# at all); chain stays the small-model default only because it is
-# zero-PYTHON — no Arrow transfer of the corpus through workers, which
-# is the conservative choice when the python worker pool is the
-# contended resource.
-CHAIN_MODE_MAX_MERGES = 128
-
-
 def bpe_encode(
     df: DataFrame,
     text_col: str = "text",
     merges: list[dict] | None = None,
     lowercase: bool = True,
     out_col: str = "tokens",
-    mode: str = "auto",
-    id_col: str | None = None,
-    broadcast_segments: bool | str = "auto",
 ) -> DataFrame:
     """Apply learned merges: tokenize ``text_col`` into an
     ``array<string>`` of BPE symbols (whitespace word split, then the
     merges replayed in rank order inside each word) plus a bigint
-    ``n_tokens``.  Two bit-identical execution modes (VERDICT r7 ask
-    #1 — a realistic tokenizer has 30k merges, not 3):
+    ``n_tokens``.
 
-    - ``mode='chain'``: the chained-replace expression pipeline below —
-      zero shuffles, zero Python, ideal while the merge list is small
-      enough to stay inside whole-stage codegen;
-    - ``mode='map'``: ZERO-shuffle ``wordseg.encode_words_in_task`` —
-      one ``mapInPandas`` pass with the merge table in the closure and
-      a per-task distinct-word memo (repeated words cost a dict
-      lookup).  Nothing crosses the wire; the path that rides a 100 TB
-      scan with an arbitrarily large vocabulary.
-    - ``mode='words'``: the ``operators.wordseg`` distinct-word
-      scaffold (shared with ``unigram_lm_encode``) — segment each
-      DISTINCT word once GLOBALLY in a vectorized ``mapInPandas``
-      (``bpe_segment_word``: only merges that actually occur in a word
-      cost anything), then join the token arrays back.  Pays two
-      corpus-sized shuffles (positions out, arrays back); wins only
-      when per-word segmentation is very expensive and words repeat
-      across tasks but not within them.  ``id_col`` /
-      ``broadcast_segments`` plumb through to the scaffold (see
-      ``wordseg`` for both contracts); both are ignored by the chain
-      and map paths, which need neither a key nor a join.
-    - ``mode='auto'`` (default): chain for ``len(merges) <=
-      CHAIN_MODE_MAX_MERGES`` (128), map above — cutover measured,
-      not guessed (SCALE.md round 8): forcing ``mode='chain'`` past
-      ~256 merges throws ``java.lang.StackOverflowError`` inside
-      Catalyst's column conversion, so auto exists to keep callers off
-      that cliff, not just off a slow path.
+    Runs as ``wordseg.encode_words_in_task``: one ``mapInPandas`` pass
+    with the merge table in the closure and a per-task distinct-word
+    memo, so a repeated word costs a dict lookup and a new one costs
+    only the merges that occur in it (``bpe_segment_word``).  Nothing
+    crosses the wire and no state is kept, so the same plan rides a
+    100 TB scan or a streaming DataFrame, with any merge count.
 
-    Chain path details: the filtered words are re-joined with an
-    ``\\x1e`` boundary byte, ONE regex pass wraps every character, the
-    merge chain runs as ``num_merges`` literal `replace` calls over the
-    whole document string (plain codegen string ops — no higher-order-
-    function lambda, which Spark executes as interpreted
-    CodegenFallback), and ONE regex split recovers the flat token
-    array.  Merges can never cross a word boundary because the
-    ``\\x1e`` byte sits between the two symbol wrappers, so
-    per-document and per-word application are bit-identical (9x faster
-    measured: the per-word ``transform`` variant paid an interpreted
-    regex per word).  Zero shuffles, zero Python: the shape that rides
-    a 100 TB scan for free.
+    Words containing the ``\\x1f`` symbol separator or the ``\\x1e``
+    record separator are excluded (unprintable control bytes that a
+    real corpus sheds in ``normalize_text``); the exclusion decides
+    which tokens come out, so it is part of the output contract."""
+    from .wordseg import encode_words_in_task
 
-    Words containing the ``\\x1e`` boundary byte are excluded exactly
-    like ``\\x1f``-bearing words (both are unprintable control bytes
-    that a real corpus sheds in ``normalize_text``) — in BOTH modes,
-    so the two outputs stay bit-equal."""
-    merges = merges or []
-    if mode == "auto":
-        mode = "chain" if len(merges) <= CHAIN_MODE_MAX_MERGES else "map"
-    if mode not in ("chain", "words", "map"):
-        raise ValueError(f"mode must be 'auto', 'chain', 'words' or "
-                         f"'map'; got {mode!r}")
-    bound = "\x1e"
-    if mode == "map":
-        from .wordseg import encode_words_in_task
-
-        ranks = {(m["lft"], m["rgt"]): i for i, m in enumerate(merges)}
-        out = encode_words_in_task(
-            df, text_col,
-            lambda w: bpe_segment_word(w, ranks),
-            lowercase=lowercase, out_col=out_col,
-            word_filter_py=lambda w: SEP not in w and bound not in w,
-        )
-        return out.withColumn(
-            "n_tokens", F.size(F.col(out_col)).cast("bigint"))
-    if mode == "words":
-        from .wordseg import encode_words_via_distinct
-
-        ranks = {(m["lft"], m["rgt"]): i for i, m in enumerate(merges)}
-        out = encode_words_via_distinct(
-            df, text_col,
-            lambda w: bpe_segment_word(w, ranks),
-            lowercase=lowercase, out_col=out_col, id_col=id_col,
-            word_filter=lambda x: (F.length(x) > 0) & ~x.contains(SEP)
-                                  & ~x.contains(bound),
-            broadcast_segments=broadcast_segments,
-        )
-        return out.withColumn(
-            "n_tokens", F.size(F.col(out_col)).cast("bigint"))
-    return _bpe_encode_chain(df, text_col, merges, lowercase, out_col,
-                             bound)
-
-
-def _bpe_encode_chain(
-    df: DataFrame,
-    text_col: str,
-    merges: list[dict],
-    lowercase: bool,
-    out_col: str,
-    bound: str,
-) -> DataFrame:
-    """The chained-replace expression path — see ``bpe_encode``.
-
-    The input is spread across cores first (round 11): a single-file
-    scan arrives as ONE partition (one parquet row group = one split),
-    which serialized the whole chained-replace map on one core —
-    measured at sf0.1 as a 2.7 s single-task stage inside q140's 2.76 s
-    wall.  ``_ensure_parallelism`` shuffles the doc text once (tiny next
-    to the per-doc replace work) and is a no-op at scale, where the scan
-    already has splits (guide §2.5: input with too few splits —
-    repartition immediately after the read)."""
-    from .similarity import _ensure_parallelism
-
-    df = _ensure_parallelism(df)
-    text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    words = F.filter(
-        F.split(text, r"\s+"),
-        lambda x: (F.length(x) > 0) & ~x.contains(SEP) & ~x.contains(bound),
+    ranks = {(m["lft"], m["rgt"]): i for i, m in enumerate(merges or [])}
+    out = encode_words_in_task(
+        df, text_col,
+        lambda w: bpe_segment_word(w, ranks),
+        lowercase=lowercase, out_col=out_col,
+        word_filter_py=lambda w: SEP not in w and "\x1e" not in w,
     )
-    doc = F.regexp_replace(
-        F.concat_ws(bound, words), f"([^{bound}])", f"{SEP}$1{SEP}"
-    )
-    for m in merges:
-        doc = F.replace(
-            doc,
-            F.lit(_wrap(m["lft"]) + _wrap(m["rgt"])),
-            F.lit(_wrap(m["lft"] + m["rgt"])),
-        )
-    toks = F.when(F.length(doc) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(
-            F.regexp_replace(doc, f"^{SEP}|{SEP}$", ""),
-            f"{SEP}{bound}{SEP}|{SEP}{SEP}",
-        )
-    )
-    return df.withColumn(out_col, toks).withColumn(
-        "n_tokens", F.size(F.col(out_col)).cast("bigint")
-    )
+    return out.withColumn(
+        "n_tokens", F.size(F.col(out_col)).cast("bigint"))

@@ -12,7 +12,7 @@ into this container).
 Engine-trained exports pin the engine's own pipeline
 (``WhitespaceSplit`` + optional ``Lowercase``).  IMPORT additionally
 replays the pre-tokenizers and models published tokenizers actually
-ship, each as a per-word transform inside the zero-shuffle map-mode
+ship, each as a per-word transform inside the zero-shuffle
 encode (``hf_tokenizer_encode``):
 
 - ``ByteLevel`` (GPT-2/RoBERTa family): byte→unicode remap + the
@@ -1060,7 +1060,7 @@ def hf_tokenizer_encode(
     """Encode a corpus with an ``import_hf_tokenizer_json`` model —
     pre-tokenizer replayed per word, zero shuffles.
 
-    Runs the map-mode path (``wordseg.encode_words_in_task``: one
+    Runs the shared encode path (``wordseg.encode_words_in_task``: one
     ``mapInPandas`` pass, model + compiled pre-tokenizer in the
     closure, per-task distinct-word memo with a separate
     document-initial memo — ByteLevel and Metaspace are

@@ -344,10 +344,7 @@ def unigram_lm_encode(
     model: list[dict] | None = None,
     lowercase: bool = True,
     out_col: str = "tokens",
-    id_col: str | None = None,
     byte_fallback: bool = False,
-    broadcast_segments: bool | str = "auto",
-    mode: str = "distinct",
 ) -> DataFrame:
     """Viterbi-encode a corpus with a ``unigram_lm_fit`` model: tokens
     as ``array<string>`` in ``out_col`` (word order preserved).  Words
@@ -356,34 +353,10 @@ def unigram_lm_encode(
     piece per UTF-8 byte instead — SentencePiece's production default,
     so junk strings survive tokenization instead of vanishing.
 
-    Scale shape (``operators.wordseg``, shared with BPE's word-mode
-    encode): segmentation happens ONCE PER DISTINCT WORD — the corpus
-    explodes to (row, pos, word), distinct words segment in a
-    vectorized ``mapInPandas`` (model in the closure), and a join maps
-    words back to token arrays before a grouped re-assembly.  Cost: one
-    distinct-word agg + one vocab-sized join + one group-back; the
-    heavy text never shuffles twice.
-
-    ``broadcast_segments`` governs that join (VERDICT r7 ask #2 — the
-    segmented distinct-word table follows Heaps' law and at web scale
-    exceeds any broadcast limit): ``'auto'`` (default) lets AQE
-    broadcast iff the measured runtime size is under the engine
-    threshold and fall back to a shuffle join otherwise; ``True``
-    forces the broadcast (only when the vocabulary is KNOWN small);
-    ``False`` pins the shuffle join.  See ``wordseg`` for the full
-    contract, and its docstring for the ``id_col`` /
-    ``monotonically_increasing_id`` footgun.
-
-    ``mode='map'`` switches to the ZERO-shuffle
-    ``wordseg.encode_words_in_task`` path: one ``mapInPandas`` with
-    the model in the closure and a per-task distinct-word memo —
-    nothing crosses the wire, the shape that rides a 100 TB scan
-    (``id_col``/``broadcast_segments`` are then irrelevant and
-    ignored).  Default stays ``'distinct'``; bit-parity between the
-    two is pinned by tests."""
-    if mode not in ("distinct", "map"):
-        raise ValueError(
-            f"mode must be 'distinct' or 'map'; got {mode!r}")
+    Runs as ``wordseg.encode_words_in_task`` (shared with
+    ``bpe_encode``): one ``mapInPandas`` pass with the model in the
+    closure and a per-task distinct-word memo, so each distinct word of
+    a task is Viterbi-segmented once and nothing crosses the wire."""
     if not model:
         raise ValueError("model (unigram_lm_fit output) is required")
     lp = quantize_logprobs(
@@ -396,17 +369,9 @@ def unigram_lm_encode(
             toks = byte_fallback_tokens(w)
         return toks
 
-    if mode == "map":
-        from .wordseg import encode_words_in_task
+    from .wordseg import encode_words_in_task
 
-        return encode_words_in_task(
-            df, text_col, _segment,
-            lowercase=lowercase, out_col=out_col,
-        )
-    from .wordseg import encode_words_via_distinct
-
-    return encode_words_via_distinct(
+    return encode_words_in_task(
         df, text_col, _segment,
-        lowercase=lowercase, out_col=out_col, id_col=id_col,
-        broadcast_segments=broadcast_segments,
+        lowercase=lowercase, out_col=out_col,
     )

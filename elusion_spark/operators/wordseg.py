@@ -1,58 +1,21 @@
-"""Distinct-word segmentation scaffold shared by the tokenizer family.
+"""The tokenizer family's one encode path.
 
-Both tokenizer ENCODE paths (``bpe.bpe_encode(mode='words')`` and
-``unigram_lm.unigram_lm_encode``) have the same scale shape: a word's
-segmentation depends only on the word, so the corpus should pay the
-segmentation cost once per DISTINCT word (Heaps' law: the distinct-word
-table is orders of magnitude smaller than the token stream), then join
-the per-word token arrays back and reassemble documents in word order.
-This module owns that scaffold once:
-
-1. explode the corpus to ``(row, pos, word)`` — the only corpus-sized
-   map;
-2. ``DISTINCT word`` — one vocabulary-sized shuffle;
-3. segment each distinct word in a vectorized ``mapInPandas`` (the
-   model lives in the closure — model-sized, shipped with the task);
-4. join the token arrays back to the positions and re-assemble each
-   document with an ``array_sort(collect_list(struct(pos, toks)))``
-   fold — one id-keyed shuffle of (id, pos, small-array) rows.
-
-The RAW document bodies never shuffle, but the (id, pos, word) explode
-and the token-array group-back are corpus-sized exchanges — at 100 TB
-this path pays ~2 corpus-wide shuffles.  ``encode_words_in_task`` below
-is the ZERO-shuffle alternative (per-task distinct-word memo, model in
-the closure) and measures faster at every merge count on both test
-corpora (SCALE.md round 8); the distinct path remains for workloads
-where per-word segmentation is expensive enough that once-GLOBALLY
-matters, and as the SQL-joinable form its oracle replays.
-
-Broadcast policy for the join in step 4 (VERDICT r7 ask #2): the
-segmented table is vocabulary-sized, which on fixture corpora is
-kilobytes but on a web corpus follows Heaps' law into tens of GB
-(URLs, hashes, junk strings are all distinct "words") — an
-unconditional ``F.broadcast`` would OOM the driver at exactly the
-scale the scaffold exists for.  ``broadcast_segments``:
-
-- ``'auto'`` (default): NO forced hint — the join runs under AQE,
-  which measures the segmented side's actual shuffle size at runtime
-  and converts to a broadcast join iff it is under
-  ``spark.sql.autoBroadcastJoinThreshold``, else keeps the shuffle
-  join.  This is the size gate done by the engine itself: zero extra
-  jobs, never OOMs, broadcasts exactly when it is cheap.
-- ``True``: force ``F.broadcast`` (the pre-round-8 behavior) — callers
-  that KNOW the vocabulary is small can skip the segmented side's
-  exchange entirely.
-- ``False``: force the shuffle-join path (``merge`` hint), pinning the
-  plan AQE would pick at web scale — used by tests to prove both paths
-  are bit-identical.
+A word's segmentation depends only on the word, so every encoder —
+``bpe.bpe_encode``, ``unigram_lm.unigram_lm_encode`` and
+``tokenizer_io.hf_tokenizer_encode`` — hands its per-word segmenter to
+``encode_words_in_task``: one ``mapInPandas`` pass with the model in
+the closure and a per-task distinct-word memo (the design HF's
+tokenizers library uses).  Heaps' law keeps the distinct words of a
+task far fewer than its word occurrences, so the segmentation cost
+approaches once per distinct word per task, and no row, word or token
+array ever shuffles.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def encode_words_in_task(
@@ -66,31 +29,25 @@ def encode_words_in_task(
     segment_first_word: Callable[[str], list[str]] | None = None,
     specials: list[str] | None = None,
 ) -> DataFrame:
-    """ZERO-SHUFFLE sibling of ``encode_words_via_distinct``: tokenize
-    each document inside one ``mapInPandas`` pass with the model in
-    the closure and a per-task DISTINCT-WORD MEMO (the design HF's
-    tokenizers library uses) — repeated words cost a dict lookup, so
-    the per-occurrence python cost collapses toward the per-distinct
-    cost within every task, and NOTHING crosses the wire: no explode,
-    no join, no group-back.  At 100 TB this is the path that rides the
-    scan; the distinct-word path pays two corpus-sized shuffles
-    (positions out, token arrays back) in exchange for segmenting each
-    word once GLOBALLY instead of once per task.  Rule of thumb from
-    the measured crossover (SCALE.md round 8): map mode wins whenever
-    the corpus is large relative to the per-task distinct-word count —
-    i.e. almost always at scale; the distinct path wins only when
-    segmentation is extremely expensive per word AND words repeat
-    heavily ACROSS tasks but not within them.
+    """Attach ``out_col: array<string>`` = the concatenation of
+    ``segment_word(w)`` over ``text_col``'s whitespace words, tokenizing
+    each document inside one ``mapInPandas`` pass with the model in the
+    closure and a per-PARTITION distinct-word memo: a repeated word
+    costs a dict lookup, and nothing crosses the wire — no explode, no
+    join, no group-back.  Words for which ``segment_word`` returns
+    ``[]`` contribute nothing (the caller's segmenter owns fallback
+    policy).  An existing ``out_col`` is replaced in place.
 
-    Bit-parity contract with the distinct path: words are split on the
-    ASCII whitespace class ``[ \\t\\n\\x0b\\f\\r]`` (exactly Java's
-    ``\\s``, which the expression path's ``split(.., '\\\\s+')`` uses —
-    python's default ``str.split`` would also split on U+00A0 etc. and
-    diverge), empty strings are dropped, and ``word_filter_py`` mirrors
-    any extra Column-side exclusions.  Lowercasing uses python
-    ``str.lower`` vs the JVM's ``lower`` — identical on ASCII and
-    common accented text (pinned by tests); exotic locale-dependent
-    case mappings are the documented divergence edge.
+    Word split: the ASCII whitespace class ``[ \\t\\n\\x0b\\f\\r]``
+    (exactly Java's ``\\s``, so the words are those of Spark's
+    ``split(.., '\\\\s+')`` in ``bpe_word_counts`` and the oracles' SQL
+    replays — python's default ``str.split`` would also split on U+00A0
+    etc. and diverge); empty strings are dropped, and
+    ``word_filter_py`` drops any further words the caller excludes.
+    Lowercasing uses python ``str.lower`` vs the JVM's ``lower`` —
+    identical on ASCII and common accented text (pinned by tests);
+    exotic locale-dependent case mappings are the documented
+    divergence edge.
 
     ``segment_first_word``: optional distinct segmenter for each
     document's FIRST (surviving) word — position-sensitive
@@ -127,8 +84,7 @@ def encode_words_in_task(
     # fresh StructType — df.schema is cached on the DataFrame and
     # StructType.add mutates in place; an existing out_col field is
     # REPLACED IN PLACE (keeping its original position — withColumn's
-    # semantics on the chain path, ADVICE r9 #5), so the modes stay
-    # schema-identical including column ORDER
+    # semantics, ADVICE r9 #5)
     out_field = T.StructField(out_col, T.ArrayType(T.StringType()))
     if out_col in df.columns:
         schema = T.StructType(
@@ -195,82 +151,3 @@ def encode_words_in_task(
 
     return df.mapInPandas(_fn, schema)
 
-
-def encode_words_via_distinct(
-    df: DataFrame,
-    text_col: str,
-    segment_word: Callable[[str], list[str]],
-    *,
-    lowercase: bool = True,
-    out_col: str = "tokens",
-    id_col: str | None = None,
-    word_filter: Callable[[Column], Column] | None = None,
-    broadcast_segments: bool | str = "auto",
-) -> DataFrame:
-    """Attach ``out_col: array<string>`` = the concatenation of
-    ``segment_word(w)`` over ``text_col``'s whitespace words (words for
-    which ``segment_word`` returns ``[]`` contribute nothing — the
-    caller's segmenter owns fallback policy).  See the module docstring
-    for the scale shape and the ``broadcast_segments`` contract.
-
-    ``word_filter`` (a Column predicate applied inside ``F.filter`` on
-    the split array) defaults to dropping empty strings only; callers
-    with extra exclusions (BPE's separator-byte words) pass their own.
-
-    Give ``id_col`` whenever the input has a key.  Without one, a
-    synthetic id comes from ``monotonically_increasing_id()``, which is
-    only stable when the plan below it re-evaluates identically (a
-    plain file scan); shuffled/AQE-replanned inputs must pass a real
-    ``id_col`` or the re-attach join can mispair — the classic Spark
-    nondeterministic-id footgun, surfaced here instead of hidden."""
-    if broadcast_segments not in (True, False, "auto"):
-        raise ValueError(
-            "broadcast_segments must be True, False or 'auto'; got "
-            f"{broadcast_segments!r}")
-    base = df
-    rid = "__uid"
-    if id_col is None:
-        base = base.withColumn(rid, F.monotonically_increasing_id())
-    else:
-        base = base.withColumn(rid, F.col(id_col))
-    txt = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    flt = word_filter if word_filter is not None else (lambda w: w != "")
-    words = base.select(
-        rid,
-        F.posexplode(
-            F.filter(F.split(F.trim(txt), r"\s+"), flt)
-        ).alias("__pos", "__w"),
-    )
-    distinct_w = words.select("__w").distinct()
-
-    def _seg(pdfs):
-        import pandas as pd
-
-        for pdf in pdfs:
-            toks = [segment_word(str(w)) for w in pdf["__w"]]
-            yield pd.DataFrame({"__w": pdf["__w"], "__t": toks})
-
-    seg = distinct_w.mapInPandas(_seg, "__w string, __t array<string>")
-    if broadcast_segments is True:
-        seg = F.broadcast(seg)
-    elif broadcast_segments is False:
-        seg = seg.hint("merge")
-    joined = words.join(seg, "__w")
-    packed = (
-        joined.filter(F.size("__t") > 0)
-        .groupBy(rid)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("__pos", "__t"))),
-                    lambda s: s["__t"],
-                )
-            ).alias(out_col)
-        )
-    )
-    # rid is an internal helper either way (a synthetic id, or a copy
-    # of id_col) — never part of the caller's schema
-    return base.join(packed, rid, "left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.array().cast("array<string>"))
-    ).drop(rid)

@@ -5467,15 +5467,17 @@ def q139(spark, sf):
 )
 def q140(spark, sf):
     """BPE encoding with the just-learned merges (bpe.py bpe_encode):
-    document-level chained literal replaces (no interpreted HOF) — zero
-    shuffles, zero Python, the narrow-map shape that tokenizes a
-    100 TB corpus at scan speed.  Output is per-doc token count plus
-    an md5 digest of the space-joined token stream — the digest pins
-    every byte of the encoding without shipping the retokenized corpus
-    to the driver (the audit shape you would actually collect at
-    100 TB).  The oracle re-learns the same 3 merges in SQL and
-    re-encodes every word, so the match covers both training and
-    application end-to-end."""
+    one mapInPandas pass with the merge table in the closure and a
+    per-task distinct-word memo — zero shuffles, the narrow-map shape
+    that tokenizes a 100 TB corpus at scan speed with any merge count.
+    Output is per-doc token count plus an md5 digest of the
+    space-joined token stream — the digest pins every byte of the
+    encoding without shipping the retokenized corpus to the driver
+    (the audit shape you would actually collect at 100 TB).  The
+    oracle re-learns the same 3 merges in SQL and re-encodes every
+    word as chained literal replaces, so the match covers training,
+    application and the segmenter's equivalence to one greedy pass
+    per merge in rank order, end-to-end."""
     from .operators.bpe import bpe_encode, bpe_fit
 
     d = _t(spark, sf, "documents", "d").df
@@ -6654,135 +6656,29 @@ def q156(spark, sf):
     """Unigram-LM tokenizer encode (operators/unigram_lm.py, the
     SentencePiece-family sibling of q139/q140's BPE): Viterbi-segment
     every document against a pinned 49-piece vocab.  Scale shape: one
-    distinct-word agg, one vectorized mapInPandas over DISTINCT words
-    only, one AQE-size-gated join back, one ordered re-assembly — the heavy
-    text shuffles once; at 100 TB the segmentation cost is
-    vocabulary-sized.  Determinism: integer micro-log scores + the
+    mapInPandas pass with the vocab in the closure and a per-task
+    distinct-word memo — zero shuffles in the encode.  Determinism:
+    integer micro-log scores + the
     longer-last-piece tie rule make the argmax engine-exact; the oracle
     replays it with a recursive CTE over every lattice path."""
     from .operators.unigram_lm import unigram_lm_encode
 
     d = _t(spark, sf, "documents", "d").df
     model = [{"piece": p, "logprob": lp} for p, lp in _Q156_VOCAB.items()]
-    enc = unigram_lm_encode(d, "text", model, id_col="doc_id")
-    return enc.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.array_join("tokens", "|").alias("tokens"),
-        F.size("tokens").cast("bigint").alias("n_tokens"),
-    ).orderBy("doc_id")
-
-
-@q(
-    "q157_bpe_word_encode",
-    _BPE_ORACLE_HEAD + """
-    , words AS (
-        SELECT doc_id, arr[i] AS w, i AS wi
-        FROM (
-            SELECT doc_id, arr,
-                   unnest(generate_series(1, len(arr))) AS i
-            FROM (
-                SELECT doc_id,
-                       list_filter(
-                           regexp_split_to_array(lower(text), '\\s+'),
-                           x -> length(x) > 0
-                               AND NOT contains(x, chr(31))) AS arr
-                FROM documents
-            )
-        )
-    ), enc AS (
-        SELECT doc_id, wi,
-               string_split(trim(
-                   replace(replace(replace(
-                       chr(31) || array_to_string(
-                           regexp_split_to_array(w, ''),
-                           chr(31) || chr(31)) || chr(31),
-                       chr(31) || m1.l || chr(31) || chr(31) || m1.r
-                           || chr(31),
-                       chr(31) || m1.l || m1.r || chr(31)),
-                       chr(31) || m2.l || chr(31) || chr(31) || m2.r
-                           || chr(31),
-                       chr(31) || m2.l || m2.r || chr(31)),
-                       chr(31) || m3.l || chr(31) || chr(31) || m3.r
-                           || chr(31),
-                       chr(31) || m3.l || m3.r || chr(31)),
-                   chr(31)), chr(31) || chr(31)) AS syms
-        FROM words, m1, m2, m3
-    )
-    SELECT doc_id,
-           CAST(SUM(len(syms)) AS BIGINT) AS n_tokens,
-           MD5(STRING_AGG(array_to_string(syms, ' '), ' ' ORDER BY wi))
-               AS tok_md5
-    FROM enc GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def q157(spark, sf):
-    """BPE encode via the WORD-MODE path (bpe.py bpe_encode
-    mode='words' — VERDICT r7 ask #1): the same 3 learned merges as
-    q140, applied by segmenting each DISTINCT word once in a vectorized
-    ``mapInPandas`` (``bpe_segment_word``, merge table in the closure)
-    and joining the token arrays back through the shared ``wordseg``
-    scaffold.  This is the path that carries a production-sized
-    (30k-merge) vocabulary — cost is two vocab-sized shuffles
-    regardless of merge count, where the chain path grows one
-    expression node per merge.  The oracle is q140's chained-replace
-    SQL replay unchanged: the two modes are bit-identical by contract
-    (bpe_segment_word docstring has the equivalence argument; the
-    randomized parity suite pins it), so one oracle checks both."""
-    from .operators.bpe import bpe_encode, bpe_fit
-
-    d = _t(spark, sf, "documents", "d").df
-    merges = bpe_fit(d.select("text"), "text", num_merges=3)
-    enc = bpe_encode(d.select("doc_id", "text"), "text", merges=merges,
-                     mode="words", id_col="doc_id")
+    enc = unigram_lm_encode(d.select("doc_id", "text"), "text", model)
     return (
-        enc.filter(F.col("n_tokens") > 0)
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.md5(F.array_join("tokens", " ")).alias("tok_md5"),
+        enc.select(
+            F.col("doc_id").cast("bigint").alias("doc_id"),
+            F.array_join("tokens", "|").alias("tokens"),
+            F.size("tokens").cast("bigint").alias("n_tokens"),
         )
-        .orderBy("doc_id")
-    )
-
-
-@q(
-    "q159_bpe_map_encode",
-    ORACLES["q157_bpe_word_encode"],
-)
-def q159(spark, sf):
-    """BPE encode via the ZERO-SHUFFLE map path (bpe.py bpe_encode
-    mode='map' — wordseg.encode_words_in_task): one mapInPandas pass
-    with the merge table in the closure and a per-task distinct-word
-    memo; nothing crosses the wire, the plan that rides a 100 TB scan
-    with an arbitrarily large vocabulary (measured fastest at every
-    merge count incl. 30k — SCALE.md round 8).  Same 3 learned merges
-    and the same chained-replace SQL oracle as q140/q157: all three
-    encode modes are bit-identical by contract, so one oracle checks
-    the whole family; this row is the driver evidence for the third
-    mode."""
-    from .operators.bpe import bpe_encode, bpe_fit
-
-    d = _t(spark, sf, "documents", "d").df
-    merges = bpe_fit(d.select("text"), "text", num_merges=3)
-    enc = bpe_encode(d.select("doc_id", "text"), "text", merges=merges,
-                     mode="map")
-    return (
-        enc.filter(F.col("n_tokens") > 0)
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.md5(F.array_join("tokens", " ")).alias("tok_md5"),
-        )
-        # the encode map is zero-shuffle, same reasoning as q140: one
-        # tiny digest-row exchange instead of a RangePartitioning
-        # sample pass that would run the narrow map twice
+        # zero-shuffle encode: same single-pass tail as q140
         .repartition(1)
         .sortWithinPartitions("doc_id")
     )
 
 
-# q158: unigram-LM encode with BYTE FALLBACK over the SHUFFLE-join
-# path (VERDICT r7 ask #2): the vocab deliberately omits the letters
+# q158: unigram-LM encode with BYTE FALLBACK: the vocab deliberately omits the letters
 # j/k/q/y and every piece containing them, so corpus words like "key",
 # "spark", "query", "join" are NOT coverable and must surface as
 # SentencePiece-style <0xNN> byte pieces instead of being dropped.
@@ -6855,29 +6751,29 @@ ORDER BY doc_id
 
 @q("q158_unigram_byte_fallback", _q158_oracle())
 def q158(spark, sf):
-    """Unigram-LM Viterbi encode with byte_fallback=True over the
-    PINNED SHUFFLE-join path (operators/unigram_lm.py + wordseg —
-    VERDICT r7 ask #2's two knobs, driver-checked together): the vocab
-    omits j/k/q/y so high-frequency corpus words ("key", "spark",
-    "query", "join") are uncoverable and emit <0xNN> UTF-8 byte pieces
-    instead of silently vanishing (SentencePiece's production
-    byte_fallback default), while broadcast_segments=False forces the
-    segment join down the shuffle path a web-scale (Heaps'-law)
-    vocabulary would take — proving it bit-equal to the broadcast plan
-    the fixture would otherwise pick.  The oracle replays the lattice
-    Viterbi by recursive-CTE enumeration exactly like q156, plus the
-    byte expansion via hex(encode(w))."""
+    """Unigram-LM Viterbi encode with byte_fallback=True
+    (operators/unigram_lm.py): the vocab omits j/k/q/y so
+    high-frequency corpus words ("key", "spark", "query", "join") are
+    uncoverable and emit <0xNN> UTF-8 byte pieces instead of silently
+    vanishing (SentencePiece's production byte_fallback default).  The
+    oracle replays the lattice Viterbi by recursive-CTE enumeration
+    exactly like q156, plus the byte expansion via hex(encode(w))."""
     from .operators.unigram_lm import unigram_lm_encode
 
     d = _t(spark, sf, "documents", "d").df
     model = [{"piece": p, "logprob": lp} for p, lp in _Q158_VOCAB.items()]
-    enc = unigram_lm_encode(d, "text", model, id_col="doc_id",
-                            byte_fallback=True, broadcast_segments=False)
-    return enc.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.array_join("tokens", "|").alias("tokens"),
-        F.size("tokens").cast("bigint").alias("n_tokens"),
-    ).orderBy("doc_id")
+    enc = unigram_lm_encode(d.select("doc_id", "text"), "text", model,
+                            byte_fallback=True)
+    return (
+        enc.select(
+            F.col("doc_id").cast("bigint").alias("doc_id"),
+            F.array_join("tokens", "|").alias("tokens"),
+            F.size("tokens").cast("bigint").alias("n_tokens"),
+        )
+        # zero-shuffle encode: same single-pass tail as q140
+        .repartition(1)
+        .sortWithinPartitions("doc_id")
+    )
 
 
 # q160: encode with an IMPORTED HuggingFace tokenizer.json carrying a
@@ -6941,7 +6837,7 @@ def q160(spark, sf):
     ``import_hf_tokenizer_json`` (which validates the pre-tokenizer
     LOUDLY — ByteLevel/Metaspace replay, everything else raises), and
     encode the corpus with ``hf_tokenizer_encode`` — the zero-shuffle
-    map-mode path with the compiled per-word ▁ transform in the
+    encode path with the compiled per-word ▁ transform in the
     closure.  Merges 1 and 3 consume the ▁ marker itself, so a green
     hash proves the pre-tokenizer ran inside the encode, not beside
     it.  Oracle: per-word '▁'||w then the q140 chained-replace replay
@@ -6993,7 +6889,7 @@ def q160(spark, sf):
             F.md5(F.array_join("tokens", " ")).alias("tok_md5"),
         )
         # zero-shuffle encode map: one tiny digest-row exchange, the
-        # q140/q159 ordering discipline
+        # q140 ordering discipline
         .repartition(1)
         .sortWithinPartitions("doc_id")
     )
@@ -7242,7 +7138,7 @@ def q163(spark, sf):
     ignore_merges BPE with a restricted vocab), import it through
     `parse_hf_pre_tokenizer`'s Sequence composition (loud-reject for
     anything it can't compose), and encode the corpus with the
-    zero-shuffle map-mode path — the compiled per-word transform runs
+    zero-shuffle encode path — the compiled per-word transform runs
     the hand-rolled cl100k scanner (fuzz-pinned against the `regex`
     library) + byte→unicode remap in the closure.  The vocab's
     direct tokens ('Ġthe','Ġdata','the') prove ignore_merges

@@ -61,7 +61,7 @@ model = unigram_lm_fit(docs, "text", vocab_size=64, max_piece_len=4,
                        em_iters=1, word_counts=wc)
 print("\n== Unigram LM (top pieces by probability) ==")
 print([m["piece"] for m in model[:10]])
-enc = unigram_lm_encode(docs, "text", model, id_col="doc_id")
+enc = unigram_lm_encode(docs, "text", model)
 enc.select("doc_id", F.slice("tokens", 1, 8).alias("first_tokens")).show(
     3, truncate=False)
 wc.unpersist()

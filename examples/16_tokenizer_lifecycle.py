@@ -16,7 +16,7 @@ One path, end to end, the way a real pretraining data team runs it:
 3. IMPORT — ``import_hf_tokenizer_json`` round-trips it (and would
    accept any published WhitespaceSplit/ByteLevel/Metaspace file;
    anything the engine cannot replay raises loudly at import).
-4. ENCODE — ``hf_tokenizer_encode``: zero-shuffle map-mode pass,
+4. ENCODE — ``hf_tokenizer_encode``: zero-shuffle mapInPandas pass,
    model + pre-tokenizer compiled into the closure, per-task
    distinct-word memo; the shape that rides a 100 TB scan.
 5. MIX — ``sample_to_token_budget`` consumes the fresh ``n_tokens``
@@ -69,7 +69,7 @@ print("\n== 3. import_hf_tokenizer_json ==")
 print("kind:", model["kind"], "| pre_tokenizer:",
       model["pre_tokenizer"], "| lowercase:", model["lowercase"])
 
-# -- 4. encode: zero-shuffle map-mode pass ------------------------------
+# -- 4. encode: zero-shuffle mapInPandas pass -------------------------
 enc = hf_tokenizer_encode(docs, "text", model).persist()
 enc.select("doc_id", "n_tokens",
            F.slice("tokens", 1, 6).alias("first_tokens")).show(

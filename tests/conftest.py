@@ -72,11 +72,6 @@ SLOW_TESTS = {
     "test_dedup_keep_cluster_best_quality",             # 10.8
     "test_folder_loader_schema_mismatch",               # 10.2
     "test_lm_save_load_and_pipeline_drop_contained",    # 9.7
-    # tokenizer word-mode scaffolds (chain-mode parity for q140/q157
-    # has in-lane coverage via test_oracle_parity + encode unit tests)
-    "test_bpe_word_mode_broadcast_knob",                # 22.1
-    "test_bpe_word_mode_parity_with_chain[2]",          # 17.9
-    "test_unigram_broadcast_segments_parity_and_plans",  # 11.5
     # services / dataframe heavy end-to-ends
     "test_readme_shim_writers_roundtrip",               # 38.4
     "test_delta_fallback_concurrent_append_commit_race",  # 9.8

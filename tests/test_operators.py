@@ -5475,8 +5475,8 @@ def test_unigram_lm_fit_replay_and_partitioning_determinism(spark):
 
 def test_unigram_lm_encode_roundtrip_and_scale_shape(spark):
     """Encode: token concat rebuilds each coverable (lowercased) word in
-    order; uncoverable words drop; empty text -> []; id_col passthrough
-    keeps caller keys."""
+    order; uncoverable words drop; empty text -> []; caller columns
+    pass through."""
     from elusion_spark.operators.unigram_lm import (
         unigram_lm_encode, unigram_lm_fit)
 
@@ -5487,8 +5487,7 @@ def test_unigram_lm_encode_roundtrip_and_scale_shape(spark):
     vocab_chars = {m["piece"] for m in model if len(m["piece"]) == 1}
     assert "q" not in vocab_chars or True  # q appears in corpus -> covered
     out = {r["doc_id"]: r["tokens"] for r in
-           unigram_lm_encode(df, "text", model,
-                             id_col="doc_id").collect()}
+           unigram_lm_encode(df, "text", model).collect()}
     lp = {m["piece"] for m in model}
 
     def replay(t):
@@ -5624,10 +5623,10 @@ def test_tfidf_threshold_accepts_numpy_scalar(spark):
 
 
 def test_unigram_encode_schema_and_shared_wordcounts(spark):
-    """Regression (round-7 review): (a) no internal __uid column leaks
-    into the output when id_col is given; (b) a caller-supplied
-    persisted word_counts table is still cached after the fit (the fit
-    must not evict a cache it does not own)."""
+    """Regression (round-7 review): (a) the output schema is the
+    input's columns plus ``tokens``, with no internal helper column;
+    (b) a caller-supplied persisted word_counts table is still cached
+    after the fit (the fit must not evict a cache it does not own)."""
     from elusion_spark.operators.bpe import bpe_word_counts
     from elusion_spark.operators.unigram_lm import (
         unigram_lm_encode, unigram_lm_fit)
@@ -5641,11 +5640,8 @@ def test_unigram_encode_schema_and_shared_wordcounts(spark):
     assert wc.storageLevel.useMemory, "caller's persist must survive"
     wc.unpersist()
 
-    out = unigram_lm_encode(df, "text", model, id_col="doc_id")
-    assert "__uid" not in out.columns
-    assert set(out.columns) == {"doc_id", "text", "tokens"}
-    no_id = unigram_lm_encode(df, "text", model)
-    assert "__uid" not in no_id.columns
+    out = unigram_lm_encode(df, "text", model)
+    assert out.columns == ["doc_id", "text", "tokens"]
 
 
 def test_pack_token_ids_semantics(spark):

@@ -306,12 +306,8 @@ SHUFFLE_BUDGETS = {
     "q129_snapshot_diff": 3,
     # single-pass sort discipline: the one exchange is the tiny digest
     # repartition(1) that prevents the range-sampling double-compute of
-    # the shuffle-free narrow pipeline; +1 in r11 for the deliberate
-    # _ensure_parallelism repartition that spreads the chained-replace
-    # encode across cores (sf0.1's single-row-group scan serialized the
-    # whole 2.7 s map on ONE task — fresh-JVM A/B 4.1 -> 2.2 s; no-op
-    # at scale where the scan already has splits)
-    "q140_bpe_encode": 2,
+    # the shuffle-free mapInPandas encode
+    "q140_bpe_encode": 1,
     "q141_random_projection": 1,
     # ADC scans are TakeOrderedAndProject over the (fit-materialized)
     # code column — zero exchanges in the returned plan
@@ -353,20 +349,11 @@ SHUFFLE_BUDGETS = {
     "q152_pq_refine": 0,
     "q154_gopher_filters": 1,   # pure scan projection + the output sort
     "q155_pca_whiten": 1,       # folded-matrix projection + output sort
-    # distinct-word agg + token-array group-back + the rid re-attach
-    # SMJ pair; the corpus text crosses the wire in the group-back and
-    # the re-attach, the word/segment tables are vocabulary-sized
-    "q156_unigram_encode": 4,
-    # word-mode BPE: distinct-word agg + group-back + re-attach (the
-    # digest projection rides the re-attach output, one fewer exchange
-    # than q156's select-from-base shape)
-    "q157_bpe_word_encode": 3,
-    # q156's shape + the PINNED shuffle join (merge hint) adds the
-    # segment-side and words-side exchanges the broadcast plan elides
-    "q158_unigram_byte_fallback": 6,
-    # zero-shuffle map encode + the single digest-row repartition(1)
-    "q159_bpe_map_encode": 1,
-    # imported-HF encodes are the same zero-shuffle map shape as q159
+    # unigram encodes: the same zero-shuffle mapInPandas encode as
+    # q140 + the output-row repartition(1)
+    "q156_unigram_encode": 1,
+    "q158_unigram_byte_fallback": 1,
+    # imported-HF encodes are the same zero-shuffle map shape as q140
     # (pre-tokenizer + model ride the closure) + the digest
     # repartition(1)
     "q160_hf_import_encode": 1,

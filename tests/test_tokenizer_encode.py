@@ -1,6 +1,6 @@
-"""Round-8 tokenizer ENCODE paths (VERDICT r7 asks #1/#2): BPE
-word-mode vs chain-mode bit-parity, the mode='auto' cutover, and
-unigram-LM's broadcast fallback + byte fallback."""
+"""Tokenizer ENCODE and interop: BPE encode vs a sequential-pass
+reference, edge documents, the zero-shuffle plan, unigram-LM byte
+fallback, and HF tokenizer.json import/export."""
 
 from __future__ import annotations
 
@@ -25,8 +25,8 @@ def _rand_corpus(rng, n_docs=12, n_words=30, alpha="abcd"):
 def test_bpe_segment_word_equals_sequential_replace():
     """bpe_segment_word (iterative lowest-rank-present) == one
     sequential greedy pass per merge in rank order, for well-formed
-    (bpe_fit-produced) merge lists — the equivalence the word-mode
-    encode path rests on, fuzzed across corpora and merge depths."""
+    (bpe_fit-produced) merge lists — the equivalence bpe_encode rests
+    on, fuzzed across corpora and merge depths."""
     import sys
     sys.path.insert(0, __file__.rsplit("/", 1)[0])
     from test_operators import _ref_bpe, _ref_bpe_encode
@@ -46,8 +46,13 @@ def test_bpe_segment_word_equals_sequential_replace():
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_bpe_word_mode_parity_with_chain(spark, seed):
-    """mode='words' == mode='chain' bit-for-bit (tokens AND n_tokens),
-    on randomized corpora with merges learned by bpe_fit itself."""
+    """bpe_encode == the sequential-pass reference (_ref_bpe_encode)
+    bit-for-bit (tokens AND n_tokens), on randomized corpora with
+    merges learned by bpe_fit itself."""
+    import sys
+    sys.path.insert(0, __file__.rsplit("/", 1)[0])
+    from test_operators import _ref_bpe_encode
+
     from elusion_spark.operators.bpe import bpe_encode, bpe_fit
 
     rng = random.Random(100 + seed)
@@ -56,83 +61,26 @@ def test_bpe_word_mode_parity_with_chain(spark, seed):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
     merges = bpe_fit(df.select("text"), "text",
                      num_merges=rng.randint(2, 10))
-    chain = {r["doc_id"]: (r["tokens"], r["n_tokens"]) for r in
-             bpe_encode(df, "text", merges, mode="chain").collect()}
-    words = {r["doc_id"]: (r["tokens"], r["n_tokens"]) for r in
-             bpe_encode(df, "text", merges, mode="words",
-                        id_col="doc_id").collect()}
-    assert chain == words
-
-
-def test_bpe_mode_auto_cutover(spark):
-    """mode='auto' picks the zero-shuffle chain plan at small merge
-    counts and the wordseg (Exchange + mapInPandas) plan past
-    CHAIN_MODE_MAX_MERGES; invalid modes raise."""
-    from elusion_spark.operators.bpe import (
-        CHAIN_MODE_MAX_MERGES, bpe_encode)
-
-    df = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
-    small = [{"merge_rank": 1, "lft": "a", "rgt": "b", "pair_count": 2}]
-    p = _plan(bpe_encode(df, "text", small, mode="auto"))
-    assert "Exchange" not in p and "MapInPandas" not in p
-    # fabricate a well-formed oversized merge list: a left-deep chain
-    # a+b, ab+b, abb+b, ... (each pair's left is the previous output)
-    big, sym = [], "a"
-    for i in range(CHAIN_MODE_MAX_MERGES + 1):
-        big.append({"merge_rank": i + 1, "lft": sym, "rgt": "b",
-                    "pair_count": 1})
-        sym += "b"
-    p = _plan(bpe_encode(df, "text", big, mode="auto", id_col="doc_id"))
-    assert "MapInPandas" in p
-    with pytest.raises(ValueError, match="mode"):
-        bpe_encode(df, "text", small, mode="chained")
-
-
-def test_bpe_word_mode_broadcast_knob(spark):
-    """broadcast_segments True / False / 'auto' are result-identical;
-    True pins a BroadcastHashJoin on the segment join, False pins the
-    sort-merge (shuffle) join a web-scale vocabulary would need."""
-    from elusion_spark.operators.bpe import bpe_encode, bpe_fit
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(
-            ["aa ab ba", "ab ab aa", "", "ba ba"])],
-        "doc_id long, text string")
-    merges = bpe_fit(df.select("text"), "text", num_merges=2)
-    outs = {}
-    for knob in (True, False, "auto"):
-        enc = bpe_encode(df, "text", merges, mode="words",
-                         id_col="doc_id", broadcast_segments=knob)
-        outs[str(knob)] = {r["doc_id"]: (r["tokens"], r["n_tokens"])
-                           for r in enc.collect()}
-        plan = _plan(enc)
-        if knob is True:
-            assert "BroadcastHashJoin" in plan
-        if knob is False:
-            # non-broadcast path = a SHUFFLE join; the planner picks
-            # SMJ or SHJ (preferSortMergeJoin=false since r10)
-            assert ("SortMergeJoin" in plan
-                    or "ShuffledHashJoin" in plan)
-    assert outs["True"] == outs["False"] == outs["auto"]
-    with pytest.raises(ValueError, match="broadcast_segments"):
-        bpe_encode(df, "text", merges, mode="words",
-                   broadcast_segments="yes")
+    got = {r["doc_id"]: (r["tokens"], r["n_tokens"]) for r in
+           bpe_encode(df, "text", merges).collect()}
+    want = {}
+    for i, t in enumerate(texts):
+        toks = _ref_bpe_encode(t, merges)
+        want[i] = (toks, len(toks))
+    assert got == want
 
 
 def test_bpe_word_mode_excludes_separator_words(spark):
-    """Words carrying the \\x1f/\\x1e control bytes are excluded in
-    BOTH modes (the chain path's structural requirement, mirrored in
-    word mode so outputs stay bit-equal)."""
+    """Words carrying the \\x1f/\\x1e control bytes are excluded from
+    the encode (part of bpe_encode's output contract)."""
     from elusion_spark.operators.bpe import bpe_encode
 
     df = spark.createDataFrame(
         [(1, "ab a\x1fb a\x1eb ab")], "doc_id long, text string")
     m = [{"merge_rank": 1, "lft": "a", "rgt": "b", "pair_count": 2}]
-    for mode in ("chain", "words"):
-        out = bpe_encode(df, "text", m, mode=mode,
-                         id_col="doc_id").collect()[0]
-        assert out["tokens"] == ["ab", "ab"], mode
-        assert out["n_tokens"] == 2, mode
+    out = bpe_encode(df, "text", m).collect()[0]
+    assert out["tokens"] == ["ab", "ab"]
+    assert out["n_tokens"] == 2
 
 
 # ----------------------------------------------------- unigram-LM
@@ -142,30 +90,6 @@ _VOCAB = {**{c: -4.6 for c in "abct"}, "ab": -2.0, "cab": -1.5}
 
 def _model():
     return [{"piece": p, "logprob": lp} for p, lp in _VOCAB.items()]
-
-
-def test_unigram_broadcast_segments_parity_and_plans(spark):
-    """The three broadcast_segments values agree bit-for-bit, and the
-    forced values pin the expected join strategy."""
-    from elusion_spark.operators.unigram_lm import unigram_lm_encode
-
-    df = spark.createDataFrame(
-        [(1, "ab cab abab"), (2, ""), (3, "ta cab")],
-        "doc_id long, text string")
-    outs = {}
-    for knob in (True, False, "auto"):
-        enc = unigram_lm_encode(df, "text", _model(), id_col="doc_id",
-                                broadcast_segments=knob)
-        outs[str(knob)] = {r["doc_id"]: r["tokens"] for r in enc.collect()}
-        plan = _plan(enc)
-        if knob is True:
-            assert "BroadcastHashJoin" in plan
-        if knob is False:
-            # non-broadcast path = a SHUFFLE join; the planner picks
-            # SMJ or SHJ (preferSortMergeJoin=false since r10)
-            assert ("SortMergeJoin" in plan
-                    or "ShuffledHashJoin" in plan)
-    assert outs["True"] == outs["False"] == outs["auto"]
 
 
 def test_unigram_byte_fallback(spark):
@@ -180,12 +104,11 @@ def test_unigram_byte_fallback(spark):
     df = spark.createDataFrame(
         [(1, "cab xyz ab"), (2, "héé")], "doc_id long, text string")
     drop = {r["doc_id"]: r["tokens"] for r in unigram_lm_encode(
-        df, "text", _model(), id_col="doc_id").collect()}
+        df, "text", _model()).collect()}
     assert drop[1] == ["cab", "ab"]
     assert drop[2] == []
     keep = {r["doc_id"]: r["tokens"] for r in unigram_lm_encode(
-        df, "text", _model(), id_col="doc_id",
-        byte_fallback=True).collect()}
+        df, "text", _model(), byte_fallback=True).collect()}
     assert keep[1] == ["cab", "<0x78>", "<0x79>", "<0x7A>", "ab"]
     # é = 0xC3 0xA9 in UTF-8: 2 bytes per char, 1 h byte
     assert keep[2] == ["<0x68>", "<0xC3>", "<0xA9>", "<0xC3>", "<0xA9>"]
@@ -196,13 +119,12 @@ def test_unigram_byte_fallback(spark):
 
 
 def test_unigram_byte_fallback_all_words_uncoverable(spark):
-    """A document made ENTIRELY of uncoverable words still reassembles
-    (regression guard for the wordseg empty-segment filter: fallback
-    tokens must not be filtered as empty)."""
+    """A document made ENTIRELY of uncoverable words still encodes
+    (fallback tokens must not be dropped as empty segmentations)."""
     from elusion_spark.operators.unigram_lm import unigram_lm_encode
 
     df = spark.createDataFrame([(7, "zz qq")], "doc_id long, text string")
-    out = unigram_lm_encode(df, "text", _model(), id_col="doc_id",
+    out = unigram_lm_encode(df, "text", _model(),
                             byte_fallback=True).collect()[0]
     assert out["tokens"] == ["<0x7A>", "<0x7A>", "<0x71>", "<0x71>"]
 
@@ -283,7 +205,7 @@ def test_hf_export_unigram_shape(tmp_path):
 def test_hf_export_roundtrip_through_tokenizers_lib(spark, tmp_path):
     """When the `tokenizers` library is present, a from-file HF
     Tokenizer built from the export must reproduce the engine's encode
-    exactly (BPE chain path == HF BPE; unigram Viterbi argmax == HF
+    exactly (BPE encode == HF BPE; unigram Viterbi argmax == HF
     Unigram up to score ties).  Gated: the lib is not in this
     container."""
     import pytest as _pt
@@ -306,75 +228,86 @@ def test_hf_export_roundtrip_through_tokenizers_lib(spark, tmp_path):
         assert tok.encode(t).tokens == ours[i], t
 
 
-# --------------------------------------------- mode='map' (zero-shuffle)
+# ------------------------------------------ edge docs and plan shape
 
 def test_three_mode_parity_with_edge_docs(spark):
-    """chain == words == map bit-for-bit on control-byte words, nulls,
-    blank docs and a U+00A0 (non-ASCII whitespace) doc — the map path
-    must split on Java's ASCII \\s class, not python's unicode split,
-    or doc 2 ('ab\\xa0cd') would tokenize as two words."""
+    """Literal tokens on tab/newline-separated words, a U+00A0
+    (non-ASCII whitespace) doc, a null, a blank doc and control-byte
+    words — the encode must split on Java's ASCII \\s class, not
+    python's unicode split, or doc 2 ('ab\\xa0cd') would tokenize as
+    two words."""
     from elusion_spark.operators.bpe import bpe_encode
 
     docs = [(1, "ab\tcd  ab\nxy"), (2, "ab\xa0cd"), (3, None),
             (4, " "), (5, "a\x1fb a\x1eb ab")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     m = [{"merge_rank": 1, "lft": "a", "rgt": "b", "pair_count": 2}]
-    outs = {}
-    for mode in ("chain", "words", "map"):
-        outs[mode] = {r["doc_id"]: (r["tokens"], r["n_tokens"]) for r in
-                      bpe_encode(df, "text", m, mode=mode,
-                                 id_col="doc_id").collect()}
-    assert outs["chain"] == outs["words"] == outs["map"]
-    assert outs["map"][2] == (["ab", "\xa0", "c", "d"], 4)  # ONE word
-    assert outs["map"][3] == ([], 0)
-    assert outs["map"][5] == (["ab"], 1)
+    got = {r["doc_id"]: (r["tokens"], r["n_tokens"]) for r in
+           bpe_encode(df, "text", m).collect()}
+    assert got == {
+        1: (["ab", "c", "d", "ab", "x", "y"], 6),
+        2: (["ab", "\xa0", "c", "d"], 4),          # ONE word
+        3: ([], 0),
+        4: ([], 0),
+        5: (["ab"], 1),
+    }
 
 
 def test_map_mode_is_zero_shuffle(spark):
-    """The map path's whole plan is scan -> mapInPandas -> sink: no
-    Exchange anywhere (the 100 TB shape), and auto picks it past the
-    chain cliff."""
-    from elusion_spark.operators.bpe import (
-        CHAIN_MODE_MAX_MERGES, bpe_encode)
+    """Both encoders' whole plan is scan -> mapInPandas -> sink: no
+    Exchange anywhere (the 100 TB shape).  A 300-merge list — past the
+    ~256-node depth where a chained-replace Column expression overflowed
+    Catalyst's stack — encodes and matches the sequential-pass
+    reference."""
+    import sys
+    sys.path.insert(0, __file__.rsplit("/", 1)[0])
+    from test_operators import _ref_bpe_encode
+
+    from elusion_spark.operators.bpe import bpe_encode
     from elusion_spark.operators.scale import explain_shuffles
+    from elusion_spark.operators.unigram_lm import unigram_lm_encode
 
     df = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
     m = [{"merge_rank": 1, "lft": "a", "rgt": "b", "pair_count": 2}]
-    enc = bpe_encode(df, "text", m, mode="map")
-    assert explain_shuffles(enc) == 0
-    assert "MapInPandas" in _plan(enc)
+    for enc in (bpe_encode(df, "text", m),
+                unigram_lm_encode(df, "text", _model())):
+        assert explain_shuffles(enc) == 0
+        assert "MapInPandas" in _plan(enc)
+    # a well-formed 300-merge list: a left-deep chain a+b, ab+b,
+    # abb+b, ... (each pair's left is the previous output)
     big, sym = [], "a"
-    for i in range(CHAIN_MODE_MAX_MERGES + 1):
+    for i in range(300):
         big.append({"merge_rank": i + 1, "lft": sym, "rgt": "b",
                     "pair_count": 1})
         sym += "b"
-    auto = bpe_encode(df, "text", big, mode="auto")
-    assert explain_shuffles(auto) == 0, "auto past the cliff must be map"
+    text = "a" + "b" * 302 + " abbb ba " + "a" + "b" * 150
+    deep = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    enc = bpe_encode(deep, "text", big)
+    assert explain_shuffles(enc) == 0
+    row = enc.collect()[0]
+    want = _ref_bpe_encode(text, big)
+    assert row["tokens"] == want and row["n_tokens"] == len(want)
+    assert want[0] == "a" + "b" * 300 and len(want) == 7
 
 
 def test_unigram_map_mode_parity(spark):
-    """unigram_lm_encode(mode='map') == the distinct path, including
-    byte fallback; invalid mode raises."""
+    """unigram_lm_encode with byte fallback: literal tokens for
+    coverable words, an empty doc and an uncoverable word."""
     from elusion_spark.operators.unigram_lm import unigram_lm_encode
 
     df = spark.createDataFrame(
         [(1, "ab cab abab"), (2, ""), (3, "ta xq cab")],
         "doc_id long, text string")
-    d1 = {r["doc_id"]: r["tokens"] for r in unigram_lm_encode(
-        df, "text", _model(), id_col="doc_id",
-        byte_fallback=True).collect()}
-    d2 = {r["doc_id"]: r["tokens"] for r in unigram_lm_encode(
-        df, "text", _model(), byte_fallback=True, mode="map").collect()}
-    assert d1 == d2
-    with pytest.raises(ValueError, match="mode"):
-        unigram_lm_encode(df, "text", _model(), mode="task")
+    got = {r["doc_id"]: r["tokens"] for r in unigram_lm_encode(
+        df, "text", _model(), byte_fallback=True).collect()}
+    assert got == {1: ["ab", "cab", "ab", "ab"], 2: [],
+                   3: ["t", "a", "<0x78>", "<0x71>", "cab"]}
 
 
 def test_map_mode_tokenizes_streams(spark, tmp_path):
-    """mode='map' is STATELESS (one mapInPandas, no aggregation), so
-    both tokenizers run unchanged on a streaming DataFrame — the
-    distinct-word path cannot (its groupBy needs batch semantics).
-    Stream == batch, exactly."""
+    """The encode is STATELESS (one mapInPandas, no aggregation), so
+    both tokenizers run unchanged on a streaming DataFrame.  Stream ==
+    batch, exactly."""
     from elusion_spark.operators.bpe import bpe_encode
     from elusion_spark.operators.unigram_lm import unigram_lm_encode
 
@@ -388,7 +321,7 @@ def test_map_mode_tokenizes_streams(spark, tmp_path):
               .option("maxFilesPerTrigger", 1).parquet(src))
 
     m = [{"merge_rank": 1, "lft": "a", "rgt": "b", "pair_count": 3}]
-    enc_s = bpe_encode(stream, "text", m, mode="map")
+    enc_s = bpe_encode(stream, "text", m)
     assert enc_s.isStreaming
     name = "tok_stream_mem"
     q = (enc_s.writeStream.format("memory").queryName(name)
@@ -398,11 +331,10 @@ def test_map_mode_tokenizes_streams(spark, tmp_path):
     got = {r["doc_id"]: (r["tokens"], r["n_tokens"])
            for r in spark.table(name).collect()}
     want = {r["doc_id"]: (r["tokens"], r["n_tokens"])
-            for r in bpe_encode(df, "text", m, mode="map").collect()}
+            for r in bpe_encode(df, "text", m).collect()}
     assert got == want
 
-    u = unigram_lm_encode(stream, "text", _model(), mode="map",
-                          byte_fallback=True)
+    u = unigram_lm_encode(stream, "text", _model(), byte_fallback=True)
     assert u.isStreaming
 
 
@@ -468,10 +400,9 @@ def test_hf_import_drives_engine_encode(spark, tmp_path):
     export_hf_tokenizer_json(p, bpe_merges=merges)
     imp = import_hf_tokenizer_json(p)
     a = {r["doc_id"]: r["tokens"] for r in bpe_encode(
-        df, "text", merges, mode="map").collect()}
+        df, "text", merges).collect()}
     b = {r["doc_id"]: r["tokens"] for r in bpe_encode(
-        df, "text", imp["merges"], mode="map",
-        lowercase=imp["lowercase"]).collect()}
+        df, "text", imp["merges"], lowercase=imp["lowercase"]).collect()}
     assert a == b
 
 
@@ -1139,8 +1070,7 @@ def test_bert_export_emits_bert_normalizer(tmp_path):
 
 def test_encode_out_col_replaced_in_place(spark):
     """ADVICE r9 #5: when out_col already exists, encode_words_in_task
-    replaces the field AT ITS ORIGINAL POSITION (withColumn semantics),
-    so both encode modes produce the same column order."""
+    replaces the field AT ITS ORIGINAL POSITION (withColumn semantics)."""
     from elusion_spark.operators.wordseg import encode_words_in_task
 
     df = spark.createDataFrame(
@@ -1148,7 +1078,7 @@ def test_encode_out_col_replaced_in_place(spark):
     out = encode_words_in_task(df, "text", lambda w: [w])
     assert out.columns == ["id", "tokens", "text"]
     assert out.collect()[0]["tokens"] == ["a", "b"]
-    # chain-path parity: withColumn keeps the replaced column's slot
+    # withColumn keeps the replaced column's slot too
     from pyspark.sql import functions as F
     assert df.withColumn(
         "tokens", F.split("text", " ")).columns == out.columns

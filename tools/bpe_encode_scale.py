@@ -1,32 +1,25 @@
 #!/usr/bin/env python
-"""BPE ENCODE scale measurement (VERDICT r7 ask #1): chain-mode vs
-word-mode wall at realistic merge counts, backing the
-``bpe_encode(mode='auto')`` cutover (``CHAIN_MODE_MAX_MERGES``).
+"""BPE ENCODE scale measurement: ``bpe_encode`` wall at realistic
+merge counts, up to a 30k-merge model.
 
-The chain path materializes one literal-`replace` expression node per
-merge: its plan size, analysis time and per-document cost all grow
-linearly with the merge COUNT, and past the 64KB JVM method limit the
-merge chain falls out of whole-stage codegen.  The word-mode path pays
-two fixed vocabulary-sized shuffles regardless of merge count.  This
-harness measures both, on two corpora at sf0.1:
+``bpe_encode`` runs one ``mapInPandas`` pass with a per-task
+distinct-word memo, and a word costs only the merges that occur in it,
+so the wall should stay flat as the merge count grows.  This harness
+measures it on two corpora:
 
 - ``documents`` (sf0.1, 5k docs / 31 distinct words): the driver
-  fixture — adversarially GOOD for word mode (tiny distinct-word
-  table) and representative for chain cost (every doc still pays every
-  replace whether or not the pair occurs);
+  fixture — a tiny distinct-word table, so the memo hits almost
+  always;
 - a synthetic Zipf corpus (20k distinct words, natural letter stats,
-  5k docs of ~100 words): the realistic distinct-word regime, so word
-  mode's segmentation cost is actually exercised.
+  5k docs of ~100 words): the realistic distinct-word regime, so the
+  per-word segmentation cost is actually exercised.
 
-Models are trained driver-side with an incremental-index Sennrich
-trainer over the Zipf vocabulary (same (count DESC, l, r) tie rule as
-``bpe_fit`` — well-formed by construction, so the two encode modes are
-bit-equal on it), at 64 / 256 / 512 / 1024 / 2048 / 5000 / 30000
-merges.  Chain mode is only attempted while plan construction stays
-sane (the py4j expression build alone is O(merges) JVM calls).
+Models are trained driver-side with the incremental-index Sennrich
+trainer (``train_bpe_incremental``) over the Zipf vocabulary, at
+64 / 512 / 2048 / 5000 / 30000 merges.
 
 Run on an idle machine: python tools/bpe_encode_scale.py
-Prints one JSON line; numbers go to SCALE.md round 8.
+Prints one JSON line; the numbers are recorded in SCALE.md.
 """
 
 from __future__ import annotations
@@ -39,9 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CHAIN_COUNTS = [64, 256, 512, 1024, 2048]
-WORD_COUNTS_ = [64, 512, 2048, 5000, 30000]
-MAP_COUNTS = [64, 512, 2048, 5000, 30000]
+MERGE_COUNTS = [64, 512, 2048, 5000, 30000]
 
 
 # promoted to the operator surface in round 9 (VERDICT r8 ask #1):
@@ -85,32 +76,21 @@ def _zipf_corpus_df(spark, n_docs: int = 5_000, words_per_doc: int = 100,
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _time_encode(spark, df, merges, mode, id_col) -> dict:
+def _time_encode(df, merges) -> dict:
     from elusion_spark.operators.bpe import bpe_encode
 
-    try:
-        t_build0 = time.perf_counter()
-        enc = bpe_encode(df, "text", merges, mode=mode, id_col=id_col)
-        agg = enc.selectExpr("sum(n_tokens) AS n")  # forces full encode
-        build = round(time.perf_counter() - t_build0, 3)
-        walls = []
-        n_tok = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            n_tok = agg.collect()[0]["n"]
-            walls.append(round(time.perf_counter() - t0, 3))
-        plan = enc._jdf.queryExecution().executedPlan().toString()
-        return {"mode": mode, "num_merges": len(merges),
-                "plan_build_sec": build, "wall_sec": min(walls),
-                "n_tokens": int(n_tok),
-                # Spark 4 renders whole-stage-codegen spans as "*(n)"
-                # prefixes in executedPlan().toString()
-                "whole_stage_codegen": "*(" in plan}
-    except Exception as exc:   # the chain path is EXPECTED to die at
-        # realistic merge counts (StackOverflow in Catalyst's column
-        # converter / codegen limits) — record the failure as data
-        return {"mode": mode, "num_merges": len(merges),
-                "error": f"{type(exc).__name__}: {str(exc)[:160]}"}
+    t_build0 = time.perf_counter()
+    enc = bpe_encode(df, "text", merges)
+    agg = enc.selectExpr("sum(n_tokens) AS n")  # forces full encode
+    build = round(time.perf_counter() - t_build0, 3)
+    walls = []
+    n_tok = None
+    for _ in range(2):
+        t0 = time.perf_counter()
+        n_tok = agg.collect()[0]["n"]
+        walls.append(round(time.perf_counter() - t0, 3))
+    return {"num_merges": len(merges), "plan_build_sec": build,
+            "wall_sec": min(walls), "n_tokens": int(n_tok)}
 
 
 def main() -> None:
@@ -130,25 +110,11 @@ def main() -> None:
 
     out = {"sf_dir": SF_DIR, "trainer_sec_30k": train_sec,
            "model_merges": len(model_30k), "corpora": {}}
-    for cname, df, id_col in (("sf01_documents", docs, "doc_id"),
-                              ("zipf_5k_docs_20k_vocab", zipf, "doc_id")):
-        runs = []
-        for n in CHAIN_COUNTS:
-            if n > len(model_30k):
-                continue
-            runs.append(_time_encode(spark, df, model_30k[:n], "chain",
-                                     id_col))
-        for n in WORD_COUNTS_:
-            if n > len(model_30k):
-                continue
-            runs.append(_time_encode(spark, df, model_30k[:n], "words",
-                                     id_col))
-        for n in MAP_COUNTS:
-            if n > len(model_30k):
-                continue
-            runs.append(_time_encode(spark, df, model_30k[:n], "map",
-                                     id_col))
-        out["corpora"][cname] = runs
+    for cname, df in (("sf01_documents", docs),
+                      ("zipf_5k_docs_20k_vocab", zipf)):
+        out["corpora"][cname] = [
+            _time_encode(df, model_30k[:n])
+            for n in MERGE_COUNTS if n <= len(model_30k)]
     zipf.unpersist()
     print(json.dumps(out))
 

@@ -2,8 +2,8 @@
 """Imported-HF (ByteLevel) encode at scale (round 9): the
 "run a published GPT-2-style tokenizer over the corpus" path —
 ``hf_tokenizer_encode`` with the ByteLevel pre-tokenizer compiled
-into the map-mode closure — measured against the plain whitespace
-map-mode encode at the same merge counts, on sf0.1 documents and the
+into the encode closure — measured against the plain whitespace
+``bpe_encode`` at the same merge counts, on sf0.1 documents and the
 20k-vocab Zipf corpus.
 
 What the comparison isolates: the per-DISTINCT-word cost of the
@@ -72,7 +72,7 @@ def main() -> None:
             enc = hf_tokenizer_encode(df, "text", bl_model)
             agg = enc.selectExpr("sum(n_tokens) AS n")
             w_bl, r = _min2(lambda: agg.collect()[0]["n"])
-            ws = bpe_encode(df, "text", ws_merges[:n], mode="map")
+            ws = bpe_encode(df, "text", ws_merges[:n])
             agg2 = ws.selectExpr("sum(n_tokens) AS n")
             w_ws, r2 = _min2(lambda: agg2.collect()[0]["n"])
             runs.append({"num_merges": n,
