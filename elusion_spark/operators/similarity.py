@@ -17,8 +17,9 @@ Beyond-parity module (SURVEY §7.2 step 10).
   ``nprobe`` nearest clusters — partition-prunable when the table is
   written partitioned by cluster id.
 
-All hot-path math is built-in higher-order functions (zip_with/aggregate)
-— JVM-side, no Python in the loop.
+Hot-path math stays JVM-side (built-in higher-order functions, or
+unrolled codegen expressions for small centroid sets) up to measured
+size gates; past them one numpy GEMM per Arrow batch takes over.
 """
 
 from __future__ import annotations
@@ -506,11 +507,10 @@ def kmeans_fit(
         sizes = [0] * k
         history: list[float] = []
         for _ in range(iters):
-            # vectorized at ANY k: iterating re-literalizes the
-            # centroids, so the expression path would recompile its
-            # whole unrolled distance tree every round
-            assigned = proj.withColumn(
-                "__c", _assign_vectorized_col("__v", C))
+            # one distance array per row gives both the assignment and
+            # the inertia term; the gate picks its form (see
+            # CENTROID_EXPR_MAX_FLOATS)
+            assigned = proj.withColumn("__n", _nearest_col("__v", C))
             aggs = [F.expr("CAST(COUNT(*) AS BIGINT)").alias("n")]
             aggs += [
                 F.expr(
@@ -520,12 +520,11 @@ def kmeans_fit(
                 for j in range(dim)
             ]
             if track_inertia:
-                assigned = assigned.withColumn(
-                    "__d", _min_sq_dist_col("__v", C, vectorized=True))
                 aggs.append(F.expr(
-                    f"CAST(SUM(CAST(__d AS DECIMAL(38,9))) AS DOUBLE)"
+                    "CAST(SUM(CAST(__n.d AS DECIMAL(38,9))) AS DOUBLE)"
                 ).alias("inert"))
-            rows = assigned.groupBy("__c").agg(*aggs).collect()
+            rows = assigned.groupBy(
+                F.col("__n.c").alias("__c")).agg(*aggs).collect()
             sizes = [0] * k
             newC = [list(c) for c in C]
             inerts = [0.0] * k
@@ -628,23 +627,71 @@ def ivf_build(
     return assigned, centroids
 
 
-def _min_sq_dist_col(vec_col: str, centroids: list[list[float]],
-                     vectorized: bool = False):
-    """Min squared distance to any centroid — same small/large codebook
-    split as ``assign_clusters_col`` (unrolled HOF expressions are
-    interpreted, so past ~32 centroids one numpy GEMM per Arrow batch
-    is the only plan that scales).  ``vectorized=True`` forces the
-    Arrow path at any size (iterative fitting — see
-    ``_assign_vectorized_col``)."""
-    if not vectorized and len(centroids) <= 32:
-        dists = ", ".join(
-            f"aggregate(zip_with({vec_col}, {_vec_literal(c)}, "
-            f"(x, y) -> (CAST(x AS DOUBLE) - y) * "
-            f"(CAST(x AS DOUBLE) - y)), "
-            f"CAST(0 AS DOUBLE), (a, v) -> a + v)"
-            for c in centroids
+# One size gate for every centroid-distance kernel: assign_clusters_col,
+# _min_sq_dist_col, pq_encode_expr and the kmeans_fit / pq_fit Lloyd
+# loops all count total centroid floats (k·dim, or m·k·dsub for PQ).
+# At or below the gate the distances unroll into one codegen
+# expression (left-associated Σ(p−c)², first-min argmin — exactly the
+# arithmetic the DuckDB oracles replay); above it one numpy GEMM per
+# Arrow batch.  The gate is measured, not guessed:
+# tools/centroid_kernel_sweep.py (fresh centroids every pass, as in a
+# Lloyd loop; one assign + group-by + collect job; SPARK_GRAFT_CPUS=4
+# on a 4-core VM), min of 3, ms, Arrow / unrolled:
+#   floats    500 rows      2k rows      200k rows
+#        8   673 /  466    496 /  343    490 /   411
+#       16   451 /  322    456 /  312    465 /   463
+#       32   353 /  359    435 /  358    468 /   505
+#       64   434 /  519    396 /  472    529 /   901
+#      128   369 /  916    357 /  795    535 /  1621
+#      512   335 / 3781    352 / 3714    486 /  5884
+#     1024   354 / 7478    318 / 8906    558 / 13169
+# A min-of-5 re-run of the boundary: 32 floats 368/270, 337/273,
+# 417/416; 48 floats 382/327, 351/410, 355/517.  So the unrolled form
+# wins or ties up to 32 floats and loses from 48 up at 2k rows and
+# more; its cost is mostly the per-pass compile of a tree that grows
+# with the floats, which is why small inputs do not rescue it.
+CENTROID_EXPR_MAX_FLOATS = 32
+
+
+def _sq_dists_sql(vec_col: str, centroids: list[list[float]],
+                  offset: int = 0) -> str:
+    """SQL ``array(d_0, …, d_{k-1})``: squared distance from the
+    ``len(c)`` elements of ``vec_col`` starting at ``offset`` to each
+    centroid, unrolled as Σ_j (x_j − c_j)² with the terms added left
+    to right.  ``vec_col`` may be any SQL array expression."""
+    dists = []
+    for c in centroids:
+        terms = " + ".join(
+            f"(CAST(element_at({vec_col}, {offset + j + 1}) AS DOUBLE) - "
+            f"{float(v)!r}) * "
+            f"(CAST(element_at({vec_col}, {offset + j + 1}) AS DOUBLE) - "
+            f"{float(v)!r})"
+            for j, v in enumerate(c)
         )
-        return F.expr(f"array_min(array({dists}))")
+        dists.append(f"({terms})")
+    return "array(" + ", ".join(dists) + ")"
+
+
+def _first_min_sql(arr: str) -> str:
+    """0-based position of the first minimum of a SQL array."""
+    return f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT)"
+
+
+def _nearest_col(vec_col: str, centroids: list[list[float]]) -> Column:
+    """``struct<c:int, d:double>``: the nearest centroid (first min)
+    and the squared distance to it, both taken from ONE distance array
+    per row.
+
+    At or below ``CENTROID_EXPR_MAX_FLOATS`` the array is the unrolled
+    ``_sq_dists_sql`` expression.  Above it one numpy GEMM per Arrow
+    batch against the closure-captured centroid matrix (broadcast with
+    the task): ``g = ||c||² − 2p·c``, ``c = argmin g`` (the row-constant
+    ||p||² cannot change the order, and ``knn_join``'s probe kernel
+    ranks clusters by the same ``g``), ``d = max(||p||² + g[c], 0)``."""
+    if len(centroids) * len(centroids[0]) <= CENTROID_EXPR_MAX_FLOATS:
+        arr = _sq_dists_sql(vec_col, centroids)
+        return F.expr(f"named_struct('c', {_first_min_sql(arr)}, "
+                      f"'d', array_min({arr}))")
 
     import numpy as np
     import pyarrow as pa
@@ -654,120 +701,36 @@ def _min_sq_dist_col(vec_col: str, centroids: list[list[float]],
     c_sq = (Cm * Cm).sum(axis=1)
     dim = Cm.shape[1]
 
-    def _mind(vs: "pa.Array") -> "pa.Array":
-        if len(vs) == 0:
-            return pa.array([], type=pa.float64())
-        V = _arrow_list_matrix(vs, "_min_sq_dist_col", dim)
-        d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cm.T) + c_sq
-        return pa.array(np.maximum(d2.min(axis=1), 0.0),
-                        type=pa.float64())
+    def _nearest(vs: "pa.Array") -> "pa.Array":
+        V = _arrow_list_matrix(vs, "_nearest_col", dim)
+        g = c_sq - 2.0 * (V @ Cm.T)
+        c = g.argmin(axis=1)
+        d = (V * V).sum(axis=1) + g[np.arange(len(V)), c]
+        return pa.StructArray.from_arrays(
+            [pa.array(c.astype(np.int32)),
+             pa.array(np.maximum(d, 0.0))], names=["c", "d"])
 
-    _mind.__annotations__ = {"vs": pa.Array, "return": pa.Array}
-    return arrow_udf(_mind, "double")(F.col(vec_col))
-
-
-def _min_sq_dist_pandas_col(vec_col: str, centroids: list[list[float]]):
-    """The pre-r11 pandas_udf large-codebook min-distance — kept as the
-    parity reference for ``test_min_sq_dist_arrow_parity``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    Cm = np.asarray(centroids, dtype=np.float64)
-    c_sq = (Cm * Cm).sum(axis=1)
-
-    def _mind(vs):
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        if V.size == 0:
-            return pd.Series([], dtype="float64")
-        d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cm.T) + c_sq
-        return pd.Series(np.maximum(d2.min(axis=1), 0.0))
-
-    _mind.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return pandas_udf(_mind, "double")(F.col(vec_col))
+    # module-wide `from __future__ import annotations` stringifies the
+    # type hints, which udf inference can't resolve — attach the objects
+    _nearest.__annotations__ = {"vs": pa.Array, "return": pa.Array}
+    return arrow_udf(_nearest, "struct<c:int,d:double>")(F.expr(vec_col))
 
 
-def _assign_vectorized_col(vec_col: str, centroids: list[list[float]]):
-    """Arrow-batched argmin assignment (numpy GEMM per batch) — used
-    for large codebooks AND for every ``kmeans_fit`` iteration at any
-    k: iterative fitting changes the centroid literals each round, so
-    the expression path pays a full codegen compile per iteration
-    (measured 14 s vs 5.8 s for a 5-iteration k=16 fit at sf0.1) on
-    top of its interpreted per-row O(k·dim) cost.
-
-    arrow_udf since r11 (guide §4.2): the vector column is read as ONE
-    contiguous buffer view (``_arrow_list_matrix``) instead of the
-    pandas path's per-row ndarray boxing — an O(rows) constant removed
-    from every assignment batch at the 100 TB shapes (nlist ≥ 256,
-    dim 768) where this path runs.  float64 GEMM / argmin arithmetic
-    unchanged → assignments bit-identical to the pandas reference
-    (``test_assign_vectorized_arrow_parity``)."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.functions import arrow_udf
-
-    Cm = np.asarray(centroids, dtype=np.float64)
-    c_sq = (Cm * Cm).sum(axis=1)
-    dim = Cm.shape[1]
-
-    def _assign(vs: "pa.Array") -> "pa.Array":
-        if len(vs) == 0:
-            return pa.array([], type=pa.int32())
-        V = _arrow_list_matrix(vs, "_assign_vectorized_col", dim)
-        d2 = c_sq - 2.0 * (V @ Cm.T)
-        return pa.array(d2.argmin(axis=1).astype(np.int32),
-                        type=pa.int32())
-
-    _assign.__annotations__ = {"vs": pa.Array, "return": pa.Array}
-    return arrow_udf(_assign, "int")(F.col(vec_col))
-
-
-def _assign_vectorized_pandas_col(vec_col: str,
-                                  centroids: list[list[float]]):
-    """The pre-r11 pandas_udf assignment — kept as the parity reference
-    for ``test_assign_vectorized_arrow_parity``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    Cm = np.asarray(centroids, dtype=np.float64)
-    c_sq = (Cm * Cm).sum(axis=1)
-
-    def _assign(vs):
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        if V.size == 0:
-            return pd.Series([], dtype="int32")
-        d2 = c_sq - 2.0 * (V @ Cm.T)
-        return pd.Series(d2.argmin(axis=1).astype("int32"))
-
-    _assign.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return pandas_udf(_assign, "int")(F.col(vec_col))
+def _min_sq_dist_col(vec_col: str, centroids: list[list[float]]):
+    """Min squared distance to any centroid (the k-means inertia term),
+    gated like ``assign_clusters_col`` — see ``_nearest_col``."""
+    return _nearest_col(vec_col, centroids).getField("d")
 
 
 def assign_clusters_col(vec_col: str, centroids: list[list[float]]):
     """Argmin-distance cluster assignment as a Column — a broadcast
-    scan, never a shuffle.  Two physical strategies:
-
-    - small codebooks (nlist ≤ 32): an unrolled per-centroid
-      ``aggregate(zip_with(...))`` expression — no Python in the path;
-    - larger codebooks: one numpy GEMM per Arrow batch via
-      ``pandas_udf`` against the closure-captured centroid matrix
-      (broadcast with the task).  The interpreted-HOF expression is
-      O(nlist·dim) *per row* and its expression tree grows with nlist —
-      at IVF-realistic nlist (≥256) the vectorized form is the only
-      plan that survives; ``argmin(||p||² − 2p·c + ||c||²)`` drops the
-      row-constant ||p||² term."""
-    nlist = len(centroids)
-    if nlist <= 32:
-        dists = [
-            f"aggregate(zip_with({vec_col}, {_vec_literal(c)}, "
-            f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            f"CAST(0 AS DOUBLE), (a, v) -> a + v)"
-            for c in centroids
-        ]
-        arr = "array(" + ", ".join(dists) + ")"
-        return F.expr(f"array_position({arr}, array_min({arr})) - 1").cast("int")
-    return _assign_vectorized_col(vec_col, centroids)
+    scan, never a shuffle.  Up to ``CENTROID_EXPR_MAX_FLOATS`` centroid
+    floats (nlist·dim) it is one unrolled codegen expression with no
+    Python in the path; past it one numpy GEMM per Arrow batch, since
+    the unrolled tree grows with nlist·dim and at IVF-realistic shapes
+    (nlist ≥ 256, dim 768) the GEMM is the only plan that survives.
+    See ``_nearest_col`` for the arithmetic of each form."""
+    return _nearest_col(vec_col, centroids).getField("c")
 
 
 def ivf_write_index(
@@ -1969,14 +1932,11 @@ def pq_fit(
                 )
                 for s in range(m)
             ])).alias("p")
-            # always the Arrow path in the LOOP: each iteration re-
-            # literalizes the codebooks, so the expression path would
-            # recompile its whole distance tree every round (the same
-            # trap kmeans_fit documents; measured 58 s vs 8.7 s per
-            # iteration at 200k x m=16·k=64)
+            # the same size gate as the final encode: at small codebooks
+            # the unrolled expression beats a Python stage per iteration
+            # even though each iteration recompiles it
             rows = (
-                proj.withColumn(
-                    "__codes", _pq_assign_vectorized("__v", model))
+                proj.withColumn("__codes", pq_encode_expr("__v", model))
                 .select(entries)
                 .groupBy(F.col("p.s").alias("s"), F.col("p.c").alias("c"))
                 .agg(
@@ -2005,48 +1965,31 @@ def pq_fit(
 
 def pq_encode_expr(vec_col: str, model: PQModel) -> Column:
     """PQ codes as ``array<int>`` (``m`` entries): per subspace, the
-    first-min argmin over its ``k`` centroids.  Two physical
-    strategies, mirroring ``assign_clusters_col``: small codebooks
-    unroll into the distance expression (pure codegen, fuses into the
-    scan); past ~1024 total centroid floats one numpy GEMM per Arrow
-    batch takes over (the unrolled tree grows ``m·k·dsub`` — measured
-    58 s vs 8.7 s for one 200k-row pass at 4096 floats).  Either way
-    encoding a 100 TB corpus is a narrow map: no shuffle, and the
-    numpy path is Arrow-batched, never row-at-a-time."""
-    if model.m * model.k * model.dsub > 1024:
+    first-min argmin over its ``k`` centroids.  The physical form
+    follows ``CENTROID_EXPR_MAX_FLOATS`` over the ``m·k·dsub`` codebook
+    floats: at or below it each subspace is an unrolled
+    ``_sq_dists_sql`` argmin (pure codegen, fuses into the scan);
+    above it one numpy GEMM per Arrow batch.  Either way encoding a
+    100 TB corpus is a narrow map: no shuffle, and the numpy path is
+    Arrow-batched, never row-at-a-time."""
+    if model.m * model.k * model.dsub > CENTROID_EXPR_MAX_FLOATS:
         return _pq_assign_vectorized(vec_col, model)
-    codes = []
-    for s in range(model.m):
-        o = s * model.dsub
-        dists = []
-        for c in model.codebooks[s]:
-            terms = " + ".join(
-                f"(CAST(element_at({vec_col}, {o + j + 1}) AS DOUBLE) - "
-                f"{float(c[j])!r}) * "
-                f"(CAST(element_at({vec_col}, {o + j + 1}) AS DOUBLE) - "
-                f"{float(c[j])!r})"
-                for j in range(model.dsub)
-            )
-            dists.append(f"({terms})")
-        arr = "array(" + ", ".join(dists) + ")"
-        codes.append(
-            F.expr(f"array_position({arr}, array_min({arr})) - 1").cast("int")
-        )
-    return F.array(*codes)
+    return F.array(*[
+        F.expr(_first_min_sql(
+            _sq_dists_sql(vec_col, book, s * model.dsub)))
+        for s, book in enumerate(model.codebooks)
+    ])
 
 
 def _pq_assign_vectorized(vec_col: str, model: PQModel) -> Column:
     """All-subspace PQ assignment as one numpy GEMM pass per Arrow
-    batch — the codebook tensor ships with the task closure (``m·k·
-    dsub`` floats, broadcast-sized).
-
-    arrow_udf since r11 (guide §4.2): the vector column arrives as ONE
-    contiguous buffer view (``_arrow_list_matrix``) instead of the
-    pandas path's ``Series.tolist`` boxing, and the code lists go back
-    as one flat int32 buffer + a uniform offsets array — no per-row
-    python objects in either direction.  float64 subspace GEMM / argmin
-    arithmetic unchanged → codes bit-identical to the pandas reference
-    (``test_pq_assign_arrow_parity``)."""
+    batch — ``pq_encode_expr``'s form above ``CENTROID_EXPR_MAX_FLOATS``.
+    The codebook tensor ships with the task closure (``m·k·dsub``
+    floats, broadcast-sized).  The vector column arrives as ONE
+    contiguous buffer view (``_arrow_list_matrix``) and the code lists
+    go back as one flat int32 buffer + a uniform offsets array — no
+    per-row python objects in either direction.  Per subspace the codes
+    are the first-min argmin of ``||p||² − 2p·c + ||c||²``."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
@@ -2074,39 +2017,9 @@ def _pq_assign_vectorized(vec_col: str, model: PQModel) -> Column:
             pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32)),
             pa.array(out.reshape(-1)))
 
-    # module-wide `from __future__ import annotations` stringifies
-    # decorator-style type hints, which udf inference can't resolve —
-    # attach the real objects (same workaround as _assign_vectorized_col)
+    # same annotation workaround as _nearest_col
     _enc.__annotations__ = {"vs": pa.Array, "return": pa.Array}
-    return arrow_udf(_enc, "array<int>")(F.col(vec_col))
-
-
-def _pq_assign_pandas(vec_col: str, model: PQModel) -> Column:
-    """The pre-r11 pandas_udf PQ assignment — kept as the parity
-    reference for ``test_pq_assign_arrow_parity``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    B = [np.asarray(b, dtype=np.float64) for b in model.codebooks]
-    m, dsub = model.m, model.dsub
-
-    def _enc(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        P = np.asarray(vs.tolist(), dtype=np.float64)
-        out = np.empty((len(P), m), dtype=np.int32)
-        for s in range(m):
-            Ps = P[:, s * dsub:(s + 1) * dsub]
-            C = B[s]
-            d2 = ((Ps * Ps).sum(axis=1)[:, None]
-                  - 2.0 * (Ps @ C.T)
-                  + (C * C).sum(axis=1)[None, :])
-            out[:, s] = d2.argmin(axis=1)
-        return pd.Series(list(out))
-
-    _enc.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return pandas_udf(_enc, "array<int>")(F.col(vec_col))
+    return arrow_udf(_enc, "array<int>")(F.expr(vec_col))
 
 
 def pq_adc_topk(

@@ -168,26 +168,25 @@ def test_ivf_matches_brute_force(spark):
 
 
 def test_assign_clusters_vectorized_matches_expression(spark):
-    """The pandas_udf GEMM assignment (nlist > 32 codebooks) must agree
-    exactly with the unrolled expression path on identical centroids —
-    same argmin, including tie behavior on synthetic distinct points."""
+    """Past the centroid-float gate (40 centroids x 6 dims = 240 floats)
+    assign_clusters_col runs the Arrow GEMM form; its assignments must
+    equal the first-min argmin of the unrolled Σ(p−c)² arithmetic the
+    expression form uses, replayed in numpy on the same points."""
     import random
 
-    from elusion_spark.operators.similarity import assign_clusters_col
+    from elusion_spark.operators.similarity import (
+        CENTROID_EXPR_MAX_FLOATS, assign_clusters_col)
 
     rng = random.Random(11)
     dim, n = 6, 300
     rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(n)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     centroids = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(40)]
+    assert len(centroids) * dim > CENTROID_EXPR_MAX_FLOATS
 
     vec = df.withColumn(
         "cluster_id", assign_clusters_col("embedding", centroids)
     )
-    # force the expression path on the same 40 centroids by calling the
-    # small-codebook branch in two halves and taking the global argmin
-    # equivalent: simplest exact check is to evaluate the expression
-    # branch directly with a <=32 slice twice and combine in python
     got = {r["vec_id"]: r["cluster_id"] for r in vec.collect()}
 
     import numpy as np
@@ -3052,8 +3051,9 @@ def test_snapshot_diff_statuses_and_null_safety(spark):
 
 
 def test_kmeans_fit_large_k_inertia_path(spark):
-    """k > 32 switches assignment AND the inertia column to the
-    vectorized Arrow path; the trace still decreases monotonically."""
+    """Past the centroid-float gate (k=40 x dim=64) the assignment AND
+    the inertia come from the Arrow GEMM form; the trace still
+    decreases monotonically."""
     from pyspark.sql import functions as F
 
     from elusion_spark.operators.similarity import kmeans_fit
@@ -3065,6 +3065,175 @@ def test_kmeans_fit_large_k_inertia_path(spark):
     assert len(m.inertia_history) == 2
     assert m.inertia_history[1] <= m.inertia_history[0] + 1e-9
     assert sum(m.sizes) == emb.count()
+
+
+def _oracle_lloyd(X, C, iters):
+    """numpy replay of the DuckDB oracles' Lloyd (q127/q142): Σ(p−c)²
+    with the terms added left to right, first-min argmin, and centroid
+    means of DECIMAL(38,9)-rounded coordinate sums (Spark casts a double
+    to decimal through its shortest repr, rounding half up).  Returns
+    (centroids, sizes at the last assignment)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    q = Decimal("1e-9")
+    dec = [[Decimal(repr(float(v))).quantize(q, ROUND_HALF_UP) for v in row]
+           for row in X]
+    C = np.array(C, dtype=np.float64)
+    sizes = None
+    for _ in range(iters):
+        best = _sigma_argmin(X, C)
+        sizes = [int((best == c).sum()) for c in range(len(C))]
+        for c in range(len(C)):
+            members = np.flatnonzero(best == c)
+            if len(members):
+                C[c] = [float(sum(dec[i][j] for i in members)) / len(members)
+                        for j in range(X.shape[1])]
+    return C, sizes
+
+
+def _sigma_argmin(X, C):
+    import numpy as np
+
+    d = np.zeros((len(X), len(C)))
+    for j in range(X.shape[1]):
+        t = X[:, j:j + 1] - np.asarray(C)[None, :, j]
+        d = d + t * t
+    return d.argmin(axis=1)
+
+
+def test_lloyd_near_ties_follow_the_oracle_arithmetic(spark):
+    """Points planted on the bisector of two centroids are near-ties
+    whose winner depends on rounding: ||p||² − 2p·c + ||c||² picks a
+    different centroid than Σ(p−c)² for many of them.  Below the
+    centroid-float gate both Lloyd loops must follow the oracles'
+    Σ(p−c)² first-min arithmetic: kmeans_fit's centroids, sizes and
+    assign() codes, and pq_fit's codebooks and pq_encode_expr codes
+    equal the numpy replay exactly."""
+    import numpy as np
+
+    from elusion_spark.operators.similarity import (
+        CENTROID_EXPR_MAX_FLOATS, kmeans_fit, pq_encode_expr, pq_fit)
+
+    rng = np.random.default_rng(7)
+    dim, k = 4, 2
+    assert dim * k <= CENTROID_EXPR_MAX_FLOATS
+    C0 = rng.uniform(-1, 1, size=(k, dim))
+
+    def bisector(n, a, b):
+        w = b - a
+        r = rng.uniform(-1, 1, size=(n, len(a)))
+        return (a + b) / 2 + r - (r @ w)[:, None] * w / (w @ w)
+
+    # a tie in both 2-dim halves (the PQ subspaces) is a 4-dim tie too
+    X = np.vstack([
+        np.hstack([bisector(200, C0[0, :2], C0[1, :2]),
+                   bisector(200, C0[0, 2:], C0[1, 2:])]),
+        C0[0] + rng.normal(0, 0.2, size=(60, dim)),
+        C0[1] + rng.normal(0, 0.2, size=(60, dim))])
+    for lo, hi in ((0, dim), (0, 2), (2, dim)):  # the ties bite
+        Xs, Cs = X[:, lo:hi], C0[:, lo:hi]
+        gemm = ((Xs * Xs).sum(axis=1)[:, None] - 2.0 * (Xs @ Cs.T)
+                + (Cs * Cs).sum(axis=1)).argmin(axis=1)
+        assert (gemm != _sigma_argmin(Xs, Cs)).sum() >= 20, (lo, hi)
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(len(X))],
+        "id long, v array<double>").repartition(3)
+
+    m = kmeans_fit(df, "v", dim=dim, k=k, iters=2,
+                   init_centroids=C0.tolist(), track_inertia=False)
+    wantC, want_sizes = _oracle_lloyd(X, C0, 2)
+    assert m.centroids == wantC.tolist()
+    assert m.sizes == want_sizes
+    got = dict(m.assign(df, "v").select("id", "cluster_id").collect())
+    want = _sigma_argmin(X, np.asarray(m.centroids))
+    assert got == {i: int(c) for i, c in enumerate(want)}
+
+    # PQ: two 2-dim subspaces, each planted on its own bisector
+    books0 = [C0[:, :2].tolist(), C0[:, 2:].tolist()]
+    pq = pq_fit(df, "v", dim=dim, m=2, k=k, iters=2, init_centroids=books0)
+    codes = {r["id"]: list(r["c"]) for r in df.select(
+        "id", pq_encode_expr("v", pq).alias("c")).collect()}
+    for s in range(2):
+        Xs = X[:, 2 * s:2 * s + 2]
+        wantB, _ = _oracle_lloyd(Xs, books0[s], 2)
+        assert pq.codebooks[s] == wantB.tolist(), s
+        want = _sigma_argmin(Xs, np.asarray(pq.codebooks[s]))
+        assert [codes[i][s] for i in range(len(X))] == want.tolist(), s
+
+
+def test_centroid_kernels_share_one_size_gate(spark, monkeypatch):
+    """Plan pin for CENTROID_EXPR_MAX_FLOATS at all five sites
+    (assign_clusters_col, _min_sq_dist_col, pq_encode_expr and one
+    iteration's aggregation in the kmeans_fit and pq_fit loops): at the
+    gate no Python evaluation node, at gate+1 exactly one, and no
+    interpreted ``aggregate(zip_with(...))`` distance in any plan."""
+    from pyspark.sql import functions as F
+
+    from elusion_spark.operators import similarity as S
+
+    G = S.CENTROID_EXPR_MAX_FLOATS
+
+    def split(total):  # (k, dim) with k * dim == total
+        k = next(d for d in (3, 2, 1) if total % d == 0)
+        return k, total // k
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def vecs(dim):
+        return spark.range(40).select(F.expr(
+            f"transform(sequence(0, {dim - 1}), "
+            f"j -> sin(CAST(id * {dim} + j AS DOUBLE)))").alias("v"))
+
+    loop_plans = []
+    cls = type(spark.range(1))
+    real_collect = cls.collect
+
+    def recording_collect(self):
+        loop_plans.append(plan(self))
+        return real_collect(self)
+
+    def site_plans(total):
+        k, dim = split(total)
+        cents = [[0.1 * (i + j) for j in range(dim)] for i in range(k)]
+        m = 2 if total % 2 == 0 else 1  # PQ subspaces
+        pk, dsub = split(total // m)
+        books = [[[0.1 * (i - j + s) for j in range(dsub)]
+                  for i in range(pk)] for s in range(m)]
+        df, pdf = vecs(dim), vecs(m * dsub)
+        out = {
+            "assign_clusters_col": plan(
+                df.select(S.assign_clusters_col("v", cents))),
+            "_min_sq_dist_col": plan(
+                df.select(S._min_sq_dist_col("v", cents))),
+            "pq_encode_expr": plan(pdf.select(
+                S.pq_encode_expr("v", S.PQModel(books, m * dsub)))),
+        }
+        monkeypatch.setattr(cls, "collect", recording_collect)
+        try:
+            del loop_plans[:]
+            S.kmeans_fit(df, "v", dim=dim, k=k, iters=1,
+                         init_centroids=cents)
+            (out["kmeans_fit"],) = loop_plans
+            del loop_plans[:]
+            S.pq_fit(pdf, "v", dim=m * dsub, m=m, k=pk, iters=1,
+                     init_centroids=books)
+            (out["pq_fit"],) = loop_plans
+        finally:
+            monkeypatch.setattr(cls, "collect", real_collect)
+        return out
+
+    def python_nodes(p):
+        return p.count("ArrowEvalPython") + p.count("BatchEvalPython")
+
+    at_gate, above = site_plans(G), site_plans(G + 1)
+    for site in at_gate:
+        assert python_nodes(at_gate[site]) == 0, site
+        assert python_nodes(above[site]) == 1, site
+        for p in (at_gate[site], above[site]):
+            assert "zip_with" not in p, site
 
 
 def test_evaluate_classifier_no_auc(spark):
@@ -5949,53 +6118,57 @@ def _small_batches(spark):
     return _cm()
 
 
+def _r11_vec_matrix(df):
+    """(vec_id list, float64 matrix) of a ``_r11_vec_df`` frame, read
+    back through Spark so the float32 storage rounding is included."""
+    import numpy as np
+
+    rows = sorted(df.collect(), key=lambda r: r["vec_id"])
+    return ([r["vec_id"] for r in rows],
+            np.asarray([r["embedding"] for r in rows], dtype=np.float64))
+
+
 def test_assign_vectorized_arrow_parity(spark):
-    """kmeans/IVF argmin assignment at the large-codebook cutover shape
-    (nlist=256, dim=768): the arrow_udf must be BIT-identical to the
-    pandas_udf it replaced — same float64 GEMM + argmin, only the
-    boundary boxing removed."""
-    import random
+    """kmeans/IVF argmin assignment at a large-codebook shape
+    (nlist=256, dim=768, far past the centroid-float gate):
+    assign_clusters_col's Arrow form equals a numpy GEMM argmin of
+    ``||c||² − 2p·c`` on the same inputs, across small Arrow batches."""
+    import numpy as np
 
-    from pyspark.sql import functions as F
-
-    from elusion_spark.operators.similarity import (
-        _assign_vectorized_col, _assign_vectorized_pandas_col,
-    )
+    from elusion_spark.operators.similarity import assign_clusters_col
 
     rng, df = _r11_vec_df(spark)
     cents = [[rng.uniform(-2, 2) for _ in range(768)] for _ in range(256)]
     with _small_batches(spark):
-        new = df.select("vec_id",
-                        _assign_vectorized_col("embedding", cents)
-                        .alias("c")).collect()
-        old = df.select("vec_id",
-                        _assign_vectorized_pandas_col("embedding", cents)
-                        .alias("c")).collect()
-    assert sorted(map(tuple, new)) == sorted(map(tuple, old))
-    assert len(new) == 257
+        got = dict(df.select("vec_id",
+                             assign_clusters_col("embedding", cents)
+                             .alias("c")).collect())
+    ids, V = _r11_vec_matrix(df)
+    C = np.asarray(cents)
+    want = ((C * C).sum(axis=1) - 2.0 * (V @ C.T)).argmin(axis=1)
+    assert got == {i: int(c) for i, c in zip(ids, want)}
+    assert len(got) == 257
 
 
 def test_min_sq_dist_arrow_parity(spark):
-    """kmeans inertia / min-distance at the cutover shape: arrow_udf
-    bit-identical to the pandas reference (same ||p||²-2p·c+||c||²
-    float64 chain, max(..., 0) clamp included)."""
-    import random
+    """kmeans inertia / min-distance at the same shape: the Arrow form
+    equals the numpy ``max(min(||p||² − 2p·c + ||c||²), 0)`` on the same
+    inputs (to GEMM rounding: batch shapes may change BLAS blocking)."""
+    import numpy as np
 
-    from elusion_spark.operators.similarity import (
-        _min_sq_dist_col, _min_sq_dist_pandas_col,
-    )
+    from elusion_spark.operators.similarity import _min_sq_dist_col
 
     rng, df = _r11_vec_df(spark, seed=1102)
     cents = [[rng.uniform(-2, 2) for _ in range(768)] for _ in range(256)]
     with _small_batches(spark):
-        new = df.select("vec_id",
-                        _min_sq_dist_col("embedding", cents,
-                                         vectorized=True).alias("d")
-                        ).collect()
-        old = df.select("vec_id",
-                        _min_sq_dist_pandas_col("embedding", cents)
-                        .alias("d")).collect()
-    assert sorted(map(tuple, new)) == sorted(map(tuple, old))
+        got = dict(df.select("vec_id",
+                             _min_sq_dist_col("embedding", cents)
+                             .alias("d")).collect())
+    ids, V = _r11_vec_matrix(df)
+    C = np.asarray(cents)
+    d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + (C * C).sum(axis=1)
+    want = np.maximum(d2.min(axis=1), 0.0)
+    assert np.allclose([got[i] for i in ids], want, rtol=1e-12, atol=0)
 
 
 def test_classifier_score_arrow_parity(spark):
@@ -6027,33 +6200,34 @@ def test_classifier_score_arrow_parity(spark):
 
 def test_pq_assign_arrow_parity(spark):
     """PQ encode at the real codebook shape (m=8, k=256, dsub=96 —
-    m·k·dsub far past the 1024-float expression cutover): arrow_udf
-    codes bit-identical to the pandas reference, and pq_encode_expr
-    routes to the vectorized path at this size."""
-    import random
+    m·k·dsub far past the centroid-float gate): pq_encode_expr routes
+    to the Arrow form, and its codes equal a numpy GEMM first-min
+    argmin per subspace on the same inputs."""
+    import numpy as np
 
-    from elusion_spark.operators.similarity import (
-        PQModel, _pq_assign_pandas, _pq_assign_vectorized,
-        pq_encode_expr,
-    )
+    from elusion_spark.operators.similarity import PQModel, pq_encode_expr
 
     rng, df = _r11_vec_df(spark, seed=1104)
     model = PQModel(
         [[[rng.uniform(-2, 2) for _ in range(96)] for _ in range(256)]
          for _ in range(8)], 768)
     with _small_batches(spark):
-        new = df.select("vec_id",
-                        _pq_assign_vectorized("embedding", model)
-                        .alias("c")).collect()
-        old = df.select("vec_id",
-                        _pq_assign_pandas("embedding", model)
-                        .alias("c")).collect()
-        routed = df.select("vec_id",
-                           pq_encode_expr("embedding", model)
-                           .alias("c")).collect()
-    k = lambda r: (r["vec_id"], tuple(r["c"]))  # noqa: E731
-    assert sorted(map(k, new)) == sorted(map(k, old))
-    assert sorted(map(k, routed)) == sorted(map(k, new))
+        plan = df.select(pq_encode_expr("embedding", model))
+        got = {r["vec_id"]: list(r["c"]) for r in df.select(
+            "vec_id", pq_encode_expr("embedding", model).alias("c")
+        ).collect()}
+    assert "ArrowEvalPython" in \
+        plan._jdf.queryExecution().executedPlan().toString()
+    ids, V = _r11_vec_matrix(df)
+    want = {i: [] for i in ids}
+    for s in range(8):
+        P = V[:, s * 96:(s + 1) * 96]
+        C = np.asarray(model.codebooks[s])
+        d2 = ((P * P).sum(axis=1)[:, None] - 2.0 * (P @ C.T)
+              + (C * C).sum(axis=1)[None, :])
+        for i, c in zip(ids, d2.argmin(axis=1)):
+            want[i].append(int(c))
+    assert got == want
 
 
 def test_pq_adc_arrow_parity(spark):

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Isolated boundary microbench for the round-11 Column-surface Arrow
-rewrites (_assign_vectorized_col / _min_sq_dist_col /
+rewrites (the centroid kernel now in _nearest_col /
 _pq_assign_vectorized / _pq_adc_vectorized / classifier_score wide
 head): measures, on the EXACT worker input shape (one Arrow batch of
 10k x dim float32 list rows), the per-batch cost of
@@ -15,10 +15,11 @@ plus the PQ-codes OUTPUT side (pd.Series(list(ndarray)) ->
 pa.Array.from_pandas vs ListArray.from_arrays over the flat buffer).
 
 This is the same instrument r10 used for the DataFrame-transform
-rewrites (33.3 ms -> 0.63 ms per 10k x 64 batch side): the benched
-fixtures never reach these codepaths (cutovers: nlist > 32,
-m*k*dsub > 1024, dim > 512), so the evidence is the isolated boundary
-delta at the 100 TB shapes, not a bench wall.
+rewrites (33.3 ms -> 0.63 ms per 10k x 64 batch side): of the benched
+fixtures only the IVF ones (nlist 8 x 64 dims) reach these codepaths
+(cutovers: more than 32 centroid floats, m*k > 1024 for ADC,
+dim > 512), so the evidence is the isolated boundary delta at the
+100 TB shapes, not a bench wall.
 
 Usage: python tools/arrow_col_ab.py [rows] [dim] [reps]
 """
