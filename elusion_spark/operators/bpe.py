@@ -1,4 +1,4 @@
-"""Distributed BPE tokenizer training and encoding.
+"""BPE tokenizer training and encoding.
 
 Beyond-parity module (the reference has no tokenizer surface): learn
 byte-pair-encoding merges from a corpus and apply them — the canonical
@@ -6,41 +6,33 @@ byte-pair-encoding merges from a corpus and apply them — the canonical
 done with the classic Sennrich-style word-frequency factorization so it
 scales to any corpus size.
 
-Scale shape (the whole point): the ONLY corpus-sized job is the initial
-word-frequency aggregation — one shuffle keyed on the word, after which
-training touches only the *vocabulary* table (unique words +
+Scale shape: the ONLY corpus-sized job is the word-frequency
+aggregation (``bpe_word_counts``) — one shuffle keyed on the word.
+Training then touches only the *vocabulary* table (unique words +
 frequencies; Heaps'-law small after a ``min_freq`` floor, ~10^5-10^6
-rows even for a 100 TB corpus).  ``bpe_fit(mode='driver')`` — the
-production path — collects that floored table once and runs the exact
-incremental-pair-index Sennrich loop driver-side (seconds for 30k
-merges; ``train_bpe_incremental``).  ``mode='distributed'`` keeps the
-loop on the cluster for vocabularies that genuinely cannot sit on the
-driver: each iteration is ONE vocab-sized aggregation (adjacent-pair
-counts weighted by word frequency) plus a single-row driver collect of
-the winning pair; applying the merge is a literal `replace` on the
-symbol string — a narrow map.  Encoding (``bpe_encode``) is one
-``mapInPandas`` pass with a per-task distinct-word memo
+rows even for a 100 TB corpus).  ``bpe_fit`` collects that floored
+table once (at most ``MAX_DRIVER_VOCAB`` rows, raising past it) and
+runs the exact incremental-pair-index Sennrich loop driver-side
+(``train_bpe_incremental``: seconds for 30k merges), so a fit costs
+the same few Spark jobs at any merge count.  Encoding (``bpe_encode``)
+is one ``mapInPandas`` pass with a per-task distinct-word memo
 (``operators.wordseg``); its cost per word is the merges that occur in
 that word, so production-sized (30k-merge) vocabularies encode as fast
 as small ones.
 
-Representation: every symbol is wrapped in ``\\x1f`` (the ASCII unit
-separator), so the word "hello" starts as
-``\\x1fh\\x1f\\x1fe\\x1f...``; two symbols are adjacent iff their
-wrappers touch (``\\x1f\\x1f``), and merging pair (a, b) is the literal
-string replace ``\\x1fa\\x1f\\x1fb\\x1f -> \\x1fab\\x1f``.  Literal
-`replace` is greedy left-to-right and non-overlapping in Spark and
-DuckDB alike, which is exactly BPE's application rule (``a a a a``
-merges to ``aa aa``, not three overlapping ``aa``) — so the DuckDB
-oracle can replay training bit-for-bit (suite q139).  Words containing
-the separator byte itself are excluded (it is unprintable; real corpora
-shed it in the `normalize_text` pass).
-
 Pair counting counts every adjacent occurrence (including overlapping
 ones like the two ``(a, a)`` pairs in ``aaa``) exactly as reference BPE
-does; ties break deterministically on (count DESC, left ASC, right
-ASC) so the learned merges are reproducible across engines and
-partitionings.
+does; applying a merge is one greedy left-to-right non-overlapping
+pass (``a a a a`` merges to ``aa aa``, not three overlapping ``aa``);
+ties break deterministically on (count DESC, left ASC, right ASC), so
+the learned merges are reproducible across engines and partitionings.
+That rule is what the DuckDB oracles replay: suite q139/q161 unroll the
+training loop in SQL and q140 re-encodes with the learned merges, both
+as literal ``replace`` calls on words whose symbols are wrapped in
+``\\x1f`` (the ASCII unit separator), where merging (a, b) is
+``\\x1fa\\x1f\\x1fb\\x1f -> \\x1fab\\x1f``.  Words containing the
+separator byte itself are therefore excluded (it is unprintable; real
+corpora shed it in the `normalize_text` pass).
 """
 
 from __future__ import annotations
@@ -50,9 +42,8 @@ from pyspark.sql import functions as F
 
 SEP = "\x1f"
 
-
-def _wrap(sym: str) -> str:
-    return SEP + sym + SEP
+# Largest floored vocabulary ``bpe_fit`` collects to the driver.
+MAX_DRIVER_VOCAB = 2_000_000
 
 
 def bpe_word_counts(
@@ -69,19 +60,6 @@ def bpe_word_counts(
         words = words.select(F.lower("word").alias("word"))
     words = words.filter(~F.col("word").contains(SEP))
     return words.groupBy("word").agg(F.count("*").cast("bigint").alias("freq"))
-
-
-def _sym_repr(col):
-    """word -> wrapped-symbol string: each character becomes
-    ``\\x1f c \\x1f``."""
-    return F.regexp_replace(col, "(.)", f"{SEP}$1{SEP}")
-
-
-def _sym_array(col):
-    """wrapped-symbol string -> array of bare symbols."""
-    return F.split(
-        F.regexp_replace(col, f"^{SEP}|{SEP}$", ""), SEP + SEP
-    )
 
 
 def pretokenize_word_counts(
@@ -127,15 +105,15 @@ def train_bpe_incremental(word_freqs: dict[str, int],
     """Driver-side exact Sennrich BPE with an incremental pair index —
     O(touched words) per merge instead of a full vocabulary recount, so
     30k merges over a 20k-word vocabulary train in seconds (measured:
-    SCALE.md rounds 8-9).  Tie rule matches the distributed loop
-    exactly: (count DESC, left ASC, right ASC) — so for any
-    ``word_freqs`` the merge list is bit-identical to
-    ``bpe_fit(mode='distributed', merges_per_round=1)`` on the same
-    table (pinned by tests/test_operators.py parity tests).
+    SCALE.md rounds 8-9).  Winners follow the (count DESC, left ASC,
+    right ASC) tie rule, so for any ``word_freqs`` the merge list is
+    bit-identical to the pure-Python Sennrich replay and to the DuckDB
+    oracles' unrolled loop (pinned by tests/test_operators.py and suite
+    q139/q161).
 
-    This is the merge engine behind ``bpe_fit(mode='driver')``; it is
-    public so measurement tools and callers holding an already-
-    collected frequency table can drive it directly.
+    This is the merge engine behind ``bpe_fit``; it is public so
+    measurement tools and callers holding an already-collected
+    frequency table can drive it directly.
 
     Winner selection is a lazy-deletion heap keyed ``(-count, l, r)``
     (exactly the tie rule): every count change pushes a fresh entry,
@@ -212,133 +190,55 @@ def bpe_fit(
     num_merges: int = 10,
     lowercase: bool = True,
     word_counts: DataFrame | None = None,
-    checkpoint_every: int = 16,
-    merges_per_round: int = 1,
-    min_round_count_frac: float = 0.0,
-    mode: str = "auto",
     min_freq: int = 1,
-    max_driver_vocab: int = 2_000_000,
     pre_tokenizer: dict | None = None,
 ) -> list[dict]:
     """Learn ``num_merges`` BPE merges.  Returns a list of dicts
     ``{merge_rank, lft, rgt, pair_count}`` in learning order (bounded:
     one row per merge — never corpus-sized).
 
-    Pass ``word_counts`` (a ``bpe_word_counts`` output, possibly
-    persisted/reused across fits) to skip the corpus scan.  The vocab
-    lineage grows one `replace` per merge; every ``checkpoint_every``
-    merges the vocab re-persists to keep plans shallow — at vocab scale
-    this is pennies.
+    One straight line: ``bpe_word_counts`` (the one corpus-sized job;
+    pass ``word_counts`` — a ``bpe_word_counts`` output, possibly
+    persisted and reused across fits — to skip the corpus scan) → the
+    ``min_freq`` floor → the optional ``pre_tokenizer`` transform →
+    one bounded collect of the frequency table → the exact
+    incremental-pair-index Sennrich loop driver-side
+    (``train_bpe_incremental``).  The Spark work is the same at 3 or
+    30k merges; the merge count only costs driver CPU (30k merges in
+    seconds).  This is how real tokenizers are trained at 100 TB: the
+    corpus is reduced once, and the vocabulary is Heaps'-law small
+    after a frequency floor.
 
-    ``mode`` (VERDICT r8 ask #1 — the production-vocab fit path):
+    ``min_freq`` floors the vocabulary (``freq >= min_freq``).  This
+    is the honest Heaps'-law guard for the driver collect — a web
+    corpus's distinct-"word" table is unbounded (URLs, hashes, junk),
+    but words below a small floor carry negligible pair mass — and it
+    is exactly what production trainers do (HF
+    ``BpeTrainer.min_frequency``; SentencePiece's vocabulary caps).
+    Floored words are EXCLUDED from pair counts, so a floor can shift
+    late/low-count merges vs an unfloored fit; the default 1 is a
+    no-op.  A floored table of more than ``MAX_DRIVER_VOCAB`` rows
+    raises ``ValueError`` (checked by the same ``limit(n + 1)``
+    collect that fetches the training table — no extra counting job).
 
-    - ``'driver'``: the ONLY corpus-sized job is ``bpe_word_counts``;
-      the (``min_freq``-floored) frequency table is collected to the
-      driver — bounded by ``max_driver_vocab`` rows, raising if it
-      does not fit — and the merge loop runs as exact incremental-
-      pair-index Sennrich (``train_bpe_incremental``): O(touched
-      words) per merge, 30k merges in seconds where the distributed
-      loop would schedule ~30k sequential cluster round-trips (or
-      ~1,900 at ``merges_per_round=16``).  Same (count DESC, l, r)
-      tie rule, so the merge list is BIT-IDENTICAL to the exact
-      distributed loop (parity-pinned in tests).  This is how real
-      tokenizers are trained at 100 TB: the corpus is reduced once,
-      the vocabulary is Heaps'-law small after a frequency floor, and
-      scheduling latency — not CPU — is the binding cost of keeping
-      the loop on the cluster.
-    - ``'distributed'``: the original all-cluster loop below — one
-      vocab-sized aggregation per round; the fallback when even the
-      floored vocabulary cannot sit on the driver.
-    - ``'auto'`` (default): driver when the floored vocabulary fits
-      ``max_driver_vocab`` (checked with a ``limit(n+1)`` collect —
-      no extra counting job; the probe rows ARE the training table),
-      else distributed.  Explicit ``merges_per_round > 1`` or
-      ``min_round_count_frac > 0`` resolves to distributed: those
-      knobs define the batched approximation, which only exists
-      cluster-side.
-
-    ``pre_tokenizer`` (round 9 — train in a PUBLISHED tokenizer's
-    space): an HF ``pre_tokenizer`` block or a
-    ``parse_hf_pre_tokenizer`` spec.  The word-frequency table is
-    transformed VOCAB-SIDE (one ``mapInPandas`` over distinct words —
-    never corpus-sized) into pre-token pieces before merging, so the
-    learned merges live in ByteLevel (GPT-2 ``Ġword`` byte-alphabet)
-    or Metaspace (``▁word``) space and export/encode cleanly as a
-    real published-format tokenizer (see
-    ``export_hf_tokenizer_json(pre_tokenizer=...)`` /
-    ``hf_tokenizer_encode``).  Documented approximation: every word
-    is counted in its MID-DOCUMENT form (space-preceded) — exact for
+    ``pre_tokenizer`` (train in a PUBLISHED tokenizer's space): an HF
+    ``pre_tokenizer`` block or a ``parse_hf_pre_tokenizer`` spec.  The
+    word-frequency table is transformed VOCAB-SIDE (one
+    ``mapInPandas`` over distinct words — never corpus-sized) into
+    pre-token pieces before merging, so the learned merges live in
+    ByteLevel (GPT-2 ``Ġword`` byte-alphabet) or Metaspace (``▁word``)
+    space and export/encode cleanly as a real published-format
+    tokenizer (see ``export_hf_tokenizer_json(pre_tokenizer=...)`` /
+    ``hf_tokenizer_encode``).  Documented approximation: every word is
+    counted in its MID-DOCUMENT form (space-preceded) — exact for
     ``add_prefix_space=True`` / Metaspace ``always``; for GPT-2's
     ``add_prefix_space=False`` the document-INITIAL word (one word in
     ~100) trains as if space-preceded, the same factorization HF's own
-    trainer makes when fed line-split text.
-
-    ``min_freq`` floors the vocabulary in EVERY mode (``freq >=
-    min_freq``).  This is the honest Heaps'-law guard for the driver
-    collect — a web corpus's distinct-"word" table is unbounded
-    (URLs, hashes, junk), but words below a small floor carry
-    negligible pair mass — and it is exactly what production trainers do
-    (HF ``BpeTrainer.min_frequency``; SentencePiece's vocabulary
-    caps).  Floored
-    words are EXCLUDED from pair counts, so a floor can shift
-    late/low-count merges vs an unfloored fit; the default 1 is a
-    no-op.
-
-    ``merges_per_round`` (default 1 = exact Sennrich order) — a
-    DISTRIBUTED-loop knob; production fits should use ``mode='driver'``
-    above, which sidesteps the job-count problem entirely.  A real
-    tokenizer wants 10k-30k merges, and one vocab-sized aggregation
-    per merge means 30k Spark jobs — hundreds of cluster round-trips
-    per minute of useful work.  ``merges_per_round=N`` applies the top
-    N NON-OVERLAPPING pairs per counting pass (greedy by the same
-    (count DESC, left, right) order, skipping any pair that shares a
-    symbol with one already taken this round), cutting the job count
-    ``N``-fold — the standard scalable approximation (used by
-    Hugging Face's and SentencePiece's parallel trainers in spirit:
-    batch what cannot interact).  DIVERGENCE from strict BPE, stated
-    honestly: pairs ranked 2..N in a round are chosen by PRE-round
-    counts.  Strict BPE recounts after every merge, so when merge #1
-    changes the count of a pair ranked below it (they overlap
-    textually but not symbol-wise — e.g. merging "t h" changes
-    "h e" counts), the batched order can differ from exact order;
-    skipped overlapping pairs are NOT lost, they win a later round
-    with fresh counts.  MEASURED divergence (SCALE.md round 7): at a
-    64-merge budget with unguarded batching the merge-set overlap vs
-    exact order is 0.31-0.55 — early merges interact heavily (merge #1
-    spawns new high-count pairs exact BPE takes immediately), so naive
-    batching reorders the head of the vocabulary even though each
-    individual choice was a then-top pair.
-
-    ``min_round_count_frac`` is the adaptive guard that bounds this:
-    a round stops accepting pairs once a candidate's PRE-round count
-    falls below ``frac × (the round leader's count)``.  Counts change
-    fastest exactly where they are steep, so the guard keeps rounds
-    small early (near-exact order) and lets them grow on the flat
-    Zipf tail (full batching where reordering is harmless) — measured
-    at frac=0.5 / mpr=16 on a 20k-word Zipf fixture: merge-set overlap
-    0.31 → 0.80 at 64 merges for 64 vs 46 jobs at a 256-merge budget —
-    still 8.8× fewer jobs (and 10× less wall) than exact's 561
-    (SCALE.md round 7 table).  The emitted ``pair_count`` for
-    intra-round ranks 2..N is the pre-round count."""
+    trainer makes when fed line-split text."""
     if num_merges < 1:
         raise ValueError("num_merges must be >= 1")
-    if merges_per_round < 1:
-        raise ValueError("merges_per_round must be >= 1")
-    if not 0.0 <= min_round_count_frac <= 1.0:
-        raise ValueError("min_round_count_frac must be in [0, 1]")
-    if mode not in ("auto", "driver", "distributed"):
-        raise ValueError(f"mode must be 'auto', 'driver' or "
-                         f"'distributed'; got {mode!r}")
     if min_freq < 1:
         raise ValueError("min_freq must be >= 1")
-    batched = merges_per_round > 1 or min_round_count_frac > 0.0
-    if mode == "driver" and batched:
-        raise ValueError(
-            "merges_per_round/min_round_count_frac are distributed-"
-            "loop approximation knobs; mode='driver' is always exact "
-            "— drop them or pass mode='distributed'")
-    if mode == "auto" and batched:
-        mode = "distributed"
     wc = word_counts
     if wc is None:
         wc = bpe_word_counts(df, text_col, lowercase=lowercase)
@@ -346,104 +246,13 @@ def bpe_fit(
         wc = wc.filter(F.col("freq") >= F.lit(int(min_freq)))
     if pre_tokenizer is not None:
         wc = pretokenize_word_counts(wc, pre_tokenizer)
-    wc_pinned = None
-    if mode in ("auto", "driver"):
-        if mode == "auto" and word_counts is None:
-            # pin the word-count table across the probe: if the probe
-            # overflows and we fall back to the distributed loop, the
-            # corpus-sized aggregation must not re-run — at 100 TB a
-            # second corpus scan is the whole cost of the fit
-            wc = wc.persist()
-            wc_pinned = wc
-        # the probe-collect doubles as the training table — no
-        # separate counting job is ever launched
-        head = (wc.select("word", "freq")
-                  .limit(max_driver_vocab + 1).collect())
-        if len(head) <= max_driver_vocab:
-            if wc_pinned is not None:
-                wc_pinned.unpersist()
-            return train_bpe_incremental(
-                {r["word"]: int(r["freq"]) for r in head}, num_merges)
-        if mode == "driver":
-            raise ValueError(
-                f"floored vocabulary exceeds max_driver_vocab="
-                f"{max_driver_vocab} rows; raise min_freq (the honest "
-                "guard), raise max_driver_vocab, or pass "
-                "mode='distributed'")
-        # auto: vocabulary genuinely does not fit the driver — fall
-        # back to the all-cluster loop over the PINNED table
-    vocab = wc.select(_sym_repr(F.col("word")).alias("sym"), "freq")
-    vocab = vocab.persist()
-    persisted = [vocab]
-    merges: list[dict] = []
-    since_ckpt = 0
-    try:
-        while len(merges) < num_merges:
-            take = min(merges_per_round, num_merges - len(merges))
-            syms = _sym_array(F.col("sym"))
-            pairs = F.when(
-                F.size(syms) >= 2,
-                F.expr(
-                    "transform(sequence(1, size(__a) - 1), "
-                    "i -> struct(__a[i-1] AS l, __a[i] AS r))"
-                ),
-            ).otherwise(F.array())
-            # over-fetch: shared symbols block candidates aggressively
-            # (on a 26-letter alphabet at most ~13 disjoint pairs exist
-            # at all early on — measured ~8 selected of 136 fetched on
-            # a zipf word corpus), so fetch 16x + slack; the candidate
-            # rows are (sym, sym, long) triples, pennies to collect
-            top = (
-                vocab.withColumn("__a", syms)
-                .select(F.explode(pairs).alias("p"), "freq")
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("freq").cast("bigint").alias("c"))
-                .orderBy(F.col("c").desc(), F.col("l"), F.col("r"))
-                .limit(take if take == 1 else take * 16 + 64)
-                .collect()
-            )
-            if not top:
-                break
-            used: set[str] = set()
-            selected = []
-            floor_c = (top[0]["c"] * float(min_round_count_frac)
-                       if min_round_count_frac > 0.0 else None)
-            for row in top:
-                l, r = row["l"], row["r"]
-                if floor_c is not None and row["c"] < floor_c and selected:
-                    break   # steep count drop: stop batching this round
-                if l in used or r in used:
-                    continue
-                selected.append((l, r, row["c"]))
-                used.update((l, r, l + r))
-                if len(selected) == take:
-                    break
-            # top[0] is always selected: `used` is empty on the first
-            # iteration and the count floor only breaks once selected
-            # is non-empty — so `selected` cannot come back empty here
-            for l, r, c in selected:
-                merges.append({"merge_rank": len(merges) + 1,
-                               "lft": l, "rgt": r, "pair_count": c})
-                vocab = vocab.withColumn(
-                    "sym",
-                    F.replace(
-                        F.col("sym"),
-                        F.lit(_wrap(l) + _wrap(r)),
-                        F.lit(_wrap(l + r)),
-                    ),
-                )
-            since_ckpt += len(selected)
-            if since_ckpt >= checkpoint_every:
-                vocab = vocab.persist()
-                vocab.count()
-                persisted.append(vocab)
-                since_ckpt = 0
-    finally:
-        for p in persisted:
-            p.unpersist()
-        if wc_pinned is not None:
-            wc_pinned.unpersist()
-    return merges
+    rows = wc.select("word", "freq").limit(MAX_DRIVER_VOCAB + 1).collect()
+    if len(rows) > MAX_DRIVER_VOCAB:
+        raise ValueError(
+            f"floored vocabulary exceeds MAX_DRIVER_VOCAB="
+            f"{MAX_DRIVER_VOCAB} rows; raise min_freq")
+    return train_bpe_incremental(
+        {r["word"]: int(r["freq"]) for r in rows}, num_merges)
 
 
 def bpe_segment_word(word: str, ranks: dict) -> list[str]:
@@ -454,8 +263,8 @@ def bpe_segment_word(word: str, ranks: dict) -> list[str]:
     earlier merge).
 
     BIT-EQUAL to one greedy left-to-right non-overlapping pass per
-    merge in rank order (the literal-`replace` rule the distributed
-    fit applies and the q140 oracle replays in SQL), for any
+    merge in rank order (the literal-`replace` rule the q140 oracle
+    replays in SQL), for any
     WELL-FORMED merge list — one where each pair's symbols are base
     characters or outputs of earlier merges, which is what ``bpe_fit``
     always produces.  Proof shape: merging pair k creates new

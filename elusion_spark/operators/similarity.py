@@ -153,10 +153,9 @@ def _classifier_score_arrow_col(vec_col: str, weights: list[float],
     """Wide-head ``sigmoid(w·x + b)`` as one numpy GEMV per Arrow batch
     (arrow_udf).  The r10 boundary discipline applied to the Column
     surface (guide §4.2): the vector column is read as ONE contiguous
-    buffer view (``_arrow_list_matrix``) instead of the pandas path's
-    per-row ndarray boxing — same float64 ``V @ W + b`` / sigmoid
-    arithmetic, bit-identical scores
-    (``test_classifier_score_arrow_parity``)."""
+    buffer view (``_arrow_list_matrix``), no per-row ndarray boxing;
+    float64 ``V @ W + b`` / sigmoid arithmetic, pinned against numpy
+    by ``test_classifier_score_arrow_parity``."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
@@ -174,27 +173,6 @@ def _classifier_score_arrow_col(vec_col: str, weights: list[float],
 
     _score.__annotations__ = {"vs": pa.Array, "return": pa.Array}
     return arrow_udf(_score, "double")(F.col(vec_col))
-
-
-def _classifier_score_pandas_col(vec_col: str, weights: list[float],
-                                 bias: float) -> Column:
-    """The pre-r11 pandas_udf wide head — kept as the parity reference
-    for ``test_classifier_score_arrow_parity``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    W = np.asarray(weights, dtype=np.float64)
-    b = float(bias)
-
-    def _score(vs):
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        if V.size == 0:
-            return pd.Series([], dtype="float64")
-        return pd.Series(1.0 / (1.0 + np.exp(-(V @ W + b))))
-
-    _score.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return pandas_udf(_score, "double")(F.col(vec_col))
 
 
 def l2_normalize_expr(vec_col: str) -> Column:
@@ -249,50 +227,10 @@ def hyperplane_bucket_expr(vec_col: str, dim: int, n_planes: int = 16,
     return out.cast("int")
 
 
-def _norm_buckets_udf(dim: int, n_planes: int, n_tables: int, seed: int):
-    """Vectorized (norm, per-table bucket ids) in ONE numpy pass: the
-    (n_tables·n_planes × dim) plane matrix is closed over and the whole
-    Arrow batch goes through a single GEMM — measured ~4× faster than
-    the equivalent interpreted higher-order-function expression at
-    dim=64, and the gap widens with dim·planes."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.array(
-        [
-            _hyperplanes(dim, n_planes, seed + 7919 * t)
-            for t in range(n_tables)
-        ],
-        dtype=np.float64,
-    ).reshape(n_tables * n_planes, dim)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-
-    def _nb(v):
-        m = np.array(v.tolist(), dtype=np.float64)
-        signs = (m @ planes.T) >= 0  # n × (tables·planes)
-        bks = np.stack(
-            [
-                signs[:, t * n_planes : (t + 1) * n_planes] @ weights
-                for t in range(n_tables)
-            ],
-            axis=1,
-        ).astype(np.int32)
-        return pd.DataFrame(
-            {"norm": np.linalg.norm(m, axis=1), "buckets": list(bks)}
-        )
-
-    # `from __future__ import annotations` stringifies inline hints, which
-    # pandas_udf's type-hint inference can't resolve — set them directly
-    _nb.__annotations__ = {"v": pd.Series, "return": pd.DataFrame}
-    return pandas_udf(_nb, "struct<norm: double, buckets: array<int>>")
-
-
 def _norm_buckets_arrow_fn(dim: int, n_planes: int, n_tables: int,
                            seed: int):
     """Arrow-native (norm, buckets) computation for
-    ``embedding_near_dup_pairs`` — the mapInArrow replacement for the
-    ``_norm_buckets_udf`` pandas path (guide §4.2).
+    ``embedding_near_dup_pairs`` — one mapInArrow pass (guide §4.2).
 
     Reads the Arrow list buffer directly (``ListArray.flatten`` →
     one contiguous float buffer → reshape) instead of paying the
@@ -304,10 +242,9 @@ def _norm_buckets_arrow_fn(dim: int, n_planes: int, n_tables: int,
     is why the function emits ONE row per input row and leaves the
     per-table explode to the JVM — emitting the exploded form here
     would ship every vector ``n_tables``× across the boundary).
-    Per-row arithmetic (float64 GEMM against the same plane matrix,
-    same sign/pack rule, same ``linalg.norm``) is unchanged, so
-    buckets and norms are bit-identical to the pandas_udf path —
-    pinned by ``test_norm_buckets_arrow_parity``.
+    Per-row arithmetic is a float64 GEMM against the plane matrix, the
+    sign/pack rule and ``linalg.norm``; buckets and norms equal numpy
+    on the same inputs (``test_norm_buckets_arrow_parity``).
 
     Input batches must carry exactly (__id, __v); output rows are
     (__id, __v, __norm, __buckets[n_tables])."""
@@ -944,44 +881,16 @@ def ivf_residual_expr(
 
 # ---------------------------------------------------------------- knn join
 
-def _probe_clusters_udf(centroids: list[list[float]], nprobe: int):
-    """pandas_udf: the ``nprobe`` nearest centroid ids per vector
-    (stable argsort — deterministic under distance ties).  Replaced in
-    ``knn_join`` by ``_probe_clusters_arrow_fn`` (r10, guide §4.2);
-    kept as the parity reference for
-    ``test_probe_clusters_arrow_parity``."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
-    n = min(nprobe, len(centroids))
-
-    @pandas_udf("array<int>")
-    def _probe(vs):
-        import pandas as pd
-
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        if V.size == 0:
-            return pd.Series([], dtype=object)
-        # ||v||^2 is constant per row — argmin order unaffected, dropped
-        d2 = c_sq - 2.0 * (V @ C.T)
-        idx = np.argsort(d2, axis=1, kind="stable")[:, :n].astype("int32")
-        return pd.Series(list(idx))
-
-    return _probe
-
-
 def _probe_clusters_arrow_fn(centroids: list[list[float]], nprobe: int):
-    """Arrow-native probe assignment for ``knn_join`` IVF mode — the
-    mapInArrow replacement for ``_probe_clusters_udf`` (guide §4.2,
-    same template as ``_norm_buckets_arrow_fn``): the query vector
+    """Arrow-native probe assignment for ``knn_join`` IVF mode — one
+    mapInArrow pass (guide §4.2, same template as
+    ``_norm_buckets_arrow_fn``): the query vector
     column is read as ONE contiguous buffer view instead of boxing a
     fresh ndarray per row, the (__qid, __qv, __qn) columns pass
     through as the same Arrow arrays, and the function emits ONE row
     per input row (the ``nprobe`` probe ids as a list), leaving the
-    explode to the JVM.  float64 distance / stable-argsort arithmetic
-    is unchanged → probes bit-identical to the pandas path (pinned by
+    explode to the JVM.  The probes are the float64 ``||c||² − 2v·c``
+    stable argsort, equal to numpy on the same inputs (pinned by
     ``test_probe_clusters_arrow_parity``).
 
     Input batches must carry exactly (__qid, __qv, __qn); output rows
@@ -2186,11 +2095,15 @@ def _pq_adc_vectorized(codes_col: str, luts: list[list[float]]) -> Column:
 
     arrow_udf since r11 (guide §4.2): the code column (array<int>, m
     entries per row) is read as ONE contiguous int buffer view
-    (``_arrow_list_matrix`` discipline) instead of the pandas path's
-    ``Series.tolist`` boxing — the ADC scan is THE billion-row shape,
-    and the per-row boxing constant was the python stage at scale.
-    Gather/sum arithmetic unchanged → scores bit-identical to the
-    pandas reference (``test_pq_adc_arrow_parity``)."""
+    (``_arrow_list_matrix`` discipline) with no per-row boxing — the
+    ADC scan is THE billion-row shape.  Scores equal the
+    left-associated float64 sum of the coded LUT entries
+    (``test_pq_adc_arrow_parity``).
+
+    Codes are range-checked like widths: numpy fancy indexing would
+    wrap a negative code to the LUT's tail and silently mis-score the
+    row (the expression path raises on it), and codes can come from
+    outside the program (``pq_read_index`` reads parquet)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -2198,6 +2111,7 @@ def _pq_adc_vectorized(codes_col: str, luts: list[list[float]]) -> Column:
 
     L = [np.asarray(t, dtype=np.float64) for t in luts]
     m = len(luts)
+    ks = np.array([len(t) for t in L])
 
     def _score(cs: "pa.Array") -> "pa.Array":
         n = len(cs)
@@ -2216,6 +2130,13 @@ def _pq_adc_vectorized(codes_col: str, luts: list[list[float]]) -> Column:
                 f"_pq_adc_vectorized: expected {m} codes per row, row "
                 f"{b} has {int(widths[b])}")
         C = cs.flatten().to_numpy(zero_copy_only=False).reshape(n, m)
+        bad = np.flatnonzero(((C < 0) | (C >= ks)).any(axis=1))
+        if bad.size:
+            b = int(bad[0])
+            raise ValueError(
+                f"_pq_adc_vectorized: row {b} has codes "
+                f"{C[b].tolist()} outside [0, k) for LUT sizes "
+                f"{ks.tolist()}")
         out = L[0][C[:, 0]]
         for s in range(1, m):
             out = out + L[s][C[:, s]]
@@ -2223,28 +2144,6 @@ def _pq_adc_vectorized(codes_col: str, luts: list[list[float]]) -> Column:
 
     _score.__annotations__ = {"cs": pa.Array, "return": pa.Array}
     return arrow_udf(_score, "double")(F.col(codes_col))
-
-
-def _pq_adc_pandas(codes_col: str, luts: list[list[float]]) -> Column:
-    """The pre-r11 pandas_udf ADC score — kept as the parity reference
-    for ``test_pq_adc_arrow_parity``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    L = [np.asarray(t, dtype=np.float64) for t in luts]
-
-    def _score(cs):
-        if len(cs) == 0:
-            return pd.Series([], dtype="float64")
-        C = np.asarray(cs.tolist(), dtype=np.int64)
-        out = L[0][C[:, 0]]
-        for s in range(1, len(L)):
-            out = out + L[s][C[:, s]]
-        return pd.Series(out)
-
-    _score.__annotations__ = {"cs": pd.Series, "return": pd.Series}
-    return pandas_udf(_score, "double")(F.col(codes_col))
 
 
 def recall_at_k(

@@ -5400,17 +5400,15 @@ _BPE_ORACLE_HEAD = """
     """,
 )
 def q139(spark, sf):
-    """BPE tokenizer training (bpe.py bpe_fit, default mode='auto' —
-    since round 9 this resolves to the DRIVER path: the corpus
-    collapses to a word-frequency table in its ONE corpus-sized job,
-    the bounded probe-collect doubles as the training table, and the
-    exact incremental-heap Sennrich loop picks each (count DESC, l, r)
-    winner driver-side — tie-rule-identical to the distributed loop,
-    parity-fuzzed).  Merges apply as literal greedy-non-overlapping
-    replaces on the wrapped-symbol strings — semantics shared exactly
-    by Spark's and DuckDB's `replace`, so the oracle unrolls the
-    entire training loop (the q124/q127 unrolled-iteration discipline)
-    and matches bit-for-bit whichever mode ran."""
+    """BPE tokenizer training (bpe.py bpe_fit): the corpus collapses
+    to a word-frequency table in its ONE corpus-sized job, one bounded
+    collect brings that table to the driver, and the exact
+    incremental-heap Sennrich loop picks each (count DESC, l, r)
+    winner there.  The oracle applies merges as literal
+    greedy-non-overlapping replaces on wrapped-symbol strings — the
+    same application rule as the trainer's — and unrolls the entire
+    training loop (the q124/q127 unrolled-iteration discipline), so
+    the two match bit-for-bit."""
     from .operators.bpe import bpe_fit
 
     d = _t(spark, sf, "documents", "d").df.select("text")
@@ -6918,15 +6916,14 @@ def q161(spark, sf):
     pre_tokenizer= + pretokenize_word_counts): the corpus-sized job is
     unchanged (bpe_word_counts); the distinct-word table is then
     transformed VOCAB-SIDE into ▁-marked pieces (one mapInPandas +
-    one agg, both vocabulary-sized) and the same exact trainer runs —
-    here mode='driver' (the production path, 1 bounded collect), whose
-    merges are tie-rule-identical to the distributed loop and to the
+    one agg, both vocabulary-sized) and the same exact driver-side
+    trainer runs after one bounded collect; its merges match the
     oracle's unrolled replay over '▁' || w."""
     from .operators.bpe import bpe_fit
 
     d = _t(spark, sf, "documents", "d").df.select("text")
     merges = bpe_fit(
-        d, "text", num_merges=3, lowercase=True, mode="driver",
+        d, "text", num_merges=3, lowercase=True,
         pre_tokenizer={"type": "Metaspace", "replacement": "▁",
                        "prepend_scheme": "always"})
     return spark.createDataFrame(

@@ -7,10 +7,9 @@ Four capabilities, at toy scale:
    word length, symbol ratio, bullet/ellipsis line shape, alphabetic
    fraction, stopword presence — plus the conjunction verdict.  Keep
    the signals, filter late: threshold sweeps then never re-scan.
-2. BPE training at scale: batched merge rounds (merges_per_round) with
-   the adaptive count-frac guard that keeps near-exact merge ORDER at
-   the steep head of the pair distribution while batching the flat
-   tail (SCALE.md round 7 for the measured trade).
+2. BPE training: one corpus-sized word-count job shared with the
+   unigram fit below, then the exact Sennrich merge loop over the
+   collected vocabulary, driver-side.
 3. Unigram-LM (SentencePiece-family) training + Viterbi encode:
    EM over distinct words, integer micro-log scores so the
    segmentation argmax is engine-exact and externally replayable.
@@ -49,11 +48,10 @@ scored.select("doc_id", "n_words", F.round("mean_word_len", 2),
 print("pass rate:",
       scored.filter("gopher_pass").count(), "/", scored.count())
 
-# -- 2. BPE with batched merges + the adaptive order guard -------------
+# -- 2. BPE over the shared word-count table ---------------------------
 wc = bpe_word_counts(docs, "text").persist()
-merges = bpe_fit(None, num_merges=24, word_counts=wc,
-                 merges_per_round=8, min_round_count_frac=0.5)
-print("\n== BPE (batched rounds, count-frac guard) ==")
+merges = bpe_fit(None, num_merges=24, word_counts=wc)
+print("\n== BPE (exact merges over the shared word counts) ==")
 print("first merges:", [(m["lft"], m["rgt"]) for m in merges[:6]])
 
 # -- 3. Unigram-LM tokenizer -------------------------------------------

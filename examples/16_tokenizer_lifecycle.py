@@ -2,14 +2,12 @@
 
 One path, end to end, the way a real pretraining data team runs it:
 
-1. TRAIN — ``bpe_fit(mode='driver')``: the corpus collapses to a
-   word-frequency table in its one corpus-sized job; the
-   ``min_freq``-floored vocabulary is collected (bounded by
-   ``max_driver_vocab``) and the exact incremental-index Sennrich
-   loop learns a production-sized merge list in seconds — 2 Spark
-   jobs total, where the distributed loop would schedule one
-   vocab-sized aggregation per round (SCALE.md round 9: 30k merges,
-   7.6 s end-to-end vs ~15,000 extrapolated jobs).
+1. TRAIN — ``bpe_fit``: the corpus collapses to a word-frequency
+   table in its one corpus-sized job; the ``min_freq``-floored
+   vocabulary is collected once (bounded by ``MAX_DRIVER_VOCAB``) and
+   the exact incremental-index Sennrich loop learns a
+   production-sized merge list in seconds — 2 Spark jobs total at
+   any merge count (SCALE.md round 9: 30k merges, 7.6 s end-to-end).
 2. EXPORT — ``export_hf_tokenizer_json`` with the corpus ``alphabet``
    seeded (so characters that never joined a merge stay in-vocab) —
    a file ``tokenizers.Tokenizer.from_file`` consumes directly.
@@ -47,10 +45,10 @@ sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 spark = get_spark("ex16")
 docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-# -- 1. train: driver-mode fit over a shared word-count table ----------
+# -- 1. train: one fit over a shared word-count table ------------------
 wc = bpe_word_counts(docs, "text").persist()
-merges = bpe_fit(None, num_merges=200, word_counts=wc, mode="driver")
-print("== 1. bpe_fit(mode='driver') ==")
+merges = bpe_fit(None, num_merges=200, word_counts=wc)
+print("== 1. bpe_fit ==")
 print(f"learned {len(merges)} merges; first:",
       [(m["lft"], m["rgt"]) for m in merges[:5]])
 

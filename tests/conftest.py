@@ -51,7 +51,6 @@ SLOW_TESTS = {
     "test_oracle_parity[q53_corpus_boilerplate]",       # 74.4
     "test_oracle_parity[q124_train_quality_classifier]",  # 53.9
     # operator end-to-ends / adversarial-corpus studies
-    "test_bpe_count_frac_guard_tracks_exact_order_closer",  # 88.6
     "test_fuzzy_join_segment_scheme_matches_length_scheme",  # 46.7
     "test_write_to_json_streams_without_collect",       # 41.3
     "test_ivf_fit_numpy_speed",                         # 29.7

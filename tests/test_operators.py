@@ -81,70 +81,46 @@ def test_embedding_near_dup(spark):
 
 
 def test_norm_buckets_arrow_parity(spark):
-    """The mapInArrow bucket/norm path must be BIT-identical to the
-    pandas_udf + posexplode form it replaced (r10: the rewrite removes
-    the per-batch Series.tolist conversion and the Generate node; the
-    float64 GEMM math is unchanged).  Fuzz over float32 vectors, odd
-    row counts, several partitions and a small Arrow batch size so
-    batch boundaries are exercised."""
-    import random
-
+    """The mapInArrow bucket/norm path equals numpy on the same inputs:
+    the norm is ``linalg.norm`` and each table's bucket packs the sign
+    bits of the float64 GEMM against that table's hyperplanes.  Fuzz
+    over float32 vectors (read back through Spark, so the storage
+    rounding is included), odd row counts, several partitions and a
+    small Arrow batch size so batch boundaries are exercised."""
+    import numpy as np
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from elusion_spark.operators.similarity import (
-        _norm_buckets_arrow_fn, _norm_buckets_udf,
+        _hyperplanes, _norm_buckets_arrow_fn,
     )
 
     dim, n_planes, n_tables, seed = 16, 8, 3, 99
-    rng = random.Random(seed)
-    rows = [(i, [rng.uniform(-5, 5) for _ in range(dim)])
-            for i in range(257)]
-    schema = T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
+    _, df = _r11_vec_df(spark, dim=dim, seed=seed)
+    src = df.select(F.col("vec_id").alias("__id"),
+                    F.col("embedding").alias("__v"))
+    out_schema = T.StructType([
+        src.schema["__id"], src.schema["__v"],
+        T.StructField("__norm", T.DoubleType()),
+        T.StructField("__buckets", T.ArrayType(T.IntegerType())),
     ])
-    df = spark.createDataFrame(rows, schema).repartition(5)
-    old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-    try:
-        nb = _norm_buckets_udf(dim, n_planes, n_tables, seed)
-        old = (
-            df.select(F.col("vec_id").alias("__id"),
-                      nb(F.col("embedding")).alias("__nb"))
-            .select("__id", F.col("__nb.norm").alias("__norm"),
-                    F.posexplode("__nb.buckets").alias("__t", "__bucket"))
-            .collect()
-        )
-        src = df.select(F.col("vec_id").alias("__id"),
-                        F.col("embedding").alias("__v"))
-        out_schema = T.StructType([
-            src.schema["__id"], src.schema["__v"],
-            T.StructField("__norm", T.DoubleType()),
-            T.StructField("__buckets", T.ArrayType(T.IntegerType())),
-        ])
-        new = (
-            src.mapInArrow(
-                _norm_buckets_arrow_fn(dim, n_planes, n_tables, seed),
-                out_schema)
-            .select("__id", "__v", "__norm",
-                    F.posexplode("__buckets").alias("__t", "__bucket"))
-            .collect()
-        )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                       old_batch)
-    key = lambda r: (r["__id"], r["__t"])  # noqa: E731
-    old_m = {key(r): (r["__norm"], r["__bucket"]) for r in old}
-    new_m = {key(r): (r["__norm"], r["__bucket"]) for r in new}
-    assert len(old) == len(new) == 257 * n_tables
-    assert old_m == new_m  # exact float equality — same bits
-    # the arrow rows also carry the vector through; spot-check one
-    vec_by_id = {r[0]: r[1] for r in rows}
-    some = new[:5]
-    for r in some:
-        assert [round(float(x), 5) for x in r["__v"]] == [
-            round(float(x), 5) for x in vec_by_id[r["__id"]]]
+    with _small_batches(spark):
+        got = {r["__id"]: (r["__norm"], list(r["__buckets"]), r["__v"])
+               for r in src.mapInArrow(
+                   _norm_buckets_arrow_fn(dim, n_planes, n_tables, seed),
+                   out_schema).collect()}
+    ids, V = _r11_vec_matrix(df)
+    bits = 1 << np.arange(n_planes)
+    want_buckets = np.stack(
+        [(V @ np.asarray(_hyperplanes(dim, n_planes, seed + 7919 * t)).T
+          >= 0) @ bits for t in range(n_tables)], axis=1)
+    want_norm = np.linalg.norm(V, axis=1)
+    assert len(got) == 257
+    for j, i in enumerate(ids):
+        norm, buckets, vec = got[i]
+        assert norm == want_norm[j], i  # exact float equality
+        assert buckets == want_buckets[j].tolist(), i
+        assert np.array_equal(np.asarray(vec, dtype=np.float64), V[j])
 
 
 def test_ivf_matches_brute_force(spark):
@@ -3682,65 +3658,31 @@ def test_bpe_fit_single_char_words_and_exhaustion(spark):
     assert len(got) == 1  # only (a,b) is ever mergeable
 
 
-@pytest.mark.parametrize("seed", range(4))
-def test_bpe_fit_driver_equals_distributed(spark, seed):
-    """VERDICT r8 ask #1 parity pin: mode='driver' (collected vocab +
-    incremental-index Sennrich) produces the BIT-IDENTICAL merge list —
-    ranks, pairs AND counts — to the exact distributed loop, on
-    tie-heavy small-alphabet corpora where any tie-rule divergence
-    would surface immediately."""
-    import random
-
-    from elusion_spark.operators.bpe import bpe_fit
-
-    rng = random.Random(400 + seed)
-    alphabet = "abc" if seed % 2 == 0 else "abcd"
-    texts = [
-        " ".join(
-            "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 8)))
-            for _ in range(rng.randint(5, 20)))
-        for _ in range(rng.randint(4, 12))
-    ]
-    n_merges = rng.randint(3, 8)
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    drv = bpe_fit(df, "text", num_merges=n_merges, mode="driver")
-    dst = bpe_fit(df, "text", num_merges=n_merges, mode="distributed")
-    assert drv == dst == _ref_bpe(texts, n_merges), (seed, drv, dst)
-
-
-def test_bpe_fit_mode_guards_and_auto_fallback(spark):
-    """Mode contract: driver+batching knobs raise (batching is a
-    distributed-loop approximation); explicit driver raises when the
-    floored vocab overflows max_driver_vocab; auto falls back to the
-    distributed loop on the same overflow and still learns the exact
-    merges; min_freq floors the vocabulary in both modes."""
+def test_bpe_fit_mode_guards_and_auto_fallback(spark, monkeypatch):
+    """Vocabulary cap and floor: a floored vocabulary larger than
+    MAX_DRIVER_VOCAB raises and names min_freq as the fix; min_freq
+    drops words below the floor from the pair counts, exactly as the
+    floored python replay does."""
+    from elusion_spark.operators import bpe
     from elusion_spark.operators.bpe import bpe_fit
 
     texts = ["ab ab ab cd cd ef", "ab cd cd zq"]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    with pytest.raises(ValueError, match="distributed"):
-        bpe_fit(df, "text", num_merges=2, mode="driver",
-                merges_per_round=4)
-    with pytest.raises(ValueError, match="max_driver_vocab"):
-        bpe_fit(df, "text", num_merges=2, mode="driver",
-                max_driver_vocab=2)
-    exact = bpe_fit(df, "text", num_merges=3, mode="distributed")
-    auto_fb = bpe_fit(df, "text", num_merges=3, max_driver_vocab=2)
-    assert auto_fb == exact == _ref_bpe(texts, 3)
-    # min_freq floor: 'zq' (freq 1) contributes no pairs at floor 2 —
-    # both modes agree with the floored python replay
-    floored_texts_replay = _ref_bpe(
+    monkeypatch.setattr(bpe, "MAX_DRIVER_VOCAB", 2)
+    with pytest.raises(ValueError, match="MAX_DRIVER_VOCAB=2.*min_freq"):
+        bpe_fit(df, "text", num_merges=2)
+    # ab/cd survive the floor: 2 rows, exactly at the cap
+    assert bpe_fit(df, "text", num_merges=3, min_freq=2) == _ref_bpe(
         ["ab ab ab cd cd", "ab cd cd"], 3)  # zq/ef dropped (freq 1)
-    for mode in ("driver", "distributed"):
-        got = bpe_fit(df, "text", num_merges=3, mode=mode, min_freq=2)
-        assert got == floored_texts_replay, (mode, got)
+    monkeypatch.undo()
+    assert bpe_fit(df, "text", num_merges=3) == _ref_bpe(texts, 3)
 
 
 def test_bpe_fit_driver_job_count(spark):
-    """The point of mode='driver': given a persisted word_counts table
-    the whole fit is ONE Spark job (the probe collect that doubles as
-    the training table), vs one vocab aggregation per merge in the
-    distributed loop."""
+    """Given a persisted word_counts table the fit's Spark work is one
+    bounded collect of the training table, so it launches the same
+    number of jobs at 8 merges as at 64: the merge count only costs
+    driver CPU."""
     from tests.test_scale import _jobs_for
 
     from elusion_spark.operators.bpe import bpe_fit, bpe_word_counts
@@ -3750,34 +3692,36 @@ def test_bpe_fit_driver_job_count(spark):
     wc = bpe_word_counts(df, "text").persist()
     wc.count()
     box = {}
-    n_drv = _jobs_for(spark, "bpe_driver_jobs", lambda: box.update(
-        m=bpe_fit(None, num_merges=8, word_counts=wc, mode="driver")))
-    n_dst = _jobs_for(spark, "bpe_dist_jobs", lambda: box.update(
-        d=bpe_fit(None, num_merges=8, word_counts=wc,
-                  mode="distributed")))
+    n8 = _jobs_for(spark, "bpe_fit_8_jobs", lambda: box.update(
+        m8=bpe_fit(None, num_merges=8, word_counts=wc)))
+    n64 = _jobs_for(spark, "bpe_fit_64_jobs", lambda: box.update(
+        m64=bpe_fit(None, num_merges=64, word_counts=wc)))
     wc.unpersist()
-    assert box["m"] == box["d"]
+    assert box["m64"][:8] == box["m8"]
+    assert len(box["m64"]) > 8  # the 64-merge fit really merged more
     # CollectLimit executes incrementally (1 partition, then scale-up
-    # by spark.sql.limit.scaleUpFactor) so the single probe can span
-    # a few jobs — the pin is O(1) in num_merges, not literally 1
-    assert n_drv <= 4, n_drv
-    assert n_dst >= 8, n_dst
-    assert n_drv < n_dst - 3, (n_drv, n_dst)
+    # by spark.sql.limit.scaleUpFactor), so the one collect can span a
+    # few jobs; the pin is that the count does not grow with merges
+    assert 1 <= n8 == n64 <= 4, (n8, n64)
 
 
-@pytest.mark.parametrize("seed", range(8))
+@pytest.mark.parametrize("seed", [*range(8), *range(400, 404)])
 def test_bpe_fuzz_vs_python_reference(spark, seed):
-    """8-seed fuzz: random small-alphabet corpora (so merges collide
+    """12-seed fuzz: random small-alphabet corpora (so merges collide
     and ties actually occur, including overlapping aaa-style pairs and
     multi-round merged-symbol pairs), full fit + encode vs the pure
-    python Sennrich replay — merges, token streams, and counts all
-    bit-equal."""
+    python Sennrich replay — merges (ranks, pairs AND counts), token
+    streams, and counts all bit-equal, so any tie-rule divergence
+    surfaces immediately.  Seeds 400-403 are the tie-heavy corpora:
+    3-4 letters and 3-8 merges."""
     import random
 
     from elusion_spark.operators.bpe import bpe_encode, bpe_fit
 
     rng = random.Random(seed)
-    alphabet = "abc" if seed % 2 == 0 else "ab"
+    tie_heavy = seed >= 400
+    alphabet = ("abc" if seed % 2 == 0
+                else "abcd" if tie_heavy else "ab")
     texts = [
         " ".join(
             "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 8)))
@@ -3785,7 +3729,7 @@ def test_bpe_fuzz_vs_python_reference(spark, seed):
         )
         for _ in range(rng.randint(4, 12))
     ]
-    n_merges = rng.randint(1, 5)
+    n_merges = rng.randint(3, 8) if tie_heavy else rng.randint(1, 5)
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = bpe_fit(df, "text", num_merges=n_merges)
     exp = _ref_bpe(texts, n_merges)
@@ -3800,149 +3744,6 @@ def test_bpe_fuzz_vs_python_reference(spark, seed):
         etoks = _ref_bpe_encode(t, exp)
         assert enc[i][0] == etoks, (seed, i, enc[i][0], etoks)
         assert enc[i][1] == len(etoks)
-
-
-def _ref_bpe_batched(texts, num_merges, per_round, lowercase=True):
-    """Pure-python replay of the BATCHED merge rule (VERDICT r6 ask
-    #5): per counting pass, greedy top-N non-overlapping pairs by
-    (count DESC, l, r), `used` covering each taken pair's l, r and
-    merged symbol; apply all N before recounting."""
-    import collections
-    wc = collections.Counter()
-    for t in texts:
-        for w in t.split():
-            wc[w.lower() if lowercase else w] += 1
-    vocab = collections.Counter()
-    for w, f in wc.items():
-        vocab[tuple(w)] += f
-    merges = []
-
-    def apply(vocab, l, r):
-        nv = collections.Counter()
-        for syms, f in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if (i < len(syms) - 1 and syms[i] == l
-                        and syms[i + 1] == r):
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            nv[tuple(out)] += f
-        return nv
-
-    while len(merges) < num_merges:
-        take = min(per_round, num_merges - len(merges))
-        pc = collections.Counter()
-        for syms, f in vocab.items():
-            for i in range(len(syms) - 1):
-                pc[(syms[i], syms[i + 1])] += f
-        if not pc:
-            break
-        ranked = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        if take > 1:
-            ranked = ranked[:take * 16 + 64]
-        used, selected = set(), []
-        for (l, r), c in ranked:
-            if l in used or r in used:
-                continue
-            selected.append((l, r, c))
-            used.update((l, r, l + r))
-            if len(selected) == take:
-                break
-        if not selected:
-            (l, r), c = ranked[0]
-            selected = [(l, r, c)]
-        for l, r, c in selected:
-            merges.append({"merge_rank": len(merges) + 1, "lft": l,
-                           "rgt": r, "pair_count": c})
-            vocab = apply(vocab, l, r)
-    return merges
-
-
-@pytest.mark.parametrize("seed,per_round", [(0, 2), (1, 3), (2, 4), (3, 2)])
-def test_bpe_batched_matches_batched_replay(spark, seed, per_round):
-    """merges_per_round=N replays the documented batched rule exactly
-    (pre-round counts, greedy non-overlap, same tiebreak) — the
-    divergence from strict Sennrich is a DEFINED approximation, not
-    engine noise."""
-    import random
-
-    from elusion_spark.operators.bpe import bpe_fit
-
-    rng = random.Random(100 + seed)
-    alphabet = "abcd"
-    texts = [
-        " ".join(
-            "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 8)))
-            for _ in range(rng.randint(5, 20))
-        )
-        for _ in range(rng.randint(4, 12))
-    ]
-    n_merges = rng.randint(3, 7)
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = bpe_fit(df, "text", num_merges=n_merges,
-                  merges_per_round=per_round)
-    exp = _ref_bpe_batched(texts, n_merges, per_round)
-    assert got == exp, (seed, per_round, got, exp)
-
-
-def test_bpe_batched_equals_exact_on_disjoint_top_pairs(spark):
-    """When the top pairs are symbol-disjoint with well-separated
-    counts (the natural-language common case), the batched path
-    produces the IDENTICAL merge list to exact Sennrich — the
-    approximation only bites on interacting pairs."""
-    from elusion_spark.operators.bpe import bpe_fit
-
-    # four disjoint two-letter words with strictly separated counts
-    corpus = ["ab " * 50 + "cd " * 40 + "ef " * 30 + "gh " * 20]
-    df = spark.createDataFrame([(t,) for t in corpus], "text string")
-    exact = bpe_fit(df, "text", num_merges=4)
-    batched = bpe_fit(df, "text", num_merges=4, merges_per_round=4)
-    assert batched == exact == _ref_bpe(corpus, 4)
-
-
-def test_bpe_batched_round_pairs_are_non_overlapping(spark):
-    """Within one round no two selected pairs share a symbol — the
-    invariant that makes batched application order-independent."""
-    from elusion_spark.operators.bpe import bpe_fit
-
-    corpus = ["aa ab ba bb ab aa ba " * 10]
-    df = spark.createDataFrame([(t,) for t in corpus], "text string")
-    merges = bpe_fit(df, "text", num_merges=2, merges_per_round=2)
-    # one round produced both merges: symbols must be disjoint
-    syms0 = {merges[0]["lft"], merges[0]["rgt"]}
-    syms1 = {merges[1]["lft"], merges[1]["rgt"]}
-    assert not (syms0 & syms1), merges
-
-
-def test_bpe_batched_job_count_scales_down(spark):
-    """The point of batching: counting passes drop N-fold.  Pinned as
-    a job-count comparison — 8 merges at merges_per_round=4 must
-    launch strictly fewer jobs than at merges_per_round=1 (2 counting
-    aggs vs 8)."""
-    from tests.test_scale import _jobs_for
-
-    from elusion_spark.operators.bpe import bpe_fit
-
-    texts = ["abcdefgh " * 5 + "ababab cdcdcd efefef ghghgh " * 3] * 4
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    wc_cache = None
-
-    def run(per_round, tag):
-        from elusion_spark.operators.bpe import bpe_word_counts
-        wc = bpe_word_counts(df, "text").persist()
-        wc.count()
-        n = _jobs_for(spark, tag, lambda: bpe_fit(
-            df, "text", num_merges=8, merges_per_round=per_round,
-            word_counts=wc, mode="distributed"))
-        wc.unpersist()
-        return n
-
-    exact_jobs = run(1, "bpe_exact_jobs")
-    batched_jobs = run(4, "bpe_batched_jobs")
-    assert batched_jobs <= exact_jobs - 4, (exact_jobs, batched_jobs)
 
 
 # -----------------------------------------------------------------------
@@ -5674,72 +5475,6 @@ def test_unigram_lm_encode_roundtrip_and_scale_shape(spark):
     assert out[2] == []
 
 
-def test_bpe_count_frac_guard_tracks_exact_order_closer(spark):
-    """min_round_count_frac: on a steep-count vocabulary, guarded
-    batching (frac=0.5) stays strictly closer to exact Sennrich order
-    than unguarded batching at the same merges_per_round, while still
-    launching fewer counting jobs than exact.  Exact path (frac
-    irrelevant at mpr=1) is unchanged."""
-    import numpy as np
-
-    from elusion_spark.operators.bpe import bpe_fit
-    from tests.test_scale import _jobs_for
-
-    # natural-language letter statistics + Zipf frequencies: the shape
-    # the guard is built for (a 9-letter alphabet at a 24-merge budget
-    # is chain-dominated and the guard is NOT reliably better there —
-    # measured; the contract is the realistic-vocabulary regime)
-    rng = np.random.default_rng(3)
-    letters = np.array(list("etaoinshrdlcumwfgypbvkjxqz"))
-    lw = np.array([12, 9, 8, 7.5, 7, 6.7, 6.3, 6, 6, 4.3, 4, 2.8, 2.8,
-                   2.4, 2.4, 2.2, 2, 2, 1.9, 1.5, 1, 0.8, 0.2, 0.2,
-                   0.1, 0.1])
-    lw = lw / lw.sum()
-    words, seen = [], set()
-    while len(words) < 2000:
-        w = "".join(rng.choice(letters, size=int(rng.integers(3, 12)),
-                               p=lw))
-        if w not in seen:
-            seen.add(w)
-            words.append(w)
-    rows = [(w, int(max(1, (1.0 / (i + 1)) ** 1.1 * 1_000_000)))
-            for i, w in enumerate(words)]
-    wc = spark.createDataFrame(rows, "word string, freq bigint").persist()
-    wc.count()
-
-    def seq(mpr, frac, tag):
-        box = {}
-
-        def run():
-            box["m"] = bpe_fit(
-                None, num_merges=48, word_counts=wc,
-                merges_per_round=mpr, min_round_count_frac=frac,
-                mode="distributed")
-
-        jobs = _jobs_for(spark, tag, run)
-        return [(x["lft"], x["rgt"]) for x in box["m"]], jobs
-
-    exact, exact_jobs = seq(1, 0.0, "bpeg_exact")
-    loose, loose_jobs = seq(8, 0.0, "bpeg_loose")
-    tight, tight_jobs = seq(8, 0.5, "bpeg_tight")
-
-    def overlap(a):
-        return len(set(a) & set(exact))
-
-    assert overlap(tight) > overlap(loose), (
-        overlap(tight), overlap(loose))
-    assert loose_jobs < tight_jobs < exact_jobs, (
-        loose_jobs, tight_jobs, exact_jobs)
-    # guard bounds: every accepted non-leader pair's pre-round count
-    # was >= half its round leader's — spot-check via monotone counts
-    # inside rounds is implicit; the public contract is the overlap.
-    wc.unpersist()
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        bpe_fit(None, num_merges=2, word_counts=wc,
-                min_round_count_frac=1.5)
-
-
 def test_unigram_and_pca_model_persistence(tmp_path):
     """JSON round-trip for the two driver-sized model types; wrong
     format fails loudly."""
@@ -6030,56 +5765,43 @@ def test_semdedup_pairs_arrow_parity(spark):
 
 
 def test_probe_clusters_arrow_parity(spark):
-    """The mapInArrow probe stage of ``knn_join`` IVF mode must be
-    BIT-identical to the pandas_udf + explode form it replaced (r10:
-    same float64 distance + stable argsort, only the boundary
-    conversion removed).  Fuzz over float32 vectors, odd row counts,
+    """The mapInArrow probe stage of ``knn_join`` IVF mode equals numpy
+    on the same inputs: the ``nprobe`` first entries of a stable
+    argsort of ``||c||² − 2v·c``, nearest first, with the query norm
+    passed through.  Fuzz over float32 vectors, odd row counts,
     several partitions, small Arrow batches, and a nprobe that
     truncates the centroid list."""
     import random
 
+    import numpy as np
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from elusion_spark.operators.similarity import (
-        _probe_clusters_arrow_fn, _probe_clusters_udf, norm_expr,
+        _probe_clusters_arrow_fn, norm_expr,
     )
 
-    dim, n, nlist, nprobe, seed = 16, 171, 7, 3, 4242
+    dim, nlist, nprobe, seed = 16, 7, 3, 4242
     rng = random.Random(seed)
     cents = [[rng.uniform(-2, 2) for _ in range(dim)]
              for _ in range(nlist)]
-    rows = [(i, [rng.uniform(-2, 2) for _ in range(dim)])
-            for i in range(n)]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>").repartition(5)
+    _, df = _r11_vec_df(spark, n=171, dim=dim, seed=seed + 1)
     qn = df.select(F.col("vec_id").alias("__qid"),
                    F.col("embedding").alias("__qv"),
                    norm_expr("embedding").alias("__qn"))
-    old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-    try:
-        probe = _probe_clusters_udf(cents, nprobe)
-        old = (qn.withColumn("__key", F.explode(probe(F.col("__qv"))))
-               .select("__qid", "__qn", "__key").collect())
-        schema = T.StructType(list(qn.schema.fields) + [
-            T.StructField("__probes", T.ArrayType(T.IntegerType()))])
-        new = (qn.mapInArrow(_probe_clusters_arrow_fn(cents, nprobe),
-                             schema)
-               .select("__qid", "__qn", F.explode("__probes").alias("__key"))
-               .collect())
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                       old_batch)
-    assert len(old) == len(new) == n * nprobe
-    # probe lists are ordered (nearest first) — compare in order
-    old_m = {}
-    for r in old:
-        old_m.setdefault(r["__qid"], []).append((r["__key"], r["__qn"]))
-    new_m = {}
-    for r in new:
-        new_m.setdefault(r["__qid"], []).append((r["__key"], r["__qn"]))
-    assert old_m == new_m  # exact equality — same ids, same order, same bits
+    schema = T.StructType(list(qn.schema.fields) + [
+        T.StructField("__probes", T.ArrayType(T.IntegerType()))])
+    with _small_batches(spark):
+        got = {r["__qid"]: (list(r["__probes"]), r["__qn"])
+               for r in qn.mapInArrow(
+                   _probe_clusters_arrow_fn(cents, nprobe), schema)
+               .collect()}
+        norms = dict(qn.select("__qid", "__qn").collect())
+    ids, V = _r11_vec_matrix(df)
+    C = np.asarray(cents)
+    want = np.argsort((C * C).sum(axis=1) - 2.0 * (V @ C.T), axis=1,
+                      kind="stable")[:, :nprobe]
+    assert got == {i: (w.tolist(), norms[i]) for i, w in zip(ids, want)}
 
 
 # ---------------------------------------------------------------------
@@ -6088,8 +5810,7 @@ def test_probe_clusters_arrow_parity(spark):
 # dim 768) — rewritten from pandas_udf to arrow_udf (zero-copy
 # list-buffer read, no per-row boxing).  Each test fuzzes float32
 # vectors at the REAL cutover shape, several partitions, small Arrow
-# batches, and pins BIT-exact equality against the retained pandas
-# reference.
+# batches, and pins the result against numpy on the same inputs.
 # ---------------------------------------------------------------------
 
 def _r11_vec_df(spark, n=257, dim=768, seed=1101, parts=5):
@@ -6173,29 +5894,29 @@ def test_min_sq_dist_arrow_parity(spark):
 
 def test_classifier_score_arrow_parity(spark):
     """Wide-head classifier_score (dim=768 > the 512 expression
-    cutover): the arrow_udf head must produce BIT-identical sigmoid
-    scores to the pandas reference, and classifier_score must route to
-    it at this dim (plan shows one python stage, no shuffle)."""
-    import random
+    cutover): the arrow_udf head equals numpy's float64
+    ``1 / (1 + exp(-(V @ W + b)))`` on the same inputs (to GEMV
+    rounding: Arrow batch shapes may change BLAS blocking), and
+    classifier_score routes to it at this dim."""
+    import numpy as np
 
     from elusion_spark.operators.similarity import (
-        _classifier_score_arrow_col, _classifier_score_pandas_col,
-        classifier_score,
+        _classifier_score_arrow_col, classifier_score,
     )
 
     rng, df = _r11_vec_df(spark, seed=1103)
     W = [rng.uniform(-1, 1) for _ in range(768)]
     with _small_batches(spark):
-        new = df.select("vec_id",
-                        _classifier_score_arrow_col("embedding", W, 0.25)
-                        .alias("s")).collect()
-        old = df.select("vec_id",
-                        _classifier_score_pandas_col("embedding", W, 0.25)
-                        .alias("s")).collect()
-        routed = classifier_score(df, "embedding", W, bias=0.25).select(
-            "vec_id", "score").collect()
-    assert sorted(map(tuple, new)) == sorted(map(tuple, old))
-    assert sorted(map(tuple, routed)) == sorted(map(tuple, new))
+        got = dict(df.select("vec_id",
+                             _classifier_score_arrow_col("embedding", W,
+                                                         0.25)
+                             .alias("s")).collect())
+        routed = dict(classifier_score(df, "embedding", W, bias=0.25)
+                      .select("vec_id", "score").collect())
+    ids, V = _r11_vec_matrix(df)
+    want = 1.0 / (1.0 + np.exp(-(V @ np.asarray(W) + 0.25)))
+    assert np.allclose([got[i] for i in ids], want, rtol=1e-12, atol=0)
+    assert routed == got
 
 
 def test_pq_assign_arrow_parity(spark):
@@ -6232,15 +5953,11 @@ def test_pq_assign_arrow_parity(spark):
 
 def test_pq_adc_arrow_parity(spark):
     """Large-codebook ADC scan (m=8, k=256 — m·k past the 1024 literal
-    cutover): arrow_udf scores bit-identical to the pandas reference
-    (same left-associated float64 gather+add chain)."""
+    cutover): arrow_udf scores equal, bit for bit, the left-associated
+    float64 sum of each row's coded LUT entries."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from elusion_spark.operators.similarity import (
-        _pq_adc_pandas, _pq_adc_vectorized,
-    )
+    from elusion_spark.operators.similarity import _pq_adc_vectorized
 
     rng = random.Random(1105)
     m, k = 8, 256
@@ -6249,13 +5966,34 @@ def test_pq_adc_arrow_parity(spark):
         rows, "vec_id long, codes array<int>").repartition(5)
     luts = [[rng.uniform(0.0, 4.0) for _ in range(k)] for _ in range(m)]
     with _small_batches(spark):
-        new = df.select("vec_id",
-                        _pq_adc_vectorized("codes", luts).alias("adc")
-                        ).collect()
-        old = df.select("vec_id",
-                        _pq_adc_pandas("codes", luts).alias("adc")
-                        ).collect()
-    assert sorted(map(tuple, new)) == sorted(map(tuple, old))
+        got = dict(df.select("vec_id",
+                             _pq_adc_vectorized("codes", luts).alias("adc")
+                             ).collect())
+    want = {}
+    for i, codes in rows:
+        acc = luts[0][codes[0]]
+        for s in range(1, m):
+            acc += luts[s][codes[s]]
+        want[i] = acc
+    assert got == want
+
+
+@pytest.mark.parametrize("bad_code", [-1, 3])
+def test_pq_adc_rejects_out_of_range_codes(spark, bad_code):
+    """A code outside [0, k) must fail loudly, naming the row: numpy
+    fancy indexing would wrap -1 to the last LUT entry (a silently
+    wrong score), and k would surface only as a bare IndexError."""
+    from pyspark.errors import PythonException
+
+    from elusion_spark.operators.similarity import _pq_adc_vectorized
+
+    luts = [[1.0, 2.0, 31.0], [0.0, 10.0, 20.0]]
+    df = spark.createDataFrame(
+        [(0, [1, 2]), (1, [0, bad_code])],
+        "vec_id long, codes array<int>").coalesce(1)
+    with pytest.raises(PythonException, match=r"row 1 has codes .*"
+                       r"outside \[0, k\)"):
+        df.select(_pq_adc_vectorized("codes", luts)).collect()
 
 
 def test_arrow_list_matrix_guards(spark):

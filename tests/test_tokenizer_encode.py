@@ -667,8 +667,7 @@ def test_hf_bytelevel_roundtrip_through_tokenizers_lib(spark, tmp_path):
 def test_bpe_fit_pretokenized_metaspace(spark):
     """bpe_fit(pre_tokenizer=Metaspace) == exact Sennrich over the
     ▁-marked vocabulary — verified by replaying the python reference
-    on texts whose words are ▁-prefixed by hand; driver and
-    distributed modes agree."""
+    on texts whose words are ▁-prefixed by hand."""
     from tests.test_operators import _ref_bpe
 
     from elusion_spark.operators.bpe import bpe_fit
@@ -679,11 +678,8 @@ def test_bpe_fit_pretokenized_metaspace(spark):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     spec = {"type": "Metaspace", "replacement": "▁",
             "prepend_scheme": "always"}
-    drv = bpe_fit(df, "text", num_merges=6, mode="driver",
-                  pre_tokenizer=spec)
-    dst = bpe_fit(df, "text", num_merges=6, mode="distributed",
-                  pre_tokenizer=spec)
-    assert drv == dst == _ref_bpe(marked, 6, lowercase=False)
+    got = bpe_fit(df, "text", num_merges=6, pre_tokenizer=spec)
+    assert got == _ref_bpe(marked, 6, lowercase=False)
 
 
 def test_bpe_fit_pretokenized_bytelevel(spark):

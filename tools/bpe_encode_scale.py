@@ -38,7 +38,7 @@ MERGE_COUNTS = [64, 512, 2048, 5000, 30000]
 # promoted to the operator surface in round 9 (VERDICT r8 ask #1):
 # the exact incremental-index Sennrich trainer now lives in
 # operators/bpe.py as `train_bpe_incremental` and powers
-# `bpe_fit(mode='driver'|'auto')` — this tool measures through the
+# `bpe_fit` — this tool measures through the
 # same code path users get
 from elusion_spark.operators.bpe import train_bpe_incremental  # noqa: E402
 

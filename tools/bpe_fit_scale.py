@@ -1,24 +1,15 @@
 #!/usr/bin/env python
-"""BPE FIT scale measurement (VERDICT r8 ask #1): production-vocab
-training wall through the promoted ``bpe_fit(mode='driver')`` path vs
-the distributed loop's job economics.
+"""BPE FIT scale measurement: the production-vocab training wall of
+``bpe_fit`` and its Spark job count.
 
 What is measured, on the 20k-word Zipf corpus (the realistic
 distinct-word regime from tools/bpe_encode_scale.py, as a Spark
 DataFrame — 5k docs x ~100 words):
 
-- ``bpe_fit(mode='driver', num_merges=30000)`` end-to-end wall, split
-  into (a) the one corpus-sized word-count job + the bounded
-  probe-collect and (b) the driver-side incremental-index merge loop;
-  plus the total Spark JOB COUNT (the whole point: O(1), not
-  O(num_merges)).
-- The distributed loop at a 64-merge budget, mpr=16/frac=0.5 (the r7
-  recommended batching), with its job count — extrapolated linearly to
-  30k merges for the honest comparison line (running the real 30k
-  distributed fit would be thousands of sequential jobs; that is the
-  pathology, not the measurement).
-- Parity: driver-mode merges at the 64-merge budget vs the EXACT
-  distributed loop (mpr=1) — must be identical (same tie rule).
+- ``bpe_fit(num_merges=30000)`` end-to-end wall, split into (a) the
+  one corpus-sized word-count job + the bounded collect and (b) the
+  driver-side incremental-index merge loop; plus the total Spark JOB
+  COUNT (O(1), not O(num_merges)).
 
 Run on an idle machine: python tools/bpe_fit_scale.py
 Prints one JSON line; numbers go to SCALE.md round 9.
@@ -56,44 +47,25 @@ def main() -> None:
 
     out: dict = {"corpus": "zipf_5k_docs_20k_vocab"}
 
-    # (a) driver mode, 30k merges, end-to-end (cold word counts)
+    # (a) 30k merges, end-to-end (cold word counts)
     t0 = time.perf_counter()
     merges30k, jobs = _job_count(
         spark, "fit30k",
-        lambda: bpe_fit(zipf, "text", num_merges=30_000, mode="driver"))
-    out["driver_30k"] = {
+        lambda: bpe_fit(zipf, "text", num_merges=30_000))
+    out["fit_30k"] = {
         "wall_sec": round(time.perf_counter() - t0, 2),
         "spark_jobs": jobs, "merges_learned": len(merges30k)}
 
-    # (b) split the wall: word counts + probe vs pure driver loop
+    # (b) split the wall: word counts + collect vs pure driver loop
     t0 = time.perf_counter()
     wc = bpe_word_counts(zipf, "text").persist()
     n_vocab = wc.count()
     out["word_count_job_sec"] = round(time.perf_counter() - t0, 2)
     out["vocab_rows"] = int(n_vocab)
     t0 = time.perf_counter()
-    m2 = bpe_fit(None, num_merges=30_000, word_counts=wc, mode="driver")
+    m2 = bpe_fit(None, num_merges=30_000, word_counts=wc)
     out["driver_loop_sec_30k"] = round(time.perf_counter() - t0, 2)
     assert m2 == merges30k
-
-    # (c) distributed loop at a 64-merge budget (r7 batching knobs)
-    t0 = time.perf_counter()
-    md, jobs_d = _job_count(
-        spark, "fit64dist",
-        lambda: bpe_fit(None, num_merges=64, word_counts=wc,
-                        mode="distributed", merges_per_round=16,
-                        min_round_count_frac=0.5))
-    wall_d = round(time.perf_counter() - t0, 2)
-    out["distributed_64_mpr16"] = {
-        "wall_sec": wall_d, "spark_jobs": jobs_d,
-        "extrapolated_30k_jobs": int(jobs_d * 30_000 / 64),
-        "extrapolated_30k_wall_sec": round(wall_d * 30_000 / 64, 1)}
-
-    # (d) parity at the 64 budget: driver == exact distributed
-    m_drv = bpe_fit(None, num_merges=64, word_counts=wc, mode="driver")
-    m_exact = bpe_fit(None, num_merges=64, word_counts=wc,
-                      mode="distributed")
-    out["parity_64_driver_eq_exact_distributed"] = m_drv == m_exact
 
     wc.unpersist()
     zipf.unpersist()

@@ -56,9 +56,9 @@ def main() -> None:
     bl_spec = {"type": "ByteLevel", "add_prefix_space": False,
                "use_regex": True}
     t0 = time.perf_counter()
-    bl_merges = bpe_fit(zipf, "text", num_merges=30_000, mode="driver",
+    bl_merges = bpe_fit(zipf, "text", num_merges=30_000,
                         pre_tokenizer=bl_spec)
-    ws_merges = bpe_fit(zipf, "text", num_merges=30_000, mode="driver")
+    ws_merges = bpe_fit(zipf, "text", num_merges=30_000)
     fit_sec = round(time.perf_counter() - t0, 2)
 
     out = {"sf_dir": SF_DIR, "fit_both_30k_sec": fit_sec,
