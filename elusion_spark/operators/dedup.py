@@ -528,124 +528,80 @@ def ngram_jaccard_vs_reference(
 
 # ------------------------------------------------------- cluster resolve
 
-def _require_integral_pair_ids(pairs: DataFrame, fn: str) -> None:
-    """Connected-components algorithms key their labels/union-find on
-    longs; a silent bigint cast would NULL string ids and collapse the
-    whole edge set into one phantom component.  Fail loudly instead,
-    with the standard escapes."""
-    from pyspark.sql import types as T
-
+def _require_integral_pair_ids(pairs: DataFrame) -> None:
+    """Connected components keys its labels/union-find on longs; a
+    silent bigint cast would NULL string ids and collapse the whole edge
+    set into one phantom component.  Fail loudly instead, with the
+    standard escapes."""
     for c in ("id_a", "id_b"):
-        t = pairs.schema[c].dataType
-        if not isinstance(
-            t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        ):
+        if not _integral_id(pairs, c):
             raise ValueError(
-                f"{fn} requires integral pair ids (got {c}: "
-                f"{t.simpleString()}); map string/UUID ids to longs "
-                "first — F.xxhash64(id) (collision odds ~2^-64) or a "
-                "row_number id catalog — and join the labels back."
+                f"connected_components requires integral pair ids (got "
+                f"{c}: {pairs.schema[c].dataType.simpleString()}); map "
+                "string/UUID ids to longs first — F.xxhash64(id) "
+                "(collision odds ~2^-64) or a row_number id catalog — "
+                "and join the labels back."
             )
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iterations: int = 10,
-    driver_max_edges: int = 2_000_000,
-) -> DataFrame:
+# Edge sets at or below this many edges resolve with a driver union-find
+# after one bounded collect (2M edges ≈ 32 MB — same order as the
+# broadcast-join threshold); larger sets take star contraction.
+DRIVER_MAX_EDGES = 2_000_000
+# Star-contraction round cap.  Convergence takes O(log² n) rounds
+# whatever the component diameter; a graph that has not reached its
+# fixed point by then raises.  Sorted-id chains, the slowest shape
+# measured, took 7 / 11 / 15 / 18 rounds (confirming round included)
+# at 41 / 1k / 10k / 100k nodes — about 3.5 rounds per decade, so 40
+# covers chains past 10^11 nodes (25 would raise near 10M, inside the
+# star side's range).
+STAR_MAX_ROUNDS = 40
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Resolve duplicate-pair edges into clusters: (id, cluster_id) with
-    cluster_id = min member id.
+    cluster_id = min member id, for every id on an edge whose endpoints
+    are both non-NULL (self-loops included; NULL-endpoint edges are
+    ignored).
 
     Strategy is size-adaptive, the same way Spark picks broadcast vs
-    shuffle joins: edge sets at or below ``driver_max_edges`` (2M edges
-    ≈ 32 MB — same order as the broadcast-join threshold) are collected
-    and resolved with a driver-side union-find in one job; larger sets
-    run iterative min-label propagation — each round is one join + one
-    min-aggregate, converging in O(cluster diameter) rounds.  Dedup edge
-    sets are overwhelmingly small relative to the corpus (they are the
-    *output* of banding/blocking), so the driver path is the common case
-    and saves ~1 s/round of pure multi-stage scheduling latency; the
-    distributed path is the 100 TB safety net.  Set
-    ``driver_max_edges=0`` to force the distributed path.
-
-    Distributed path details: each round's labels are
-    ``localCheckpoint``ed — iterative algorithms MUST truncate lineage or
-    the analyzed plan doubles per round (minutes of driver time by round
-    ~8).  The checkpoint is *lazy*: the convergence count is the action
-    that materializes it, so each round costs exactly ONE job.  For
-    graphs with pathological diameter use ``connected_components_star``
-    (O(log² n) rounds) — dedup edge sets don't normally need it."""
+    shuffle joins: edge sets at or below ``DRIVER_MAX_EDGES`` are
+    collected and resolved with a driver-side union-find in one job;
+    larger sets run large-star / small-star contraction (Kiveris et al.,
+    *Connected Components in MapReduce and Beyond*, SoCC'14), which
+    converges in O(log² n) rounds regardless of component DIAMETER — a
+    chain of temporal near-dup versions A~B~C~… costs no more rounds
+    than a clique.  Dedup edge sets are overwhelmingly small relative to
+    the corpus (they are the *output* of banding/blocking), so the driver
+    path is the common case and skips every round's multi-stage
+    scheduling latency; star contraction is the 100 TB safety net.  If
+    it has not reached its fixed point within ``STAR_MAX_ROUNDS`` rounds
+    it raises ``ElusionError`` rather than return partial labels.  Both
+    sides give identical labels; tests force the star side by
+    monkeypatching ``DRIVER_MAX_EDGES`` to 0."""
     from pyspark import StorageLevel
 
-    _require_integral_pair_ids(pairs, "connected_components")
+    _require_integral_pair_ids(pairs)
     edges = pairs.select(
         F.col("id_a").cast("bigint").alias("src"),
         F.col("id_b").cast("bigint").alias("dst"),
-    )
-    if driver_max_edges > 0:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
         # one-job size probe + fetch: grab up to the gate + 1 rows; if we
         # got them all, resolve right here without ever touching the
         # distributed machinery (a separate count() was a second job, and
         # toLocalIterator fetched partitions sequentially — both slower)
-        probe = edges.limit(driver_max_edges + 1).collect()
-        if len(probe) <= driver_max_edges:
-            result = _driver_union_find(edges.sparkSession, probe)
-            edges.unpersist()
-            return result
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
-                (F.col("nmin") < F.col("label")).alias("__changed"),
-            )
-        )
-        # lazy checkpoint: the count below materializes it in the same job
-        new_labels = new_labels.localCheckpoint(eager=False)
-        changed = new_labels.filter("__changed").count()
-        labels.unpersist()
-        labels = new_labels.drop("__changed")
-        if changed == 0:
-            break
-    sym.unpersist()
-    if driver_max_edges > 0:
+        probe = edges.limit(DRIVER_MAX_EDGES + 1).collect()
+        if len(probe) <= DRIVER_MAX_EDGES:
+            return _driver_union_find(edges.sparkSession, probe)
+        return _star_contraction(edges)
+    finally:
         edges.unpersist()
-    return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    max_rounds: int = 25,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., *Connected Components in MapReduce and
-    Beyond*, SoCC'14) — O(log² n) rounds regardless of component
-    DIAMETER, where min-label propagation needs O(diameter) rounds.
-
-    Dedup edge sets are shallow (near-dup clusters are cliques-ish), so
-    ``connected_components``'s propagation is the right default; this is
-    the escape hatch for pathological chain-shaped graphs (e.g. temporal
-    near-dup chains A~B~C~… where consecutive versions overlap): a
-    10k-long chain converges here in a handful of rounds vs 10k
-    propagation rounds.
-
-    Each round:
+def _star_contraction(edges: DataFrame) -> DataFrame:
+    """Connected components of the persisted (src, dst) edge frame by
+    alternating large-star / small-star contraction.  Each round:
     - *large-star*: every node u connects its LARGER neighbours to
       ``m(u) = min(N(u) ∪ u)`` — components shrink toward small ids
       without ever creating an edge to a larger id (monotone, safe);
@@ -654,33 +610,30 @@ def connected_components_star(
       flattening chains into stars.
     Connectivity is preserved exactly by both (the paper's invariant);
     convergence = the edge multiset stops changing, checked by a
-    (count, hash-sum) fingerprint materialized by the same action that
+    (count, hash-xor) fingerprint materialized by the same action that
     checkpoints the round.  Final state: every non-root points directly
-    at its component min.  Output matches ``connected_components``:
-    (id, cluster_id = component min)."""
-    from pyspark import StorageLevel
+    at its component min.
 
-    spark = pairs.sparkSession
-    _require_integral_pair_ids(pairs, "connected_components_star")
-    e = (
-        pairs.select(
-            F.col("id_a").cast("bigint").alias("src"),
-            F.col("id_b").cast("bigint").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if not e.take(1):
-        return spark.createDataFrame([], "id long, cluster_id long")
+    Each round's edges are ``localCheckpoint``ed — iterative algorithms
+    MUST truncate lineage or the analyzed plan doubles per round
+    (minutes of driver time by round ~8).  The checkpoint is *lazy*: the
+    fingerprint is the action that materializes it, so each round costs
+    exactly ONE job.  The labels are checkpointed eagerly on return, so
+    the caller's frame no longer reads ``edges`` once it is released."""
+    from ..errors import ElusionError
+
+    valid = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    # ids come from the non-NULL edges BEFORE the self-loop filter: an id
+    # seen only on a self-loop is its own singleton cluster, as in the
+    # driver union-find
     all_ids = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
+        valid.select(F.col("src").alias("id"))
+        .union(valid.select(F.col("dst").alias("id")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    e = valid.filter(F.col("src") != F.col("dst")).distinct()
     prev_fp = None
-    for _ in range(max_rounds):
+    for _ in range(STAR_MAX_ROUNDS):
         # ---- large-star: neighbours > u attach to min(N(u) ∪ u)
         sym = e.union(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -707,26 +660,30 @@ def connected_components_star(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-        new_e = ss.localCheckpoint(eager=False)
-        fp = new_e.agg(
+        e = ss.localCheckpoint(eager=False)
+        fp = e.agg(
             F.count("*").alias("n"),
             # bit_xor, not sum: ANSI mode overflows summing 64-bit hashes
             F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
         ).first()
         fp = (fp["n"], fp["h"])
-        e.unpersist()
-        e = new_e
         if fp == prev_fp:
             break
         prev_fp = fp
+    else:
+        raise ElusionError(
+            "connected_components: star contraction did not reach its "
+            f"fixed point within STAR_MAX_ROUNDS={STAR_MAX_ROUNDS} rounds "
+            f"(last round left {fp[0]} edges)",
+            "Raise dedup.STAR_MAX_ROUNDS for this graph, or shrink its "
+            "edge set first (a stricter dedup threshold or bucket cap).",
+        )
     labels = e.select(F.col("src").alias("id"),
                       F.col("dst").alias("cluster_id"))
     roots = all_ids.join(
         labels.select(F.col("id")), "id", "left_anti"
     ).select("id", F.col("id").alias("cluster_id"))
-    out = labels.union(roots)
-    all_ids.unpersist()
-    return out
+    return labels.union(roots).localCheckpoint()
 
 
 def _driver_union_find(spark, edge_rows) -> DataFrame:

@@ -59,7 +59,6 @@ SLOW_TESTS = {
     "test_train_logreg_standardize",                    # 20.0
     "test_fuzzy_join_blocking_is_lossless",             # 18.1
     "test_hashed_tf_features_portable_and_train_chain",  # 18.0
-    "test_connected_components_star_equivalence",       # 17.9
     "test_incremental_minhash_equals_batch_difference",  # 16.7
     "test_knn_join_cluster_cap_and_pipeline_xent_gate",  # 15.2
     "test_ivf_residual_search_matches_numpy_replay",    # 13.8

@@ -503,32 +503,129 @@ def test_connected_components_clusters(spark):
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 4, 6]
 
 
+def _seed13_edges():
+    import random
+
+    rng = random.Random(13)
+    return [(rng.randint(0, 400), rng.randint(0, 400)) for _ in range(300)]
+
+
+def _edge_frame_cached(pairs):
+    """Whether the (src, dst) probe frame connected_components persists
+    for ``pairs`` is still in the cache manager."""
+    from pyspark.sql import functions as F
+
+    lvl = pairs.select(
+        F.col("id_a").cast("bigint").alias("src"),
+        F.col("id_b").cast("bigint").alias("dst"),
+    ).storageLevel
+    return lvl.useMemory or lvl.useDisk
+
+
+@pytest.mark.parametrize("edges, want", [
+    pytest.param([(i, i + 1) for i in range(9_999)],
+                 {(i, 0) for i in range(10_000)}, id="chain_10k"),
+    pytest.param([(5000, i) for i in range(1000)],
+                 {(i, 0) for i in [*range(1000), 5000]},
+                 id="star_1000_leaves"),
+    pytest.param([(c * 100 + a, c * 100 + b) for c in range(5)
+                  for a in range(8) for b in range(a + 1, 8)],
+                 {(c * 100 + k, c * 100) for c in range(5) for k in range(8)},
+                 id="disjoint_cliques"),
+    # has the self-loop (350, 350); no closed form — the sides must agree
+    pytest.param(_seed13_edges(), None, id="random_300_seed13"),
+    pytest.param([(7, 7), (1, 2)], {(1, 1), (2, 1), (7, 7)},
+                 id="self_loop_only_id"),
+    pytest.param([(5, None), (1, 2)], {(1, 1), (2, 1)},
+                 id="null_endpoint_ignored"),
+    # edges exist, so the forced gate takes the star side, but none
+    # survives its NULL and self-loop filters
+    pytest.param([(7, 7), (5, None)], {(7, 7)},
+                 id="self_loop_and_null_only"),
+    pytest.param([], set(), id="empty"),
+])
+def test_connected_components_same_labels_across_gate(
+        spark, monkeypatch, edges, want):
+    """The driver union-find (default gate) and star contraction
+    (DRIVER_MAX_EDGES forced to 0) give identical (id, cluster_id) rows,
+    one per id, and release the persisted probe frame."""
+    from elusion_spark.operators import dedup
+
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+
+    def labels():
+        rows = [(r["id"], r["cluster_id"])
+                for r in dedup.connected_components(pairs).collect()]
+        assert len(rows) == len(set(rows))
+        assert not _edge_frame_cached(pairs)
+        return set(rows)
+
+    driver = labels()
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
+    star = labels()
+    assert star == driver
+    if want is not None:
+        assert driver == want
+
+
 def test_connected_components_long_chain(spark):
+    """A 12-node chain on the default (union-find) side is one cluster
+    of 13 rows."""
     from elusion_spark.operators.dedup import connected_components
 
-    # a 12-node path: propagation needs several rounds, still converges
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], ["id_a", "id_b"]
-    )
-    cc = connected_components(pairs, max_iterations=20).collect()
+        [(i, i + 1) for i in range(12)], "id_a long, id_b long")
+    cc = connected_components(pairs).collect()
     assert {r["cluster_id"] for r in cc} == {0}
     assert len(cc) == 13
 
 
-def test_connected_components_distributed_path(spark):
-    """driver_max_edges=0 forces the label-propagation path; it must
-    agree exactly with the driver union-find on the same graph."""
-    from elusion_spark.operators.dedup import connected_components
+def test_connected_components_distributed_path(spark, monkeypatch):
+    """DRIVER_MAX_EDGES forced to 0 sends the 12-chain plus two small
+    components to star contraction; it must agree exactly with the
+    driver union-find, one row per id, and release the probe frame."""
+    from elusion_spark.operators import dedup
 
     edges = [(i, i + 1) for i in range(12)] + [(100, 101), (101, 102), (200, 201)]
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    dist = {r["id"]: r["cluster_id"]
-            for r in connected_components(
-                pairs, max_iterations=20, driver_max_edges=0).collect()}
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     drv = {r["id"]: r["cluster_id"]
-           for r in connected_components(pairs, max_iterations=20).collect()}
+           for r in dedup.connected_components(pairs).collect()}
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
+    rows = dedup.connected_components(pairs).collect()
+    dist = {r["id"]: r["cluster_id"] for r in rows}
+    assert len(rows) == len(dist) == 18
+    assert not _edge_frame_cached(pairs)
     assert dist == drv
-    assert dist[102] == 100 and dist[201] == 200 and dist[12] == 0
+    assert dist == ({i: 0 for i in range(13)}
+                    | {100: 100, 101: 100, 102: 100, 200: 200, 201: 200})
+
+
+def test_connected_components_forced_gate_resolves_41_chain(spark, monkeypatch):
+    """A 41-node chain on the star side is one cluster of 41 rows."""
+    from elusion_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long")
+    rows = dedup.connected_components(pairs).collect()
+    assert len(rows) == 41
+    assert {r["cluster_id"] for r in rows} == {0}
+
+
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    """Star contraction that misses its fixed point within
+    STAR_MAX_ROUNDS raises instead of returning partial labels, and
+    still releases the probe frame."""
+    from elusion_spark.errors import ElusionError
+    from elusion_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", 1)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long")
+    with pytest.raises(ElusionError, match=r"STAR_MAX_ROUNDS=1 .* \d+ edges"):
+        dedup.connected_components(pairs)
+    assert not _edge_frame_cached(pairs)
 
 
 def test_prepare_training_corpus_end_to_end(spark, tmp_path):
@@ -1352,37 +1449,6 @@ def test_lm_score_bigram_single_model_pass(spark, tmp_path):
         want = round(-sum(logp[p] for p in trans) / n, 6)
         assert got[i][0] == n
         assert abs(got[i][1] - want) < 1e-9, (i, got[i], want)
-
-
-def test_connected_components_star_equivalence(spark):
-    """Star contraction labels == exact union-find on random graphs, and
-    a 3000-node chain (diameter 3000 - label propagation's worst case)
-    converges in the star path's logarithmic round budget."""
-    import random
-
-    from elusion_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(13)
-    edges = [(rng.randint(0, 400), rng.randint(0, 400)) for _ in range(300)]
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    want = {(r["id"], r["cluster_id"])
-            for r in connected_components(pairs).collect()}  # driver exact
-    got = {(r["id"], r["cluster_id"])
-           for r in connected_components_star(pairs).collect()}
-    # union-find path sees self-loops' nodes; star drops isolated
-    # self-loop-only nodes consistently with its src!=dst filter
-    want = {(i, c) for i, c in want
-            if any((a != b and (a == i or b == i)) for a, b in edges)}
-    assert got == want
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(3000)], ["id_a", "id_b"])
-    labs = connected_components_star(chain, max_rounds=15).collect()
-    assert len(labs) == 3001
-    assert all(r["cluster_id"] == 0 for r in labs)   # one component, min=0
 
 
 def test_containment_catches_truncations_jaccard_misses(spark):
