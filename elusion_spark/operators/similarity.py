@@ -393,6 +393,137 @@ class KMeansModel:
             out_col, assign_clusters_col(vec_col, self.centroids))
 
 
+def _sample_lloyd(frame: DataFrame, dim: int, m: int, k: int,
+                  sample_fraction: float, seed: int, iters: int,
+                  what: str) -> list[list[list[float]]]:
+    """Driver-side Lloyd on ONE bounded sample (≤100k rows) of the
+    one-column vector frame ``frame``: ``m`` codebooks of ``k``
+    centroids, codebook ``s`` over the ``s``-th ``dim/m``-wide slice,
+    seeded by ``random.Random(seed + s)`` (k-means and IVF are m=1).
+    NULL vectors are dropped after the collect; they still take part in
+    the Bernoulli draw, so the sample depends only on the frame passed.
+
+    Vectorized: one (chunk, k) distance block at a time via the
+    ||p||² − 2p·c + ||c||² expansion — seconds at 100k×768 where a
+    Python triple loop took minutes (VERDICT r1).  Conversion goes
+    through np.fromiter over a flat iterator (0.18 s at 100k×64)
+    instead of np.asarray over nested lists (7.4 s: the nested path pays
+    a per-element sequence-protocol walk PLUS a ~50 MB fresh allocation
+    whose first-touch page faults dominate on slow-fault hosts), and
+    the distance matrix is computed in 16k-row chunks so the
+    temporaries stay small and get reused by the allocator rather than
+    re-faulted (measured r10: 18.9 s -> 2.4 s for the 100k×64 fit;
+    per-row arithmetic is unchanged, so centroids are bit-identical to
+    the unchunked form)."""
+    import random
+    from itertools import chain
+
+    import numpy as np
+
+    rows = (
+        frame.sample(fraction=min(sample_fraction, 1.0), seed=seed)
+        .limit(100_000)
+        .collect()
+    )
+    vecs = [r[0] for r in rows if r[0] is not None]
+    n = len(vecs)
+    if n < k:
+        raise ValueError(
+            f"{what}: not enough sample points ({n}) for {k} centroids")
+    _check_sample_dims(vecs, dim, what)
+    P = np.fromiter(chain.from_iterable(vecs), dtype=np.float64,
+                    count=n * dim).reshape(n, dim)
+    dsub = dim // m
+    _CH = 16384
+    books = []
+    for s in range(m):
+        Ps = P[:, s * dsub:(s + 1) * dsub]
+        # random.sample draws the same index sequence for any
+        # equal-length population, so sampling indices keeps the
+        # r1-era seeding exactly
+        C = Ps[random.Random(seed + s).sample(range(n), k)].copy()
+        p_sq = np.empty(n, dtype=np.float64)
+        for c0 in range(0, n, _CH):
+            blk = Ps[c0:c0 + _CH]
+            p_sq[c0:c0 + _CH] = (blk * blk).sum(axis=1)
+        best = np.empty(n, dtype=np.intp)
+        for _ in range(iters):
+            c_sq = (C * C).sum(axis=1)[None, :]
+            for c0 in range(0, n, _CH):
+                blk = Ps[c0:c0 + _CH]
+                d2 = p_sq[c0:c0 + _CH, None] - 2.0 * (blk @ C.T) + c_sq
+                best[c0:c0 + _CH] = d2.argmin(axis=1)
+            for ci in range(k):
+                members = Ps[best == ci]
+                if len(members):
+                    C[ci] = members.mean(axis=0)
+        books.append([list(map(float, c)) for c in C])
+    return books
+
+
+def _lloyd(df: DataFrame, vec_col: str, books: list[list[list[float]]],
+           iters: int):
+    """FULL-data distributed Lloyd over all ``m`` codebooks at once
+    (k-means is m=1).  Each iteration is ONE aggregation job: the
+    nearest-centroid kernel gives every row its ``m`` (code, distance)
+    pairs, an inline explodes them to ``(subspace, code, d, subvector)``
+    entries, and one pass grouped by ``(subspace, code)`` computes the
+    count, the per-dimension DECIMAL(38,9)-exact coordinate sums and
+    the DECIMAL sum of ``d`` — ``m·k·(dsub+2)`` numbers to the driver.
+    Map-side partial aggregation collapses the explode to ``m·k``
+    groups per partition, so the shuffle is codebook-sized, never
+    corpus-sized (at FAISS-realistic m=96 one job per iteration instead
+    of 96).  Exact decimal accumulation + first-min tie-breaking make
+    the result bit-identical under any partitioning.
+
+    Empty clusters keep their previous centroid.  Returns ``(books,
+    sizes, inertia_history)``: sizes (m × k) are the populations at the
+    LAST assignment (the returned centroids are the means of exactly
+    those members — standard Lloyd bookkeeping), and each inertia entry
+    is the sum of squared distances at that iteration's assignment."""
+    from itertools import chain
+
+    m, k, dsub = len(books), len(books[0]), len(books[0][0])
+    # the explode and the aggregation are SQL text built once: every
+    # PySpark Column call is JVM round trips (~11 for one ``alias``), and
+    # on small inputs those cost more per iteration than the job itself
+    entries = "inline(array(" + ", ".join(
+        f"struct({s} AS s, __n.c[{s}] AS c, __n.d[{s}] AS d, "
+        f"CAST(slice(__v, {s * dsub + 1}, {dsub}) AS ARRAY<DOUBLE>) AS x)"
+        for s in range(m)) + "))"
+    aggs = [F.expr(a) for a in [
+        "COUNT(*) AS n",
+        "CAST(SUM(CAST(d AS DECIMAL(38,9))) AS DOUBLE) AS inert",
+        *[f"CAST(SUM(CAST(element_at(x, {j + 1}) AS DECIMAL(38,9))) AS "
+          f"DOUBLE) AS s{j}" for j in range(dsub)],
+    ]]
+    proj = df.select(F.col(vec_col).alias("__v")).filter(
+        F.col("__v").isNotNull()).persist()
+    try:
+        sizes = [[0] * k for _ in range(m)]
+        history: list[float] = []
+        for _ in range(iters):
+            rows = (
+                proj.withColumn("__n", _nearest_col("__v", books))
+                .selectExpr(entries)
+                .groupBy("s", "c")
+                .agg(*aggs)
+                .collect()
+            )
+            sizes = [[0] * k for _ in range(m)]
+            inerts = [[0.0] * k for _ in range(m)]
+            books = [list(b) for b in books]
+            for r in rows:
+                s, c = r["s"], r["c"]
+                sizes[s][c], inerts[s][c] = r["n"], r["inert"]
+                books[s][c] = [r[f"s{j}"] / r["n"] for j in range(dsub)]
+            # index-ordered fold so the trace is partition-invariant
+            history.append(sum(chain.from_iterable(inerts)))
+        return books, sizes, history
+    finally:
+        proj.unpersist()
+
+
 def kmeans_fit(
     df: DataFrame,
     vec_col: str,
@@ -401,31 +532,27 @@ def kmeans_fit(
     iters: int = 10,
     init_centroids: list[list[float]] | None = None,
     sample_fraction: float = 0.1,
-    sample_iters: int = 5,
     seed: int = 42,
-    track_inertia: bool = True,
 ) -> KMeansModel:
     """FULL-data distributed Lloyd iterations — the scale path past
     ``ivf_build``'s sample-only fit (sample-fit is right when every
     cluster is well-represented in a 100k sample; refining over ALL
     rows is right when clusters are thin, skewed, or k is large
-    relative to the sample).
+    relative to the sample: pass ``init_centroids=ivf_build(...)[1]``).
 
-    Each iteration is ONE aggregation job: the broadcast argmin
-    expression assigns every row, then a grouped pass computes per-
-    cluster counts + per-dimension DECIMAL(38,9)-exact coordinate sums
-    (k·(dim+1) numbers to the driver — O(k·dim) driver state, like
-    train_logreg's O(dim)).  Exact decimal accumulation + first-min
-    tie-breaking make the fitted centroids bit-identical under any
-    partitioning, so a re-fit on a resized cluster reproduces the model.
+    ``_lloyd`` with one codebook: each iteration is ONE aggregation job
+    whose k·(dim+2) numbers (count, DECIMAL(38,9) coordinate sums,
+    DECIMAL inertia) go to the driver — O(k·dim) driver state, like
+    train_logreg's O(dim) — and the fitted centroids are bit-identical
+    under any partitioning, so a re-fit on a resized cluster reproduces
+    the model.
 
     ``init_centroids`` pins initialization (tests/oracles); otherwise
-    init comes from ``ivf_build``'s vectorized sample Lloyd (cheap,
-    good starting point).  Empty clusters keep their previous centroid.
-    ``sizes`` are the cluster populations at the LAST assignment (the
-    returned centroids are the means of exactly those members —
-    standard Lloyd bookkeeping; ``assign`` with the returned centroids
-    can move boundary points once more).
+    init is 5 iterations of the driver sample Lloyd ``ivf_build`` uses,
+    on the same sample.  Empty clusters keep their previous centroid.
+    ``sizes`` are the cluster populations at the LAST assignment
+    (``assign`` with the returned centroids can move boundary points
+    once more).
     """
     if k <= 0 or iters <= 0 or dim <= 0:
         raise ValueError("k, dim and iters must be positive")
@@ -435,50 +562,10 @@ def kmeans_fit(
             raise ValueError(f"init_centroids must be {k} x {dim}")
         C = [[float(v) for v in c] for c in init_centroids]
     else:
-        _, C = ivf_build(df, vec_col, dim, nlist=k,
-                         sample_fraction=sample_fraction,
-                         iters=sample_iters, seed=seed)
-    proj = df.select(F.col(vec_col).alias("__v")).filter(
-        F.col("__v").isNotNull()).persist()
-    try:
-        sizes = [0] * k
-        history: list[float] = []
-        for _ in range(iters):
-            # one distance array per row gives both the assignment and
-            # the inertia term; the gate picks its form (see
-            # CENTROID_EXPR_MAX_FLOATS)
-            assigned = proj.withColumn("__n", _nearest_col("__v", C))
-            aggs = [F.expr("CAST(COUNT(*) AS BIGINT)").alias("n")]
-            aggs += [
-                F.expr(
-                    f"CAST(SUM(CAST(CAST(element_at(__v, {j + 1}) AS "
-                    f"DOUBLE) AS DECIMAL(38,9))) AS DOUBLE)"
-                ).alias(f"s{j}")
-                for j in range(dim)
-            ]
-            if track_inertia:
-                aggs.append(F.expr(
-                    "CAST(SUM(CAST(__n.d AS DECIMAL(38,9))) AS DOUBLE)"
-                ).alias("inert"))
-            rows = assigned.groupBy(
-                F.col("__n.c").alias("__c")).agg(*aggs).collect()
-            sizes = [0] * k
-            newC = [list(c) for c in C]
-            inerts = [0.0] * k
-            for r in rows:
-                ci = r["__c"]
-                sizes[ci] = r["n"]
-                if r["n"] > 0:
-                    newC[ci] = [r[f"s{j}"] / r["n"] for j in range(dim)]
-                if track_inertia:
-                    inerts[ci] = r["inert"]
-            C = newC
-            if track_inertia:
-                # index-ordered fold so the trace is partition-invariant
-                history.append(sum(inerts))
-        return KMeansModel(C, sizes, history)
-    finally:
-        proj.unpersist()
+        (C,) = _sample_lloyd(df.select(vec_col), dim, 1, k,
+                             sample_fraction, seed, 5, "kmeans_fit")
+    (C,), (sizes,), history = _lloyd(df, vec_col, [C], iters)
+    return KMeansModel(C, sizes, history)
 
 
 def ivf_build(
@@ -489,88 +576,33 @@ def ivf_build(
     sample_fraction: float = 0.1,
     iters: int = 5,
     seed: int = 42,
-    refine_iters: int = 0,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Fit IVF centroids on a sample (driver-side Lloyd iterations over at
-    most ~100k sampled vectors), then assign every row a cluster id via a
-    broadcast argmin expression.  Returns (df+cluster_id, centroids).
+    most ~100k sampled vectors — ``_sample_lloyd``), then assign every
+    row a cluster id via a broadcast argmin expression.  Returns
+    (df+cluster_id, centroids).
 
     At 100 TB: sample-fit cost is constant; assignment is one scan; write
     the result partitioned by cluster_id so probes prune partitions.
-    ``refine_iters > 0`` follows the sample fit with that many FULL-data
-    distributed Lloyd rounds (``kmeans_fit`` seeded from the sample
-    centroids — one grouped aggregation job each): use it when nlist is
-    large relative to the sample or the embedding distribution is
-    skewed, so thin clusters get balanced by data the sample missed."""
-    rows = (
-        df.select(vec_col)
-        .sample(fraction=min(sample_fraction, 1.0), seed=seed)
-        .limit(100_000)
-        .collect()
-    )
-    import random
-    from itertools import chain
-
-    import numpy as np
-
-    rng = random.Random(seed)
-    vecs = [r[0] for r in rows if r[0] is not None]
-    n = len(vecs)
-    if n < nlist:
-        raise ValueError(f"not enough sample points ({n}) for nlist={nlist}")
-    # vectorized Lloyd: one (chunk, nlist) distance block at a time via
-    # the ||p||² - 2p·c + ||c||² expansion — seconds at 100k×768 where a
-    # Python triple loop took minutes (VERDICT r1).  Conversion goes
-    # through np.fromiter over a flat iterator (0.18 s at 100k×64)
-    # instead of np.asarray over nested lists (7.4 s: the nested path
-    # pays a per-element sequence-protocol walk PLUS a ~50 MB fresh
-    # allocation whose first-touch page faults dominate on this host),
-    # and the distance matrix is computed in 16k-row chunks so the
-    # temporaries stay small and get reused by the allocator rather
-    # than re-faulted (measured r10: 18.9 s -> 2.4 s for the 100k×64
-    # fit; per-row arithmetic is unchanged, so centroids are
-    # bit-identical to the unchunked form).
-    _check_sample_dims(vecs, dim, "ivf_build")
-    P = np.fromiter(chain.from_iterable(vecs), dtype=np.float64,
-                    count=n * dim).reshape(n, dim)
-    # random.sample draws the same index sequence for any equal-length
-    # population, so sampling indices keeps the r1-era seeding exactly
-    C = P[rng.sample(range(n), nlist)].copy()
-    _CH = 16384
-    p_sq = np.empty(n, dtype=np.float64)
-    for s in range(0, n, _CH):
-        blk = P[s:s + _CH]
-        p_sq[s:s + _CH] = (blk * blk).sum(axis=1)
-    best = np.empty(n, dtype=np.intp)
-    for _ in range(iters):
-        c_sq = (C * C).sum(axis=1)[None, :]
-        for s in range(0, n, _CH):
-            blk = P[s:s + _CH]
-            d2 = p_sq[s:s + _CH, None] - 2.0 * (blk @ C.T) + c_sq
-            best[s:s + _CH] = d2.argmin(axis=1)
-        for ci in range(nlist):
-            members = P[best == ci]
-            if len(members):
-                C[ci] = members.mean(axis=0)
-    centroids = [list(map(float, c)) for c in C]
-    if refine_iters > 0:
-        centroids = kmeans_fit(
-            df, vec_col, dim, nlist, iters=refine_iters,
-            init_centroids=centroids, track_inertia=False,
-        ).centroids
+    When nlist is large relative to the sample or the embedding
+    distribution is skewed, refine the centroids over ALL rows with
+    ``kmeans_fit(..., init_centroids=centroids)``."""
+    (centroids,) = _sample_lloyd(df.select(vec_col), dim, 1, nlist,
+                                 sample_fraction, seed, iters, "ivf_build")
     assigned = df.withColumn(
         "cluster_id", assign_clusters_col(vec_col, centroids)
     )
     return assigned, centroids
 
 
-# One size gate for every centroid-distance kernel: assign_clusters_col,
-# _min_sq_dist_col, pq_encode_expr and the kmeans_fit / pq_fit Lloyd
-# loops all count total centroid floats (k·dim, or m·k·dsub for PQ).
+# One size gate for the nearest-centroid kernel ``_nearest_col`` and so
+# for all five sites built on it: assign_clusters_col, _min_sq_dist_col,
+# pq_encode_expr and the kmeans_fit / pq_fit Lloyd loop (``_lloyd``).
+# The gate counts total centroid floats (k·dim, or m·k·dsub for PQ).
 # At or below the gate the distances unroll into one codegen
 # expression (left-associated Σ(p−c)², first-min argmin — exactly the
 # arithmetic the DuckDB oracles replay); above it one numpy GEMM per
-# Arrow batch.  The gate is measured, not guessed:
+# subspace and Arrow batch.  The gate is measured, not guessed:
 # tools/centroid_kernel_sweep.py (fresh centroids every pass, as in a
 # Lloyd loop; one assign + group-by + collect job; SPARK_GRAFT_CPUS=4
 # on a 4-core VM), min of 3, ms, Arrow / unrolled:
@@ -614,49 +646,78 @@ def _first_min_sql(arr: str) -> str:
     return f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT)"
 
 
-def _nearest_col(vec_col: str, centroids: list[list[float]]) -> Column:
-    """``struct<c:int, d:double>``: the nearest centroid (first min)
-    and the squared distance to it, both taken from ONE distance array
-    per row.
+def _nearest_col(vec_col: str, books: list[list[list[float]]]) -> Column:
+    """The one nearest-centroid kernel: ``struct<c: array<int>,
+    d: array<double>>`` holding, for each of the ``m`` codebooks in
+    ``books`` (``k`` centroids over the ``s``-th ``dsub``-wide slice of
+    the vector; k-means and IVF pass one codebook), the nearest
+    centroid (first min) and the squared distance to it, both taken
+    from ONE distance array per subspace.
 
-    At or below ``CENTROID_EXPR_MAX_FLOATS`` the array is the unrolled
-    ``_sq_dists_sql`` expression.  Above it one numpy GEMM per Arrow
-    batch against the closure-captured centroid matrix (broadcast with
-    the task): ``g = ||c||² − 2p·c``, ``c = argmin g`` (the row-constant
-    ||p||² cannot change the order, and ``knn_join``'s probe kernel
-    ranks clusters by the same ``g``), ``d = max(||p||² + g[c], 0)``."""
-    if len(centroids) * len(centroids[0]) <= CENTROID_EXPR_MAX_FLOATS:
-        arr = _sq_dists_sql(vec_col, centroids)
-        return F.expr(f"named_struct('c', {_first_min_sql(arr)}, "
-                      f"'d', array_min({arr}))")
+    At or below ``CENTROID_EXPR_MAX_FLOATS`` (over ``m·k·dsub``) each
+    array is the unrolled ``_sq_dists_sql`` expression.  Above it one
+    numpy GEMM per subspace and Arrow batch against the closure-captured
+    codebooks (broadcast with the task): ``g = ||c||² − 2p·c``,
+    ``c = argmin g`` (the row-constant ||p||² cannot change the order,
+    and ``knn_join``'s probe kernel ranks clusters by the same ``g``),
+    ``d = max(||p||² + g[c], 0)``.  Both forms reject a non-NULL vector
+    whose length is not ``m·dsub`` — the Arrow form in
+    ``_arrow_list_matrix``, the expression form by a ``raise_error``
+    added (as 0) to the first subspace's code and distance, so the
+    check rides the same projection and stays outside any conditional
+    branch: Spark does not share a subexpression that only one branch
+    evaluates, and a ``CASE WHEN`` wrapper around the struct measured
+    5.7 s against 0.58 s for this form (and 0.54 s with no check) on
+    one assign + aggregate job at 32 floats, 200k rows, 4 cores."""
+    m, k, dsub = len(books), len(books[0]), len(books[0][0])
+    dim = m * dsub
+    if m * k * dsub <= CENTROID_EXPR_MAX_FLOATS:
+        arrs = [_sq_dists_sql(vec_col, b, s * dsub)
+                for s, b in enumerate(books)]
+        chk = (f"IF({vec_col} IS NOT NULL AND size({vec_col}) <> {dim}, "
+               f"raise_error('_nearest_col: expected fixed-length {dim} "
+               f"vectors (ragged vectors are not supported)'), 0)")
+        cs = [_first_min_sql(a) for a in arrs]
+        ds = [f"array_min({a})" for a in arrs]
+        cs[0], ds[0] = f"{cs[0]} + {chk}", f"{ds[0]} + {chk}"
+        return F.expr(f"named_struct('c', array({', '.join(cs)}), "
+                      f"'d', array({', '.join(ds)}))")
 
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
-    Cm = np.asarray(centroids, dtype=np.float64)
-    c_sq = (Cm * Cm).sum(axis=1)
-    dim = Cm.shape[1]
+    B = [np.asarray(b, dtype=np.float64) for b in books]
+    B_sq = [(C * C).sum(axis=1) for C in B]
 
     def _nearest(vs: "pa.Array") -> "pa.Array":
         V = _arrow_list_matrix(vs, "_nearest_col", dim)
-        g = c_sq - 2.0 * (V @ Cm.T)
-        c = g.argmin(axis=1)
-        d = (V * V).sum(axis=1) + g[np.arange(len(V)), c]
+        n = len(V)
+        c = np.empty((n, m), dtype=np.int32)
+        d = np.empty((n, m), dtype=np.float64)
+        for s in range(m):
+            Vs = V[:, s * dsub:(s + 1) * dsub]
+            g = B_sq[s] - 2.0 * (Vs @ B[s].T)
+            c[:, s] = g.argmin(axis=1)
+            d[:, s] = (Vs * Vs).sum(axis=1) + g[np.arange(n), c[:, s]]
+        offsets = pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32))
         return pa.StructArray.from_arrays(
-            [pa.array(c.astype(np.int32)),
-             pa.array(np.maximum(d, 0.0))], names=["c", "d"])
+            [pa.ListArray.from_arrays(offsets, pa.array(c.reshape(-1))),
+             pa.ListArray.from_arrays(
+                 offsets, pa.array(np.maximum(d, 0.0).reshape(-1)))],
+            names=["c", "d"])
 
     # module-wide `from __future__ import annotations` stringifies the
     # type hints, which udf inference can't resolve — attach the objects
     _nearest.__annotations__ = {"vs": pa.Array, "return": pa.Array}
-    return arrow_udf(_nearest, "struct<c:int,d:double>")(F.expr(vec_col))
+    return arrow_udf(_nearest, "struct<c:array<int>,d:array<double>>")(
+        F.expr(vec_col))
 
 
 def _min_sq_dist_col(vec_col: str, centroids: list[list[float]]):
     """Min squared distance to any centroid (the k-means inertia term),
     gated like ``assign_clusters_col`` — see ``_nearest_col``."""
-    return _nearest_col(vec_col, centroids).getField("d")
+    return _nearest_col(vec_col, [centroids]).getField("d").getItem(0)
 
 
 def assign_clusters_col(vec_col: str, centroids: list[list[float]]):
@@ -667,7 +728,7 @@ def assign_clusters_col(vec_col: str, centroids: list[list[float]]):
     the unrolled tree grows with nlist·dim and at IVF-realistic shapes
     (nlist ≥ 256, dim 768) the GEMM is the only plan that survives.
     See ``_nearest_col`` for the arithmetic of each form."""
-    return _nearest_col(vec_col, centroids).getField("c")
+    return _nearest_col(vec_col, [centroids]).getField("c").getItem(0)
 
 
 def ivf_write_index(
@@ -1161,9 +1222,12 @@ def semantic_dedup(
     # whole norm+argmin map ran on 2 of 32 cores (profiled: 0.97 s of
     # the 2.26 s executor CPU in one 2-task stage).  The fit above
     # still samples the ORIGINAL df — repartitioning before the sample
-    # would reorder it and change the (oracle-replayed) centroids;
-    # repartitioning only the assignment input keeps every per-row
-    # value identical.  No-op at scale where the scan has splits.
+    # would reorder it and change the seeded sample centroids, so a
+    # fixed seed would no longer reproduce the clustering (no oracle
+    # replays them: learned centroids are not SQL-replayable, and
+    # q65's oracle is its construction); repartitioning only the
+    # assignment input keeps every per-row value identical.  No-op at
+    # scale where the scan has splits.
     assigned = _ensure_parallelism(df).withColumn(
         "cluster_id", assign_clusters_col(vec_col, cents)
     )
@@ -1743,192 +1807,54 @@ def pq_fit(
     seed: int = 42,
 ) -> PQModel:
     """Train PQ codebooks: Lloyd over all ``m`` subspaces SIMULTANEOUSLY
-    — each iteration is ONE aggregation job for the whole codebook set,
-    not ``m`` separate fits (at FAISS-realistic m=96 the per-subspace
-    approach is 96× the jobs — hundreds of cluster round-trips — for
-    identical math).  Per iteration every row assigns its ``m`` codes
-    (expression argmin for small codebooks, Arrow GEMM above that),
-    explodes to ``(subspace, code, subvector)`` entries, and a single
-    grouped pass computes DECIMAL(38,9)-exact per-dimension sums —
-    map-side partial aggregation collapses the explode to ``m·k``
-    groups per partition, so the shuffle is codebook-sized, never
-    corpus-sized.  Decimal accumulation + first-min argmin keep the
-    codebooks bit-identical under any partitioning (same contract as
-    ``kmeans_fit``).
+    — ``_lloyd`` with ``m`` codebooks, so each iteration is ONE
+    aggregation job for the whole codebook set, not ``m`` separate fits
+    (at FAISS-realistic m=96 the per-subspace approach is 96× the jobs
+    — hundreds of cluster round-trips — for identical math).  Same
+    bit-identical-under-any-partitioning contract as ``kmeans_fit``.
 
     ``init_centroids`` (``m × k × dsub``) pins initialization for
-    tests/oracles; otherwise ONE sample collect (≤100k rows) seeds all
-    ``m`` subspaces with driver-side vectorized Lloyd.  At 100 TB, fit
-    on a sample (codebook training needs ~100k rows regardless of
-    corpus size — FAISS practice) and ``pq_encode`` the full corpus;
-    the encode is the only corpus-sized pass and it is a zero-shuffle
-    map."""
+    tests/oracles; otherwise ONE sample collect (≤100k non-NULL rows)
+    seeds all ``m`` subspaces with 5 iterations of the driver sample
+    Lloyd (``_sample_lloyd``, subspace ``s`` seeded by ``seed + s``).
+    At 100 TB, fit on a sample (codebook training needs ~100k rows
+    regardless of corpus size — FAISS practice) and ``pq_encode`` the
+    full corpus; the encode is the only corpus-sized pass and it is a
+    zero-shuffle map."""
+    if m <= 0:
+        raise ValueError(f"m must be positive, got m={m}")
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     if k <= 0 or iters < 0:
         raise ValueError("k must be positive and iters non-negative")
     dsub = dim // m
-    proj = df.select(F.col(vec_col).alias("__v")).filter(
-        F.col("__v").isNotNull()).persist()
-    try:
-        if init_centroids is not None:
-            if len(init_centroids) != m or any(
-                len(b) != k or any(len(c) != dsub for c in b)
-                for b in init_centroids
-            ):
-                raise ValueError(f"init_centroids must be {m} x {k} x {dsub}")
-            books = [[[float(v) for v in c] for c in b]
-                     for b in init_centroids]
-        else:
-            import random
-            from itertools import chain
-
-            import numpy as np
-
-            rows = (
-                proj.sample(fraction=min(sample_fraction, 1.0), seed=seed)
-                .limit(100_000)
-                .collect()
-            )
-            vecs = [r[0] for r in rows]
-            n = len(vecs)
-            if n < k:
-                raise ValueError(
-                    f"not enough sample points ({n}) for k={k}")
-            # same allocation discipline as ivf_build (r10): fromiter
-            # over a flat iterator instead of asarray over nested lists,
-            # and chunked distance blocks so the temporaries stay small
-            # and allocator-reused (first-touch page faults on fresh
-            # ~100 MB temporaries dominate the fit wall on slow-fault
-            # hosts).  Per-row arithmetic unchanged -> codebooks are
-            # bit-identical to the unchunked form.
-            _check_sample_dims(vecs, dim, "pq_fit")
-            P = np.fromiter(chain.from_iterable(vecs), dtype=np.float64,
-                            count=n * dim).reshape(n, dim)
-            _CH = 16384
-            books = []
-            for s in range(m):
-                Ps = P[:, s * dsub:(s + 1) * dsub]
-                rng = random.Random(seed + s)
-                C = Ps[rng.sample(range(n), k)].copy()
-                p_sq = np.empty(n, dtype=np.float64)
-                for s0 in range(0, n, _CH):
-                    blk = Ps[s0:s0 + _CH]
-                    p_sq[s0:s0 + _CH] = (blk * blk).sum(axis=1)
-                best = np.empty(n, dtype=np.intp)
-                for _ in range(5):
-                    c_sq = (C * C).sum(axis=1)[None, :]
-                    for s0 in range(0, n, _CH):
-                        blk = Ps[s0:s0 + _CH]
-                        d2 = (p_sq[s0:s0 + _CH, None]
-                              - 2.0 * (blk @ C.T) + c_sq)
-                        best[s0:s0 + _CH] = d2.argmin(axis=1)
-                    for ci in range(k):
-                        mem = Ps[best == ci]
-                        if len(mem):
-                            C[ci] = mem.mean(axis=0)
-                books.append([list(map(float, c)) for c in C])
-        for _ in range(iters):
-            model = PQModel(books, dim)
-            entries = F.explode(F.array(*[
-                F.struct(
-                    F.lit(s).alias("s"),
-                    F.element_at("__codes", s + 1).alias("c"),
-                    F.expr(
-                        f"transform(slice(__v, {s * dsub + 1}, {dsub}), "
-                        f"x -> CAST(x AS DOUBLE))"
-                    ).alias("x"),
-                )
-                for s in range(m)
-            ])).alias("p")
-            # the same size gate as the final encode: at small codebooks
-            # the unrolled expression beats a Python stage per iteration
-            # even though each iteration recompiles it
-            rows = (
-                proj.withColumn("__codes", pq_encode_expr("__v", model))
-                .select(entries)
-                .groupBy(F.col("p.s").alias("s"), F.col("p.c").alias("c"))
-                .agg(
-                    F.count("*").alias("n"),
-                    *[
-                        F.expr(
-                            f"CAST(SUM(CAST(element_at(p.x, {j + 1}) AS "
-                            f"DECIMAL(38,9))) AS DOUBLE)"
-                        ).alias(f"s{j}")
-                        for j in range(dsub)
-                    ],
-                )
-                .collect()
-            )
-            newb = [[list(c) for c in b] for b in books]
-            for r in rows:
-                if r["n"] > 0:
-                    newb[r["s"]][r["c"]] = [
-                        r[f"s{j}"] / r["n"] for j in range(dsub)
-                    ]
-            books = newb
-        return PQModel(books, dim)
-    finally:
-        proj.unpersist()
+    if init_centroids is not None:
+        if len(init_centroids) != m or any(
+            len(b) != k or any(len(c) != dsub for c in b)
+            for b in init_centroids
+        ):
+            raise ValueError(f"init_centroids must be {m} x {k} x {dsub}")
+        books = [[[float(v) for v in c] for c in b] for b in init_centroids]
+    else:
+        books = _sample_lloyd(
+            df.select(F.col(vec_col).alias("__v")).filter(
+                F.col("__v").isNotNull()),
+            dim, m, k, sample_fraction, seed, 5, "pq_fit")
+    books, _, _ = _lloyd(df, vec_col, books, iters)
+    return PQModel(books, dim)
 
 
 def pq_encode_expr(vec_col: str, model: PQModel) -> Column:
     """PQ codes as ``array<int>`` (``m`` entries): per subspace, the
-    first-min argmin over its ``k`` centroids.  The physical form
-    follows ``CENTROID_EXPR_MAX_FLOATS`` over the ``m·k·dsub`` codebook
-    floats: at or below it each subspace is an unrolled
-    ``_sq_dists_sql`` argmin (pure codegen, fuses into the scan);
-    above it one numpy GEMM per Arrow batch.  Either way encoding a
-    100 TB corpus is a narrow map: no shuffle, and the numpy path is
-    Arrow-batched, never row-at-a-time."""
-    if model.m * model.k * model.dsub > CENTROID_EXPR_MAX_FLOATS:
-        return _pq_assign_vectorized(vec_col, model)
-    return F.array(*[
-        F.expr(_first_min_sql(
-            _sq_dists_sql(vec_col, book, s * model.dsub)))
-        for s, book in enumerate(model.codebooks)
-    ])
-
-
-def _pq_assign_vectorized(vec_col: str, model: PQModel) -> Column:
-    """All-subspace PQ assignment as one numpy GEMM pass per Arrow
-    batch — ``pq_encode_expr``'s form above ``CENTROID_EXPR_MAX_FLOATS``.
-    The codebook tensor ships with the task closure (``m·k·dsub``
-    floats, broadcast-sized).  The vector column arrives as ONE
-    contiguous buffer view (``_arrow_list_matrix``) and the code lists
-    go back as one flat int32 buffer + a uniform offsets array — no
-    per-row python objects in either direction.  Per subspace the codes
-    are the first-min argmin of ``||p||² − 2p·c + ||c||²``."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.functions import arrow_udf
-
-    B = [np.asarray(b, dtype=np.float64) for b in model.codebooks]
-    m, dsub = model.m, model.dsub
-    dim = model.dim
-
-    def _enc(vs: "pa.Array") -> "pa.Array":
-        n = len(vs)
-        if n == 0:
-            return pa.ListArray.from_arrays(
-                pa.array([0], type=pa.int32()),
-                pa.array([], type=pa.int32()))
-        P = _arrow_list_matrix(vs, "_pq_assign_vectorized", dim)
-        out = np.empty((n, m), dtype=np.int32)
-        for s in range(m):
-            Ps = P[:, s * dsub:(s + 1) * dsub]
-            C = B[s]
-            d2 = ((Ps * Ps).sum(axis=1)[:, None]
-                  - 2.0 * (Ps @ C.T)
-                  + (C * C).sum(axis=1)[None, :])
-            out[:, s] = d2.argmin(axis=1)
-        return pa.ListArray.from_arrays(
-            pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32)),
-            pa.array(out.reshape(-1)))
-
-    # same annotation workaround as _nearest_col
-    _enc.__annotations__ = {"vs": pa.Array, "return": pa.Array}
-    return arrow_udf(_enc, "array<int>")(F.expr(vec_col))
+    first-min argmin over its ``k`` centroids — the ``c`` field of the
+    nearest-centroid kernel ``_nearest_col``, whose form follows
+    ``CENTROID_EXPR_MAX_FLOATS`` over the ``m·k·dsub`` codebook floats:
+    at or below it each subspace is an unrolled ``_sq_dists_sql``
+    argmin (pure codegen, fuses into the scan); above it one numpy GEMM
+    per subspace and Arrow batch.  Either way encoding a 100 TB corpus
+    is a narrow map: no shuffle, and the numpy path is Arrow-batched,
+    never row-at-a-time."""
+    return _nearest_col(vec_col, model.codebooks).getField("c")
 
 
 def pq_adc_topk(

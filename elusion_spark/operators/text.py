@@ -960,6 +960,50 @@ def hashed_tf_features(
     return out
 
 
+def _bm25_contributions(df: DataFrame, id_col: str, text_col: str,
+                        k1: float, b: float, round_digits: int,
+                        term_filter, max_df_fraction: float | None = None,
+                        ) -> DataFrame:
+    """Per-(doc, term) BM25 contributions ``__c`` (DECIMAL-rounded to
+    ``round_digits``) keyed by ``(__id, __t)`` — the query-independent
+    part shared by ``bm25_score`` and ``bm25_score_batched``.
+    ``term_filter`` restricts the exploded ``(__id, __dl, __t)`` token
+    rows to the scored terms; ``max_df_fraction`` drops terms with
+    ``df > floor(frac·N)`` before the contribution is computed."""
+    toks_expr = f"filter(split(lower(trim({text_col})), ' +'), t -> t <> '')"
+    d2 = df.select(
+        F.col(id_col).alias("__id"),
+        F.expr(f"size({toks_expr})").alias("__dl"),
+        F.expr(toks_expr).alias("__toks"),
+    )
+    stats = d2.agg(F.count("*").alias("__n"), F.sum("__dl").alias("__tdl"))
+    toks = term_filter(
+        d2.select("__id", "__dl", F.explode("__toks").alias("__t")))
+    dft = F.broadcast(
+        toks.select("__id", "__t").distinct().groupBy("__t").agg(
+            F.count("*").alias("__df")
+        )
+    )
+    tf = toks.groupBy("__id", "__dl", "__t").agg(F.count("*").alias("__tf"))
+    contrib = (
+        f"CAST(ROUND("
+        f"LN(1 + (CAST(__n - __df AS DOUBLE) + 0.5) / (CAST(__df AS DOUBLE) + 0.5))"
+        f" * (CAST(__tf AS DOUBLE) * ({k1!r} + 1))"
+        f" / (CAST(__tf AS DOUBLE) + {k1!r} * (1 - {b!r} + {b!r} * "
+        f"CAST(__dl AS DOUBLE) / (CAST(__tdl AS DOUBLE) / CAST(__n AS DOUBLE))))"
+        f", {round_digits}) AS DECIMAL(28,{round_digits}))"
+    )
+    scored = tf.join(dft, "__t").crossJoin(F.broadcast(stats))
+    if max_df_fraction is not None:
+        # prune BEFORE any per-query fan-out join — that is where a
+        # stopword term multiplies df(t) by |queries containing t|
+        scored = scored.filter(F.expr(
+            f"__df <= FLOOR({float(max_df_fraction)!r} "
+            f"* CAST(__n AS DOUBLE))"
+        ))
+    return scored.withColumn("__c", F.expr(contrib))
+
+
 def bm25_score(
     df: DataFrame,
     query_terms: list[str],
@@ -982,36 +1026,10 @@ def bm25_score(
     (id, term-hashable string, two ints).
 
     Returns ``(id_col, score)`` for documents matching >= 1 term."""
-    toks_expr = f"filter(split(lower(trim({text_col})), ' +'), t -> t <> '')"
-    d2 = df.select(
-        F.col(id_col).alias("__id"),
-        F.expr(f"size({toks_expr})").alias("__dl"),
-        F.expr(toks_expr).alias("__toks"),
-    )
-    stats = d2.agg(
-        F.count("*").alias("__n"), F.sum("__dl").alias("__tdl")
-    )
-    toks = d2.select(
-        "__id", "__dl", F.explode("__toks").alias("__t")
-    ).filter(F.col("__t").isin(list(query_terms)))
-    dft = F.broadcast(
-        toks.select("__id", "__t").distinct().groupBy("__t").agg(
-            F.count("*").alias("__df")
-        )
-    )
-    tf = toks.groupBy("__id", "__dl", "__t").agg(F.count("*").alias("__tf"))
-    contrib = (
-        f"CAST(ROUND("
-        f"LN(1 + (CAST(__n - __df AS DOUBLE) + 0.5) / (CAST(__df AS DOUBLE) + 0.5))"
-        f" * (CAST(__tf AS DOUBLE) * ({k1!r} + 1))"
-        f" / (CAST(__tf AS DOUBLE) + {k1!r} * (1 - {b!r} + {b!r} * "
-        f"CAST(__dl AS DOUBLE) / (CAST(__tdl AS DOUBLE) / CAST(__n AS DOUBLE))))"
-        f", {round_digits}) AS DECIMAL(28,{round_digits}))"
-    )
     return (
-        tf.join(dft, "__t")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("__c", F.expr(contrib))
+        _bm25_contributions(
+            df, id_col, text_col, k1, b, round_digits,
+            lambda toks: toks.filter(F.col("__t").isin(list(query_terms))))
         .groupBy("__id")
         .agg(F.expr("CAST(SUM(__c) AS DOUBLE)").alias("score"))
         .select(F.col("__id").alias(id_col), "score")
@@ -1063,42 +1081,12 @@ def bm25_score_batched(
     qpairs = queries.select(
         F.col(q_id).alias("__qid"), F.explode(q_terms).alias("__t")
     ).distinct()
-    term_set = qpairs.select("__t").distinct()
-
-    toks_expr = f"filter(split(lower(trim({text_col})), ' +'), t -> t <> '')"
-    d2 = df.select(
-        F.col(id_col).alias("__id"),
-        F.expr(f"size({toks_expr})").alias("__dl"),
-        F.expr(toks_expr).alias("__toks"),
-    )
-    stats = d2.agg(F.count("*").alias("__n"), F.sum("__dl").alias("__tdl"))
-    toks = d2.select(
-        "__id", "__dl", F.explode("__toks").alias("__t")
-    ).join(F.broadcast(term_set), "__t", "left_semi")
-    dft = F.broadcast(
-        toks.select("__id", "__t").distinct().groupBy("__t").agg(
-            F.count("*").alias("__df")
-        )
-    )
-    tf = toks.groupBy("__id", "__dl", "__t").agg(F.count("*").alias("__tf"))
-    contrib = (
-        f"CAST(ROUND("
-        f"LN(1 + (CAST(__n - __df AS DOUBLE) + 0.5) / (CAST(__df AS DOUBLE) + 0.5))"
-        f" * (CAST(__tf AS DOUBLE) * ({k1!r} + 1))"
-        f" / (CAST(__tf AS DOUBLE) + {k1!r} * (1 - {b!r} + {b!r} * "
-        f"CAST(__dl AS DOUBLE) / (CAST(__tdl AS DOUBLE) / CAST(__n AS DOUBLE))))"
-        f", {round_digits}) AS DECIMAL(28,{round_digits}))"
-    )
-    scored = tf.join(dft, "__t").crossJoin(F.broadcast(stats))
-    if max_df_fraction is not None:
-        # prune BEFORE the qpairs fan-out join — that is where a
-        # stopword term multiplies df(t) by |queries containing t|
-        scored = scored.filter(F.expr(
-            f"__df <= FLOOR({float(max_df_fraction)!r} "
-            f"* CAST(__n AS DOUBLE))"
-        ))
+    term_set = F.broadcast(qpairs.select("__t").distinct())
     return (
-        scored.withColumn("__c", F.expr(contrib))
+        _bm25_contributions(
+            df, id_col, text_col, k1, b, round_digits,
+            lambda toks: toks.join(term_set, "__t", "left_semi"),
+            max_df_fraction)
         .join(F.broadcast(qpairs), "__t")
         .groupBy("__qid", "__id")
         .agg(F.expr("CAST(SUM(__c) AS DOUBLE)").alias("score"))

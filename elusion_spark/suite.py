@@ -4734,7 +4734,7 @@ def q127(spark, sf):
         "array(CAST(element_at(embedding, 1) AS DOUBLE), "
         "CAST(element_at(embedding, 2) AS DOUBLE)) AS v")
     m = kmeans_fit(e, "v", dim=2, k=2, iters=_Q127_ITERS,
-                   init_centroids=_Q127_INIT, track_inertia=False)
+                   init_centroids=_Q127_INIT)
     return spark.createDataFrame(
         [(i, int(m.sizes[i]), round(m.centroids[i][0], 7),
           round(m.centroids[i][1], 7)) for i in range(2)],

@@ -3031,21 +3031,22 @@ def test_kmeans_fit_converges_and_is_deterministic(spark):
 
 
 def test_ivf_build_refine_iters_improves_inertia(spark):
-    """Full-data refinement after the sample fit can only improve (or
-    hold) the clustering objective; the refined index keeps the same
-    shape contract."""
-    from pyspark.sql import functions as F
-
-    from elusion_spark.operators.similarity import ivf_build, kmeans_fit
+    """Full-data refinement after the sample fit (kmeans_fit seeded
+    with ivf_build's centroids) can only improve (or hold) the
+    clustering objective; the refined index keeps the same shape
+    contract."""
+    from elusion_spark.operators.similarity import (
+        assign_clusters_col, ivf_build, kmeans_fit)
 
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet")
-    base_df, base_c = ivf_build(emb, "embedding", dim=64, nlist=4,
-                                sample_fraction=0.2, seed=3)
-    ref_df, ref_c = ivf_build(emb, "embedding", dim=64, nlist=4,
-                              sample_fraction=0.2, seed=3,
-                              refine_iters=3)
+    _, base_c = ivf_build(emb, "embedding", dim=64, nlist=4,
+                          sample_fraction=0.2, seed=3)
+    ref_c = kmeans_fit(emb, "embedding", dim=64, k=4, iters=3,
+                       init_centroids=base_c).centroids
     assert len(ref_c) == 4 and all(len(c) == 64 for c in ref_c)
+    ref_df = emb.withColumn("cluster_id",
+                            assign_clusters_col("embedding", ref_c))
     assert ref_df.filter("cluster_id IS NULL").count() == 0
 
     def inertia(cents):
@@ -3184,7 +3185,7 @@ def test_lloyd_near_ties_follow_the_oracle_arithmetic(spark):
         "id long, v array<double>").repartition(3)
 
     m = kmeans_fit(df, "v", dim=dim, k=k, iters=2,
-                   init_centroids=C0.tolist(), track_inertia=False)
+                   init_centroids=C0.tolist())
     wantC, want_sizes = _oracle_lloyd(X, C0, 2)
     assert m.centroids == wantC.tolist()
     assert m.sizes == want_sizes
@@ -3276,6 +3277,36 @@ def test_centroid_kernels_share_one_size_gate(spark, monkeypatch):
         assert python_nodes(above[site]) == 1, site
         for p in (at_gate[site], above[site]):
             assert "zip_with" not in p, site
+
+
+def test_centroid_kernel_rejects_wrong_length_on_both_sides(
+        spark, monkeypatch):
+    """A vector longer than the declared dim fails the same way on both
+    sides of CENTROID_EXPR_MAX_FLOATS: the expression form's
+    raise_error and the Arrow form's _arrow_list_matrix both name the
+    expected length, for assign_clusters_col, pq_encode_expr and
+    kmeans_fit — never a result computed from the first dim values."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from elusion_spark.operators import similarity as S
+
+    df = spark.range(20).select(F.array(
+        *[(F.col("id") * (j + 1)).cast("double") for j in range(3)]
+    ).alias("v"))
+    cents = [[0.0, 0.0], [10.0, -10.0]]
+    model = S.PQModel([[[0.0], [10.0]], [[0.0], [-10.0]]], 2)
+    for gate in (10 ** 9, 0):  # expression form, then Arrow form
+        monkeypatch.setattr(S, "CENTROID_EXPR_MAX_FLOATS", gate)
+        for site in (
+            lambda: df.select(S.assign_clusters_col("v", cents)).collect(),
+            lambda: df.select(S.pq_encode_expr("v", model)).collect(),
+            lambda: S.kmeans_fit(df, "v", dim=2, k=2, iters=1,
+                                 init_centroids=cents),
+        ):
+            with _pytest.raises(Exception,
+                                match="expected fixed-length 2 vectors"):
+                site()
 
 
 def test_evaluate_classifier_no_auc(spark):
@@ -3938,31 +3969,33 @@ def test_pq_fit_validates_divisibility(spark):
     df = spark.createDataFrame([(1, [0.0] * 6)], "id long, v array<double>")
     with _pytest.raises(ValueError):
         pq_fit(df, "v", dim=6, m=4, k=2)
+    with _pytest.raises(ValueError, match="m must be positive"):
+        pq_fit(df, "v", dim=6, m=0, k=2)
 
 
-def test_pq_encode_vectorized_path_matches_numpy(spark):
+def test_pq_encode_vectorized_path_matches_numpy(spark, monkeypatch):
     """Above the expression threshold the Arrow GEMM path kicks in and
     still produces first-min numpy argmin codes."""
     import numpy as np
 
-    from elusion_spark.operators.similarity import PQModel, pq_encode_expr
+    from elusion_spark.operators import similarity as S
 
     rng = np.random.default_rng(3)
     X = rng.normal(size=(50, 16))
-    B = rng.normal(size=(4, 80, 4))  # 4*80*4 = 1280... force big below
-    model = PQModel([[list(map(float, c)) for c in B[s]]
-                     for s in range(4)], dim=16)
-    assert model.m * model.k * model.dsub <= 4096
-    # force the vectorized path regardless of size to pin agreement
-    from elusion_spark.operators.similarity import _pq_assign_vectorized
+    B = rng.normal(size=(4, 80, 4))
+    model = S.PQModel([[list(map(float, c)) for c in B[s]]
+                       for s in range(4)], dim=16)
     df = spark.createDataFrame(
         [(i, [float(v) for v in X[i]]) for i in range(50)],
         "id long, v array<double>",
     )
+    # force each physical form regardless of size to pin agreement
+    monkeypatch.setattr(S, "CENTROID_EXPR_MAX_FLOATS", 0)
     got = {r["id"]: list(r["c"]) for r in df.withColumn(
-        "c", _pq_assign_vectorized("v", model)).collect()}
+        "c", S.pq_encode_expr("v", model)).collect()}
+    monkeypatch.setattr(S, "CENTROID_EXPR_MAX_FLOATS", 10 ** 9)
     exp_small = {r["id"]: list(r["c"]) for r in df.withColumn(
-        "c", pq_encode_expr("v", model)).collect()}
+        "c", S.pq_encode_expr("v", model)).collect()}
     for i in range(50):
         for s in range(4):
             d = ((X[i][s * 4:(s + 1) * 4] - B[s]) ** 2).sum(axis=1)
@@ -5989,7 +6022,7 @@ def test_pq_assign_arrow_parity(spark):
     """PQ encode at the real codebook shape (m=8, k=256, dsub=96 —
     m·k·dsub far past the centroid-float gate): pq_encode_expr routes
     to the Arrow form, and its codes equal a numpy GEMM first-min
-    argmin per subspace on the same inputs."""
+    argmin of ``||c||² − 2p·c`` per subspace on the same inputs."""
     import numpy as np
 
     from elusion_spark.operators.similarity import PQModel, pq_encode_expr
@@ -6010,9 +6043,8 @@ def test_pq_assign_arrow_parity(spark):
     for s in range(8):
         P = V[:, s * 96:(s + 1) * 96]
         C = np.asarray(model.codebooks[s])
-        d2 = ((P * P).sum(axis=1)[:, None] - 2.0 * (P @ C.T)
-              + (C * C).sum(axis=1)[None, :])
-        for i, c in zip(ids, d2.argmin(axis=1)):
+        g = (C * C).sum(axis=1) - 2.0 * (P @ C.T)
+        for i, c in zip(ids, g.argmin(axis=1)):
             want[i].append(int(c))
     assert got == want
 

@@ -859,10 +859,11 @@ def test_train_logreg_one_job_per_iteration(spark):
 
 
 def test_kmeans_fit_one_job_per_iteration(spark):
-    """Same contract for distributed Lloyd: one grouped-aggregation job
-    per iteration (assignment folds into the agg as a broadcast argmin
-    expression — no separate assignment job)."""
-    from elusion_spark.operators.similarity import kmeans_fit
+    """Same contract for distributed Lloyd, k-means and PQ alike (one
+    loop, ``_lloyd``): one grouped-aggregation job per iteration
+    (assignment folds into the agg as a broadcast argmin expression —
+    no separate assignment job; PQ's m codebooks share the job)."""
+    from elusion_spark.operators.similarity import kmeans_fit, pq_fit
 
     df = spark.range(0, 300).selectExpr(
         "transform(sequence(0, 3), j -> "
@@ -870,16 +871,22 @@ def test_kmeans_fit_one_job_per_iteration(spark):
     )
     init = [[float((i * 13 + j * 7) % 97) for j in range(4)]
             for i in range(4)]
-    counts = {
-        iters: _jobs_for(
-            spark, f"pin_kmeans_{iters}",
-            lambda iters=iters: kmeans_fit(
-                df, "v", dim=4, k=4, iters=iters, init_centroids=init),
-        )
-        for iters in (2, 4)
+    books = [[c[2 * s:2 * s + 2] for c in init] for s in range(2)]
+    fits = {
+        "kmeans": lambda iters: kmeans_fit(
+            df, "v", dim=4, k=4, iters=iters, init_centroids=init),
+        "pq": lambda iters: pq_fit(
+            df, "v", dim=4, m=2, k=4, iters=iters, init_centroids=books),
     }
-    assert counts[4] - counts[2] == 2, (
-        f"expected exactly 1 job per extra Lloyd iteration, got {counts}")
+    for name, fit in fits.items():
+        counts = {
+            iters: _jobs_for(spark, f"pin_{name}_{iters}",
+                             lambda iters=iters: fit(iters))
+            for iters in (2, 4)
+        }
+        assert counts[4] - counts[2] == 2, (
+            f"{name}: expected exactly 1 job per extra Lloyd iteration, "
+            f"got {counts}")
 
 
 def test_bloom_prefilter_no_false_negatives_and_plan(spark):

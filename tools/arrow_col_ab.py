@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Isolated boundary microbench for the round-11 Column-surface Arrow
-rewrites (the centroid kernel now in _nearest_col /
-_pq_assign_vectorized / _pq_adc_vectorized / classifier_score wide
-head): measures, on the EXACT worker input shape (one Arrow batch of
-10k x dim float32 list rows), the per-batch cost of
+rewrites (the nearest-centroid kernel, now one _nearest_col for
+k-means/IVF assignment and PQ encode / _pq_adc_vectorized /
+classifier_score wide head): measures, on the EXACT worker input
+shape (one Arrow batch of 10k x dim float32 list rows), the per-batch
+cost of
 
   (a) the pandas_udf input path: Arrow -> pandas Series of ndarrays
       (what Spark's serializer does before the UDF runs) + the
