@@ -127,24 +127,6 @@ def jaccard_expr(a: str, b: str) -> Column:
 
 # ------------------------------------------------------------- minhash-lsh
 
-def minhash_signature(shingles_col: str, num_hashes: int = 64) -> Column:
-    """MinHash signature as an array<bigint> (composable single-expression
-    form).
-
-    CAUTION for pipelines: higher-order functions are CodegenFallback
-    (interpreted, no subexpression elimination), so if ``shingles_col``
-    is itself an unmaterialized expression Catalyst will inline it and
-    re-evaluate the full shingle split once per hash-family member —
-    an H× blowup.  ``minhash_dedup_pairs`` avoids this by materializing
-    the hashed shingles first; standalone users should persist the
-    shingle column before applying this."""
-    return F.expr(
-        f"transform(sequence(0, {num_hashes - 1}), i -> "
-        f"array_min(transform(transform({shingles_col}, s -> xxhash64(s)), "
-        f"h -> xxhash64(i, h))))"
-    )
-
-
 def minhash_signature_from_hashes(hashes_col: str, num_hashes: int = 64) -> Column:
     """Signature from an already-hashed shingle array (array<bigint>):
     the H-member family is derived by re-hashing fixed-width longs —
@@ -152,6 +134,111 @@ def minhash_signature_from_hashes(hashes_col: str, num_hashes: int = 64) -> Colu
     return F.expr(
         f"transform(sequence(0, {num_hashes - 1}), i -> "
         f"array_min(transform({hashes_col}, h -> xxhash64(i, h))))"
+    )
+
+
+def _minhash_sign(frame: DataFrame, num_hashes: int, shingle_k: int):
+    """The one MinHash signer.  ``frame`` holds ``__id``, ``__text`` and
+    any key columns that ride along; returns ``(hashed, sigs)``: the
+    distinct shingle hashes ``(__id, *keys, __h)`` and the signatures
+    ``(__id, *keys, __sig)`` derived from them.  Nothing is persisted —
+    callers choose (see ``minhash_dedup_pairs``)."""
+    from .similarity import _ensure_parallelism
+
+    keys = [c for c in frame.columns if c != "__text"]
+    hashed = _ensure_parallelism(frame).select(
+        *keys, shingle_hash_expr("__text", shingle_k).alias("__h"))
+    sigs = hashed.select(
+        *keys, minhash_signature_from_hashes("__h", num_hashes).alias("__sig"))
+    return hashed, sigs
+
+
+def _band_hashes(num_hashes: int, bands: int) -> Column:
+    """``posexplode`` of the ``bands`` band hashes of ``__sig`` (each
+    over ``num_hashes / bands`` consecutive rows) as ``(band_idx,
+    band_hash)``.  Bands must tile the signature: a zero-row band
+    hashes the empty slice, so every document would collide in it."""
+    if not 1 <= bands <= num_hashes or num_hashes % bands:
+        raise ValueError(
+            f"bands must divide num_hashes with 1 <= bands <= num_hashes "
+            f"(got num_hashes={num_hashes}, bands={bands})")
+    rows = num_hashes // bands
+    return F.posexplode(
+        F.expr(f"transform(sequence(0, {bands - 1}), b -> "
+               f"hash(slice(__sig, b * {rows} + 1, {rows})))")
+    ).alias("band_idx", "band_hash")
+
+
+def _cap_buckets(frame: DataFrame, keys: list[str], order_col: str,
+                 cap: int | None) -> DataFrame:
+    """Skew guard shared by every blocking key: keep the first ``cap``
+    rows of each ``keys`` bucket in ``order_col`` order (a bucket of B
+    rows yields B² candidate pairs).  ``cap=None`` is uncapped."""
+    if cap is None:
+        return frame
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(order_col)
+    return (
+        frame.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= F.lit(cap))
+        .drop("__rn")
+    )
+
+
+def _bucket_pairs(banded: DataFrame, keys: list[str],
+                  cap: int | None) -> DataFrame:
+    """The one bucket self-join: cap each ``keys`` bucket of ``banded``
+    at ``cap`` rows in ``__id`` order, persist, self-join on ``keys`` and
+    keep ``id_a < id_b``.  ``__id`` comes out as ``id_a``/``id_b`` and
+    every other non-key column ``c`` as ``<c>_a``/``<c>_b`` (leading
+    underscores dropped); callers verify and dedup the pairs."""
+    from pyspark import StorageLevel
+
+    # both join sides read it; the broadcast side cannot reuse the
+    # streamed side's exchange, so without a persist the whole
+    # explode+cap chain runs twice (two parallel Exchange/WindowGroupLimit
+    # chains in the plan)
+    b = _cap_buckets(banded, keys, "__id", cap).persist(
+        StorageLevel.MEMORY_AND_DISK)
+
+    def side(s: str) -> DataFrame:
+        return b.select(*[
+            c if c in keys else F.col(c).alias(f"{c.lstrip('_')}_{s}")
+            for c in b.columns
+        ])
+
+    return side("a").join(side("b"), keys).filter(
+        F.col("id_a") < F.col("id_b"))
+
+
+def _minhash_jaccard(cand: DataFrame, verify: str, num_hashes: int,
+                     threshold: float, sigs: DataFrame | None,
+                     hashed: DataFrame | None) -> DataFrame:
+    """The one MinHash pair scorer: candidate pairs ``(id_a, id_b)``
+    gain ``jaccard`` and keep ``jaccard >= threshold``.  ``'estimate'``
+    is signature agreement over ``sigs`` ``(__id, __sig)`` — matching
+    components / H, the unbiased MinHash estimator; ``'exact'`` is the
+    Jaccard of the shingle-hash sets in ``hashed`` ``(__id, __h)``
+    (string-set Jaccard up to 64-bit collisions)."""
+    if verify == "estimate":
+        side, col, v = sigs, "__sig", "sig"
+        score = F.expr(
+            f"CAST(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), "
+            f"v -> v)) AS DOUBLE) / {float(num_hashes)!r}")
+    elif verify == "exact":
+        side, col, v = hashed, "__h", "sh"
+        score = jaccard_expr("sh_a", "sh_b")
+    else:
+        raise ValueError(
+            f"verify must be 'estimate' or 'exact', got {verify!r}")
+    return (
+        cand.join(side.select(F.col("__id").alias("id_a"),
+                              F.col(col).alias(f"{v}_a")), "id_a")
+        .join(side.select(F.col("__id").alias("id_b"),
+                          F.col(col).alias(f"{v}_b")), "id_b")
+        .withColumn("jaccard", score)
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -176,13 +263,15 @@ def minhash_dedup_pairs(
     output gains the group column when set.
 
     Pipeline: shingle → minhash(H) → B bands of H/B rows → bucket join on
-    (band_idx, band_hash) → Jaccard filter.
+    (band_idx, band_hash) → Jaccard filter.  ``bands`` must divide
+    ``num_hashes``.
 
     ``verify='estimate'`` (the 100 TB path) scores pairs by signature
     agreement (matching components / H — the unbiased MinHash estimator,
     σ≈sqrt(j(1-j)/H)): no shingle sets ever cross a shuffle, per-pair
     work is a 2×H array compare.  ``verify='exact'`` joins the shingle
-    sets back for candidate pairs and computes true Jaccard.
+    sets back for candidate pairs and computes true Jaccard.  Any other
+    value raises ``ValueError``.
 
     Materialization strategy (this is the load-bearing part): distinct
     shingle HASHES (``shingle_hash_expr`` — no shingle strings are ever
@@ -196,108 +285,46 @@ def minhash_dedup_pairs(
     the corpus.  Caller may ``.unpersist()`` the result's ancestors
     after consuming."""
     from pyspark import StorageLevel
-    from pyspark.sql import Window
 
-    from .similarity import _ensure_parallelism
-
-    rows = num_hashes // bands
+    band = _band_hashes(num_hashes, bands)
     gsel = [F.col(group_col).alias("__grp")] if group_col else []
     gcols = ["__grp"] if group_col else []
-    hashed = (
-        _ensure_parallelism(
-            df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"),
-                      *gsel)
-        )
-        .select("__id", *gcols,
-                shingle_hash_expr("__text", shingle_k).alias("__h"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sig_df = hashed.select(
-        "__id", *gcols,
-        minhash_signature_from_hashes("__h", num_hashes).alias("__sig")
-    )
+    hashed, sigs = _minhash_sign(
+        df.select(F.col(id_col).alias("__id"),
+                  F.col(text_col).alias("__text"), *gsel),
+        num_hashes, shingle_k)
+    hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
     if verify == "estimate":
-        # estimate mode reads sig_df from THREE plan branches (banding +
+        # estimate mode reads sigs from THREE plan branches (banding +
         # both sides of the pair-scoring join) — persist it.  exact mode
         # consumes it exactly once (banding; the verify joins reuse
         # `hashed` instead), so persisting would cache a corpus×H-longs
         # table nobody reads twice — skipped since r10 (measured: no
         # sf0.1 wall change, O(docs·H·8B) less cache at scale).
-        sig_df = sig_df.persist(StorageLevel.MEMORY_AND_DISK)
+        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
 
     # band explode carries ONLY (id, [group,] band_idx, band_hash)
-    banded = sig_df.select(
-        "__id", *gcols,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> "
-                f"hash(slice(__sig, b * {rows} + 1, {rows})))"
-            )
-        ).alias("band_idx", "band_hash"),
-    )
-    # skew guard: cap pathological buckets (boilerplate explosion) —
-    # a bucket of B docs yields B² candidate pairs
-    w = Window.partitionBy(*gcols, "band_idx", "band_hash").orderBy("__id")
-    banded = (
-        banded.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= F.lit(
-            max_bucket_size if max_bucket_size is not None
-            else (1 << 62)  # None = uncapped, NOT <= NULL (empty!)
-        ))
-        .drop("__rn")
-        # feeds BOTH sides of the bucket self-join; the broadcast side
-        # cannot reuse the streamed side's shuffle exchange, so without a
-        # persist the whole explode+cap-window chain runs twice (seen in
-        # the plan as two parallel Exchange/WindowGroupLimit chains).
-        # (id, band_idx, band_hash) is ~16B/row — tiny vs the corpus.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
     cand = (
-        banded.alias("l")
-        .join(banded.alias("r"), gcols + ["band_idx", "band_hash"])
-        .select(*gcols, F.col("l.__id").alias("id_a"),
-                F.col("r.__id").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(sigs.select("__id", *gcols, band),
+                      gcols + ["band_idx", "band_hash"], max_bucket_size)
+        .select(*gcols, "id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    if verify == "estimate":
-        scored = (
-            cand.join(sig_df.select(F.col("__id").alias("id_a"),
-                                    F.col("__sig").alias("sig_a")), "id_a")
-            .join(sig_df.select(F.col("__id").alias("id_b"),
-                                F.col("__sig").alias("sig_b")), "id_b")
-            .withColumn(
-                "jaccard",
-                F.expr(
-                    f"CAST(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), "
-                    f"v -> v)) AS DOUBLE) / {float(num_hashes)!r}"
-                ),
-            )
-        )
-    else:
-        # exact Jaccard over the distinct shingle-HASH sets (identical to
-        # string-set Jaccard up to 64-bit collisions); reuses `hashed`
-        scored = (
-            cand.join(hashed.select(F.col("__id").alias("id_a"),
-                                    F.col("__h").alias("sh_a")), "id_a")
-            .join(hashed.select(F.col("__id").alias("id_b"),
-                                F.col("__h").alias("sh_b")), "id_b")
-            .withColumn("jaccard", jaccard_expr("sh_a", "sh_b"))
-        )
+    scored = _minhash_jaccard(cand, verify, num_hashes, threshold,
+                              sigs, hashed)
     out_g = [F.col("__grp").alias(group_col)] if group_col else []
     oc = _id_out(df, id_col)
-    return scored.filter(F.col("jaccard") >= threshold).select(
-        *out_g, oc("id_a"), oc("id_b"), "jaccard"
-    )
+    return scored.select(*out_g, oc("id_a"), oc("id_b"), "jaccard")
 
 
 def minhash_dedup(
     df: DataFrame, id_col: str, text_col: str, **kwargs
 ) -> DataFrame:
-    """Drop near-duplicates, keeping the smallest id of each duplicate
-    cluster (single-link via the pair list — connected components are
-    approximated by min-id propagation over candidate pairs; exact CC
-    would iterate, unnecessary at the usual dedup thresholds)."""
+    """Drop near-duplicates: anti-join every ``id_b`` of the pair list,
+    so each pair keeps its smaller id.  Not a cluster resolution — pairs
+    (1, 3) and (2, 3) keep both 1 and 2 even when they form one
+    cluster.  For one survivor per cluster on integral ids use
+    ``dedup_keep_cluster_min``."""
     pairs = minhash_dedup_pairs(df, id_col, text_col, **kwargs)
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
@@ -440,6 +467,10 @@ def hamming_near_dup_pairs(
 
     from .similarity import _ensure_parallelism
 
+    if not 1 <= bands <= bits:
+        # a zero-width band puts every signature into one bucket
+        raise ValueError(
+            f"bands must be in 1..bits (got bits={bits}, bands={bands})")
     width = bits // bands
     sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
     gcols = [group_col] if group_col else []
@@ -462,36 +493,12 @@ def hamming_near_dup_pairs(
             )
         ).alias("band_idx", "band_val"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*gcols, "band_idx", "band_val").orderBy("__id")
-    banded = (
-        banded.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= F.lit(
-            max_bucket_size if max_bucket_size is not None
-            else (1 << 62)  # None = uncapped, NOT <= NULL (empty!)
-        ))
-        .drop("__rn")
-        # both self-join sides read this; see minhash_dedup_pairs — an
-        # unpersisted frame would run the explode+cap chain twice
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    l = banded.select(
-        *gcols,
-        F.col("__id").alias("id_a"), F.col("__sim").alias("sim_a"),
-        "band_idx", "band_val",
-    )
-    r = banded.select(
-        *gcols,
-        F.col("__id").alias("id_b"), F.col("__sim").alias("sim_b"),
-        "band_idx", "band_val",
-    )
     # verify (bit_count on two longs) is far cheaper than the pair-dedup
     # shuffle, so filter FIRST and dedup only the survivors — the
     # multi-band duplicate factor is at most `bands`
     return (
-        l.join(r, gcols + ["band_idx", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(banded, gcols + ["band_idx", "band_val"],
+                      max_bucket_size)
         .withColumn(
             "hamming",
             F.expr("bit_count(sim_a ^ sim_b)").cast("int"),
@@ -755,58 +762,27 @@ def build_signature_store(
     the full-corpus banding/signature pass happens ONCE; each day's
     increment then joins its own (tiny) banded frame against the store.
     Store size is O(docs · (H + B) · 8B) — document bodies are never
-    stored or re-read.  ``mode="append"`` admits accepted increments
-    into the store (see ``append_to_signature_store``).
+    stored or re-read.  ``mode="append"`` admits an accepted increment
+    into the store (append-only — its ids must be new; the store never
+    rewrites history).
 
     At full scale, register ``banded`` as a bucketed table on
     (band_idx, band_hash) (`operators.scale.write_bucketed`) and the
     incremental join's store side needs no shuffle at all."""
     from pyspark import StorageLevel
 
-    from .similarity import _ensure_parallelism
-
-    rows = num_hashes // bands
-    hashed = (
-        _ensure_parallelism(
-            df.select(F.col(id_col).alias("__id"),
-                      F.col(text_col).alias("__text"))
-        )
-        .select("__id", shingle_hash_expr("__text", shingle_k).alias("__h"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sig_df = hashed.select(
-        "__id", minhash_signature_from_hashes("__h", num_hashes).alias("__sig")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sig_df.select(
+    band = _band_hashes(num_hashes, bands)
+    _, sigs = _minhash_sign(
+        df.select(F.col(id_col).alias("__id"),
+                  F.col(text_col).alias("__text")),
+        num_hashes, shingle_k)
+    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    sigs.select(
         F.col("__id").alias("id"), F.col("__sig").alias("sig")
     ).write.mode(mode).parquet(f"{path}/sigs")
-    sig_df.select(
-        F.col("__id").alias("id"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> "
-                f"hash(slice(__sig, b * {rows} + 1, {rows})))"
-            )
-        ).alias("band_idx", "band_hash"),
-    ).write.mode(mode).parquet(f"{path}/banded")
-    sig_df.unpersist()
-    hashed.unpersist()
-
-
-def append_to_signature_store(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-) -> None:
-    """Admit an accepted increment into the store (append-only — ids
-    must be new; the store never rewrites history)."""
-    build_signature_store(df, id_col, text_col, path,
-                          num_hashes=num_hashes, bands=bands,
-                          shingle_k=shingle_k, mode="append")
+    sigs.select(F.col("__id").alias("id"), band).write.mode(mode).parquet(
+        f"{path}/banded")
+    sigs.unpersist()
 
 
 def incremental_minhash_pairs(
@@ -831,6 +807,7 @@ def incremental_minhash_pairs(
     documents' text, so pass ``corpus_df`` covering store ∪ increment
     (this re-reads matched documents only — candidates, not the corpus —
     but it is the testing path; production stays on the estimator).
+    ``verify`` is parsed exactly as in ``minhash_dedup_pairs``.
 
     Cost shape (the whole point): the increment is shingled/signed in
     full, but the store contributes only the band-bucket rows that
@@ -841,35 +818,21 @@ def incremental_minhash_pairs(
     scan on (store ∪ increment) and keeping pairs that touch the
     increment (asserted in tests)."""
     from pyspark import StorageLevel
-    from pyspark.sql import Window
 
-    from .similarity import _ensure_parallelism
-
+    band = _band_hashes(num_hashes, bands)
     spark = new_df.sparkSession
-    rows = num_hashes // bands
-    hashed = (
-        _ensure_parallelism(
-            new_df.select(F.col(id_col).alias("__id"),
-                          F.col(text_col).alias("__text"))
-        )
-        .select("__id", shingle_hash_expr("__text", shingle_k).alias("__h"))
-    )
-    new_sigs = hashed.select(
-        "__id", minhash_signature_from_hashes("__h", num_hashes).alias("__sig")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    _, new_sigs = _minhash_sign(
+        new_df.select(F.col(id_col).alias("__id"),
+                      F.col(text_col).alias("__text")),
+        num_hashes, shingle_k)
+    new_sigs = new_sigs.persist(StorageLevel.MEMORY_AND_DISK)
     new_banded = new_sigs.select(
-        F.col("__id").alias("id"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> "
-                f"hash(slice(__sig, b * {rows} + 1, {rows})))"
-            )
-        ).alias("band_idx", "band_hash"),
-        F.lit(True).alias("is_new"),
+        "__id", band, F.lit(True).alias("is_new"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     store_banded = spark.read.parquet(f"{store_path}/banded").select(
-        "id", "band_idx", "band_hash", F.lit(False).alias("is_new")
+        F.col("id").alias("__id"), "band_idx", "band_hash",
+        F.lit(False).alias("is_new"),
     )
     # prune the store to colliding buckets BEFORE the skew cap/self-join:
     # at 100 TB this is the difference between reading bucket rows for
@@ -877,66 +840,31 @@ def incremental_minhash_pairs(
     hot = new_banded.select("band_idx", "band_hash").distinct()
     store_hit = store_banded.join(hot, ["band_idx", "band_hash"],
                                   "left_semi")
-    both = store_hit.unionByName(new_banded)
-    w = Window.partitionBy("band_idx", "band_hash").orderBy("id")
-    both = (
-        both.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= F.lit(
-            max_bucket_size if max_bucket_size is not None
-            else (1 << 62)  # None = uncapped, NOT <= NULL (empty!)
-        ))
-        .drop("__rn")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
     cand = (
-        both.alias("l")
-        .join(both.alias("r"), ["band_idx", "band_hash"])
-        .filter(F.col("l.id") < F.col("r.id"))
-        .filter(F.col("l.is_new") | F.col("r.is_new"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        _bucket_pairs(store_hit.unionByName(new_banded),
+                      ["band_idx", "band_hash"], max_bucket_size)
+        .filter(F.col("is_new_a") | F.col("is_new_b"))
+        .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
     all_sigs = (
         spark.read.parquet(f"{store_path}/sigs")
-        .unionByName(new_sigs.select(F.col("__id").alias("id"),
-                                     F.col("__sig").alias("sig")))
+        .select(F.col("id").alias("__id"), F.col("sig").alias("__sig"))
+        .unionByName(new_sigs)
     )
-    if verify == "exact":
-        if corpus_df is None:
-            raise ValueError("verify='exact' needs corpus_df (store ∪ "
-                             "increment texts) to rescore candidates")
-        ch = corpus_df.select(
-            F.col(id_col).alias("__cid"),
-            shingle_hash_expr(text_col, shingle_k).alias("__ch"),
+    hashed = None
+    if corpus_df is not None:
+        hashed = corpus_df.select(
+            F.col(id_col).alias("__id"),
+            shingle_hash_expr(text_col, shingle_k).alias("__h"),
         )
-        scored = (
-            cand.join(ch.select(F.col("__cid").alias("id_a"),
-                                F.col("__ch").alias("sh_a")), "id_a")
-            .join(ch.select(F.col("__cid").alias("id_b"),
-                            F.col("__ch").alias("sh_b")), "id_b")
-            .withColumn("jaccard", jaccard_expr("sh_a", "sh_b"))
-        )
-        oc = _id_out(new_df, id_col)
-        return scored.filter(F.col("jaccard") >= threshold).select(
-            oc("id_a"), oc("id_b"), "jaccard"
-        )
-    scored = (
-        cand.join(all_sigs.select(F.col("id").alias("id_a"),
-                                  F.col("sig").alias("sig_a")), "id_a")
-        .join(all_sigs.select(F.col("id").alias("id_b"),
-                              F.col("sig").alias("sig_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.expr(
-                f"CAST(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), "
-                f"v -> v)) AS DOUBLE) / {float(num_hashes)!r}"
-            ),
-        )
-    )
+    elif verify == "exact":
+        raise ValueError("verify='exact' needs corpus_df (store ∪ "
+                         "increment texts) to rescore candidates")
     oc = _id_out(new_df, id_col)
-    return scored.filter(F.col("jaccard") >= threshold).select(
-        oc("id_a"), oc("id_b"), "jaccard"
-    )
+    return _minhash_jaccard(
+        cand, verify, num_hashes, threshold, all_sigs, hashed,
+    ).select(oc("id_a"), oc("id_b"), "jaccard")
 
 
 # ------------------------------------------------------------- containment
@@ -1785,13 +1713,7 @@ def tfidf_cosine_pairs(
         # per-side bound (>= threshold by prefix construction, <= 1)
         F.sqrt(F.greatest(F.col("__suffix_sq"), F.lit(0.0))).alias("__g"),
     )
-    if max_bucket_size is not None:
-        cap = Window.partitionBy("token").orderBy("__pid")
-        prefix = (
-            prefix.withColumn("__r", F.row_number().over(cap))
-            .filter(F.col("__r") <= max_bucket_size)
-            .drop("__r")
-        )
+    prefix = _cap_buckets(prefix, ["token"], "__pid", max_bucket_size)
     # symmetric prefix join (PPJoin): the FIRST common token t* of a
     # qualifying pair (in the global order) must lie in BOTH prefixes —
     # if it were outside a's prefix, every common token would sit in

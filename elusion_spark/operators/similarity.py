@@ -325,13 +325,10 @@ def embedding_near_dup_pairs(
     One shuffle on the (table, bucket) key, one on the pair dedup."""
     # norms+buckets in one Arrow-native numpy pass per batch
     # (mapInArrow: zero-copy list-buffer read, vectors pass through —
-    # see _norm_buckets_arrow_fn); the frame feeds BOTH sides of the
-    # pair join, so persist the (cheap: id, vec, norm, bucket × tables)
-    # result rather than recompute
-    from pyspark import StorageLevel
+    # see _norm_buckets_arrow_fn)
     from pyspark.sql import types as T
 
-    from .dedup import _id_out
+    from .dedup import _bucket_pairs, _id_out
 
     oc = _id_out(df, id_col)
     src = _ensure_parallelism(df).select(
@@ -348,25 +345,15 @@ def embedding_near_dup_pairs(
             out_schema)
         .select("__id", "__v", "__norm",
                 F.posexplode("__buckets").alias("__t", "__bucket"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    l = b.select(
-        F.col("__id").alias("id_a"), F.col("__v").alias("va"),
-        F.col("__norm").alias("na"), "__t", "__bucket",
-    )
-    r = b.select(
-        F.col("__id").alias("id_b"), F.col("__v").alias("vb"),
-        F.col("__norm").alias("nb"), "__t", "__bucket",
     )
     return (
-        l.join(r, ["__t", "__bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(b, ["__t", "__bucket"], None)
         .dropDuplicates(["id_a", "id_b"])
         .withColumn(
             "cosine",
             F.expr(
-                "aggregate(zip_with(va, vb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                "CAST(0 AS DOUBLE), (a, v) -> a + v) / (na * nb)"
+                "aggregate(zip_with(v_a, v_b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+                "CAST(0 AS DOUBLE), (a, v) -> a + v) / (norm_a * norm_b)"
             ),
         )
         .filter(F.col("cosine") >= cosine_threshold)
@@ -660,7 +647,8 @@ def _nearest_col(vec_col: str, books: list[list[list[float]]]) -> Column:
     codebooks (broadcast with the task): ``g = ||c||² − 2p·c``,
     ``c = argmin g`` (the row-constant ||p||² cannot change the order,
     and ``knn_join``'s probe kernel ranks clusters by the same ``g``),
-    ``d = max(||p||² + g[c], 0)``.  Both forms reject a non-NULL vector
+    ``d = max(||p||² + g[c], 0)``.  Both forms give a NULL vector ``m``
+    NULL codes and distances, and both reject a non-NULL vector
     whose length is not ``m·dsub`` — the Arrow form in
     ``_arrow_list_matrix``, the expression form by a ``raise_error``
     added (as 0) to the first subspace's code and distance, so the
@@ -691,20 +679,28 @@ def _nearest_col(vec_col: str, books: list[list[list[float]]]) -> Column:
     B_sq = [(C * C).sum(axis=1) for C in B]
 
     def _nearest(vs: "pa.Array") -> "pa.Array":
-        V = _arrow_list_matrix(vs, "_nearest_col", dim)
-        n = len(V)
-        c = np.empty((n, m), dtype=np.int32)
-        d = np.empty((n, m), dtype=np.float64)
+        # a NULL vector gets m NULL codes and distances, as in the
+        # expression form, where every element_at of NULL is NULL
+        valid = vs.is_valid().to_numpy(zero_copy_only=False)
+        V = _arrow_list_matrix(vs.drop_null() if vs.null_count else vs,
+                               "_nearest_col", dim)
+        n, nv = len(vs), len(V)
+        c = np.zeros((n, m), dtype=np.int32)
+        d = np.zeros((n, m), dtype=np.float64)
         for s in range(m):
             Vs = V[:, s * dsub:(s + 1) * dsub]
             g = B_sq[s] - 2.0 * (Vs @ B[s].T)
-            c[:, s] = g.argmin(axis=1)
-            d[:, s] = (Vs * Vs).sum(axis=1) + g[np.arange(n), c[:, s]]
+            cs = g.argmin(axis=1)
+            c[valid, s] = cs
+            d[valid, s] = (Vs * Vs).sum(axis=1) + g[np.arange(nv), cs]
         offsets = pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32))
+        null = np.repeat(~valid, m)
         return pa.StructArray.from_arrays(
-            [pa.ListArray.from_arrays(offsets, pa.array(c.reshape(-1))),
+            [pa.ListArray.from_arrays(
+                offsets, pa.array(c.reshape(-1), mask=null)),
              pa.ListArray.from_arrays(
-                 offsets, pa.array(np.maximum(d, 0.0).reshape(-1)))],
+                 offsets,
+                 pa.array(np.maximum(d, 0.0).reshape(-1), mask=null))],
             names=["c", "d"])
 
     # module-wide `from __future__ import annotations` stringifies the
@@ -1041,6 +1037,8 @@ def knn_join(
     cap because its keys are hash-uniform by construction."""
     import numpy as np
 
+    from .dedup import _cap_buckets
+
     qn = queries.select(
         F.col(q_id).alias("__qid"),
         F.col(q_vec).alias("__qv"),
@@ -1065,15 +1063,7 @@ def knn_join(
         ck = cn.withColumn(
             "__key", assign_clusters_col("__cv", centroids).cast("int")
         )
-        if max_cluster_size is not None:
-            from pyspark.sql import Window
-
-            wcap = Window.partitionBy("__key").orderBy("__cid")
-            ck = (
-                ck.withColumn("__rn", F.row_number().over(wcap))
-                .filter(F.col("__rn") <= max_cluster_size)
-                .drop("__rn")
-            )
+        ck = _cap_buckets(ck, ["__key"], "__cid", max_cluster_size)
     else:
         spark = corpus.sparkSession
         if n_blocks is None:
@@ -1193,14 +1183,15 @@ def semantic_dedup(
 
     Shuffle budget: assignment is a broadcast argmin scan (no shuffle);
     one shuffle keys the pair join on cluster_id; connected components
-    adds 2 shuffles per label-propagation round on (id, label) longs.
+    collects the edges to a driver union-find (one job) and only above
+    ``dedup.DRIVER_MAX_EDGES`` edges runs star-contraction rounds.
     Embedding vectors cross the wire only into the cluster-keyed join —
     at 100 TB, write the assigned table partitioned by cluster_id first
     and this becomes a co-located self-join.
 
     Returns the surviving rows of ``df`` (or the removed ids with their
     component root when ``return_removed``)."""
-    from .dedup import _integral_id, connected_components
+    from .dedup import _cap_buckets, _integral_id, connected_components
 
     if not _integral_id(df, id_col):
         # the intra-cluster pair stage and connected components both key
@@ -1237,19 +1228,7 @@ def semantic_dedup(
         norm_expr(vec_col).alias("__norm"),
         "cluster_id",
     )
-    if max_cluster_size is not None:
-        from pyspark.sql import Window
-
-        b = (
-            b.withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy("cluster_id").orderBy("__id")
-                ),
-            )
-            .filter(F.col("__rn") <= max_cluster_size)
-            .drop("__rn")
-        )
+    b = _cap_buckets(b, ["cluster_id"], "__id", max_cluster_size)
     # Intra-cluster pairs via ONE blocked GEMM per cluster (applyInArrow):
     # each cluster's members arrive as one Arrow group, the pairwise
     # cosine matrix is a single numpy matmul, and only the (id_a, id_b)

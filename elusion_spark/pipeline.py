@@ -3,13 +3,16 @@
 Composes the LLM-data operators (text quality → language filter → exact
 dedup → MinHash near-dedup with transitive clusters → token accounting)
 into the single narrow-to-wide flow a 100 TB corpus job runs.  Every
-stage is lazy; the only actions are in the near-dup connected-components
-loop (bounded rounds) and whatever the caller triggers.
+stage is lazy; the only actions are in near-dup connected components
+(one edge collect, or bounded star-contraction rounds on large edge
+sets) and whatever the caller triggers.
 
 Shuffle budget of the whole pipeline:
   1. exact-dedup groupBy on content hash (ids only),
   2. LSH band bucket join + pair dedup (ids/hashes only),
-  3. CC label propagation (pairs × rounds — pairs ≪ corpus),
+  3. none for connected components on the driver union-find; star
+     contraction above ``dedup.DRIVER_MAX_EDGES`` shuffles pairs ×
+     rounds (pairs ≪ corpus),
   4. the final anti-join of losers against the corpus.
 Document bodies cross the wire exactly once (the final write).
 """

@@ -530,41 +530,24 @@ def near_dup_candidates_stream(
     batch) or pre-compute signatures upstream of this operator."""
     import pandas as pd
 
-    from ..operators.dedup import (
-        minhash_signature_from_hashes,
-        shingle_hash_expr,
-    )
+    from ..operators.dedup import _band_hashes, _integral_id, _minhash_sign
 
-    rows = num_hashes // bands
-    # Key the state on the NATIVE id type (matching the batch
-    # minhash_dedup_pairs, dedup.py:175): integral ids stay long,
+    band = _band_hashes(num_hashes, bands)
+    # Key the state on the NATIVE id type (matching the batch pair
+    # operators' ``_id_out``): integral ids stay long,
     # anything else (string/UUID/decimal ids) rides through as string.
     # A blanket cast-to-long NULLs string ids, collapsing every
     # document into one __id=NULL state group (silent garbage pairs).
     # The anchor rule only needs a deterministic total order, which
     # both long `<` and lexicographic string `<` provide.
-    _id_type = sdf.schema[id_col].dataType
-    _integral = isinstance(
-        _id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    )
+    _integral = _integral_id(sdf, id_col)
     _id_spark_t = T.LongType() if _integral else T.StringType()
     _id_cast = "long" if _integral else "string"
-    sig = sdf.select(
-        F.col(id_col).cast(_id_cast).alias("__id"),
-        shingle_hash_expr(text_col, shingle_k).alias("__h"),
-    ).select(
-        "__id",
-        minhash_signature_from_hashes("__h", num_hashes).alias("__sig"),
-    )
-    banded = sig.select(
-        "__id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> "
-                f"hash(slice(__sig, b * {rows} + 1, {rows})))"
-            )
-        ).alias("band_idx", "band_hash"),
-    )
+    _, sigs = _minhash_sign(
+        sdf.select(F.col(id_col).cast(_id_cast).alias("__id"),
+                   F.col(text_col).alias("__text")),
+        num_hashes, shingle_k)
+    banded = sigs.select("__id", band)
 
     out_schema = T.StructType([
         T.StructField("band_idx", T.IntegerType()),

@@ -21,7 +21,6 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from pyspark.sql import functions as F
 
 from elusion_spark import (
-    append_to_signature_store,
     build_signature_store,
     compact_files,
     get_spark,
@@ -54,7 +53,7 @@ print("increment:", increment.count(), "docs;",
 
 # 3. admit: only the partitions (langs) the increment touches rewrite
 stats = upsert_partitioned(spark, corpus_path, fresh, ["doc_id"], "lang")
-append_to_signature_store(fresh, "doc_id", "text", store)
+build_signature_store(fresh, "doc_id", "text", store, mode="append")
 print("upsert:", stats)
 
 # 4. compact the lake: size-targeted files, clustered by source so

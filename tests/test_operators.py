@@ -1294,7 +1294,6 @@ def test_incremental_minhash_equals_batch_difference(spark, tmp_path):
     are exactly the full-corpus pairs that touch the increment (same
     params, caps disabled), and the store is append-evolvable."""
     from elusion_spark.operators.dedup import (
-        append_to_signature_store,
         build_signature_store,
         incremental_minhash_pairs,
         minhash_dedup_pairs,
@@ -1322,8 +1321,8 @@ def test_incremental_minhash_equals_batch_difference(spark, tmp_path):
 
     # accept the increment into the store; a second increment then sees
     # near-dups against BOTH old and newly-admitted docs
-    append_to_signature_store(new, "doc_id", "text", store,
-                              num_hashes=64, bands=16, shingle_k=3)
+    build_signature_store(new, "doc_id", "text", store,
+                          num_hashes=64, bands=16, shingle_k=3, mode="append")
     dup_of_new = new.limit(5).selectExpr(
         "doc_id + 100000 AS doc_id", "text")  # exact copies, new ids
     inc2 = incremental_minhash_pairs(dup_of_new, "doc_id", "text", store,
@@ -3309,6 +3308,29 @@ def test_centroid_kernel_rejects_wrong_length_on_both_sides(
                 site()
 
 
+def test_centroid_kernel_null_vectors_match_on_both_sides(
+        spark, monkeypatch):
+    """A NULL vector gets NULL codes on both sides of
+    CENTROID_EXPR_MAX_FLOATS; the other rows are still assigned."""
+    from elusion_spark.operators import similarity as S
+
+    df = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, None), (3, [5.0, 5.0])],
+        "id long, v array<double>")
+    cents = [[0.0, 0.0], [5.0, 5.0]]
+    model = S.PQModel([[[0.0], [5.0]], [[0.0], [5.0]]], 2)
+    got = []
+    for gate in (10 ** 9, 0):  # expression form, then Arrow form
+        monkeypatch.setattr(S, "CENTROID_EXPR_MAX_FLOATS", gate)
+        rows = df.select(
+            "id", S.assign_clusters_col("v", cents).alias("c"),
+            S.pq_encode_expr("v", model).alias("codes"),
+        ).orderBy("id").collect()
+        got.append([(r["id"], r["c"], r["codes"]) for r in rows])
+    assert [c for _, c, _ in got[0]] == [0, None, 1]
+    assert got[0] == got[1]
+
+
 def test_evaluate_classifier_no_auc(spark):
     from elusion_spark.operators.train import evaluate_classifier
 
@@ -5069,12 +5091,14 @@ def test_dsir_scoring_needs_no_flag_columns(spark):
         dsir_importance(bare, "doc_id", "text", **kw).collect()
 
 
-def test_bucket_cap_none_means_uncapped_not_empty(spark):
+def test_bucket_cap_none_means_uncapped_not_empty(spark, tmp_path):
     """max_bucket_size=None must mean 'no cap', never a silent
     <= NULL filter that drops every candidate (the footgun q149's
     first draft hit)."""
     from elusion_spark.operators.dedup import (
+        build_signature_store,
         hamming_near_dup_pairs,
+        incremental_minhash_pairs,
         minhash_dedup_pairs,
     )
 
@@ -5089,6 +5113,57 @@ def test_bucket_cap_none_means_uncapped_not_empty(spark):
                                 bands=4, threshold=0.5,
                                 max_bucket_size=None)
     assert pairs.count() == 1
+    store = str(tmp_path / "store")
+    build_signature_store(docs.filter("id = 1"), "id", "text", store,
+                          num_hashes=16, bands=4)
+    inc = incremental_minhash_pairs(docs.filter("id = 2"), "id", "text",
+                                    store, num_hashes=16, bands=4,
+                                    max_bucket_size=None)
+    assert [(r["id_a"], r["id_b"]) for r in inc.collect()] == [(1, 2)]
+
+
+def test_minhash_verify_is_parsed_once(spark, tmp_path):
+    """Batch and incremental MinHash pairs share one scorer, so a verify
+    mode other than 'estimate'/'exact' raises on both instead of running
+    exact in one and the estimator in the other."""
+    from elusion_spark.operators.dedup import (
+        build_signature_store,
+        incremental_minhash_pairs,
+        minhash_dedup_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f")], "id long, text string")
+    store = str(tmp_path / "store")
+    build_signature_store(docs.filter("id = 1"), "id", "text", store,
+                          num_hashes=16, bands=4)
+    with pytest.raises(ValueError, match="verify must be"):
+        minhash_dedup_pairs(docs, "id", "text", num_hashes=16, bands=4,
+                            verify="Exact")
+    with pytest.raises(ValueError, match="verify must be"):
+        incremental_minhash_pairs(docs.filter("id = 2"), "id", "text",
+                                  store, num_hashes=16, bands=4,
+                                  verify="Exact")
+
+
+def test_degenerate_band_widths_raise(spark):
+    """A zero-row MinHash band (bands > num_hashes) or a zero-bit
+    Hamming band puts every document into one bucket; both raise, as
+    does a band count that does not divide the signature."""
+    from elusion_spark.operators.dedup import (
+        hamming_near_dup_pairs,
+        minhash_dedup_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} words here") for i in range(4)],
+        "id long, text string")
+    for nh, b in ((16, 32), (16, 5), (16, 0)):
+        with pytest.raises(ValueError, match="bands must"):
+            minhash_dedup_pairs(docs, "id", "text", num_hashes=nh, bands=b)
+    sigs = spark.createDataFrame([(1, 7), (2, 9)], "id long, sig long")
+    with pytest.raises(ValueError, match="bands must"):
+        hamming_near_dup_pairs(sigs, "id", "sig", bands=128, bits=64)
 
 
 def test_mine_contrastive_pairs_semantics(spark):

@@ -10,9 +10,12 @@ plans/r11/q76_lm_score_bigram_after.txt.
 
 With no query names, captures every BENCH_QUERIES entry.  Plans are
 captured at sf0.1 (the driver's bench scale) so join-strategy choices
-and exchange counts match what the bench times.
+and exchange counts match what the bench times.  Expression ids
+(``#123``) and exchange ``plan_id`` numbers are masked, since they
+differ from run to run, so a before/after pair diffs cleanly.
 """
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -40,6 +43,8 @@ def main() -> None:
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
                 .fromString("formatted"))
+            plan = re.sub(r"plan_id=\d+", "plan_id=N",
+                          re.sub(r"#\d+", "#N", plan))
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR: {e}"
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
