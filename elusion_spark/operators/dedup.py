@@ -282,8 +282,9 @@ def minhash_dedup_pairs(
     hash-family member — measured ~3× slower end-to-end even at sf0.01.
     The persisted intermediates (id+hashes, id+sig) are each referenced
     by multiple plan branches; size is O(docs · S · 8B) — tiny next to
-    the corpus.  Caller may ``.unpersist()`` the result's ancestors
-    after consuming."""
+    the corpus.  No handle to them is returned: they stay cached until
+    ``spark.catalog.clearCache()`` (releasing them per call is ROADMAP
+    item 2)."""
     from pyspark import StorageLevel
 
     band = _band_hashes(num_hashes, bands)

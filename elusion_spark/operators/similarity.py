@@ -28,34 +28,82 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _vec_literal(vec: list[float]) -> str:
-    return "array(" + ", ".join(repr(float(x)) for x in vec) + ")"
+def _vec_literal(vec: list[float], suffix: str = "") -> str:
+    """SQL array literal of ``vec``.  Bare numerics parse as DECIMAL;
+    ``suffix="D"`` writes DOUBLE literals."""
+    return "array(" + ", ".join(f"{float(x)!r}{suffix}" for x in vec) + ")"
+
+
+def _length_guard(vec_col: str, dim: int, what: str) -> str:
+    """SQL term that is 0, or raises when ``vec_col`` is a non-NULL
+    array whose length is not ``dim`` (the message matches
+    ``_arrow_list_matrix``'s).  Callers ADD it to a score instead of
+    wrapping the score in a ``CASE WHEN`` — see ``_nearest_col`` for why
+    and what that costs."""
+    return (f"IF({vec_col} IS NOT NULL AND size({vec_col}) <> {dim}, "
+            f"raise_error('{what}: expected fixed-length {dim} "
+            f"vectors (ragged vectors are not supported)'), 0)")
+
+
+def _sum_fold(vec_col: str, other, term: str, acc: str = "acc") -> str:
+    """SQL: the DOUBLE sum of ``term`` over the element pairs ``(x, y)``
+    of ``vec_col`` and ``other``, folded left to right — a deterministic
+    element order, and the unrolled ``+`` chain an external SQL replay
+    writes.  ``other`` is a SQL array expression or a literal vector.
+    ``zip_with`` pads the shorter array with NULLs, so against a literal
+    the fold carries ``_length_guard``: a vector whose length is not the
+    query's raises instead of scoring NULL.  The guard is the LEFT
+    operand because ``+`` skips its right operand once the left is
+    NULL, and a padded fold is NULL."""
+    if isinstance(other, str):
+        return (f"aggregate(zip_with({vec_col}, {other}, (x, y) -> {term}), "
+                f"CAST(0 AS DOUBLE), ({acc}, v) -> {acc} + v)")
+    return (_length_guard(vec_col, len(other), "query length") + " + "
+            + _sum_fold(vec_col, _vec_literal(other), term, acc))
+
+
+def _norm_sql(arr: str) -> str:
+    """SQL: the Euclidean norm of an array, its DOUBLE squares summed
+    left to right."""
+    return (f"sqrt(aggregate(transform({arr}, x -> CAST(x AS DOUBLE) * "
+            f"CAST(x AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v))")
+
+
+def _qnorm(query: list[float]) -> float:
+    """Driver-side norm of a literal query, in ``_norm_sql``'s order."""
+    import math
+
+    return math.sqrt(sum(float(x) * float(x) for x in query))
+
+
+def _check_query(query: list[float], dim: int, what: str) -> None:
+    if len(query) != dim:
+        raise ValueError(
+            f"{what}: expected a {dim}-value query, got {len(query)} values")
+
+
+def _topk(frame: DataFrame, score: str, id_col: str, k: int,
+          descending: bool) -> DataFrame:
+    """The one top-k tail: ``k`` rows by ``score``, ties to the lower
+    ``id_col`` — a total order.  Spark runs it as TakeOrderedAndProject
+    (a per-partition heap and a driver merge): no sort, no shuffle."""
+    s = F.col(score)
+    return frame.orderBy(s.desc() if descending else s.asc(),
+                         F.col(id_col)).limit(k)
 
 
 def dot_expr(vec_col: str, query: list[float]) -> Column:
-    """Dot product against a literal query vector via zip_with+aggregate
-    (sequential fold — deterministic element order)."""
-    q = _vec_literal(query)
-    return F.expr(
-        f"aggregate(zip_with({vec_col}, {q}, (x, y) -> CAST(x AS DOUBLE) * y), "
-        f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
+    """Dot product against a literal query vector (``_sum_fold``)."""
+    return F.expr(_sum_fold(vec_col, query, "CAST(x AS DOUBLE) * y"))
 
 
 def norm_expr(vec_col: str) -> Column:
-    return F.expr(
-        f"sqrt(aggregate(transform({vec_col}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        f"CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-    )
+    return F.expr(_norm_sql(vec_col))
 
 
 def cosine_expr(vec_col: str, query: list[float]) -> Column:
-    import math
-
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query))
-    return (dot_expr(vec_col, query) / (norm_expr(vec_col) * F.lit(qnorm))).alias(
-        "cosine"
-    )
+    return (dot_expr(vec_col, query)
+            / (norm_expr(vec_col) * F.lit(_qnorm(query)))).alias("cosine")
 
 
 def _arrow_list_matrix(arr, what: str, dim: int | None = None):
@@ -134,7 +182,9 @@ def classifier_score(
     wide heads (dim > 512) switch to one numpy dot per Arrow batch via
     arrow_udf (zero-copy list-buffer read — see
     ``_classifier_score_arrow_col``), the same size-adaptive pattern as
-    ``assign_clusters``."""
+    ``assign_clusters``.  On both sides of the cutover a NULL vector
+    scores NULL and a vector whose length is not ``len(weights)``
+    raises."""
     dim = len(weights)
     if dim <= 512:
         dot = dot_expr(vec_col, [float(w) for w in weights])
@@ -155,7 +205,8 @@ def _classifier_score_arrow_col(vec_col: str, weights: list[float],
     surface (guide §4.2): the vector column is read as ONE contiguous
     buffer view (``_arrow_list_matrix``), no per-row ndarray boxing;
     float64 ``V @ W + b`` / sigmoid arithmetic, pinned against numpy
-    by ``test_classifier_score_arrow_parity``."""
+    by ``test_classifier_score_arrow_parity``.  NULL vectors score NULL,
+    as in the expression form (``_nearest_col``'s valid mask)."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
@@ -165,11 +216,12 @@ def _classifier_score_arrow_col(vec_col: str, weights: list[float],
     dim = len(weights)
 
     def _score(vs: "pa.Array") -> "pa.Array":
-        if len(vs) == 0:
-            return pa.array([], type=pa.float64())
-        V = _arrow_list_matrix(vs, "classifier_score", dim)
-        return pa.array(1.0 / (1.0 + np.exp(-(V @ W + b))),
-                        type=pa.float64())
+        valid = vs.is_valid().to_numpy(zero_copy_only=False)
+        V = _arrow_list_matrix(vs.drop_null() if vs.null_count else vs,
+                               "classifier_score", dim)
+        out = np.zeros(len(vs), dtype=np.float64)
+        out[valid] = 1.0 / (1.0 + np.exp(-(V @ W + b)))
+        return pa.array(out, mask=~valid, type=pa.float64())
 
     _score.__annotations__ = {"vs": pa.Array, "return": pa.Array}
     return arrow_udf(_score, "double")(F.col(vec_col))
@@ -181,8 +233,7 @@ def l2_normalize_expr(vec_col: str) -> Column:
     ingest and L2/ADC ranking becomes cosine ranking — the standard
     trick that lets one compressed index serve both metrics.  Pure
     expression; composes into the scan."""
-    nrm = (f"sqrt(aggregate(transform({vec_col}, x -> CAST(x AS DOUBLE) "
-           f"* CAST(x AS DOUBLE)), CAST(0 AS DOUBLE), (a, b) -> a + b))")
+    nrm = _norm_sql(vec_col)
     return F.expr(
         f"CASE WHEN {nrm} = 0.0 THEN transform({vec_col}, "
         f"x -> CAST(x AS DOUBLE)) "
@@ -195,11 +246,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force cosine top-k — the exact baseline. Executes as a single
     scan + TakeOrderedAndProject (per-partition heap + driver merge)."""
-    return (
-        df.select(F.col(id_col), cosine_expr(vec_col, query).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _topk(
+        df.select(F.col(id_col), cosine_expr(vec_col, query).alias("cosine")),
+        "cosine", id_col, k, True)
 
 
 # ---------------------------------------------------------------- lsh pairs
@@ -211,20 +260,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
 
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def hyperplane_bucket_expr(vec_col: str, dim: int, n_planes: int = 16,
-                           seed: int = 42) -> Column:
-    """Sign-bit LSH bucket id (int): bit i = sign of <v, plane_i>."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    bits = []
-    for i, p in enumerate(planes):
-        d = dot_expr(vec_col, p)
-        bits.append(F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("int")
 
 
 def _norm_buckets_arrow_fn(dim: int, n_planes: int, n_tables: int,
@@ -351,10 +386,9 @@ def embedding_near_dup_pairs(
         .dropDuplicates(["id_a", "id_b"])
         .withColumn(
             "cosine",
-            F.expr(
-                "aggregate(zip_with(v_a, v_b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                "CAST(0 AS DOUBLE), (a, v) -> a + v) / (norm_a * norm_b)"
-            ),
+            F.expr(_sum_fold("v_a", "v_b",
+                             "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)", "a")
+                   + " / (norm_a * norm_b)"),
         )
         .filter(F.col("cosine") >= cosine_threshold)
         .select(oc("id_a"), oc("id_b"), "cosine")
@@ -662,9 +696,7 @@ def _nearest_col(vec_col: str, books: list[list[list[float]]]) -> Column:
     if m * k * dsub <= CENTROID_EXPR_MAX_FLOATS:
         arrs = [_sq_dists_sql(vec_col, b, s * dsub)
                 for s, b in enumerate(books)]
-        chk = (f"IF({vec_col} IS NOT NULL AND size({vec_col}) <> {dim}, "
-               f"raise_error('_nearest_col: expected fixed-length {dim} "
-               f"vectors (ragged vectors are not supported)'), 0)")
+        chk = _length_guard(vec_col, dim, "_nearest_col")
         cs = [_first_min_sql(a) for a in arrs]
         ds = [f"array_min({a})" for a in arrs]
         cs[0], ds[0] = f"{cs[0]} + {chk}", f"{ds[0]} + {chk}"
@@ -791,21 +823,41 @@ def ivf_search(
     nprobe: int = 4,
 ) -> DataFrame:
     """Probe the nprobe closest clusters only, then exact cosine top-k
-    within them.  With cluster-partitioned storage this prunes ~(1 -
-    nprobe/nlist) of the scan."""
-    order = sorted(
-        range(len(centroids)),
-        key=lambda ci: sum(
-            (float(a) - b) ** 2 for a, b in zip(query, centroids[ci])
-        ),
-    )
-    probe = order[:nprobe]
-    return (
-        assigned.filter(F.col("cluster_id").isin(probe))
-        .select(F.col(id_col), cosine_expr(vec_col, query).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    within them (``cosine_topk`` over the probed cells).  With
+    cluster-partitioned storage this prunes ~(1 - nprobe/nlist) of the
+    scan."""
+    _check_query(query, len(centroids[0]), "ivf_search")
+    probe = _probe_cells(query, centroids, nprobe, "l2")
+    return cosine_topk(assigned.filter(F.col("cluster_id").isin(probe)),
+                       vec_col, id_col, query, k)
+
+
+def _centroid_scores(query: list[float], centroids: list[list[float]],
+                     metric: str) -> list[float]:
+    """Driver-side score of ``query`` against each centroid: squared L2
+    ``Σ (q−c)·(q−c)`` for ``metric='l2'``, inner product for ``'ip'``,
+    each summed left to right — the multiply, NOT ``** 2``, whose libm
+    pow() is not guaranteed bit-equal to the multiply a SQL replay
+    does.  Serves the IVF cell probe and the PQ lookup tables, and is
+    the one place ``metric`` is checked."""
+    if metric not in ("l2", "ip"):
+        raise ValueError(f"metric must be 'l2' or 'ip', got {metric!r}")
+    if metric == "l2":
+        return [sum((float(a) - float(b)) * (float(a) - float(b))
+                    for a, b in zip(query, c)) for c in centroids]
+    return [sum(float(a) * float(b) for a, b in zip(query, c))
+            for c in centroids]
+
+
+def _probe_cells(query: list[float], centroids: list[list[float]],
+                 nprobe: int, metric: str) -> list[int]:
+    """The ``nprobe`` cells nearest ``query``: ascending squared L2 or
+    descending inner product, ties to the lower cell index.  Centroids
+    narrower than the query score its leading elements only (a coarse
+    quantizer fitted on a prefix slice of the vectors)."""
+    sc = _centroid_scores(query, centroids, metric)
+    sign = 1.0 if metric == "l2" else -1.0
+    return sorted(range(len(centroids)), key=lambda ci: sign * sc[ci])[:nprobe]
 
 
 def ivf_pq_search(
@@ -865,28 +917,12 @@ def ivf_pq_search(
     global top-k.  L2 only — for MIPS the per-cell constant
     ``<q, c>`` would have to be folded in pre-rounding; unsupported
     until needed."""
-    if metric not in ("l2", "ip"):
-        raise ValueError(f"metric must be 'l2' or 'ip', got {metric!r}")
+    _check_query(query, model.dim, "ivf_pq_search")
+    probe = _probe_cells(query, centroids, nprobe, metric)
     if residuals_of is not None and metric != "l2":
         raise ValueError(
             "residuals_of requires metric='l2' (IP needs the per-cell "
             "<query, centroid> constant folded into the ADC score)")
-    if metric == "ip":
-        order = sorted(
-            range(len(centroids)),
-            key=lambda ci: -sum(
-                float(a) * b for a, b in zip(query, centroids[ci])
-            ),
-        )
-    else:
-        order = sorted(
-            range(len(centroids)),
-            key=lambda ci: sum(
-                (float(a) - b) * (float(a) - b)
-                for a, b in zip(query, centroids[ci])
-            ),
-        )
-    probe = order[:nprobe]
     if residuals_of is None:
         return pq_adc_topk(
             encoded.filter(F.col(cluster_col).isin(probe)),
@@ -906,7 +942,7 @@ def ivf_pq_search(
     merged = parts[0]
     for p in parts[1:]:
         merged = merged.unionAll(p)
-    return merged.orderBy(F.col("adc").asc(), F.col(id_col)).limit(k)
+    return _topk(merged, "adc", id_col, k, False)
 
 
 def ivf_residual_expr(
@@ -925,10 +961,7 @@ def ivf_residual_expr(
     Pure codegen (one literal ``array<array<double>>`` lookup + a
     ``zip_with`` subtract): encoding a 100 TB corpus stays a
     zero-shuffle narrow map."""
-    cells = ("array(" + ", ".join(
-        "array(" + ", ".join(f"{float(v)!r}D" for v in c) + ")"
-        for c in centroids
-    ) + ")")
+    cells = "array(" + ", ".join(_vec_literal(c, "D") for c in centroids) + ")"
     return F.expr(
         f"zip_with(transform({vec_col}, x -> CAST(x AS DOUBLE)), "
         f"element_at({cells}, CAST({cluster_col} AS INT) + 1), "
@@ -1283,10 +1316,6 @@ def semantic_dedup(
 
 # ------------------------------------------------- scalar quantization (SQ8)
 
-def _arr_lit(vals: list[float]) -> str:
-    return "array(" + ", ".join(repr(float(v)) for v in vals) + ")"
-
-
 def sq_fit(df: DataFrame, vec_col: str, dim: int) -> tuple[list[float], list[float]]:
     """Fit a per-dimension 8-bit scalar quantizer (FAISS ``SQ8``): returns
     ``(mins, spans)`` where ``spans[j] = max_j - min_j`` over the corpus.
@@ -1328,11 +1357,11 @@ def sq_encode_expr(vec_col: str, mins: list[float], spans: list[float]) -> Colum
     index that fits hot storage and one that doesn't; candidate scans
     become IO-bound on a quarter of the bytes."""
     diff = (
-        f"zip_with({vec_col}, {_arr_lit(mins)}, "
+        f"zip_with({vec_col}, {_vec_literal(mins)}, "
         f"(x, m) -> CAST(x AS DOUBLE) - m)"
     )
     return F.expr(
-        f"transform(zip_with({diff}, {_arr_lit(spans)}, "
+        f"transform(zip_with({diff}, {_vec_literal(spans)}, "
         f"(d, s) -> CASE WHEN s > 0 THEN "
         f"FLOOR(LEAST(GREATEST(d / s * 255.0, 0.0), 255.0) + 0.5) "
         f"ELSE 0.0 END), c -> CAST(c AS INT))"
@@ -1343,13 +1372,14 @@ def sq_decode_expr(code_col: str, mins: list[float], spans: list[float]) -> Colu
     """Dequantized vector (``array<double>``):
     ``dv_j = min_j + code_j * (span_j / 255)``.  Reconstruction error is
     bounded per dimension by ``span_j / 510`` (half a quantization step)."""
-    scaled = (
-        f"zip_with({code_col}, {_arr_lit(spans)}, "
-        f"(c, s) -> CAST(c AS DOUBLE) * (s / 255.0))"
-    )
-    return F.expr(
-        f"zip_with({scaled}, {_arr_lit(mins)}, (t, m) -> m + t)"
-    )
+    return F.expr(_sq_decode_sql(code_col, mins, spans))
+
+
+def _sq_decode_sql(code_col: str, mins: list[float],
+                   spans: list[float]) -> str:
+    return (f"zip_with(zip_with({code_col}, {_vec_literal(spans)}, "
+            f"(c, s) -> CAST(c AS DOUBLE) * (s / 255.0)), "
+            f"{_vec_literal(mins)}, (t, m) -> m + t)")
 
 
 def sq_topk(
@@ -1367,9 +1397,7 @@ def sq_topk(
     is 8-bit).  Single scan over the code column + TakeOrderedAndProject:
     no shuffle, no Python.  Cosines round to ``round_digits`` with an id
     tiebreak so the ranking is a cross-engine total order."""
-    import math
-
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query))
+    _check_query(query, len(mins), "sq_topk")
     # decode, dot and norm fuse into ONE zip_with + aggregate pass over
     # the raw codes: HOFs are CodegenFallback (no codegen subexpression
     # elimination), so the naive decode-then-two-aggregates shape
@@ -1393,19 +1421,14 @@ def sq_topk(
         f"struct(CAST(0 AS DOUBLE) AS d, CAST(0 AS DOUBLE) AS n), "
         f"(acc, v) -> struct(acc.d + v.d AS d, acc.n + v.n AS n))"
     )
-    out = (
-        df.withColumn("__dn", F.expr(fused))
-        .select(
-            F.col(id_col),
-            F.round(
-                F.expr("__dn.d") / (F.expr("sqrt(__dn.n)") * F.lit(qnorm)),
-                round_digits,
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+    scored = df.withColumn("__dn", F.expr(fused)).select(
+        F.col(id_col),
+        F.round(
+            F.expr("__dn.d") / (F.expr("sqrt(__dn.n)") * F.lit(_qnorm(query))),
+            round_digits,
+        ).alias("cosine"),
     )
-    return out
+    return _topk(scored, "cosine", id_col, k, True)
 
 
 def sq_adc_topk(
@@ -1432,39 +1455,25 @@ def sq_adc_topk(
     Floating-point caveat: the refactored sum associates differently
     from ``sq_topk``'s decode-then-dot, so results agree to ~1e-9, not
     bit-exactly — use ``sq_topk`` when cross-engine hash parity matters
-    and this form when scanning billions of codes."""
-    import math
-
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query))
+    and this form when scanning billions of codes.  Why both stay: the
+    SCALE.md section on the two public "second ways" (200k × 64 codes
+    on a 4-core VM, warm: 2.2–2.4 s against 3.7–3.9 s for ``sq_topk``,
+    same top-10 ids)."""
+    _check_query(query, len(mins), "sq_adc_topk")
     c0 = sum(float(q) * float(m) for q, m in zip(query, mins))
     w = [float(q) * (float(s) / 255.0) for q, s in zip(query, spans)]
-    dot = F.expr(
-        f"aggregate(zip_with({code_col}, {_arr_lit(w)}, "
-        f"(c, wj) -> CAST(c AS DOUBLE) * wj), CAST(0 AS DOUBLE), "
-        f"(acc, v) -> acc + v)"
-    ) + F.lit(c0)
-    return (
-        df.select(
-            F.col(id_col),
-            (dot / (F.col(norm_col) * F.lit(qnorm))).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    dot = dot_expr(code_col, w) + F.lit(c0)
+    return _topk(
+        df.select(F.col(id_col),
+                  (dot / (F.col(norm_col) * F.lit(_qnorm(query))))
+                  .alias("cosine")),
+        "cosine", id_col, k, True)
 
 
 def sq_norm_expr(code_col: str, mins: list[float], spans: list[float]) -> Column:
     """Norm of the dequantized vector, for storing alongside the codes at
     encode time (feeds ``sq_adc_topk``)."""
-    dv = (
-        f"zip_with(zip_with({code_col}, {_arr_lit(spans)}, "
-        f"(c, s) -> CAST(c AS DOUBLE) * (s / 255.0)), "
-        f"{_arr_lit(mins)}, (t, m) -> m + t)"
-    )
-    return F.expr(
-        f"sqrt(aggregate(transform({dv}, x -> x * x), CAST(0 AS DOUBLE), "
-        f"(acc, v) -> acc + v))"
-    )
+    return F.expr(_norm_sql(_sq_decode_sql(code_col, mins, spans)))
 
 
 # ---------------------------------------------------------------------
@@ -1859,25 +1868,10 @@ def pq_adc_topk(
     (MIPS — retrieval over unnormalized embedding scores; on
     L2-normalized vectors both rank identically to cosine).  Rounded
     with an id tiebreak for a cross-engine total order."""
-    if metric not in ("l2", "ip"):
-        raise ValueError(f"metric must be 'l2' or 'ip', got {metric!r}")
-    luts = []
-    for s in range(model.m):
-        o = s * model.dsub
-        qs = [float(query[o + j]) for j in range(model.dsub)]
-        # (d * d, left-associated sum) — NOT `** 2`, whose libm pow()
-        # is not guaranteed bit-equal to the multiply a SQL replay does
-        if metric == "l2":
-            luts.append([
-                sum((qj - float(c[j])) * (qj - float(c[j]))
-                    for j, qj in enumerate(qs))
-                for c in model.codebooks[s]
-            ])
-        else:
-            luts.append([
-                sum(qj * float(c[j]) for j, qj in enumerate(qs))
-                for c in model.codebooks[s]
-            ])
+    _check_query(query, model.dim, "pq_adc_topk")
+    d = model.dsub
+    luts = [_centroid_scores(query[s * d:(s + 1) * d], book, metric)
+            for s, book in enumerate(model.codebooks)]
     if model.m * model.k > 1024:
         # Large codebooks: the literal-LUT expression tree carries
         # m*k literal doubles and evaluates interpreted — measured
@@ -1890,21 +1884,12 @@ def pq_adc_topk(
         for s, lut in enumerate(luts):
             # D-suffixed literals: bare numerics in SQL text parse as
             # DECIMAL, which would silently switch the score arithmetic
-            arr = "array(" + ", ".join(f"{float(v)!r}D" for v in lut) + ")"
-            term = F.expr(
-                f"element_at({arr}, element_at({codes_col}, {s + 1}) + 1)"
-            )
+            term = F.expr(f"element_at({_vec_literal(lut, 'D')}, "
+                          f"element_at({codes_col}, {s + 1}) + 1)")
             score = term if score is None else score + term
-    direction = (F.col("adc").asc() if metric == "l2"
-                 else F.col("adc").desc())
-    return (
-        df.select(
-            F.col(id_col),
-            F.round(score, round_digits).alias("adc"),
-        )
-        .orderBy(direction, F.col(id_col))
-        .limit(k)
-    )
+    return _topk(
+        df.select(F.col(id_col), F.round(score, round_digits).alias("adc")),
+        "adc", id_col, k, metric == "ip")
 
 
 def pq_refine_topk(
@@ -1955,8 +1940,6 @@ def pq_refine_topk(
     Returns ``(id_col, score)`` — ``score`` is exact (squared L2
     ascending, or inner product descending for ``metric='ip'``),
     rounded with an id tiebreak for a cross-engine total order."""
-    if metric not in ("l2", "ip"):
-        raise ValueError(f"metric must be 'l2' or 'ip', got {metric!r}")
     if centroids is not None:
         shortlist = ivf_pq_search(encoded, centroids, model, id_col,
                                   codes_col, query, k=candidates,
@@ -1973,22 +1956,15 @@ def pq_refine_topk(
         # replay writes as an unrolled `+` chain, so scores are
         # bit-identical cross-engine (the q152 oracle relies on this);
         # it only ever evaluates on the `candidates` surviving rows
-        q = _vec_literal(query)
-        score = F.expr(
-            f"aggregate(zip_with({vec_col}, {q}, "
-            f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        direction = F.col("score").asc()
+        score = F.expr(_sum_fold(
+            vec_col, query,
+            "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)"))
     else:
         score = dot_expr(vec_col, query)
-        direction = F.col("score").desc()
-    return (
+    return _topk(
         raw.join(F.broadcast(ids), id_col, "left_semi")
-        .select(F.col(id_col), F.round(score, round_digits).alias("score"))
-        .orderBy(direction, F.col(id_col))
-        .limit(k)
-    )
+        .select(F.col(id_col), F.round(score, round_digits).alias("score")),
+        "score", id_col, k, metric == "ip")
 
 
 def _pq_adc_vectorized(codes_col: str, luts: list[list[float]]) -> Column:
@@ -1999,9 +1975,9 @@ def _pq_adc_vectorized(codes_col: str, luts: list[list[float]]) -> Column:
     cutover can never flip an oracle-checked ranking.
 
     arrow_udf since r11 (guide §4.2): the code column (array<int>, m
-    entries per row) is read as ONE contiguous int buffer view
-    (``_arrow_list_matrix`` discipline) with no per-row boxing — the
-    ADC scan is THE billion-row shape.  Scores equal the
+    entries per row) is read through ``_arrow_list_matrix`` — one
+    contiguous buffer view, no per-row boxing, the same null and width
+    checks — since the ADC scan is THE billion-row shape.  Scores equal the
     left-associated float64 sum of the coded LUT entries
     (``test_pq_adc_arrow_parity``).
 
@@ -2011,7 +1987,6 @@ def _pq_adc_vectorized(codes_col: str, luts: list[list[float]]) -> Column:
     outside the program (``pq_read_index`` reads parquet)."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark.sql.functions import arrow_udf
 
     L = [np.asarray(t, dtype=np.float64) for t in luts]
@@ -2019,22 +1994,8 @@ def _pq_adc_vectorized(codes_col: str, luts: list[list[float]]) -> Column:
     ks = np.array([len(t) for t in L])
 
     def _score(cs: "pa.Array") -> "pa.Array":
-        n = len(cs)
-        if n == 0:
-            return pa.array([], type=pa.float64())
-        if isinstance(cs, pa.ChunkedArray):
-            cs = cs.combine_chunks()
-        if cs.null_count:
-            raise ValueError(
-                f"_pq_adc_vectorized: {cs.null_count} null code rows")
-        widths = pc.list_value_length(cs).to_numpy(zero_copy_only=False)
-        bad = np.flatnonzero(widths != m)
-        if bad.size:
-            b = int(bad[0])
-            raise ValueError(
-                f"_pq_adc_vectorized: expected {m} codes per row, row "
-                f"{b} has {int(widths[b])}")
-        C = cs.flatten().to_numpy(zero_copy_only=False).reshape(n, m)
+        # float64 holds every int32 code exactly, so the cast is exact
+        C = _arrow_list_matrix(cs, "_pq_adc_vectorized", m).astype(np.int64)
         bad = np.flatnonzero(((C < 0) | (C >= ks)).any(axis=1))
         if bad.size:
             b = int(bad[0])

@@ -236,7 +236,10 @@ def train_logreg_wide(
     via numpy GEMV inside ``mapInPandas`` (one d-vector per batch), then
     a tiny grouped reduce.  Loses the bit-exact partitioning invariance
     of the expression path (numpy partials sum in batch order) — use for
-    embedding-width heads where that trade is obviously right."""
+    embedding-width heads where that trade is obviously right.  Why both
+    stay: the SCALE.md section on the two public "second ways" (20k ×
+    256, 3 iterations on a 4-core VM: 1.9–2.3 s against 18.5–26.3 s for
+    ``train_logreg``)."""
     import numpy as np  # noqa: F401 — import guard up front
     import pandas as pd
 

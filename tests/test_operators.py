@@ -6091,6 +6091,22 @@ def test_classifier_score_arrow_parity(spark):
     want = 1.0 / (1.0 + np.exp(-(V @ np.asarray(W) + 0.25)))
     assert np.allclose([got[i] for i in ids], want, rtol=1e-12, atol=0)
     assert routed == got
+    # one answer on both sides of the cutover: a NULL vector scores
+    # NULL, a vector of the wrong length raises
+    for d in (2, 513):
+        w = [0.01] * d
+        small = spark.createDataFrame(
+            [(1, [1.0] * d), (2, None)],
+            "vec_id long, embedding array<double>")
+        scores = dict(classifier_score(small, "embedding", w)
+                      .select("vec_id", "score").collect())
+        assert scores[2] is None
+        assert scores[1] == pytest.approx(1.0 / (1.0 + np.exp(-0.01 * d)))
+        ragged = spark.createDataFrame(
+            [(3, [1.0] * (d + 1))], "vec_id long, embedding array<double>")
+        with pytest.raises(Exception,
+                           match=f"expected fixed-length {d} vectors"):
+            classifier_score(ragged, "embedding", w).collect()
 
 
 def test_pq_assign_arrow_parity(spark):
@@ -6167,6 +6183,38 @@ def test_pq_adc_rejects_out_of_range_codes(spark, bad_code):
     with pytest.raises(PythonException, match=r"row 1 has codes .*"
                        r"outside \[0, k\)"):
         df.select(_pq_adc_vectorized("codes", luts)).collect()
+
+
+def test_wrong_length_query_raises(spark):
+    """A query whose length is not the vectors' raises instead of
+    scoring: cosine_topk (no declared dim) through the fold's length
+    guard when the scan runs, the quantized and IVF searches before
+    planning, against the dimension their model carries.  Before,
+    cosine_topk scored NULLs, sq_topk returned a wrong cosine, and
+    pq_adc_topk ignored a 5th element or raised a bare IndexError."""
+    from elusion_spark.operators.similarity import (
+        PQModel, cosine_topk, ivf_pq_search, ivf_search, pq_adc_topk,
+        pq_refine_topk, sq_adc_topk, sq_topk)
+
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0, 2.0, 3.0], [i % 2, 1, 0, 1]) for i in range(4)],
+        "id long, v array<double>, codes array<int>")
+    with pytest.raises(Exception, match="expected fixed-length 3 vectors"):
+        cosine_topk(df, "v", "id", [1.0, 0.0, 0.0]).collect()
+    mins, spans = [0.0] * 4, [3.0] * 4
+    model = PQModel([[[0.0, 0.0], [1.0, 1.0]]] * 2, 4)
+    cells = [[0.0] * 4, [1.0] * 4]
+    for q in ([1.0] * 5, [1.0] * 3):
+        for search in (
+            lambda: sq_topk(df, "id", "codes", mins, spans, q),
+            lambda: sq_adc_topk(df, "id", "codes", "n", mins, spans, q),
+            lambda: pq_adc_topk(df, "id", "codes", q, model),
+            lambda: pq_refine_topk(df, df, "id", "codes", "v", q, model),
+            lambda: ivf_pq_search(df, cells, model, "id", "codes", q),
+            lambda: ivf_search(df, cells, "v", "id", q),
+        ):
+            with pytest.raises(ValueError, match="expected a 4-value query"):
+                search()
 
 
 def test_arrow_list_matrix_guards(spark):
