@@ -141,8 +141,9 @@ def _minhash_sign(frame: DataFrame, num_hashes: int, shingle_k: int):
     """The one MinHash signer.  ``frame`` holds ``__id``, ``__text`` and
     any key columns that ride along; returns ``(hashed, sigs)``: the
     distinct shingle hashes ``(__id, *keys, __h)`` and the signatures
-    ``(__id, *keys, __sig)`` derived from them.  Nothing is persisted —
-    callers choose (see ``minhash_dedup_pairs``)."""
+    ``(__id, *keys, __sig)`` derived from them.  Nothing is persisted:
+    the caller caches the one frame two of its plan branches read and
+    releases it before returning (see ``minhash_dedup_pairs``)."""
     from .similarity import _ensure_parallelism
 
     keys = [c for c in frame.columns if c != "__text"]
@@ -186,21 +187,14 @@ def _cap_buckets(frame: DataFrame, keys: list[str], order_col: str,
     )
 
 
-def _bucket_pairs(banded: DataFrame, keys: list[str],
-                  cap: int | None) -> DataFrame:
-    """The one bucket self-join: cap each ``keys`` bucket of ``banded``
-    at ``cap`` rows in ``__id`` order, persist, self-join on ``keys`` and
-    keep ``id_a < id_b``.  ``__id`` comes out as ``id_a``/``id_b`` and
-    every other non-key column ``c`` as ``<c>_a``/``<c>_b`` (leading
-    underscores dropped); callers verify and dedup the pairs."""
-    from pyspark import StorageLevel
-
-    # both join sides read it; the broadcast side cannot reuse the
-    # streamed side's exchange, so without a persist the whole
-    # explode+cap chain runs twice (two parallel Exchange/WindowGroupLimit
-    # chains in the plan)
-    b = _cap_buckets(banded, keys, "__id", cap).persist(
-        StorageLevel.MEMORY_AND_DISK)
+def _bucket_pairs(b: DataFrame, keys: list[str]) -> DataFrame:
+    """The one bucket self-join: self-join the (already capped, see
+    ``_cap_buckets``) bucket frame ``b`` on ``keys`` and keep
+    ``id_a < id_b``.  ``__id`` comes out as ``id_a``/``id_b`` and every
+    other non-key column ``c`` as ``<c>_a``/``<c>_b`` (leading
+    underscores dropped); callers verify and dedup the pairs.  Both
+    join sides read ``b``; whether to cache it is the caller's call
+    (``_checkpointed``)."""
 
     def side(s: str) -> DataFrame:
         return b.select(*[
@@ -210,6 +204,27 @@ def _bucket_pairs(banded: DataFrame, keys: list[str],
 
     return side("a").join(side("b"), keys).filter(
         F.col("id_a") < F.col("id_b"))
+
+
+def _checkpointed(build, *frames: DataFrame) -> DataFrame:
+    """The one owner of an operator's caches: persist ``frames`` in
+    order (a later one may read an earlier one), return ``build()`` as
+    an eager ``localCheckpoint`` and unpersist every cache in
+    ``finally``.  The result reads the checkpoint, not the caches, so
+    nothing the call persisted outlives it; the checkpoint blocks are
+    RDD-scoped and the ContextCleaner reclaims them once the result is
+    garbage-collected.  Pass a frame only when two plan branches read
+    it."""
+    from pyspark import StorageLevel
+
+    held = []
+    try:
+        for f in frames:
+            held.append(f.persist(StorageLevel.MEMORY_AND_DISK))
+        return build().localCheckpoint(eager=True)
+    finally:
+        for f in held:
+            f.unpersist()
 
 
 def _minhash_jaccard(cand: DataFrame, verify: str, num_hashes: int,
@@ -275,18 +290,18 @@ def minhash_dedup_pairs(
 
     Materialization strategy (this is the load-bearing part): distinct
     shingle HASHES (``shingle_hash_expr`` — no shingle strings are ever
-    built) are persisted FIRST, and signatures are derived from those
-    cached longs.  Higher-order functions evaluate interpreted
-    (CodegenFallback) with no subexpression elimination, so a fused
-    shingle→signature expression would re-run the text split once per
-    hash-family member — measured ~3× slower end-to-end even at sf0.01.
-    The persisted intermediates (id+hashes, id+sig) are each referenced
-    by multiple plan branches; size is O(docs · S · 8B) — tiny next to
-    the corpus.  No handle to them is returned: they stay cached until
-    ``spark.catalog.clearCache()`` (releasing them per call is ROADMAP
-    item 2)."""
-    from pyspark import StorageLevel
-
+    built) are computed once and signatures derive from those longs.
+    Higher-order functions evaluate interpreted (CodegenFallback) with
+    no subexpression elimination, so a fused shingle→signature
+    expression would re-run the text split once per hash-family member
+    — measured ~3× slower end-to-end even at sf0.01.  Exactly one
+    signature-side frame is cached, the one two plan branches read:
+    ``hashed`` for ``'exact'`` (banding via the signatures + both verify
+    sides), the signatures for ``'estimate'`` (banding + both scoring
+    sides); the capped bucket frame (both self-join sides) is the
+    other cache.  The result is returned as an eager ``localCheckpoint``
+    and both caches are released before the call returns
+    (``_checkpointed``), so repeated calls leave nothing cached."""
     band = _band_hashes(num_hashes, bands)
     gsel = [F.col(group_col).alias("__grp")] if group_col else []
     gcols = ["__grp"] if group_col else []
@@ -294,28 +309,22 @@ def minhash_dedup_pairs(
         df.select(F.col(id_col).alias("__id"),
                   F.col(text_col).alias("__text"), *gsel),
         num_hashes, shingle_k)
-    hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-    if verify == "estimate":
-        # estimate mode reads sigs from THREE plan branches (banding +
-        # both sides of the pair-scoring join) — persist it.  exact mode
-        # consumes it exactly once (banding; the verify joins reuse
-        # `hashed` instead), so persisting would cache a corpus×H-longs
-        # table nobody reads twice — skipped since r10 (measured: no
-        # sf0.1 wall change, O(docs·H·8B) less cache at scale).
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-
+    keys = gcols + ["band_idx", "band_hash"]
     # band explode carries ONLY (id, [group,] band_idx, band_hash)
+    b = _cap_buckets(sigs.select("__id", *gcols, band), keys, "__id",
+                     max_bucket_size)
     cand = (
-        _bucket_pairs(sigs.select("__id", *gcols, band),
-                      gcols + ["band_idx", "band_hash"], max_bucket_size)
+        _bucket_pairs(b, keys)
         .select(*gcols, "id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    scored = _minhash_jaccard(cand, verify, num_hashes, threshold,
-                              sigs, hashed)
     out_g = [F.col("__grp").alias(group_col)] if group_col else []
     oc = _id_out(df, id_col)
-    return scored.select(*out_g, oc("id_a"), oc("id_b"), "jaccard")
+    return _checkpointed(
+        lambda: _minhash_jaccard(cand, verify, num_hashes, threshold,
+                                 sigs, hashed)
+        .select(*out_g, oc("id_a"), oc("id_b"), "jaccard"),
+        hashed if verify == "exact" else sigs, b)
 
 
 def minhash_dedup(
@@ -463,9 +472,10 @@ def hamming_near_dup_pairs(
     counting depends on exactly that).
 
     Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b`` (plus the
-    group column when ``group_col`` is set)."""
-    from pyspark import StorageLevel
-
+    group column when ``group_col`` is set).  Nothing is cached: the
+    signature has one reader (the band explode), and caching the capped
+    bucket frame for the two self-join sides did not pay at sf0.1
+    (SCALE.md), so the result stays lazy."""
     from .similarity import _ensure_parallelism
 
     if not 1 <= bands <= bits:
@@ -475,31 +485,30 @@ def hamming_near_dup_pairs(
     width = bits // bands
     sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
     gcols = [group_col] if group_col else []
+    keys = gcols + ["band_idx", "band_val"]
     oc = _id_out(df, id_col)
-    # persisted: the (possibly expensive) signature feeds both join sides
-    sigged = (
+    banded = (
         _ensure_parallelism(df)
         .select(*gcols, F.col(id_col).alias("__id"),
                 sig.cast("long").alias("__sim"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(
+            *gcols,
+            "__id",
+            "__sim",
+            F.posexplode(
+                F.expr(
+                    f"transform(sequence(0, {bands - 1}), b -> "
+                    f"shiftright(__sim, b * {width}) & {(1 << width) - 1}L)"
+                )
+            ).alias("band_idx", "band_val"),
+        )
     )
-    banded = sigged.select(
-        *gcols,
-        "__id",
-        "__sim",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> "
-                f"shiftright(__sim, b * {width}) & {(1 << width) - 1}L)"
-            )
-        ).alias("band_idx", "band_val"),
-    )
+    b = _cap_buckets(banded, keys, "__id", max_bucket_size)
     # verify (bit_count on two longs) is far cheaper than the pair-dedup
     # shuffle, so filter FIRST and dedup only the survivors — the
     # multi-band duplicate factor is at most `bands`
     return (
-        _bucket_pairs(banded, gcols + ["band_idx", "band_val"],
-                      max_bucket_size)
+        _bucket_pairs(b, keys)
         .withColumn(
             "hamming",
             F.expr("bit_count(sim_a ^ sim_b)").cast("int"),
@@ -777,13 +786,16 @@ def build_signature_store(
         df.select(F.col(id_col).alias("__id"),
                   F.col(text_col).alias("__text")),
         num_hashes, shingle_k)
+    # two writes read the signatures: cache them for this call only
     sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    sigs.select(
-        F.col("__id").alias("id"), F.col("__sig").alias("sig")
-    ).write.mode(mode).parquet(f"{path}/sigs")
-    sigs.select(F.col("__id").alias("id"), band).write.mode(mode).parquet(
-        f"{path}/banded")
-    sigs.unpersist()
+    try:
+        sigs.select(
+            F.col("__id").alias("id"), F.col("__sig").alias("sig")
+        ).write.mode(mode).parquet(f"{path}/sigs")
+        sigs.select(F.col("__id").alias("id"), band).write.mode(
+            mode).parquet(f"{path}/banded")
+    finally:
+        sigs.unpersist()
 
 
 def incremental_minhash_pairs(
@@ -817,19 +829,21 @@ def incremental_minhash_pairs(
     side carries (id, 2 longs); signatures join in only for surviving
     candidates.  Equivalent-by-construction to re-running the batch pair
     scan on (store ∪ increment) and keeping pairs that touch the
-    increment (asserted in tests)."""
-    from pyspark import StorageLevel
+    increment (asserted in tests).
 
+    The increment's signatures (band explode + both scoring sides) and
+    the capped bucket frame (both self-join sides) are cached for the
+    call only: the result is an eager ``localCheckpoint`` and reads
+    neither the caches nor the store afterwards (``_checkpointed``), so
+    the caller may delete ``store_path`` once this returns."""
     band = _band_hashes(num_hashes, bands)
     spark = new_df.sparkSession
     _, new_sigs = _minhash_sign(
         new_df.select(F.col(id_col).alias("__id"),
                       F.col(text_col).alias("__text")),
         num_hashes, shingle_k)
-    new_sigs = new_sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    new_banded = new_sigs.select(
-        "__id", band, F.lit(True).alias("is_new"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    keys = ["band_idx", "band_hash"]
+    new_banded = new_sigs.select("__id", band, F.lit(True).alias("is_new"))
 
     store_banded = spark.read.parquet(f"{store_path}/banded").select(
         F.col("id").alias("__id"), "band_idx", "band_hash",
@@ -838,12 +852,12 @@ def incremental_minhash_pairs(
     # prune the store to colliding buckets BEFORE the skew cap/self-join:
     # at 100 TB this is the difference between reading bucket rows for
     # one day's collisions and re-scanning the corpus layout
-    hot = new_banded.select("band_idx", "band_hash").distinct()
-    store_hit = store_banded.join(hot, ["band_idx", "band_hash"],
-                                  "left_semi")
+    hot = new_banded.select(*keys).distinct()
+    store_hit = store_banded.join(hot, keys, "left_semi")
+    b = _cap_buckets(store_hit.unionByName(new_banded), keys, "__id",
+                     max_bucket_size)
     cand = (
-        _bucket_pairs(store_hit.unionByName(new_banded),
-                      ["band_idx", "band_hash"], max_bucket_size)
+        _bucket_pairs(b, keys)
         .filter(F.col("is_new_a") | F.col("is_new_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
@@ -863,9 +877,11 @@ def incremental_minhash_pairs(
         raise ValueError("verify='exact' needs corpus_df (store ∪ "
                          "increment texts) to rescore candidates")
     oc = _id_out(new_df, id_col)
-    return _minhash_jaccard(
-        cand, verify, num_hashes, threshold, all_sigs, hashed,
-    ).select(oc("id_a"), oc("id_b"), "jaccard")
+    return _checkpointed(
+        lambda: _minhash_jaccard(
+            cand, verify, num_hashes, threshold, all_sigs, hashed,
+        ).select(oc("id_a"), oc("id_b"), "jaccard"),
+        new_sigs, b)
 
 
 # ------------------------------------------------------------- containment
@@ -895,9 +911,13 @@ def containment_pairs(
     then one (shingle, id)-keyed self-join counts shared shingles per
     pair.  Shuffles carry (hash, id) longs only; document bodies never
     move.  Recall over the capped universe is exactly 1 — no LSH miss
-    probability."""
-    from pyspark import StorageLevel
+    probability.
 
+    The capped inverted index (both self-join sides + the sizes) is
+    cached for the call only: the result is an eager ``localCheckpoint``
+    and the cache is released before returning (``_checkpointed``).
+    The per-document sizes re-aggregate from that cache per size join —
+    cheaper than caching them too (measured at sf0.1, SCALE.md)."""
     from .similarity import _ensure_parallelism
 
     oc = _id_out(df, id_col)
@@ -913,7 +933,7 @@ def containment_pairs(
     # groupBy + semi-join: one exchange on __s does triple duty — it
     # computes the df, filters stop-shingles, and leaves the frame
     # hash-partitioned by __s so the pair self-join below adds NO
-    # further exchange (both aliases of the persisted frame satisfy the
+    # further exchange (both aliases of the cached frame satisfy the
     # join's clustering)
     from pyspark.sql import Window
 
@@ -923,11 +943,8 @@ def containment_pairs(
         )
         .filter(F.col("__df") <= max_shingle_df)
         .drop("__df")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sizes = keep.groupBy("__id").agg(F.count("*").alias("__sz")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sizes = keep.groupBy("__id").agg(F.count("*").alias("__sz"))
     shared = (
         keep.alias("a")
         .join(keep.alias("b"), "__s")
@@ -936,9 +953,10 @@ def containment_pairs(
                  F.col("b.__id").alias("id_b"))
         .agg(F.count("*").alias("__shared"))
     )
-    return (
-        shared.join(sizes.select(F.col("__id").alias("id_a"),
-                                 F.col("__sz").alias("__sza")), "id_a")
+    return _checkpointed(
+        lambda: shared.join(sizes.select(F.col("__id").alias("id_a"),
+                                         F.col("__sz").alias("__sza")),
+                            "id_a")
         .join(sizes.select(F.col("__id").alias("id_b"),
                            F.col("__sz").alias("__szb")), "id_b")
         .withColumn(
@@ -949,8 +967,8 @@ def containment_pairs(
             ),
         )
         .filter(F.col("containment") >= threshold)
-        .select(oc("id_a"), oc("id_b"), "containment")
-    )
+        .select(oc("id_a"), oc("id_b"), "containment"),
+        keep)
 
 
 def _fuzzy_join_qgram(
@@ -1645,7 +1663,6 @@ def tfidf_cosine_pairs(
     curation."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (0, 1]")
-    from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
     if ngram == "auto":
@@ -1671,13 +1688,14 @@ def tfidf_cosine_pairs(
         raise ValueError("ngram must be an int or 'auto'")
 
     # the weight table feeds THREE consumers (prefix index and both
-    # verify sides): persist it so the tokenize+TF-IDF lineage (3
-    # shuffles) runs once.  Feature STRINGS are hashed to 64-bit longs
-    # first — no downstream stage needs the text, and the verify joins
-    # shuffle (id, long, double) triples instead of ~15-byte n-gram
-    # strings (counting/joining by xxhash64 is exact up to ~2^-64
-    # collisions, the same discipline as repetition_signals).  (id,
-    # feature, w) rows are distinct-per-doc vocabulary-sized — far
+    # verify sides): cache it for the call (``_checkpointed`` below) so
+    # the tokenize+TF-IDF lineage (3 shuffles) runs once — measured
+    # 17.7 vs 38.4 s at sf0.1 (SCALE.md).  Feature STRINGS are hashed
+    # to 64-bit longs first — no downstream stage needs the text, and
+    # the verify joins shuffle (id, long, double) triples instead of
+    # ~15-byte n-gram strings (counting/joining by xxhash64 is exact up
+    # to ~2^-64 collisions, the same discipline as repetition_signals).
+    # (id, feature, w) rows are distinct-per-doc vocabulary-sized — far
     # smaller than the bodies.
     w = (
         tfidf_weights(df, id_col, text_col, ngram=ngram)
@@ -1686,7 +1704,6 @@ def tfidf_cosine_pairs(
             F.xxhash64("token").alias("token"),
             "w", "tok_df",
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # Prefix membership: tokens in global order (df asc, then hash —
     # any fixed global order is valid); token i is indexed iff the
@@ -1748,8 +1765,8 @@ def tfidf_cosine_pairs(
                   F.col("w").alias("__wa"))
     wb = w.select(F.col(id_col).alias("__b"), "token",
                   F.col("w").alias("__wb"))
-    return (
-        cand.join(wa, "__a")
+    return _checkpointed(
+        lambda: cand.join(wa, "__a")
         .join(wb, ["__b", "token"])
         .groupBy("__a", "__b")
         # DECIMAL accumulation for the membership-deciding sum: a
@@ -1778,8 +1795,8 @@ def tfidf_cosine_pairs(
             F.col("__b").alias("id_b"),
             F.round(F.col("__dot").cast("double"), round_digits)
             .alias("cosine"),
-        )
-    )
+        ),
+        w)
 
 
 # ----------------------------------------------------- LSH band planning

@@ -357,13 +357,15 @@ def embedding_near_dup_pairs(
     1 - (1 - p^n_planes)^n_tables.  The band explode carries only
     (id, vec, norm) × n_tables; candidates are deduped on (id_a, id_b)
     BEFORE the cosine verify so multi-table collisions are scored once.
-    One shuffle on the (table, bucket) key, one on the pair dedup."""
+    One shuffle on the (table, bucket) key, one on the pair dedup.  The
+    bucket frame (both self-join sides) is cached for the call only:
+    the result is an eager ``localCheckpoint`` (``dedup._checkpointed``)."""
     # norms+buckets in one Arrow-native numpy pass per batch
     # (mapInArrow: zero-copy list-buffer read, vectors pass through —
     # see _norm_buckets_arrow_fn)
     from pyspark.sql import types as T
 
-    from .dedup import _bucket_pairs, _id_out
+    from .dedup import _bucket_pairs, _checkpointed, _id_out
 
     oc = _id_out(df, id_col)
     src = _ensure_parallelism(df).select(
@@ -381,8 +383,8 @@ def embedding_near_dup_pairs(
         .select("__id", "__v", "__norm",
                 F.posexplode("__buckets").alias("__t", "__bucket"))
     )
-    return (
-        _bucket_pairs(b, ["__t", "__bucket"], None)
+    return _checkpointed(
+        lambda: _bucket_pairs(b, ["__t", "__bucket"])
         .dropDuplicates(["id_a", "id_b"])
         .withColumn(
             "cosine",
@@ -391,8 +393,8 @@ def embedding_near_dup_pairs(
                    + " / (norm_a * norm_b)"),
         )
         .filter(F.col("cosine") >= cosine_threshold)
-        .select(oc("id_a"), oc("id_b"), "cosine")
-    )
+        .select(oc("id_a"), oc("id_b"), "cosine"),
+        b)
 
 
 # --------------------------------------------------------------------- ivf

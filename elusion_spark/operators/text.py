@@ -1127,12 +1127,12 @@ def pmi_collocations(
     twice BROADCAST (vocabulary-sized, not corpus-sized); totals are
     one-row aggregates.  Document bodies never shuffle.
 
-    Lifecycle note: the scored table is materialized EAGERLY (one
-    ``localCheckpoint`` of the vocabulary-sized result) so the two
-    count caches the computation needs can be unpersisted before
-    returning — repeated calls in a resident session no longer
-    accumulate vocabulary-sized cached frames.  The returned frame is
-    therefore already computed; transformations on it are cheap."""
+    Lifecycle note: the two count tables are cached for the call only
+    and the scored table is returned as an eager ``localCheckpoint`` of
+    the vocabulary-sized result (``dedup._checkpointed``, the helper
+    every caching operator shares), so repeated calls in a resident
+    session leave nothing cached.  The returned frame is already
+    computed; transformations on it are cheap."""
     from pyspark.sql.window import Window
 
     # id BEFORE the generator: projected alongside posexplode it would
@@ -1156,31 +1156,24 @@ def pmi_collocations(
         tok.withColumn("__t2", F.lead("__t", 1).over(w))
         .filter(F.col("__t2").isNotNull())
     )
-    from pyspark import StorageLevel
+    from .dedup import _checkpointed
 
     # uni feeds THREE consumers (the Nt scalar + two broadcast joins)
-    # and pairs TWO (the Nb scalar + the scoring join): persist both —
+    # and pairs TWO (the Nb scalar + the scoring join): cache both —
     # they are VOCABULARY-sized, not corpus-sized — so the tokenize+
     # explode+window lineage runs once per count table instead of once
-    # per consumer (same multi-consumer discipline as
-    # _dsir_doc_buckets_and_model's measured 2.7x).
-    uni = tok.groupBy("__t").agg(F.count("*").alias("__c1")).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    pairs = big.groupBy("__t", "__t2").agg(
-        F.count("*").alias("__c12")).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        tots = uni.agg(F.sum("__c1").alias("nt")).collect()[0]  # one-row
-        nb = pairs.agg(F.sum("__c12").alias("nb")).collect()[0]
-        nt, nbig = float(tots["nt"] or 0), float(nb["nb"] or 0)
-        out = _pmi_score(uni, pairs, nt, nbig, min_count, round_digits)
-        # vocabulary-sized: cut lineage eagerly so uni/pairs can be
-        # unpersisted NOW instead of leaking per call (the checkpoint
-        # blocks are RDD-scoped and reclaimed by the ContextCleaner
-        # when the result frame is garbage-collected)
-        out = out.localCheckpoint(eager=True)
-    finally:
-        uni.unpersist()
-        pairs.unpersist()
+    # per consumer (same multi-consumer discipline as dsir_importance's
+    # measured 2.7x)
+    uni = tok.groupBy("__t").agg(F.count("*").alias("__c1"))
+    pairs = big.groupBy("__t", "__t2").agg(F.count("*").alias("__c12"))
+
+    def score():
+        nt = uni.agg(F.sum("__c1").alias("nt")).collect()[0]["nt"]
+        nb = pairs.agg(F.sum("__c12").alias("nb")).collect()[0]["nb"]
+        return _pmi_score(uni, pairs, float(nt or 0), float(nb or 0),
+                          min_count, round_digits)
+
+    out = _checkpointed(score, uni, pairs)
     if top_k is not None:
         return out.orderBy(F.desc("pmi"), "w1", "w2").limit(int(top_k))
     return out

@@ -941,35 +941,45 @@ def dsir_importance(
     shuffle on (id, bucket); the model is an ``n_buckets``-row
     broadcast; the fold is one grouped sum on the id.  Document
     bodies never shuffle.  Returns ``(id_col, logw DOUBLE)``."""
+    def fold(doc_b, ratio):
+        return (
+            doc_b.join(F.broadcast(ratio), "__b")
+            .groupBy("__id")
+            .agg(
+                F.sum(
+                    (F.col("__c").cast("decimal(18,0)")
+                     * F.col("__r").cast("decimal(20,12)"))
+                    .cast("decimal(38,12)")
+                ).cast("double").alias("logw")
+            )
+            .withColumnRenamed("__id", id_col)
+        )
+
     if model is not None:
         # prebuilt (bucket, ratio) model from dsir_fit: score only.
         # The featurization's __tgt column is unused here, so pass a
         # constant flag — scoring a fresh corpus must not require the
         # fit corpus's exemplar columns to exist.
-        doc_b = _dsir_doc_buckets(df, id_col, text_col, "true",
-                                  n_buckets, ngrams, hash_fn)
-        ratio = model.select(F.col("bucket").alias("__b"),
-                             F.col("ratio").alias("__r"))
-    else:
-        if target_flag is None:
-            raise ValueError(
-                "target_flag is required when fitting (model=None)")
-        doc_b, ratio = _dsir_doc_buckets_and_model(
-            df, id_col, text_col, target_flag, n_buckets, ngrams, hash_fn,
-            round_digits,
-        )
-    return (
-        doc_b.join(F.broadcast(ratio), "__b")
-        .groupBy("__id")
-        .agg(
-            F.sum(
-                (F.col("__c").cast("decimal(18,0)")
-                 * F.col("__r").cast("decimal(20,12)"))
-                .cast("decimal(38,12)")
-            ).cast("double").alias("logw")
-        )
-        .withColumnRenamed("__id", id_col)
-    )
+        return fold(
+            _dsir_doc_buckets(df, id_col, text_col, "true", n_buckets,
+                              ngrams, hash_fn),
+            model.select(F.col("bucket").alias("__b"),
+                         F.col("ratio").alias("__r")))
+    if target_flag is None:
+        raise ValueError(
+            "target_flag is required when fitting (model=None)")
+    # the featurization feeds THREE readers (the model's two readers —
+    # totals scalar and ratio projection — and the scoring join): cache
+    # the (id, bucket, count) rows — corpus-vocabulary-sized — for the
+    # call, so the tokenize+hash explode runs once (measured 5.2 -> ~2.6
+    # s at sf0.1 md5).  The model then re-aggregates from that cache,
+    # cheaper than caching it too (SCALE.md).
+    doc_b = _dsir_doc_buckets(df, id_col, text_col, target_flag,
+                              n_buckets, ngrams, hash_fn)
+    return D._checkpointed(
+        lambda: fold(doc_b, _dsir_ratio(_dsir_model(doc_b), n_buckets,
+                                        round_digits)),
+        doc_b)
 
 
 def _dsir_doc_buckets(df, id_col, text_col, target_flag, n_buckets,
@@ -1016,34 +1026,25 @@ def _dsir_doc_buckets(df, id_col, text_col, target_flag, n_buckets,
     )
 
 
-def _dsir_doc_buckets_and_model(df, id_col, text_col, target_flag,
-                                n_buckets, ngrams, hash_fn, round_digits):
-    from pyspark import StorageLevel
-
-    B = int(n_buckets)
-    # the featurization feeds THREE consumers (model counts, the totals
-    # scalar, and the scoring join): persist the (id, bucket, count)
-    # rows — corpus-vocabulary-sized — so the tokenize+hash explode
-    # runs once, not three times (measured 5.2 -> ~2.6 s at sf0.1 md5)
-    doc_b = _dsir_doc_buckets(df, id_col, text_col, target_flag,
-                              n_buckets, ngrams, hash_fn).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    # the bucket model has TWO consumers (the totals scalar below, and
-    # the ratio projection in the returned plan) and is <= n_buckets
-    # rows regardless of corpus size — persist it, or the full
-    # aggregation pass over the corpus-vocabulary-sized doc_b runs
-    # twice (profiled r11: 2 x 10.5 s executor CPU at sf0.1, stages
-    # s55/s64 byte-identical 289 KB agg outputs; the totals collect
-    # below is the action that materializes this cache)
-    model = doc_b.groupBy("__b").agg(
+def _dsir_model(doc_b):
+    """The (bucket, target count, raw count) model: <= n_buckets rows
+    whatever the corpus size."""
+    return doc_b.groupBy("__b").agg(
         F.sum(F.when(F.col("__tgt"), F.col("__c")).otherwise(F.lit(0))
               ).alias("__ct"),
         F.sum("__c").alias("__cr"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+def _dsir_ratio(model, n_buckets, round_digits):
+    """(bucket, rounded log-ratio) from the model; runs the one-row
+    totals collect, so ``model`` has two readers (the totals and the
+    ratio projection)."""
+    B = int(n_buckets)
     tot = model.agg(F.sum("__ct").alias("tt"), F.sum("__cr").alias("tr")
                     ).collect()[0]  # one-row scalar
     tt, tr = float(tot["tt"] or 0), float(tot["tr"] or 0)
-    ratio = model.select(
+    return model.select(
         "__b",
         F.round(
             F.log((F.col("__ct").cast("double") + F.lit(1.0))
@@ -1053,7 +1054,6 @@ def _dsir_doc_buckets_and_model(df, id_col, text_col, target_flag,
             round_digits,
         ).alias("__r"),
     )
-    return doc_b, ratio
 
 
 def dsir_fit(
@@ -1071,12 +1071,16 @@ def dsir_fit(
     ``round_digits``) that ``dsir_importance(model=...)`` or the
     streaming scorer applies.  Persist it with a plain parquet write;
     it is ``n_buckets`` rows regardless of corpus size."""
-    _, ratio = _dsir_doc_buckets_and_model(
-        df, id_col, text_col, target_flag, n_buckets, ngrams, hash_fn,
-        round_digits,
-    )
-    return ratio.select(F.col("__b").alias("bucket"),
-                        F.col("__r").alias("ratio"))
+    # the featurization has one reader here (the model); the model has
+    # two (totals collect + ratio projection), so it is the one cache —
+    # without it the aggregation over the uncached featurization runs
+    # twice (SCALE.md)
+    model = _dsir_model(_dsir_doc_buckets(df, id_col, text_col, target_flag,
+                                          n_buckets, ngrams, hash_fn))
+    return D._checkpointed(
+        lambda: _dsir_ratio(model, n_buckets, round_digits).select(
+            F.col("__b").alias("bucket"), F.col("__r").alias("ratio")),
+        model)
 
 
 def dsir_logw_expr(

@@ -2459,7 +2459,9 @@ def q78(spark, sf):
     bucket semi-join, never a corpus re-scan) must reproduce the brute-
     force pair scan restricted to pairs touching the increment — the
     q30 recall argument (every >=0.5 pair here is near-exact) plus
-    verify='exact' true-Jaccard rescoring."""
+    verify='exact' true-Jaccard rescoring.  The pairs come back
+    checkpointed, so the temporary store is removed before returning."""
+    import shutil
     import tempfile
 
     from .operators.dedup import (
@@ -2468,15 +2470,18 @@ def q78(spark, sf):
     )
 
     d = _t(spark, sf, "documents", "d").df
-    store = tempfile.mkdtemp(prefix="es_q78_") + "/store"
-    build_signature_store(
-        d.filter(f"doc_id < {_Q78_SPLIT}"), "doc_id", "text", store
-    )
-    return incremental_minhash_pairs(
-        d.filter(f"doc_id >= {_Q78_SPLIT}"), "doc_id", "text", store,
-        threshold=0.5, max_bucket_size=10_000,
-        verify="exact", corpus_df=d,
-    )
+    tmp = tempfile.mkdtemp(prefix="es_q78_")
+    try:
+        build_signature_store(
+            d.filter(f"doc_id < {_Q78_SPLIT}"), "doc_id", "text",
+            tmp + "/store")
+        return incremental_minhash_pairs(
+            d.filter(f"doc_id >= {_Q78_SPLIT}"), "doc_id", "text",
+            tmp + "/store", threshold=0.5, max_bucket_size=10_000,
+            verify="exact", corpus_df=d,
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _Q77_CAP, _Q77_THRESH = 30, 0.9

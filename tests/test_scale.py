@@ -313,37 +313,27 @@ SHUFFLE_BUDGETS = {
     # code column — zero exchanges in the returned plan
     "q142_pq_adc_topk": 0,
     "q143_ivf_pq_search": 0,
-    # hashed-ngram featurize + (id,bucket) count + broadcast model fold;
-    # 9 in PLAN TEXT: the persisted featurization's InMemoryRelation
-    # prints its build lineage once per consumer (runtime materializes
-    # it once — the persist CUT wall 5.2 -> 1.9 s at sf0.1), and since
-    # r11 the <=n_buckets-row MODEL is persisted too (its cached build
-    # lineage prints again under the ratio consumer: 6 -> 9 text
-    # mentions) — runtime now runs the model aggregation ONCE instead
-    # of twice (profiled 2 x 10.5 s -> 1 x 8 s executor CPU; fresh-JVM
-    # interleaved A/B 1.5 -> 1.0 s)
-    "q147_dsir_importance": 9,
-    # gram explode + two gram-count shuffles + broadcast unigram joins;
-    # 9 in PLAN TEXT since round 6: uni and pairs are persisted
-    # (vocabulary-sized, 3+2 consumers) and each InMemoryRelation
-    # prints its build lineage per consumer — runtime materializes each
-    # once (same phenomenon as q147's pin)
+    # DSIR and PMI return an eager localCheckpoint (the operator caches
+    # its multi-reader intermediates for the call only and releases
+    # them before returning), so the returned plan is a scan of the
+    # checkpoint plus the one exchange of the query's output ordering
+    # on top — the featurize/count shuffles ran inside the call.  q148
+    # has returned a checkpoint since PMI released its count caches
+    # (its plan shows 1 too); its pin predates that and is left as is
+    "q147_dsir_importance": 1,
     "q148_pmi_collocations": 9,
     # the multimodal dedup triad: hash pass is narrow mapInPandas /
     # pandas_udf; the banded Hamming engine's bucket-cap window + the
     # self-join + pair dedup are the exchanges — frame/payload bytes
-    # never shuffle.  PLAN-TEXT counts: the engine persists the hashed
-    # frame (both self-join sides), and an unmaterialized
-    # InMemoryRelation prints its build lineage per consumer (runtime
-    # materializes once — the q147/q148 phenomenon); PLANS.md's
-    # post-materialization report shows the runtime counts (6/6/7/8)
-    "q144_image_near_dup": 14,
-    "q145_audio_near_dup": 14,
-    "q151_video_near_dup": 15,  # +1: the per-video shared-frame fold
-    # group-scoped MinHash: banding + bucket join + exact verify, all
-    # keyed under (lang, band); two persisted frames (signatures +
-    # capped banded) multiply in plan text as above
-    "q150_minhash_by_lang": 26,
+    # never shuffle.  The engine caches nothing (the signature has one
+    # reader), so the plan text is the runtime plan
+    "q144_image_near_dup": 6,
+    "q145_audio_near_dup": 6,
+    "q151_video_near_dup": 7,  # +1: the per-video shared-frame fold
+    # group-scoped MinHash: banding + bucket join + exact verify run
+    # inside the call (the result is checkpointed); what remains is the
+    # output sort's range exchange
+    "q150_minhash_by_lang": 1,
     # ADC shortlist (TakeOrdered, 0-shuffle) -> broadcast semi-join ->
     # exact rerank TakeOrdered: ZERO exchanges in the returned plan
     "q152_pq_refine": 0,
@@ -427,6 +417,50 @@ def test_shuffle_budgets(spark, name, budget):
         f"{name}: {got} shuffle exchanges, budget {budget} — the plan "
         f"regressed (check .explain('formatted'))"
     )
+
+
+# the suite queries that each left 1-3 cache entries behind while the
+# dedup operators persisted intermediates without releasing them
+# (MinHash / Hamming / embedding / incremental / containment / tfidf
+# pairs, DSIR, and the two pipeline composites over MinHash)
+CACHING_QUERIES = [
+    "q30_minhash_pairs", "q31_simhash_pairs", "q32_embedding_near_dup",
+    "q46_training_corpus", "q53_corpus_boilerplate",
+    "q77_containment_pairs", "q78_incremental_dedup",
+    "q144_image_near_dup", "q145_audio_near_dup",
+    "q146_tfidf_cosine_pairs", "q147_dsir_importance",
+    "q150_minhash_by_lang", "q151_video_near_dup",
+]
+
+
+def test_operators_release_their_caches(spark):
+    """An operator caches a frame only for the call that reads it twice
+    and releases it before returning: after each query's collect the
+    session's CacheManager holds exactly the entries it held before
+    (checkpointed results are not cache entries), q78 leaves no
+    temporary signature store behind, and repeated MinHash calls on
+    different inputs do not grow the cache."""
+    import glob
+    import os
+    import tempfile
+
+    from elusion_spark.operators.dedup import minhash_dedup_pairs
+    from elusion_spark.suite import QUERIES
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    start = cm.cachedData().size()
+    stores = os.path.join(tempfile.gettempdir(), "es_q78_*")
+    before = set(glob.glob(stores))
+    for name in CACHING_QUERIES:
+        QUERIES[name](spark, "/root/testdata/sf0.001").collect()
+        assert cm.cachedData().size() == start, name
+    assert set(glob.glob(stores)) == before
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    for lo in (0, 100, 200):
+        minhash_dedup_pairs(docs.filter(f"doc_id >= {lo}"), "doc_id",
+                            "text").collect()
+        assert cm.cachedData().size() == start, lo
 
 
 def test_bench_time_budgets_cover_every_bench_query():
@@ -529,20 +563,30 @@ def test_compact_files_preserves_partition_layout(spark, tmp_path):
     assert got.filter("part = 1").count() == 1000
 
 
-def test_containment_plan_shape(spark):
-    """q77's shuffle count is not string-pinnable (the persisted inverted
+def test_containment_plan_shape(spark, monkeypatch):
+    """q77's shuffle count is not string-pinnable (the cached inverted
     index's build lineage re-prints under every InMemoryTableScan and
     join-strategy flips move the total), so pin the STABLE facets: no
     cartesian product, and the documents table is scanned exactly once
-    (the persist boundary - a regression that re-derives the inverted
-    index per branch would print extra FileScans)."""
+    (the cache boundary - a regression that re-derives the inverted
+    index per branch would print extra FileScans).  The pairs come back
+    checkpointed, so the facets are read off the plan the checkpoint
+    job ran, captured at ``_checkpointed``."""
+    import re
+
+    from elusion_spark.operators import dedup as D
     from elusion_spark.suite import QUERIES
 
-    df = QUERIES["q77_containment_pairs"](spark, "/root/testdata/sf0.001")
-    rep = SC.plan_report(df)
-    assert not rep["has_cartesian"]
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    import re
+    built = []
+    real = D._checkpointed
+
+    def spy(build, *frames):
+        return real(lambda: built.append(build()) or built[-1], *frames)
+
+    monkeypatch.setattr(D, "_checkpointed", spy)
+    QUERIES["q77_containment_pairs"](spark, "/root/testdata/sf0.001")
+    plan = built[0]._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
     scans = set(re.findall(r"Location: InMemoryFileIndex[^\n]*", plan))
     assert len(scans) == 1, scans
 
